@@ -13,7 +13,13 @@ Design stance (see SURVEY.md §7):
   collects in operators, broadcast hints for small dims, AQE on.
 """
 
-from spark_ij_spark.session import get_spark, load_tables
+from spark_ij_spark import zipstamp
+
+# First, so a Python worker unpickling an engine UDF patches zipimport
+# before its next task's importlib.invalidate_caches().
+zipstamp.install()
+
+from spark_ij_spark.session import get_spark, load_tables  # noqa: E402
 
 __all__ = ["get_spark", "load_tables"]
 

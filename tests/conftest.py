@@ -15,7 +15,9 @@ SF_DIR_MED = "/root/testdata/sf0.01"
 def spark():
     from spark_ij_spark.session import get_spark
 
-    spark = get_spark("spark_ij_spark-tests", cpus=8)
+    # local[$SPARK_GRAFT_CPUS] (default: every core); the partition
+    # count stays 8 so plans and partition-sensitive tests do not move.
+    spark = get_spark("spark_ij_spark-tests")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     yield spark
 

@@ -454,3 +454,58 @@ def test_quadratic_baselines_are_real_hash_graded_queries():
         assert name in qs, f"{name} not in queries()"
         assert name in osql, f"{name} has no oracle (not an exactness twin?)"
         assert name not in m.SKETCH_QUERIES
+
+
+def test_zip_index_is_reread_only_when_the_archive_changes(tmp_path, monkeypatch):
+    """PySpark's worker calls importlib.invalidate_caches() at the start
+    of every task; on CPython < 3.12 every zipimporter then re-parses
+    its archive (pyspark.zip, the Spark jar), 0.15-0.2 s per task.
+    Importing the package installs a stamp check (spark_ij_spark.zipstamp):
+    an unchanged archive is not re-read, a rewritten one still is."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    import spark_ij_spark  # noqa: F401  (installs the stamp check)
+
+    archive = str(tmp_path / "zipstamp_probe.zip")
+
+    def write(value):
+        with zipfile.ZipFile(archive, "w") as zf:
+            zf.writestr("zsprobe/__init__.py", "")
+            zf.writestr("zsprobe/sub/__init__.py", "")
+            zf.writestr("zsprobe/sub/mod.py", f"VALUE = {value!r}\n")
+
+    def fresh_value():
+        for name in ("zsprobe.sub.mod", "zsprobe.sub", "zsprobe"):
+            sys.modules.pop(name, None)
+        return importlib.import_module("zsprobe.sub.mod").VALUE
+
+    write("old")
+    monkeypatch.syspath_prepend(archive)
+    try:
+        assert fresh_value() == "old"
+        reads = []
+        real_read = zipimport._read_directory
+
+        def spy(path):
+            if path == archive:
+                reads.append(path)
+            return real_read(path)
+
+        monkeypatch.setattr(zipimport, "_read_directory", spy)
+        importlib.invalidate_caches()
+        importlib.invalidate_caches()
+        if sys.version_info < (3, 12):
+            assert reads == [], f"{len(reads)} re-reads of an unchanged archive"
+
+        write("rewritten")  # a different size, so the stamp moves
+        importlib.invalidate_caches()
+        assert fresh_value() == "rewritten"
+    finally:
+        for name in ("zsprobe.sub.mod", "zsprobe.sub", "zsprobe"):
+            sys.modules.pop(name, None)
+        for key in [k for k in sys.path_importer_cache if k.startswith(archive)]:
+            del sys.path_importer_cache[key]
+        zipimport._zip_directory_cache.pop(archive, None)

@@ -7,6 +7,7 @@ from __future__ import annotations
 import json
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from spark_ij_spark.kernels.histogram import hist_distance, histogram
@@ -289,3 +290,36 @@ def test_ingest_coercions():
 def test_unknown_op_suggests():
     with pytest.raises(KeyError, match="did you mean"):
         run_op(np.zeros((2, 2)), "Add Nois")
+
+
+def test_python_workers_skip_zip_index_rereads(spark):
+    """Every pandas-UDF task starts with importlib.invalidate_caches();
+    on CPython < 3.12 that re-parsed pyspark.zip and the Spark jar in
+    every worker task (150-210 ms on a 4-core box). Once a worker has
+    imported the engine, as every engine UDF does, the call must be
+    cheap. The first call in a fresh worker may still re-read each
+    archive once, so the body makes one untimed call first."""
+    from pyspark.sql import functions as F
+
+    @F.pandas_udf("double")
+    def invalidate_ms(ids: pd.Series) -> pd.Series:
+        import importlib
+        import time
+
+        import spark_ij_spark.registry  # noqa: F401
+
+        importlib.invalidate_caches()
+        t0 = time.perf_counter()
+        importlib.invalidate_caches()
+        return pd.Series([(time.perf_counter() - t0) * 1e3] * len(ids))
+
+    rows = (
+        spark.range(0, 64, 1, numPartitions=8)
+        .select(F.spark_partition_id().alias("p"), invalidate_ms("id").alias("ms"))
+        .groupBy("p")
+        .agg(F.max("ms").alias("ms"))
+        .collect()
+    )
+    ms = sorted(r["ms"] for r in rows)
+    assert len(ms) == 8
+    assert ms[len(ms) // 2] < 20.0, f"invalidate_caches() ms per task: {ms}"
