@@ -34,6 +34,7 @@ import json
 from typing import Any
 
 import numpy as np
+import pandas as pd
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -83,6 +84,11 @@ IMAGE_SCHEMA = StructType(
         StructField("log", ArrayType(LOG_ENTRY_SCHEMA)),
     ]
 )
+
+#: The NULL image: every field NULL. A permissive read keeps an
+#: undecodable file as this, and every per-row image op passes it
+#: through unchanged (no new lineage entry).
+NULL_IMAGE: dict[str, Any] = dict.fromkeys(IMAGE_SCHEMA.fieldNames())
 
 DEFAULT_META: dict[str, Any] = {
     "pixel_width": 1.0,
@@ -209,6 +215,17 @@ def np_to_image(
         "meta": m,
         "log": list(log or []),
     }
+
+
+def image_frame(rows: list[dict[str, Any]]) -> pd.DataFrame:
+    """Image dicts → the frame an ``IMAGE_SCHEMA`` pandas UDF returns."""
+    return pd.DataFrame(rows, columns=IMAGE_SCHEMA.fieldNames())
+
+
+def is_null_image(img: Any) -> bool:
+    """True for the NULL image (a dict, Row or namedtuple whose data is
+    NULL)."""
+    return (img["data"] if isinstance(img, dict) else img.data) is None
 
 
 def image_to_np(img: Any) -> np.ndarray:
@@ -339,11 +356,8 @@ def rgb_to_gray(arr: np.ndarray, method: str = "MEAN") -> np.ndarray:
 
 def stats_of_values(a: np.ndarray) -> dict[str, float]:
     """min/mean/stdDev/max/pts of a float64 value array — ImageJ's
-    ImageStatistics convention (SAMPLE stddev, n−1 denominator). ONE
-    shared implementation for the SQL stats UDFs, ``image_stats``,
-    and ``roi_measure``: the ddof=1 convention previously lived in
-    three hand-copied blocks that each had to be fixed separately
-    (round-8 review)."""
+    ImageStatistics convention (SAMPLE stddev, n−1 denominator), shared
+    by ``operators.images.stats_rows`` and ``roi_measure``."""
     if a.size == 0:
         return {"min": 0.0, "mean": 0.0, "stdDev": 0.0, "max": 0.0, "pts": 0.0}
     return {

@@ -18,6 +18,7 @@ Usage::
 from __future__ import annotations
 
 import json
+from itertools import repeat
 
 import numpy as np
 import pandas as pd
@@ -38,47 +39,30 @@ from spark_ij_spark.datamodel import (
     TABLE_SCHEMA,
     format_calibration,
     format_metadata,
+    image_frame,
     image_to_np,
     log_of,
     meta_of,
     np_to_image,
+    stats_of_values,
 )
 from spark_ij_spark.kernels.histogram import hist_distance, histogram
-from spark_ij_spark.registry import list_commands, run_op
+from spark_ij_spark.operators.images import (
+    combine_rows,
+    hist_rows,
+    run_op_rows,
+    stats_rows,
+)
+from spark_ij_spark.registry import list_commands
 
 
 def _iter_imgs(img: pd.DataFrame):
     return img.itertuples(index=False)
 
 
-def _run_batch(img: pd.DataFrame, cmds: pd.Series, argss: pd.Series | None) -> pd.DataFrame:
-    rows = []
-    for i, r in enumerate(_iter_imgs(img)):
-        cmd = str(cmds.iloc[i])
-        args = "" if argss is None else str(argss.iloc[i] or "")
-        meta = meta_of(r)
-        out, _ = run_op(image_to_np(r), cmd, args, meta)
-        log = lineage.append_entry(
-            log_of(r), lineage.log_entry(lineage.OP_RUN, cmd, [args])
-        )
-        rows.append(np_to_image(out, meta=meta, log=log))
-    return pd.DataFrame(rows, columns=["data", "dtype", "shape", "meta", "log"])
-
-
-def _table_batch(img: pd.DataFrame, cmds: pd.Series, argss: pd.Series) -> list[dict]:
-    tables = []
-    for i, r in enumerate(_iter_imgs(img)):
-        _, table = run_op(
-            image_to_np(r), str(cmds.iloc[i]), str(argss.iloc[i] or ""), meta_of(r)
-        )
-        tables.append({k: [float(x) for x in v] for k, v in (table or {}).items()})
-    return tables
-
-
-def _stats_map(r) -> dict[str, float]:
-    from spark_ij_spark.datamodel import stats_of_values
-
-    return stats_of_values(image_to_np(r).astype("float64"))
+def _chains(cmds, argss):
+    """Row i's one-op chain ``[(cmds[i], argss[i])]`` for the engine."""
+    return ([(c, a)] for c, a in zip(cmds, argss))
 
 
 def register_imagej(spark: SparkSession) -> None:
@@ -96,33 +80,35 @@ def register_imagej(spark: SparkSession) -> None:
 
     @F.pandas_udf(IMAGE_SCHEMA)
     def run(img: pd.DataFrame, cmd: pd.Series) -> pd.DataFrame:  # SQLFunctions.scala:41
-        return _run_batch(img, cmd, None)
+        return image_frame(run_op_rows(img, _chains(cmd, repeat("")))[0])
 
     @F.pandas_udf(IMAGE_SCHEMA)
     def run2(img: pd.DataFrame, cmd: pd.Series, args: pd.Series) -> pd.DataFrame:  # :32
-        return _run_batch(img, cmd, args)
+        return image_frame(run_op_rows(img, _chains(cmd, args))[0])
 
     @F.pandas_udf(TABLE_SCHEMA)
     def runtable(img: pd.DataFrame, cmd: pd.Series, args: pd.Series) -> pd.Series:  # :51-52
-        return pd.Series(_table_batch(img, cmd, args))
+        return pd.Series(run_op_rows(img, _chains(cmd, args))[1])
 
     runmap = runtable  # table-as-map is the same wire shape (:62-65)
 
     @F.pandas_udf(MapType(StringType(), DoubleType()))
     def runrow(img: pd.DataFrame, cmd: pd.Series, args: pd.Series) -> pd.Series:  # :75-77
-        out = []
-        for t in _table_batch(img, cmd, args):
-            out.append({k: v[0] for k, v in t.items() if v} if t else {})
-        return pd.Series(out)
+        return pd.Series(
+            [
+                None if t is None else {k: v[0] for k, v in t.items() if v}
+                for t in run_op_rows(img, _chains(cmd, args))[1]
+            ]
+        )
 
     @F.pandas_udf(MapType(StringType(), DoubleType()))
     def stats(img: pd.DataFrame) -> pd.Series:  # :86-87
-        return pd.Series([_stats_map(r) for r in _iter_imgs(img)])
+        return pd.Series(stats_rows(img))
 
     @F.pandas_udf(StringType())
     def strstats(img: pd.DataFrame) -> pd.Series:  # :204
         return pd.Series(
-            [json.dumps(_stats_map(r), sort_keys=True) for r in _iter_imgs(img)]
+            [None if s is None else json.dumps(s, sort_keys=True) for s in stats_rows(img)]
         )
 
     @F.pandas_udf(DoubleType())
@@ -133,11 +119,10 @@ def register_imagej(spark: SparkSession) -> None:
 
     @F.pandas_udf(StringType())
     def shape(img: pd.DataFrame) -> pd.Series:  # :106 (particle analysis stringified)
-        out = []
-        for r in _iter_imgs(img):
-            _, table = run_op(image_to_np(r), "Analyze Particles...", "", meta_of(r))
-            out.append(json.dumps(table, sort_keys=True))
-        return pd.Series(out)
+        _, tables = run_op_rows(img, repeat([("Analyze Particles...", "")]))
+        return pd.Series(
+            [None if t is None else json.dumps(t, sort_keys=True) for t in tables]
+        )
 
     @F.pandas_udf(IntegerType())
     def nslices(img: pd.DataFrame) -> pd.Series:  # :141
@@ -145,17 +130,7 @@ def register_imagej(spark: SparkSession) -> None:
 
     @F.pandas_udf(IMAGE_SCHEMA)
     def subtract(a: pd.DataFrame, b: pd.DataFrame) -> pd.DataFrame:  # :116
-        rows = []
-        for ra, rb in zip(_iter_imgs(a), _iter_imgs(b)):
-            arr = image_to_np(ra).astype("float64") - image_to_np(rb).astype("float64")
-            rows.append(
-                np_to_image(
-                    arr,
-                    meta=meta_of(ra),
-                    log=lineage.merge_logs(log_of(ra), log_of(rb), "subtract"),
-                )
-            )
-        return pd.DataFrame(rows, columns=["data", "dtype", "shape", "meta", "log"])
+        return image_frame(combine_rows(a, b, "subtract"))
 
     @F.pandas_udf(IMAGE_SCHEMA)
     def scale(img: pd.DataFrame, k: pd.Series) -> pd.DataFrame:  # :125
@@ -167,7 +142,7 @@ def register_imagej(spark: SparkSession) -> None:
                 lineage.log_entry(lineage.OP_RUN, "scale", [str(k.iloc[i])]),
             )
             rows.append(np_to_image(arr, meta=meta_of(r), log=log))
-        return pd.DataFrame(rows, columns=["data", "dtype", "shape", "meta", "log"])
+        return image_frame(rows)
 
     @F.pandas_udf(ArrayType(ArrayType(ArrayType(DoubleType()))))
     def toarray(img: pd.DataFrame) -> pd.Series:  # :176-184
@@ -181,29 +156,13 @@ def register_imagej(spark: SparkSession) -> None:
 
     @F.pandas_udf(HIST_SCHEMA)
     def hist(img: pd.DataFrame) -> pd.DataFrame:  # :133 (auto-ranged)
-        rows = []
-        for r in _iter_imgs(img):
-            centers, counts = histogram(image_to_np(r), None, 256)
-            rows.append(
-                {"bin_centers": centers.tolist(), "bin_counts": [int(c) for c in counts]}
-            )
-        return pd.DataFrame(rows)
+        return hist_rows(img, repeat(None), repeat(256))
 
     @F.pandas_udf(HIST_SCHEMA)
     def hist3(
         img: pd.DataFrame, mn: pd.Series, mx: pd.Series, bins: pd.Series
     ) -> pd.DataFrame:  # :152-157
-        rows = []
-        for i, r in enumerate(_iter_imgs(img)):
-            centers, counts = histogram(
-                image_to_np(r),
-                (float(mn.iloc[i]), float(mx.iloc[i])),
-                int(bins.iloc[i]),
-            )
-            rows.append(
-                {"bin_centers": centers.tolist(), "bin_counts": [int(c) for c in counts]}
-            )
-        return pd.DataFrame(rows)
+        return hist_rows(img, zip(mn, mx), bins)
 
     @F.pandas_udf(DoubleType())
     def hist_compare(a: pd.DataFrame, b: pd.DataFrame) -> pd.Series:  # :166-167
@@ -268,7 +227,7 @@ def register_imagej(spark: SparkSession) -> None:
                 lineage.log_entry("ROI", str(rtype.iloc[i])),
             )
             rows.append(np_to_image(image_to_np(r), meta=meta, log=log))
-        return pd.DataFrame(rows, columns=["data", "dtype", "shape", "meta", "log"])
+        return image_frame(rows)
 
     @F.pandas_udf(StringType())
     def getroi(img: pd.DataFrame, cal: pd.Series) -> pd.Series:
@@ -290,7 +249,8 @@ def register_imagej(spark: SparkSession) -> None:
             meta = meta_of(r)
             roi = roik.get_roi(meta.get("info", ""), meta)
             if roi is None:
-                out.append(_stats_map(r))  # no ROI → whole image
+                # no ROI → whole image
+                out.append(stats_of_values(image_to_np(r).astype("float64")))
             else:
                 out.append(roik.roi_measure(image_to_np(r), roi))
         return pd.Series(out)
@@ -306,7 +266,7 @@ def register_imagej(spark: SparkSession) -> None:
                 [[list(col) for col in row] for row in a], dtype="float64"
             )
             rows.append(np_to_image(nested))
-        return pd.DataFrame(rows, columns=["data", "dtype", "shape", "meta", "log"])
+        return image_frame(rows)
 
     spark.udf.register("makeimage", makeimage)
     spark.udf.register("setroi", setroi)

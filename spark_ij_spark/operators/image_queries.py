@@ -39,7 +39,6 @@ from pyspark.sql.types import (
 from spark_ij_spark.datamodel import IMAGE_SCHEMA, image_to_np, meta_of
 from spark_ij_spark.kernels.histogram import histogram
 from spark_ij_spark.kernels.particles import analyze_particles
-from spark_ij_spark.registry import run_op
 from spark_ij_spark.session import load_tables
 
 ORDER_IMAGE_SCHEMA = StructType(
@@ -78,7 +77,7 @@ def order_quantity_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     # order, no per-row dicts, no nested struct through Arrow on the
     # return side); dtype/shape/meta/log are constant JVM-side struct
     # fields (guide §4.2 — shrink what crosses the boundary). Measured
-    # r12 (tools/exp1_r12.py, identical results asserted): cold build
+    # (OPTIMIZATION_r12.md Wave B, identical results asserted): cold build
     # 1.26 -> 0.98 s at sf0.1; a zero-copy mapInArrow offsets-reslice
     # variant measured 1.10 s and was rejected.
     @F.pandas_udf(BinaryType())

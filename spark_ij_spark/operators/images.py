@@ -18,7 +18,8 @@ driver-side filename collect, scOps.scala:78-80, is not carried over).
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
+from itertools import repeat
 
 import numpy as np
 import pandas as pd
@@ -39,12 +40,16 @@ from spark_ij_spark import lineage
 from spark_ij_spark.datamodel import (
     HIST_SCHEMA,
     IMAGE_SCHEMA,
+    NULL_IMAGE,
     STATS_SCHEMA,
     TABLE_SCHEMA,
+    image_frame,
     image_to_np,
+    is_null_image,
     log_of,
     meta_of,
     np_to_image,
+    stats_of_values,
 )
 from spark_ij_spark.kernels.histogram import histogram
 from spark_ij_spark.registry import run_op
@@ -97,25 +102,102 @@ def create_empty_images(
 
 
 # ---------------------------------------------------------------------------
-# per-row op application (reference: scOps.scala:192-198 runAll)
+# the per-row engine: run_all, run_with_table, the sweep and the SQL
+# UDFs all run their rows through these functions
 # ---------------------------------------------------------------------------
 
 
-def _apply_ops_batch(
-    img_df: pd.DataFrame, ops: list[tuple[str, str]]
-) -> pd.DataFrame:
-    rows = []
-    for img in img_df.itertuples(index=False):
-        arr = image_to_np(img)
-        meta = meta_of(img)
-        log = log_of(img)
-        for cmd, args in ops:
-            arr, _table = run_op(arr, cmd, args, meta)
+def run_op_rows(
+    img_frame: pd.DataFrame, chains: Iterable[Iterable[tuple[str, str]]]
+) -> tuple[list[dict], list[dict | None]]:
+    """Run row i's ``(cmd, args)`` chain, in order, on image i — the
+    reference's PortableImagePlus.run, which appends to the image's
+    ImageLog. Meta is shared through the chain, so what a stateful op
+    stashes (setThreshold, LUTs) reaches the next op and the output.
+    Each op appends one RUN entry.
+
+    Returns the output image dicts and, per row, the last op's results
+    table as ``{column: [float]}`` (``{}`` if it gave none). A NULL
+    image passes through as the NULL image with a NULL table."""
+    images: list[dict] = []
+    tables: list[dict | None] = []
+    for r, chain in zip(img_frame.itertuples(index=False), chains):
+        if is_null_image(r):
+            images.append(NULL_IMAGE)
+            tables.append(None)
+            continue
+        arr, meta, log, table = image_to_np(r), meta_of(r), log_of(r), None
+        for cmd, args in chain:
+            cmd, args = str(cmd), str(args or "")
+            arr, table = run_op(arr, cmd, args, meta)
             log = lineage.append_entry(
-                log, lineage.log_entry(lineage.OP_RUN, cmd, [args or ""])
+                log, lineage.log_entry(lineage.OP_RUN, cmd, [args])
             )
-        rows.append(np_to_image(arr, meta=meta, log=log))
-    return pd.DataFrame(rows, columns=["data", "dtype", "shape", "meta", "log"])
+        images.append(np_to_image(arr, meta=meta, log=log))
+        tables.append({k: [float(x) for x in v] for k, v in (table or {}).items()})
+    return images, tables
+
+
+def stats_rows(img_frame: pd.DataFrame) -> list[dict[str, float] | None]:
+    """min/mean/stdDev/max/pts per image (reference: getImageStatistics,
+    PortableImagePlus.scala:143-146, which delegates to ImageJ's
+    ImageStatistics — SAMPLE stddev, n−1 denominator); None for a NULL
+    image."""
+    return [
+        None if is_null_image(r) else stats_of_values(image_to_np(r).astype("float64"))
+        for r in img_frame.itertuples(index=False)
+    ]
+
+
+def hist_rows(
+    img_frame: pd.DataFrame,
+    ranges: Iterable[tuple[float, float] | None],
+    bins: Iterable[int],
+) -> pd.DataFrame:
+    """HIST_SCHEMA frame: row i's histogram over ``ranges[i]`` (None:
+    auto-ranged) with ``bins[i]`` bins; NULL for a NULL image."""
+    rows = []
+    for r, value_range, n in zip(img_frame.itertuples(index=False), ranges, bins):
+        if is_null_image(r):
+            rows.append({})
+            continue
+        centers, counts = histogram(image_to_np(r), value_range, int(n))
+        rows.append(
+            {"bin_centers": centers.tolist(), "bin_counts": [int(c) for c in counts]}
+        )
+    return pd.DataFrame(rows, columns=HIST_SCHEMA.fieldNames())
+
+
+# binary (two-image) ops (reference: PortableImagePlus.scala:217-270).
+# append keeps numpy's promoted dtype, so a mixed-dtype append never
+# wraps the second parent's pixels into the first parent's dtype.
+_BINARY_KERNELS = {
+    "subtract": lambda a, b: a.astype("float64") - b.astype("float64"),
+    "average": lambda a, b: (a.astype("float64") + b.astype("float64")) / 2.0,
+    "add": lambda a, b: a.astype("float64") + b.astype("float64"),
+    "append": lambda a, b: np.concatenate([a, b], axis=2),
+}
+
+
+def combine_rows(a: pd.DataFrame, b: pd.DataFrame, how: str) -> list[dict]:
+    """Pixel-wise binary op per row pair; the lineage logs of both
+    parents merge into one nested MERGE entry (ImagePlusIO.scala:175-183
+    semantics). A NULL parent gives the NULL image."""
+    kern = _BINARY_KERNELS[how]
+    rows = []
+    for ra, rb in zip(a.itertuples(index=False), b.itertuples(index=False)):
+        if is_null_image(ra) or is_null_image(rb):
+            rows.append(NULL_IMAGE)
+            continue
+        arr = kern(image_to_np(ra), image_to_np(rb))
+        log = lineage.merge_logs(log_of(ra), log_of(rb), how)
+        rows.append(np_to_image(arr, meta=meta_of(ra), log=log))
+    return rows
+
+
+# ---------------------------------------------------------------------------
+# per-row op application (reference: scOps.scala:192-198 runAll)
+# ---------------------------------------------------------------------------
 
 
 def run_image_ops(
@@ -128,17 +210,13 @@ def run_image_ops(
     round trip. Fusing keeps the ndarray in Python between ops, so a
     k-op chain costs one round trip instead of k. Lineage is appended
     per op, identical to running the ops separately."""
+    ops = list(ops)
 
     @F.pandas_udf(IMAGE_SCHEMA)
     def _udf(img: pd.DataFrame) -> pd.DataFrame:
-        return _apply_ops_batch(img, list(ops))
+        return image_frame(run_op_rows(img, repeat(ops))[0])
 
     return _udf(image_col)
-
-
-def run_image_op(image_col: str | Column, cmd: str, args: str = "") -> Column:
-    """Column expression applying a named op (lineage appended)."""
-    return run_image_ops(image_col, [(cmd, args)])
 
 
 def run_all(
@@ -150,9 +228,8 @@ def run_all(
     """Map a named op over every row (the reference's runAll). Pass a
     list of ``(cmd, args)`` pairs to run a fused chain in one Arrow
     hop (see run_image_ops)."""
-    if isinstance(cmd, list):
-        return df.withColumn(image_col, run_image_ops(image_col, cmd))
-    return df.withColumn(image_col, run_image_op(image_col, cmd, args))
+    ops = cmd if isinstance(cmd, list) else [(cmd, args)]
+    return df.withColumn(image_col, run_image_ops(image_col, ops))
 
 
 def run_with_table(
@@ -167,21 +244,8 @@ def run_with_table(
 
     @F.pandas_udf(pair_schema)
     def _udf(img: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for r in img.itertuples(index=False):
-            arr = image_to_np(r)
-            meta = meta_of(r)
-            out, table = run_op(arr, cmd, args, meta)
-            log = lineage.append_entry(
-                log_of(r), lineage.log_entry(lineage.OP_RUN, cmd, [args or ""])
-            )
-            rows.append(
-                {
-                    "image": np_to_image(out, meta=meta, log=log),
-                    "table": {k: list(map(float, v)) for k, v in (table or {}).items()},
-                }
-            )
-        return pd.DataFrame(rows)
+        images, tables = run_op_rows(img, repeat([(cmd, args)]))
+        return pd.DataFrame({"image": images, "table": tables})
 
     tmp = df.withColumn("_pair", _udf(image_col))
     return tmp.withColumn(image_col, F.col("_pair.image")).withColumn(
@@ -190,25 +254,17 @@ def run_with_table(
 
 
 # ---------------------------------------------------------------------------
-# per-image reductions
+# per-image reductions and binary ops as columns
 # ---------------------------------------------------------------------------
 
 
 def image_stats(image_col: str | Column) -> Column:
-    """min/mean/stdDev/max/pts struct (reference: getImageStatistics,
-    PortableImagePlus.scala:143-146, which delegates to ImageJ's
-    ImageStatistics — SAMPLE stddev, n−1 denominator; matches
-    particles.py's per-component measurements)."""
-
-    from spark_ij_spark.datamodel import stats_of_values
+    """min/mean/stdDev/max/pts struct column (see stats_rows)."""
 
     @F.pandas_udf(STATS_SCHEMA)
     def _udf(img: pd.DataFrame) -> pd.DataFrame:
         return pd.DataFrame(
-            [
-                stats_of_values(image_to_np(r).astype("float64"))
-                for r in img.itertuples(index=False)
-            ]
+            [s or {} for s in stats_rows(img)], columns=STATS_SCHEMA.fieldNames()
         )
 
     return _udf(image_col)
@@ -227,52 +283,19 @@ def image_histogram(
 
     @F.pandas_udf(HIST_SCHEMA)
     def _udf(img: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for r in img.itertuples(index=False):
-            centers, counts = histogram(image_to_np(r), value_range, bins)
-            rows.append(
-                {
-                    "bin_centers": centers.tolist(),
-                    "bin_counts": [int(c) for c in counts],
-                }
-            )
-        return pd.DataFrame(rows)
+        return hist_rows(img, repeat(value_range), repeat(bins))
 
     return _udf(image_col)
 
 
-# ---------------------------------------------------------------------------
-# binary (two-image) ops (reference: PortableImagePlus.scala:217-270)
-# ---------------------------------------------------------------------------
-
-_BINARY_KERNELS = {
-    "subtract": lambda a, b: a.astype("float64") - b.astype("float64"),
-    "average": lambda a, b: (a.astype("float64") + b.astype("float64")) / 2.0,
-    "add": lambda a, b: a.astype("float64") + b.astype("float64"),
-    "append": lambda a, b: np.concatenate([a, b], axis=2),
-}
-
-
 def combine_images(a_col: str | Column, b_col: str | Column, how: str) -> Column:
-    """Pixel-wise binary op; lineage logs of both parents merge into one
-    nested MERGE entry (ImagePlusIO.scala:175-183 semantics)."""
-    kern = _BINARY_KERNELS[how]
+    """Pixel-wise binary op column (see combine_rows)."""
+    if how not in _BINARY_KERNELS:
+        raise KeyError(how)
 
     @F.pandas_udf(IMAGE_SCHEMA)
     def _udf(a: pd.DataFrame, b: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for ra, rb in zip(a.itertuples(index=False), b.itertuples(index=False)):
-            na_, nb_ = image_to_np(ra), image_to_np(rb)
-            arr = kern(na_, nb_)
-            if how == "append" and na_.dtype == nb_.dtype:
-                # same-dtype append keeps the parents' dtype; a MIXED
-                # append keeps numpy's promoted type — casting back to
-                # the first parent's dtype silently wrapped/truncated
-                # the second parent's pixels (round-8 review)
-                arr = arr.astype(na_.dtype)
-            log = lineage.merge_logs(log_of(ra), log_of(rb), how)
-            rows.append(np_to_image(arr, meta=meta_of(ra), log=log))
-        return pd.DataFrame(rows)
+        return image_frame(combine_rows(a, b, how))
 
     return _udf(a_col, b_col)
 
@@ -320,7 +343,7 @@ def processor_for_each(
                 log_of(r), lineage.log_entry("PROC", op_label)
             )
             rows.append(np_to_image(out, meta=meta_of(r), log=log))
-        return pd.DataFrame(rows, columns=["data", "dtype", "shape", "meta", "log"])
+        return image_frame(rows)
 
     col = F.col(image_col) if isinstance(image_col, str) else image_col
     return _udf(col)

@@ -41,8 +41,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from spark_ij_spark import lineage
-from spark_ij_spark.datamodel import IMAGE_SCHEMA, image_to_np, log_of, meta_of, np_to_image
-from spark_ij_spark.registry import run_op
+from spark_ij_spark.datamodel import IMAGE_SCHEMA, image_frame
+from spark_ij_spark.operators.images import run_op_rows
 
 # ---------------------------------------------------------------------------
 # macro-arg grammar
@@ -311,16 +311,7 @@ def run_op_with_args_col(image_col: str | Column, cmd: str, args_col: str | Colu
 
     @F.pandas_udf(IMAGE_SCHEMA)
     def _udf(img: pd.DataFrame, args: pd.Series) -> pd.DataFrame:
-        rows = []
-        for i, r in enumerate(img.itertuples(index=False)):
-            a = str(args.iloc[i] or "")
-            meta = meta_of(r)
-            out, _ = run_op(image_to_np(r), cmd, a, meta)
-            log = lineage.append_entry(
-                log_of(r), lineage.log_entry(lineage.OP_RUN, cmd, [a])
-            )
-            rows.append(np_to_image(out, meta=meta, log=log))
-        return pd.DataFrame(rows, columns=["data", "dtype", "shape", "meta", "log"])
+        return image_frame(run_op_rows(img, ([(cmd, a)] for a in args))[0])
 
     return _udf(image_col, args_col)
 

@@ -51,7 +51,13 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from spark_ij_spark.datamodel import IMAGE_SCHEMA, image_to_np, np_to_image
+from spark_ij_spark.datamodel import (
+    IMAGE_SCHEMA,
+    NULL_IMAGE,
+    image_frame,
+    image_to_np,
+    np_to_image,
+)
 from spark_ij_spark.lineage import log_entry
 from spark_ij_spark.sources.codecs import decode_bytes, encode_array
 
@@ -79,7 +85,10 @@ def _load_entry(path: str) -> dict:
     return log_entry("LOAD", path, optool="spark_ij_spark.sources")
 
 
-_NULL_IMAGE = {"data": None, "dtype": None, "shape": None, "meta": None, "log": None}
+def _decoded(blob: bytes, path: str, suffix: str = "") -> dict:
+    """Decode a file's bytes (codec chosen by ``path + suffix``) into an
+    image dict whose lineage starts with one LOAD entry for ``path``."""
+    return np_to_image(decode_bytes(bytes(blob), path + suffix), log=[_load_entry(path)])
 
 
 def load_images(
@@ -108,13 +117,12 @@ def load_images(
         rows = []
         for p, b in zip(paths, blobs):
             try:
-                arr = decode_bytes(bytes(b), p)
-                rows.append(np_to_image(arr, log=[_load_entry(p)]))
+                rows.append(_decoded(b, p))
             except Exception:
                 if mode == "failfast":
                     raise
-                rows.append(dict(_NULL_IMAGE))
-        return pd.DataFrame(rows, columns=["data", "dtype", "shape", "meta", "log"])
+                rows.append(NULL_IMAGE)
+        return image_frame(rows)
 
     out = raw.select("path", decode("path", "content").alias("image"))
     if mode == "dropmalformed":
@@ -136,9 +144,8 @@ def load_images_locally(
         rows = []
         for p in ps:
             with open(p, "rb") as fh:
-                arr = decode_bytes(fh.read(), p)
-            rows.append(np_to_image(arr, log=[_load_entry(p)]))
-        return pd.DataFrame(rows, columns=["data", "dtype", "shape", "meta", "log"])
+                rows.append(_decoded(fh.read(), p))
+        return image_frame(rows)
 
     return pdf.select("path", open_file("path").alias("image"))
 
@@ -162,8 +169,7 @@ def load_images_driver(
 
     def _one(p: str) -> tuple[str, dict]:
         with open(p, "rb") as fh:
-            arr = decode_bytes(fh.read(), p)
-        return p, np_to_image(arr, log=[_load_entry(p)])
+            return p, _decoded(fh.read(), p)
 
     if parallel and len(paths) > 1:
         from concurrent.futures import ThreadPoolExecutor
@@ -286,14 +292,7 @@ def read_images_parquet(
 
     @F.pandas_udf(IMAGE_SCHEMA)
     def decode(paths: pd.Series, blobs: pd.Series) -> pd.DataFrame:
-        rows = []
-        for p, b in zip(paths, blobs):
-            rows.append(
-                np_to_image(
-                    decode_bytes(bytes(b), p + suffix), log=[_load_entry(p)]
-                )
-            )
-        return pd.DataFrame(rows, columns=["data", "dtype", "shape", "meta", "log"])
+        return image_frame([_decoded(b, p, suffix) for p, b in zip(paths, blobs)])
 
     raw = spark.read.parquet(path)
     return raw.select("path", decode("path", "content").alias("image"))
@@ -363,17 +362,17 @@ class ImageJReader(DataSourceReader):
         for path, i in partition.items:
             if self.debug:
                 arr = _synthetic_array(i, self.width, self.height)
+                img = np_to_image(arr, log=[_load_entry(path)])
             else:
                 with open(path, "rb") as fh:
-                    arr = decode_bytes(fh.read(), path)
-            img = np_to_image(arr, log=[_load_entry(path)])
+                    img = _decoded(fh.read(), path)
             image_row = _serialize_image_struct(img)
             if simple:
                 yield (path, image_row)
             else:
                 # RGB decodes are 4D [h][w][s][c] after ensure_3d's
                 # normalization — unpack the spatial dims positionally
-                h, w, s = (int(d) for d in arr.shape[:3])
+                h, w, s = img["shape"][:3]
                 parts = path.split("/")
                 yield (
                     path,
@@ -616,9 +615,7 @@ class ImageJStreamReader(SimpleDataSourceStreamReader):
         for name in names:
             p = os.path.join(self.path, name)
             with open(p, "rb") as fh:
-                arr = decode_bytes(fh.read(), p)
-            img = np_to_image(arr, log=[_load_entry(p)])
-            out.append((p, _serialize_image_struct(img)))
+                out.append((p, _serialize_image_struct(_decoded(fh.read(), p))))
         return out
 
 

@@ -509,3 +509,40 @@ def test_zip_index_is_reread_only_when_the_archive_changes(tmp_path, monkeypatch
         for key in [k for k in sys.path_importer_cache if k.startswith(archive)]:
             del sys.path_importer_cache[key]
         zipimport._zip_directory_cache.pop(archive, None)
+
+
+def test_run_op_is_called_only_from_the_shared_engine():
+    """Every per-row op surface (run_all, run_with_table, the sweep, the
+    SQL UDFs) runs its rows through operators/images.py's engine, so
+    registry.run_op may be named only there and inside the measured
+    batch special case image_queries.q_img_sweep_multiply. Any other
+    reference — a call, an import, an alias — would fork the op loop."""
+    import ast
+
+    pkg = os.path.join(REPO, "spark_ij_spark")
+    engine = os.path.join("spark_ij_spark", "operators", "images.py")
+    allowed = {(os.path.join("spark_ij_spark", "operators", "image_queries.py"),
+                "q_img_sweep_multiply")}
+    offenders = []
+    for root, _dirs, files in os.walk(pkg):
+        for f in files:
+            rel = os.path.relpath(os.path.join(root, f), REPO)
+            if not f.endswith(".py") or rel in (
+                engine, os.path.join("spark_ij_spark", "registry.py")
+            ):
+                continue
+            tree = ast.parse(open(os.path.join(REPO, rel)).read())
+            for top in tree.body:
+                owner = getattr(top, "name", None)
+                for node in ast.walk(top):
+                    named = (
+                        (isinstance(node, ast.Name) and node.id == "run_op")
+                        or (isinstance(node, ast.Attribute) and node.attr == "run_op")
+                        or (isinstance(node, ast.alias) and node.name == "run_op")
+                    )
+                    if named and (rel, owner) not in allowed:
+                        offenders.append(f"{rel}:{getattr(node, 'lineno', top.lineno)}")
+    assert offenders == [], (
+        "registry.run_op used outside the shared engine "
+        f"(call operators.images.run_op_rows instead): {offenders}"
+    )

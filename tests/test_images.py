@@ -218,6 +218,53 @@ def test_run_with_table(spark, images5):
     assert "Area" in row and len(row["Area"]) > 0
 
 
+def test_op_surfaces_agree(spark):
+    """One op through every surface — run_all with a string and with a
+    one-element list, the matching run_range variant and SQL run2 — gives
+    identical pixel bytes and identical last lineage entries, and
+    run_with_table's table equals SQL runtable's."""
+    from spark_ij_spark.datamodel import np_to_image
+    from spark_ij_spark.functions.sql import register_imagej
+    from spark_ij_spark.operators.sweep import run_range
+    from spark_ij_spark.sources.images import NAMED_IMAGE_SCHEMA
+
+    rng = np.random.default_rng(7)
+    blobs = (rng.random((3, 12, 10)) > 0.7).astype("uint8") * 200
+    df = spark.createDataFrame(
+        [(f"s{i}", np_to_image(b)) for i, b in enumerate(blobs)], NAMED_IMAGE_SCHEMA
+    ).withColumnRenamed("path", "sample")
+    register_imagej(spark)
+    df.createOrReplaceTempView("_surface_imgs")
+
+    def by_sample(out, suffix=""):
+        return {
+            r.sample[: len(r.sample) - len(suffix)]: (bytes(r.image.data), r.image.log[-1])
+            for r in out.select("sample", "image").collect()
+            if r.sample.endswith(suffix)
+        }
+
+    cmd, args = "Gaussian Blur...", "sigma=2"
+    want = by_sample(run_all(df, cmd, args))
+    assert len(want) == 3 and all(e.opval == cmd for _, e in want.values())
+    assert by_sample(run_all(df, [(cmd, args)])) == want
+    swept = run_range(df, cmd, "sigma=1", "sigma=3", steps=3)
+    assert by_sample(swept, "__sigma_2") == want
+    sql = spark.sql(f"SELECT sample, run2(image, '{cmd}', '{args}') AS image FROM _surface_imgs")
+    assert by_sample(sql) == want
+
+    table = {
+        r.sample: r.table
+        for r in run_with_table(df, "Analyze Particles...").select("sample", "table").collect()
+    }
+    sql_table = {
+        r.sample: r.t
+        for r in spark.sql(
+            "SELECT sample, runtable(image, 'Analyze Particles...', '') AS t FROM _surface_imgs"
+        ).collect()
+    }
+    assert table == sql_table and all(len(t["Area"]) > 0 for t in table.values())
+
+
 def test_calibration_preserved_through_ops(spark):
     """Calibration survives serialize → op → tabulate
     (SpijiTests.scala:109-140)."""

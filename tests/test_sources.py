@@ -140,6 +140,37 @@ def test_load_images_malformed_modes(spark, tmp_path):
     kept = load_images(spark, out, pattern="*.tif", mode="dropmalformed").collect()
     assert len(kept) == 2 and all(r.image.dtype is not None for r in kept)
 
+    # The NULL image passes through every engine surface: it stays NULL
+    # with no new lineage entry, and the good rows equal a failfast
+    # load of the good files alone.
+    from spark_ij_spark.functions.sql import register_imagej
+    from spark_ij_spark.operators.images import image_stats, run_all
+
+    register_imagej(spark)
+
+    def through_engine(df):
+        df = run_all(df, "Multiply...", "value=2").withColumn(
+            "stats", image_stats("image")
+        )
+        df.createOrReplaceTempView("_perm_imgs")
+        sql = spark.sql(
+            "SELECT path, stats(run2(image, 'Add...', 'value=1')) AS s FROM _perm_imgs"
+        )
+        return {r.path: r for r in df.collect()}, {r.path: r.s for r in sql.collect()}
+
+    perm_rows, perm_sql = through_engine(
+        load_images(spark, out, pattern="*.tif", mode="permissive")
+    )
+    good_rows, good_sql = through_engine(load_images(spark, out, pattern="img*.tif"))
+    broken = null_rows[0].path
+    assert perm_rows[broken].image.data is None and perm_rows[broken].image.log is None
+    assert all(v is None for v in perm_rows[broken].stats.asDict().values())
+    assert perm_sql[broken] is None
+    assert len(good_rows) == 2
+    for p, r in good_rows.items():
+        assert perm_rows[p].image == r.image and perm_rows[p].stats == r.stats
+        assert perm_sql[p] == good_sql[p]
+
 
 def test_imagej_stream_source_incremental_batches(spark, tmp_path):
     """Directory-watch streaming read with a checkpointed file sink:
