@@ -31,6 +31,7 @@ double→float32 (lossy).
 from __future__ import annotations
 
 import json
+from collections.abc import Callable, Iterable
 from typing import Any
 
 import numpy as np
@@ -224,8 +225,24 @@ def image_frame(rows: list[dict[str, Any]]) -> pd.DataFrame:
 
 def is_null_image(img: Any) -> bool:
     """True for the NULL image (a dict, Row or namedtuple whose data is
-    NULL)."""
-    return (img["data"] if isinstance(img, dict) else img.data) is None
+    NULL, or a NULL struct)."""
+    return img is None or (img["data"] if isinstance(img, dict) else img.data) is None
+
+
+def map_images(
+    fn: Callable[..., Any], *images: Any, args: Iterable = (), null: Any = None
+) -> list[Any]:
+    """``fn(*row_images, *row_args)`` for each row, or ``null`` where any
+    of the row's images is NULL — the one NULL rule of every per-image
+    op: NULL in gives NULL out, with no lineage entry. ``images`` are
+    image frames (pandas UDF inputs) or iterables of image structs;
+    ``args`` are columns of per-row values."""
+    cols = [i.itertuples(index=False) if isinstance(i, pd.DataFrame) else i for i in images]
+    n = len(cols)
+    return [
+        null if any(is_null_image(r) for r in row[:n]) else fn(*row)
+        for row in zip(*cols, *args)
+    ]
 
 
 def image_to_np(img: Any) -> np.ndarray:

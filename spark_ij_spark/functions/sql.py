@@ -36,12 +36,14 @@ from spark_ij_spark import lineage
 from spark_ij_spark.datamodel import (
     HIST_SCHEMA,
     IMAGE_SCHEMA,
+    NULL_IMAGE,
     TABLE_SCHEMA,
     format_calibration,
     format_metadata,
     image_frame,
     image_to_np,
     log_of,
+    map_images,
     meta_of,
     np_to_image,
     stats_of_values,
@@ -67,6 +69,9 @@ def _chains(cmds, argss):
 
 def register_imagej(spark: SparkSession) -> None:
     """Register the full §2.5 UDF surface under the reference's names.
+
+    Every UDF that reads an image gives NULL for a NULL image
+    (``datamodel.map_images``).
 
     CAUTION — name shadowing: the reference's names include ``mean``,
     ``shape``, ``scale``, ``subtract``, ``run``, ``hist``; temporary
@@ -114,7 +119,8 @@ def register_imagej(spark: SparkSession) -> None:
     @F.pandas_udf(DoubleType())
     def mean(img: pd.DataFrame) -> pd.Series:  # :96
         return pd.Series(
-            [float(image_to_np(r).astype("float64").mean()) for r in _iter_imgs(img)]
+            map_images(lambda r: float(image_to_np(r).astype("float64").mean()), img),
+            dtype="float64",
         )
 
     @F.pandas_udf(StringType())
@@ -126,7 +132,7 @@ def register_imagej(spark: SparkSession) -> None:
 
     @F.pandas_udf(IntegerType())
     def nslices(img: pd.DataFrame) -> pd.Series:  # :141
-        return pd.Series([int(list(r.shape)[2]) for r in _iter_imgs(img)])
+        return pd.Series(map_images(lambda r: int(list(r.shape)[2]), img), dtype="Int32")
 
     @F.pandas_udf(IMAGE_SCHEMA)
     def subtract(a: pd.DataFrame, b: pd.DataFrame) -> pd.DataFrame:  # :116
@@ -134,25 +140,24 @@ def register_imagej(spark: SparkSession) -> None:
 
     @F.pandas_udf(IMAGE_SCHEMA)
     def scale(img: pd.DataFrame, k: pd.Series) -> pd.DataFrame:  # :125
-        rows = []
-        for i, r in enumerate(_iter_imgs(img)):
-            arr = image_to_np(r).astype("float64") * float(k.iloc[i])
+        def scaled(r, ki):
+            arr = image_to_np(r).astype("float64") * float(ki)
             log = lineage.append_entry(
-                log_of(r),
-                lineage.log_entry(lineage.OP_RUN, "scale", [str(k.iloc[i])]),
+                log_of(r), lineage.log_entry(lineage.OP_RUN, "scale", [str(ki)])
             )
-            rows.append(np_to_image(arr, meta=meta_of(r), log=log))
-        return image_frame(rows)
+            return np_to_image(arr, meta=meta_of(r), log=log)
+
+        return image_frame(map_images(scaled, img, args=(k,), null=NULL_IMAGE))
 
     @F.pandas_udf(ArrayType(ArrayType(ArrayType(DoubleType()))))
     def toarray(img: pd.DataFrame) -> pd.Series:  # :176-184
-        out = []
-        for r in _iter_imgs(img):
+        def nested(r):
             a = image_to_np(r)
             if a.ndim == 4:  # RGB: first channel only (reference behavior)
                 a = a[..., 0]
-            out.append(a.astype("float64").tolist())
-        return pd.Series(out)
+            return a.astype("float64").tolist()
+
+        return pd.Series(map_images(nested, img))
 
     @F.pandas_udf(HIST_SCHEMA)
     def hist(img: pd.DataFrame) -> pd.DataFrame:  # :133 (auto-ranged)
@@ -166,12 +171,12 @@ def register_imagej(spark: SparkSession) -> None:
 
     @F.pandas_udf(DoubleType())
     def hist_compare(a: pd.DataFrame, b: pd.DataFrame) -> pd.Series:  # :166-167
-        out = []
-        for ra, rb in zip(_iter_imgs(a), _iter_imgs(b)):
+        def distance(ra, rb):
             ca, na = histogram(image_to_np(ra), None, 256)
             cb, nb = histogram(image_to_np(rb), None, 256)
-            out.append(hist_distance(ca, na, cb, nb))
-        return pd.Series(out)
+            return hist_distance(ca, na, cb, nb)
+
+        return pd.Series(map_images(distance, a, b), dtype="float64")
 
     @F.pandas_udf(StringType())
     def tostring(v: pd.Series) -> pd.Series:  # :233 (JDBC escape hatch)
@@ -206,7 +211,7 @@ def register_imagej(spark: SparkSession) -> None:
 
     @F.pandas_udf(StringType())
     def showmetadata(img: pd.DataFrame) -> pd.Series:  # :246-249
-        return pd.Series([format_metadata(r._asdict()) for r in _iter_imgs(img)])
+        return pd.Series(map_images(lambda r: format_metadata(r._asdict()), img))
 
     # --- ROI surface (Spiji.java:515-613) ---
     from spark_ij_spark.kernels import roi as roik
@@ -215,19 +220,15 @@ def register_imagej(spark: SparkSession) -> None:
     def setroi(
         img: pd.DataFrame, rtype: pd.Series, xs: pd.Series, ys: pd.Series
     ) -> pd.DataFrame:
-        rows = []
-        for i, r in enumerate(_iter_imgs(img)):
+        def with_roi(r, rt, x, y):
             meta = meta_of(r)
-            meta["info"] = roik.set_roi(
-                meta.get("info", ""), list(xs.iloc[i]), list(ys.iloc[i]),
-                str(rtype.iloc[i]),
-            )
-            log = lineage.append_entry(
-                log_of(r),
-                lineage.log_entry("ROI", str(rtype.iloc[i])),
-            )
-            rows.append(np_to_image(image_to_np(r), meta=meta, log=log))
-        return image_frame(rows)
+            meta["info"] = roik.set_roi(meta.get("info", ""), list(x), list(y), str(rt))
+            log = lineage.append_entry(log_of(r), lineage.log_entry("ROI", str(rt)))
+            return np_to_image(image_to_np(r), meta=meta, log=log)
+
+        return image_frame(
+            map_images(with_roi, img, args=(rtype, xs, ys), null=NULL_IMAGE)
+        )
 
     @F.pandas_udf(StringType())
     def getroi(img: pd.DataFrame, cal: pd.Series) -> pd.Series:
@@ -244,16 +245,15 @@ def register_imagej(spark: SparkSession) -> None:
 
     @F.pandas_udf(MapType(StringType(), DoubleType()))
     def roistats(img: pd.DataFrame) -> pd.Series:
-        out = []
-        for r in _iter_imgs(img):
+        def measure(r):
             meta = meta_of(r)
             roi = roik.get_roi(meta.get("info", ""), meta)
             if roi is None:
                 # no ROI → whole image
-                out.append(stats_of_values(image_to_np(r).astype("float64")))
-            else:
-                out.append(roik.roi_measure(image_to_np(r), roi))
-        return pd.Series(out)
+                return stats_of_values(image_to_np(r).astype("float64"))
+            return roik.roi_measure(image_to_np(r), roi)
+
+        return pd.Series(map_images(measure, img))
 
     @F.pandas_udf(IMAGE_SCHEMA)
     def makeimage(arr: pd.Series) -> pd.DataFrame:

@@ -45,8 +45,8 @@ from spark_ij_spark.datamodel import (
     TABLE_SCHEMA,
     image_frame,
     image_to_np,
-    is_null_image,
     log_of,
+    map_images,
     meta_of,
     np_to_image,
     stats_of_values,
@@ -119,13 +119,8 @@ def run_op_rows(
     Returns the output image dicts and, per row, the last op's results
     table as ``{column: [float]}`` (``{}`` if it gave none). A NULL
     image passes through as the NULL image with a NULL table."""
-    images: list[dict] = []
-    tables: list[dict | None] = []
-    for r, chain in zip(img_frame.itertuples(index=False), chains):
-        if is_null_image(r):
-            images.append(NULL_IMAGE)
-            tables.append(None)
-            continue
+
+    def run_chain(r, chain):
         arr, meta, log, table = image_to_np(r), meta_of(r), log_of(r), None
         for cmd, args in chain:
             cmd, args = str(cmd), str(args or "")
@@ -133,9 +128,11 @@ def run_op_rows(
             log = lineage.append_entry(
                 log, lineage.log_entry(lineage.OP_RUN, cmd, [args])
             )
-        images.append(np_to_image(arr, meta=meta, log=log))
-        tables.append({k: [float(x) for x in v] for k, v in (table or {}).items()})
-    return images, tables
+        table = {k: [float(x) for x in v] for k, v in (table or {}).items()}
+        return np_to_image(arr, meta=meta, log=log), table
+
+    pairs = map_images(run_chain, img_frame, args=(chains,), null=(NULL_IMAGE, None))
+    return [p[0] for p in pairs], [p[1] for p in pairs]
 
 
 def stats_rows(img_frame: pd.DataFrame) -> list[dict[str, float] | None]:
@@ -143,10 +140,9 @@ def stats_rows(img_frame: pd.DataFrame) -> list[dict[str, float] | None]:
     PortableImagePlus.scala:143-146, which delegates to ImageJ's
     ImageStatistics — SAMPLE stddev, n−1 denominator); None for a NULL
     image."""
-    return [
-        None if is_null_image(r) else stats_of_values(image_to_np(r).astype("float64"))
-        for r in img_frame.itertuples(index=False)
-    ]
+    return map_images(
+        lambda r: stats_of_values(image_to_np(r).astype("float64")), img_frame
+    )
 
 
 def hist_rows(
@@ -156,16 +152,14 @@ def hist_rows(
 ) -> pd.DataFrame:
     """HIST_SCHEMA frame: row i's histogram over ``ranges[i]`` (None:
     auto-ranged) with ``bins[i]`` bins; NULL for a NULL image."""
-    rows = []
-    for r, value_range, n in zip(img_frame.itertuples(index=False), ranges, bins):
-        if is_null_image(r):
-            rows.append({})
-            continue
+
+    def hist(r, value_range, n):
         centers, counts = histogram(image_to_np(r), value_range, int(n))
-        rows.append(
-            {"bin_centers": centers.tolist(), "bin_counts": [int(c) for c in counts]}
-        )
-    return pd.DataFrame(rows, columns=HIST_SCHEMA.fieldNames())
+        return {"bin_centers": centers.tolist(), "bin_counts": [int(c) for c in counts]}
+
+    fields = HIST_SCHEMA.fieldNames()
+    rows = map_images(hist, img_frame, args=(ranges, bins), null=dict.fromkeys(fields))
+    return pd.DataFrame(rows, columns=fields)
 
 
 # binary (two-image) ops (reference: PortableImagePlus.scala:217-270).
@@ -184,15 +178,13 @@ def combine_rows(a: pd.DataFrame, b: pd.DataFrame, how: str) -> list[dict]:
     parents merge into one nested MERGE entry (ImagePlusIO.scala:175-183
     semantics). A NULL parent gives the NULL image."""
     kern = _BINARY_KERNELS[how]
-    rows = []
-    for ra, rb in zip(a.itertuples(index=False), b.itertuples(index=False)):
-        if is_null_image(ra) or is_null_image(rb):
-            rows.append(NULL_IMAGE)
-            continue
+
+    def combine(ra, rb):
         arr = kern(image_to_np(ra), image_to_np(rb))
         log = lineage.merge_logs(log_of(ra), log_of(rb), how)
-        rows.append(np_to_image(arr, meta=meta_of(ra), log=log))
-    return rows
+        return np_to_image(arr, meta=meta_of(ra), log=log)
+
+    return map_images(combine, a, b, null=NULL_IMAGE)
 
 
 # ---------------------------------------------------------------------------
@@ -330,20 +322,16 @@ def processor_for_each(
     in the pandas UDF, so per-slice Python overhead is amortized
     across the Arrow batch.
     """
-    from spark_ij_spark import lineage
     from spark_ij_spark.kernels.filters import _per_slice
+
+    def proc(r):
+        out = _per_slice(image_to_np(r), slice_fn)
+        log = lineage.append_entry(log_of(r), lineage.log_entry("PROC", op_label))
+        return np_to_image(out, meta=meta_of(r), log=log)
 
     @F.pandas_udf(IMAGE_SCHEMA)
     def _udf(img: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for r in img.itertuples(index=False):
-            arr = image_to_np(r)
-            out = _per_slice(arr, slice_fn)
-            log = lineage.append_entry(
-                log_of(r), lineage.log_entry("PROC", op_label)
-            )
-            rows.append(np_to_image(out, meta=meta_of(r), log=log))
-        return image_frame(rows)
+        return image_frame(map_images(proc, img, null=NULL_IMAGE))
 
     col = F.col(image_col) if isinstance(image_col, str) else image_col
     return _udf(col)
@@ -351,7 +339,8 @@ def processor_for_each(
 
 def explode_pixels(df: DataFrame, image_col: str = "image", sample_col: str = "sample") -> DataFrame:
     """Flatten images into (sample, y, x, z, value) rows — the relational
-    view of pixel data (`toarray` SQL surface made queryable)."""
+    view of pixel data (`toarray` SQL surface made queryable). A NULL
+    image gives no rows."""
 
     def gen(batches):
         # accumulate numpy arrays per batch and concatenate ONCE — the
@@ -360,8 +349,12 @@ def explode_pixels(df: DataFrame, image_col: str = "image", sample_col: str = "s
         # vectorize per Arrow batch, not per row/image)
         for pdf in batches:
             samples, ys, xs, zs, vs = [], [], [], [], []
-            for sample, img in zip(pdf[sample_col], pdf[image_col]):
-                arr = image_to_np(img)
+            pairs = map_images(
+                lambda img, sample: (sample, image_to_np(img)),
+                pdf[image_col],
+                args=(pdf[sample_col],),
+            )
+            for sample, arr in filter(None, pairs):
                 if arr.ndim == 4:
                     arr = arr[..., 0]
                 h, w, s = arr.shape

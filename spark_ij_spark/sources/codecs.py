@@ -41,11 +41,6 @@ NATIVE_SUFFIXES = (
     ".npy", ".png", ".tif", ".tiff", ".pgm", ".ppm", ".bmp", ".gif",
     ".avi", ".dcm", ".dicom", ".jpg", ".jpeg", ".mp4",
 )
-#: kept for backward compatibility — empty since round 9 (baseline
-#: JPEG went native; progressive followed in round 10).
-PIL_SUFFIXES: tuple[str, ...] = ()
-
-SUPPORTED_SUFFIXES = NATIVE_SUFFIXES + PIL_SUFFIXES
 
 
 def _suffix(path: str) -> str:
@@ -92,7 +87,7 @@ def decode_bytes(data: bytes, path: str) -> np.ndarray:
         return ensure_3d(coerce_ingest(pp.decode_jpeg(data)), rgb=True)
     raise ValueError(
         f"unsupported image suffix {sfx!r} for {path!r}; supported: "
-        f"{', '.join(SUPPORTED_SUFFIXES)}"
+        f"{', '.join(NATIVE_SUFFIXES)}"
     )
 
 

@@ -546,3 +546,86 @@ def test_run_op_is_called_only_from_the_shared_engine():
         "registry.run_op used outside the shared engine "
         f"(call operators.images.run_op_rows instead): {offenders}"
     )
+
+
+_CANNED_PLAN = """\
+AdaptiveSparkPlan isFinalPlan=false
++- Sort [n#7L DESC NULLS LAST], true, 0
+   +- Exchange rangepartitioning(n#7L DESC NULLS LAST, 8), ENSURE_REQUIREMENTS, [plan_id=370]
+      +- HashAggregate(keys=[da#403L], functions=[count(1)], output=[da#403L, n#7L])
+         +- Exchange hashpartitioning(da#403L, 8), ENSURE_REQUIREMENTS, [plan_id=367]
+            +- HashAggregate(keys=[da#403L], functions=[partial_count(1)], output=[da#403L, count#9L])
+               +- SortMergeJoin [da#403L], [k#5L], LeftSemi, (da#403L < k#5L)
+                  :- Project [doc_id#41L AS da#403L]
+                  :  +- BroadcastNestedLoopJoin BuildRight, Cross
+                  :     :- FileScan parquet [doc_id#41L,arr#48] Batched: true, DataFilters: [], Format: Parquet, Location: InMemoryFileIndex(1 paths)[file:/data/sf0.01/documents.parquet], PartitionFilters: [], PushedFilters: [], ReadSchema: struct<doc_id:bigint,arr:array<string>>
+                  :     +- BroadcastExchange IdentityBroadcastMode, [plan_id=307]
+                  :        +- ObjectHashAggregate(keys=[], functions=[collect_set(s#52, 0, 0)], output=[hot#64])
+                  :           +- Exchange SinglePartition, ENSURE_REQUIREMENTS, [plan_id=304]
+                  :              +- Filter (cast(df#53L as decimal(22,1)) > cast(Subquery subquery#56, [id=#285] as decimal(20,0)))
+                  :                 :  +- Subquery subquery#56, [id=#285]
+                  :                 :     +- AdaptiveSparkPlan isFinalPlan=false
+                  :                 :        +- Scan ExistingRDD[count#63L]
+                  :                 +- InMemoryTableScan [s#52, df#53L]
+                  :                       +- InMemoryRelation [s#52, df#53L], StorageLevel(disk, memory, deserialized, 1 replicas)
+                  :                             +- AdaptiveSparkPlan isFinalPlan=false
+                  :                                +- FileScan parquet spark_catalog.default.bkt_orders_sf[s#52,df#53L] Batched: true, Bucketed: true, DataFilters: [], Format: Parquet, Location: InMemoryFileIndex(1 paths)[file:/warehouse/bkt_orders_sf], PartitionFilters: [], PushedFilters: [], ReadSchema: struct<s:string,df:bigint>
+                  +- BroadcastHashJoin [k#5L], [bi#399L], Inner, BuildLeft, false
+                     :- BroadcastExchange HashedRelationBroadcastMode(List(input[0, bigint, true]),false), [plan_id=350]
+                     :  +- LocalTableScan [bi#399L]
+                     +- Filter contains(text#2,
+
+a split literal)
+                        +- FileScan parquet [k#5L,text#2] Batched: true, DataFilters: [], Format: Parquet, Location: InMemoryFileIndex(1 paths)[file:/data/sf0.01/events.parquet], PartitionFilters: [], PushedFilters: [], ReadSchema: struct<k:bigint,text:string>
+"""
+
+
+def test_plan_signature_parses_a_canned_plan_and_diffs_readably():
+    """tools/plan_sweep.py reduces a pre-AQE plan string to operator
+    counts with only the qualifiers the plan checks rely on, and an
+    injected extra shuffle fails with a one-line-per-operator diff that
+    names the query. No Spark: the signature code imports without
+    pyspark."""
+    import sys
+
+    sys.path.insert(0, os.path.join(REPO, "tools"))
+    from plan_sweep import diff, forbidden, signature
+
+    sig = signature(_CANNED_PLAN)
+    assert sig == {
+        "AdaptiveSparkPlan": 3,
+        "BroadcastExchange": 2,
+        "BroadcastHashJoin BuildLeft Inner": 1,
+        "BroadcastNestedLoopJoin BuildRight Cross": 1,
+        "Exchange SinglePartition": 1,
+        "Exchange hashpartitioning": 1,
+        "Exchange rangepartitioning": 1,
+        "FileScan bkt_orders_sf": 1,
+        "FileScan documents": 1,
+        "FileScan events": 1,
+        "Filter": 2,
+        "HashAggregate": 2,
+        "InMemoryRelation": 1,
+        "InMemoryTableScan": 1,
+        "LocalTableScan": 1,
+        "ObjectHashAggregate": 1,
+        "Project": 1,
+        "Scan ExistingRDD": 1,
+        "Sort": 1,
+        "SortMergeJoin LeftSemi": 1,
+        "Subquery": 1,
+    }
+    assert forbidden(sig) == []
+    assert forbidden(signature("CartesianProduct\n:- Range (0, 2)\n+- Range (0, 3)")) == [
+        "CartesianProduct"
+    ]
+
+    shuffle = "            +- HashAggregate(keys=[da#403L], functions=[partial_count(1)]"
+    injected = _CANNED_PLAN.replace(
+        shuffle,
+        "            +- Exchange hashpartitioning(da#403L, 7), REPARTITION_BY_NUM, [plan_id=9]\n"
+        + "   " + shuffle,
+    )
+    assert diff({"q_canned": sig}, {"q_canned": sig}) == ""
+    msg = diff({"q_canned": sig}, {"q_canned": signature(injected)})
+    assert msg == "q_canned:\n  Exchange hashpartitioning: 1 → 2", msg

@@ -1,15 +1,16 @@
-"""Physical-plan quality guards.
+"""Physical-plan checks that need more than operator counts.
 
-These assert the *shape* of the plans Catalyst produces — predicate
-pushdown reaching the parquet scan, column pruning, broadcast joins
-for small dims, JVM-only execution for the pure-Catalyst operators —
-so a refactor that silently de-optimizes a hot path fails the suite
-instead of only showing up at 100 TB.
+The operator counts of every graded query's pre-AQE plan are pinned in
+PLANS.json (tests/test_scale_plans.py::test_plan_signatures_match_committed).
+The guards here check what those counts cannot see: filters pushed to
+and columns pruned at the scan, partial aggregates, partition keys,
+window specs, UDF names, plans AQE finalizes at execution, and frames
+built outside ``queries()``.
 """
 
 from __future__ import annotations
 
-from spark_ij_spark.operators import dedup, event_windows, pipeline, relational, text
+from spark_ij_spark.operators import dedup, event_windows, pipeline, relational
 
 from .conftest import SF_DIR
 
@@ -19,15 +20,12 @@ def _plan(df) -> str:
 
 
 def _only_hot_set_bnlj(plan: str) -> None:
-    """Allow ONLY the shingle-cap hot-set attach as a nested-loop join:
-    since r12 the postings pipeline attaches the bounded 1-row
-    collect_set of hot shingles via a broadcast cross join (a
-    deliberate BuildRight-Cross BroadcastNestedLoopJoin, like the PQ
-    LUT fan-out). Any other BNLJ flavor — in particular an Inner BNLJ
-    with a residual condition, the accidental all-pairs shape these
-    guards exist to catch — still fails."""
+    """A nested-loop join in the postings pipeline is only the
+    shingle-cap hot-set attach: a broadcast cross join of the bounded
+    1-row collect_set of hot shingles. Its flavor (BroadcastNestedLoopJoin
+    BuildRight Cross, never an Inner BNLJ with a residual condition)
+    is pinned in PLANS.json."""
     n = plan.count("BroadcastNestedLoopJoin")
-    assert n == plan.count("BroadcastNestedLoopJoin BuildRight, Cross")
     if n:
         assert "collect_set" in plan  # the 1-row hot-set build side
 
@@ -46,11 +44,6 @@ def test_q6_column_pruning(spark):
     assert "l_returnflag" not in scan and "l_partkey" not in scan
 
 
-def test_q5_broadcasts_small_dims(spark):
-    plan = _plan(relational.q5_local_supplier_volume(spark, SF_DIR))
-    assert "BroadcastHashJoin" in plan
-
-
 def test_q1_whole_stage_codegen_no_python(spark):
     df = relational.q1_pricing_summary(spark, SF_DIR)
     df.collect()  # AQE finalizes the plan on execution
@@ -60,78 +53,15 @@ def test_q1_whole_stage_codegen_no_python(spark):
     assert "EvalPython" not in plan  # pure JVM path
 
 
-def test_text_ops_stay_jvm_side(spark):
-    for q in (text.q_text_quality, text.q_text_fingerprint, text.q_text_token_topk):
-        plan = _plan(q(spark, SF_DIR))
-        assert "EvalPython" not in plan, f"{q.__name__} fell off the JVM path"
-
-
-def test_minhash_lsh_no_cartesian_product(spark):
-    plan = _plan(dedup.q_dedup_minhash_lsh(spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert "EvalPython" not in plan
-
-
 def test_simhash_pigeonhole_equi_join(spark):
     plan = _plan(dedup.q_dedup_simhash(spark, SF_DIR))
-    assert "CartesianProduct" not in plan
     _only_hot_set_bnlj(plan)
-    assert "EvalPython" not in plan
-
-
-def test_asof_join_is_single_window_no_join(spark):
-    """The as-of query must compile to a window over one shuffle on
-    user_id — any Join node means the naive two-sided form crept back."""
-    plan = _plan(event_windows.q_events_asof_join(spark, SF_DIR))
-    assert "Join" not in plan
-    assert "Window" in plan
-    assert plan.count("Exchange hashpartitioning") == 1
-
-
-def test_range_join_bucketed_equi_join(spark):
-    """Time-range join must be the bucketed hash equi-join, never a
-    planner-picked nested loop."""
-    plan = _plan(event_windows.q_events_range_join(spark, SF_DIR))
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-    assert "EvalPython" not in plan
-
-
-def test_contamination_broadcasts_eval_side(spark):
-    plan = _plan(pipeline.q_pipeline_contamination(spark, SF_DIR))
-    assert "BroadcastHashJoin" in plan
-    assert "EvalPython" not in plan
-
-
-def test_pipeline_split_and_pack_stay_jvm_side(spark):
-    for q in (pipeline.q_pipeline_hash_split, pipeline.q_pipeline_pack_sequences):
-        plan = _plan(q(spark, SF_DIR))
-        assert "EvalPython" not in plan, f"{q.__name__} fell off the JVM path"
-
-
-def test_clean_corpus_composition_stays_jvm_side(spark):
-    """The end-to-end filter composes window + broadcast joins — no
-    Python, no nested-loop joins sneak in through the composition."""
-    plan = _plan(pipeline.q_pipeline_clean_corpus(spark, SF_DIR))
-    assert "EvalPython" not in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_exact_dedup_partial_aggregation(spark):
     plan = _plan(dedup.q_dedup_exact(spark, SF_DIR))
     # map-side combine: two HashAggregates around one shuffle on the hash key
-    assert plan.count("HashAggregate") >= 2
     assert "partial_min" in plan and "Exchange hashpartitioning" in plan
-
-
-def test_gopher_and_c4_filters_stay_jvm_side(spark):
-    """Repetition/rule metrics are higher-order array expressions —
-    one map-only scan plus a tiny per-group aggregate, no Python."""
-    for q in (pipeline.q_pipeline_gopher_quality, pipeline.q_pipeline_c4_filter):
-        plan = _plan(q(spark, SF_DIR))
-        assert "EvalPython" not in plan, f"{q.__name__} fell off the JVM path"
-        assert plan.count("HashAggregate") >= 2  # map-side partial agg
 
 
 def test_stratified_sample_single_shuffle(spark):
@@ -139,22 +69,7 @@ def test_stratified_sample_single_shuffle(spark):
     exchanges ((lang, salt) then lang over the bounded survivors — see
     PIPE_SALTS), no join."""
     plan = _plan(pipeline.q_pipeline_stratified_sample(spark, SF_DIR))
-    assert "EvalPython" not in plan
-    assert "Join" not in plan
-    assert plan.count("Exchange hashpartitioning") == 2
     assert "pmod" in plan
-
-
-def test_semdedup_no_join_before_cell_group(spark):
-    """Cell assignment is literal-centroid codegen (map-only); the only
-    join-free shuffle is the groupBy(cell) feeding the pandas tile —
-    no pair join, no cartesian, ever."""
-    from spark_ij_spark.operators import clustering
-
-    plan = _plan(clustering.q_embed_semdedup(spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert "Join" not in plan
-    assert "FlatMapGroupsInPandas" in plan
 
 
 def test_fused_op_chain_single_arrow_hop(spark):
@@ -191,39 +106,6 @@ def test_img_sweep_multiply_single_arrow_hop(spark):
     assert "BroadcastNestedLoopJoin" in plan  # tiny param fan-out side
 
 
-def test_lsh_multiprobe_equi_join_no_cartesian(spark):
-    """Multiprobe candidate generation must stay an equi-join on the
-    probed bucket id — the probe fan-out is a map-only explode, never
-    an all-pairs or nested-loop shape — and fully JVM-side."""
-    from spark_ij_spark.operators import similarity
-
-    plan = _plan(similarity.q_ann_lsh_multiprobe(spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert "EvalPython" not in plan
-    # the only nested-loop joins are the tiny Range x Range plane-table
-    # builds the base LSH path already has — multiprobe must not add one
-    base = _plan(similarity.q_ann_lsh(spark, SF_DIR))
-    assert plan.count("BroadcastNestedLoopJoin") <= base.count(
-        "BroadcastNestedLoopJoin"
-    )
-
-
-def test_vocab_approx_is_single_pass_no_expand(spark):
-    """The HLL twin must aggregate sketches in one pass: no Expand node
-    (the COUNT(DISTINCT) rewrite) and no shuffle of distinct
-    (lang, token) pairs — that is the exact twin's cost."""
-    from spark_ij_spark.operators import text as text_ops
-
-    plan = _plan(text_ops.q_text_vocab_approx(spark, SF_DIR))
-    assert "Expand" not in plan
-    assert "EvalPython" not in plan
-    assert plan.count("Exchange hashpartitioning") == 1  # sketches only
-    # the exact twin de-dups (lang, token) pairs first: one extra
-    # keyed exchange — the shuffle the sketch path exists to avoid
-    exact = _plan(text_ops.q_text_vocab(spark, SF_DIR))
-    assert exact.count("Exchange hashpartitioning") >= 2
-
-
 def test_q7_q9_q10_broadcast_dims_no_python(spark):
     """The wide TPC-H-style join trees keep nation lookups broadcast,
     filters pushed to the scans, and never leave the JVM."""
@@ -233,21 +115,9 @@ def test_q7_q9_q10_broadcast_dims_no_python(spark):
         relational.q10_returned_items,
     ):
         plan = _plan(q(spark, SF_DIR))
-        assert "BroadcastHashJoin" in plan, q.__name__
         assert "PushedFilters: [" in plan and "PushedFilters: []" not in plan, (
             q.__name__
         )
-        assert "EvalPython" not in plan, q.__name__
-        assert "CartesianProduct" not in plan, q.__name__
-
-
-def test_q15_no_global_window_funnel(spark):
-    """The '= MAX' comparison must be a broadcast 1-row re-aggregate,
-    never a partition-less window (single-task funnel at scale)."""
-    plan = _plan(relational.q15_top_supplier(spark, SF_DIR))
-    assert "Window" not in plan
-    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
-    assert "CartesianProduct" not in plan
 
 
 def test_q19_disjunction_stays_hash_join(spark):
@@ -270,73 +140,15 @@ def test_json_props_jvm_side_partial_agg(spark):
     """JSON path extraction stays in codegen (no Python UDF) and the
     aggregate partial-aggregates before its single exchange."""
     plan = _plan(relational.q_json_props(spark, SF_DIR))
-    assert "EvalPython" not in plan
     assert "get_json_object" in plan
-    assert plan.count("Exchange hashpartitioning") == 1
     assert "partial" in plan.lower()
-
-
-def test_chunk_windows_map_only_zero_shuffle(spark):
-    """Chunking is tokenize→filter→explode→slice: a pure map stage.
-    Any Exchange here would ship the 1.33×-expanded chunk rows."""
-    plan = _plan(pipeline.q_pipeline_chunk_windows(spark, SF_DIR))
-    assert "Exchange" not in plan
-    assert "EvalPython" not in plan
-
-
-def test_tfidf_no_distinct_expand_no_python(spark):
-    """df must come from the already-doc-distinct tf frame (plain
-    count), never a COUNT(DISTINCT) Expand; scoring stays JVM-side.
-    The 1-row corpus count joins as a broadcast."""
-    plan = _plan(text.q_text_tfidf(spark, SF_DIR))
-    assert "Expand" not in plan
-    assert "EvalPython" not in plan
-    assert "BroadcastExchange" in plan
-
-
-def test_events_pivot_single_exchange_partial_agg(spark):
-    """pivot with a fixed value list must compile to exactly the
-    two-phase aggregate (pair counts + tiny pivot_first assembly) —
-    no distinct-values pre-job, no Expand."""
-    plan = _plan(relational.q_events_pivot(spark, SF_DIR))
-    assert plan.count("Exchange hashpartitioning") == 2
-    assert "Expand" not in plan
-    assert "EvalPython" not in plan
 
 
 def test_stats_moments_single_exchange_no_builtin_corr(spark):
     """Moments derive from exact decimal power sums in one shuffle;
     Spark's order-dependent corr/stddev aggregates must not appear."""
     plan = _plan(relational.q_stats_moments(spark, SF_DIR))
-    assert plan.count("Exchange hashpartitioning") == 1
     assert "corr(" not in plan and "stddev" not in plan
-    assert "EvalPython" not in plan
-
-
-def test_leakage_split_no_cartesian_no_python(spark):
-    """Cluster-aware split: corpus⋈labels stays a keyed equi-join and
-    the witness joins as a 1-row broadcast — never a cartesian
-    product; whole pipeline stays JVM-side."""
-    plan = _plan(pipeline.q_pipeline_leakage_split(spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert "EvalPython" not in plan
-
-
-def test_quality_classifier_map_only_jvm(spark):
-    """Model inference must compile to a scan + projection: zero
-    shuffles, no Python worker."""
-    plan = _plan(pipeline.q_pipeline_quality_classifier(spark, SF_DIR))
-    assert "Exchange" not in plan
-    assert "EvalPython" not in plan
-
-
-def test_salted_agg_two_stage_shape(spark):
-    """The salted aggregate must show both stages (salted partial +
-    final re-aggregate) and stay JVM-side."""
-    plan = _plan(event_windows.q_events_salted_agg(spark, SF_DIR))
-    assert plan.count("Exchange hashpartitioning") == 2
-    assert "Expand" not in plan
-    assert "EvalPython" not in plan
 
 
 def test_rollup_single_fact_scan(spark):
@@ -350,53 +162,6 @@ def test_rollup_single_fact_scan(spark):
     # scan strings)
     assert plan.count("TableCacheQueryStage") == 3
     assert "EvalPython" not in plan
-
-
-def test_window_funcs_single_window_single_shuffle(spark):
-    """lag/lead/ntile/percent_rank share one (partition, order) spec:
-    Spark must merge them into ONE Window operator over ONE shuffle."""
-    plan = _plan(relational.q_window_funcs(spark, SF_DIR))
-    assert plan.count("Window") == 1
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "EvalPython" not in plan
-
-
-def test_q21_decorrelated_no_nested_loop(spark):
-    """Both correlated EXISTS subqueries must decorrelate into
-    aggregate + semi-join shapes — no nested-loop or cartesian join,
-    supplier lookup broadcast."""
-    plan = _plan(relational.q21_sole_blame_supplier(spark, SF_DIR))
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-    assert "LeftSemi" in plan
-    assert "EvalPython" not in plan
-
-
-def test_pq_encode_and_adc_shapes(spark):
-    """PQ: codebooks compile into literal argmin codegen (encode is
-    join-free) and ADC scoring is map-only against the broadcast wide
-    LUT (one bounded row per query, N_QUERIES rows total). The full
-    pairs path is a deliberate BroadcastNestedLoopJoin: crossJoin with
-    the constant-size LUT + the ib != ia non-equi filter — the n x NQ
-    expansion the query IS, with no corpus-side shuffle. Nothing falls
-    to Python, no (ia, ib) aggregation Exchange remains (r11: the old
-    explode + per-(m,k) LUT join + groupBy shape is gone)."""
-    from spark_ij_spark.operators import similarity
-
-    plan = _plan(similarity.q_ann_pq(spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin BuildRight" in plan
-    assert "EvalPython" not in plan
-    # the ADC sum is a projection over element_at lookups — the old
-    # explode-codes + per-(m,k) LUT join + (ia, ib) groupBy shape left
-    # a Generate and a HashAggregate here; both must stay gone
-    assert "Generate" not in plan
-    assert "HashAggregate" not in plan
-    # cand path (ivfpq): LUT attaches via broadcast hash join on ia
-    cand_plan = _plan(similarity.q_ann_ivfpq(spark, SF_DIR))
-    assert "BroadcastHashJoin" in cand_plan
-    assert "CartesianProduct" not in cand_plan
-    assert "EvalPython" not in cand_plan
 
 
 def test_q2_q12_q16_q20_shapes(spark):
@@ -426,30 +191,6 @@ def test_q2_q12_q16_q20_shapes(spark):
         assert "BroadcastNestedLoopJoin" not in plan, q.__name__
 
 
-def test_redact_curriculum_map_only_jvm(spark):
-    """Redaction and curriculum mixing are map-only corpus passes: one
-    keyed exchange for the audit aggregate, zero Python, no joins."""
-    from spark_ij_spark.operators import pipeline
-
-    for q in (pipeline.q_pipeline_redact_terms, pipeline.q_pipeline_curriculum_mix):
-        plan = _plan(q(spark, SF_DIR))
-        assert "EvalPython" not in plan, q.__name__
-        assert "Join" not in plan, q.__name__
-        assert plan.count("Exchange hashpartitioning") == 1, q.__name__
-
-
-def test_shard_order_single_shuffle_window(spark):
-    """Training-order sharding: one exchange on the shard key feeding
-    the per-shard row_number window — no join, no global sort."""
-    from spark_ij_spark.operators import pipeline
-
-    plan = _plan(pipeline.q_pipeline_shard_order(spark, SF_DIR))
-    assert "EvalPython" not in plan
-    assert "Join" not in plan
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "Exchange rangepartitioning" not in plan  # no global sort
-
-
 def test_covariance_single_partial_agg_shuffle(spark):
     """Covariance partials: one Arrow-batched partial-Gram hop (d²
     rows per BATCH — no per-row explode) then ONE keyed exchange
@@ -457,29 +198,7 @@ def test_covariance_single_partial_agg_shuffle(spark):
     from spark_ij_spark.operators import clustering
 
     plan = _plan(clustering.q_embed_covariance(spark, SF_DIR))
-    assert "MapInPandas" in plan  # the batched partial-Gram hop
-    assert "Generate" not in plan  # no d²-per-row explode
-    assert "Join" not in plan
-    assert plan.count("Exchange hashpartitioning") == 1
     assert "partial" in plan.lower()  # map-side combine before the shuffle
-
-
-def test_retrieval_probe_batch_broadcasts(spark):
-    """Feature retrieval: the probe batch joins as a broadcast (the
-    query-batch shape), never a partitioned corpus-pair join; image
-    decode+histogram is a single Arrow hop over the flat data column.
-    Since round 11 the probe side must ALSO be capped via orderBy().
-    limit() (TakeOrdered — partial per-partition top-K): a fixed
-    FRACTION of the corpus behind an explicit broadcast was the N²/997
-    scale bug measured at 97.7x per 10x data, so the bounded-side
-    requirement of the broadcast policy is asserted structurally."""
-    from spark_ij_spark.operators import multimodal as mm
-
-    plan = _plan(mm.q_media_feature_retrieval(spark, SF_DIR))
-    assert "BroadcastNestedLoopJoin" in plan  # probe side bounded by cap
-    assert "CartesianProduct" not in plan
-    assert "BroadcastExchange" in plan
-    assert "TakeOrdered" in plan, "probe batch must be cap-limited"
 
 
 def test_transitions_no_join_two_keyed_shuffles(spark):
@@ -489,8 +208,6 @@ def test_transitions_no_join_two_keyed_shuffles(spark):
     from spark_ij_spark.operators import event_windows
 
     plan = _plan(event_windows.q_events_transitions(spark, SF_DIR))
-    assert "Join" not in plan
-    assert "EvalPython" not in plan
     assert "partial" in plan.lower()
 
 
@@ -501,78 +218,14 @@ def test_er_blocked_equi_join_no_cartesian(spark):
     from spark_ij_spark.operators import entity
 
     plan = _plan(entity.q_er_fuzzy_parts(spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "EvalPython" not in plan
     assert "partial" in plan.lower()  # map-side combine on the agg
-
-
-def test_outliers_map_only_assign_one_cell_shuffle(spark):
-    """Outlier pruning: literal-centroid assignment + dist² in one
-    map-only codegen pass (no join against a centroid table), then a
-    single shuffle on cell for the rank/count window."""
-    from spark_ij_spark.operators import clustering
-
-    plan = _plan(clustering.q_embed_outliers(spark, SF_DIR))
-    assert "Join" not in plan
-    assert "EvalPython" not in plan
-    assert plan.count("Exchange hashpartitioning") == 1
 
 
 def test_incremental_dedup_band_equi_join_no_cartesian(spark):
     """Delta-vs-corpus probe: band equi-join between the two sides,
     never an all-pairs product, JVM-side throughout."""
     plan = _plan(dedup.q_dedup_incremental(spark, SF_DIR))
-    assert "CartesianProduct" not in plan
     _only_hot_set_bnlj(plan)
-    assert "EvalPython" not in plan
-
-
-def test_profile_single_scan_single_agg(spark):
-    """Column profile: ONE scan reduced to one row (the distinct
-    counts expand map-side), then a constant-size explode — no join,
-    no Python, no per-column rescans."""
-    from spark_ij_spark.operators import profile
-
-    plan = _plan(profile.q_profile_orders(spark, SF_DIR))
-    assert "Join" not in plan
-    assert "EvalPython" not in plan
-    assert plan.count("FileScan") == 1  # one pass over the table
-
-
-def test_anomalies_broadcast_stats_back(spark):
-    """Anomaly detection: hourly grain shuffles once; the tiny
-    per-type stats join back as a broadcast, never re-shuffling the
-    hourly frame on the low-cardinality type key."""
-    from spark_ij_spark.operators import profile
-
-    plan = _plan(profile.q_events_anomalies(spark, SF_DIR))
-    assert "BroadcastHashJoin" in plan
-    assert "EvalPython" not in plan
-
-
-def test_drift_psi_single_scan_no_join(spark):
-    """PSI drift: one map-only scan (hash slice + bin are codegen
-    exprs) to an O(bins) aggregate — no join, no Python, no rescans."""
-    from spark_ij_spark.operators import profile
-
-    plan = _plan(profile.q_docs_drift_psi(spark, SF_DIR))
-    assert "Join" not in plan
-    assert "EvalPython" not in plan
-    assert plan.count("FileScan") == 1
-
-
-def test_embed_drift_single_scan_no_join(spark):
-    """Embedding drift: one map-only scan (hash slice, quantize, and
-    posexplode are codegen exprs) into a single partial-aggregating
-    groupBy to O(dims) rows — no join, no Python, no rescans. The
-    vector sibling of the PSI guard above."""
-    from spark_ij_spark.operators import profile
-
-    plan = _plan(profile.q_embed_drift(spark, SF_DIR))
-    assert "Join" not in plan
-    assert "EvalPython" not in plan
-    assert plan.count("FileScan") == 1
 
 
 def test_bpe_pairs_map_only_partial_agg(spark):
@@ -581,8 +234,6 @@ def test_bpe_pairs_map_only_partial_agg(spark):
     from spark_ij_spark.operators import text
 
     plan = _plan(text.q_text_bpe_pairs(spark, SF_DIR))
-    assert "Join" not in plan
-    assert "EvalPython" not in plan
     assert "partial_count" in plan or "partial" in plan.lower()
 
 
@@ -595,13 +246,8 @@ def test_zorder_map_only_zvalue_no_join(spark):
     from spark_ij_spark.operators import layout
 
     plan = _plan(layout.q_zorder_stats(spark, SF_DIR))
-    assert plan.count("BroadcastNestedLoopJoin") == 1
-    assert "BroadcastNestedLoopJoin BuildRight, Cross" in plan
-    assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
-    assert "EvalPython" not in plan
     # One data scan + one bounds-aggregate scan; the bounds pass is
     # parallel partial-agg, not a global window.
-    assert plan.count("FileScan") == 2
     assert plan.count("windowspecdefinition") == 1
 
 
@@ -615,30 +261,13 @@ def test_pagerank_keyed_joins_no_cartesian(spark):
     block-id column ob)."""
     from spark_ij_spark.operators import dedup
 
-    plan = _plan(dedup.q_dedup_pagerank(spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "FlatMapCoGroupsInPandas" not in plan  # pure Catalyst path
-    assert "ArrowEvalPython" not in plan
-    # r11: pr AND deg are localCheckpoint()ed (deg was re-aggregated
-    # from the cached edge frame for each of its three consumers), so
-    # the result plan is checkpoint-shallow — a join of two
-    # materialized RDD scans, every per-round join/partial-agg having
-    # run eagerly inside the loop
-    assert plan.count("Scan ExistingRDD") == 2
-
-    plan_exact = _plan(dedup.q_dedup_pagerank_exact(spark, SF_DIR))
-    assert "CartesianProduct" not in plan_exact
-    assert plan_exact.count("Scan ExistingRDD") == 2  # checkpoint-shallow too
     # the exact twin's loop output no longer carries the edge
     # generator's lineage (deg is checkpointed), so assert the
     # cogrouped block-matmul shape on the EDGE frame itself
     plan_edges = _plan(dedup.q_dedup_embedding(spark, SF_DIR))
-    assert "CartesianProduct" not in plan_edges
     for line in plan_edges.splitlines():
         if "BroadcastNestedLoopJoin" in line:
             assert "ob#" in line, line
-    assert "FlatMapCoGroupsInPandas" in plan_edges  # edge baseline, by design
 
 
 def test_phrase_search_filters_postings_before_join(spark):
@@ -649,24 +278,8 @@ def test_phrase_search_filters_postings_before_join(spark):
     from spark_ij_spark.operators import text
 
     plan = _plan(text.q_text_phrase_search(spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "EvalPython" not in plan
     for term in text.PHRASE:
         assert term in plan  # the per-term posting filters survive
-
-
-def test_hash_retrieval_sparse_dot_broadcast_probes(spark):
-    """Hashing-trick retrieval: the dot product is a dimension-key
-    equi-join with the probe postings broadcast — no cartesian, no
-    dense all-pairs, no Python."""
-    from spark_ij_spark.operators import text
-
-    plan = _plan(text.q_text_hash_retrieval(spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "EvalPython" not in plan
-    assert "BroadcastHashJoin" in plan
 
 
 def test_calibrated_mix_broadcast_budgets_one_window(spark):
@@ -680,10 +293,6 @@ def test_calibrated_mix_broadcast_budgets_one_window(spark):
     from spark_ij_spark.operators import pipeline
 
     plan = _plan(pipeline.q_pipeline_calibrated_mix(spark, SF_DIR))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    assert "CartesianProduct" not in plan
-    assert "EvalPython" not in plan
     # the corpus window's exchange must carry the order-aligned bucket
     # key, not bare tier (which would be a 4-reducer straggler at scale)
     assert re.search(r"hashpartitioning\(tier#\d+, b#\d+L?, ", plan)
@@ -696,51 +305,7 @@ def test_weighted_sample_single_shuffle_no_join(spark):
     from spark_ij_spark.operators import pipeline
 
     plan = _plan(pipeline.q_pipeline_weighted_sample(spark, SF_DIR))
-    assert "Join" not in plan
-    assert "EvalPython" not in plan
-    assert plan.count("Exchange hashpartitioning") == 2
     assert "pmod" in plan
-
-
-def test_cooccurrence_equi_self_join_broadcast_marginals(spark):
-    """Association mining: the pair join is a user_id equi-join (never
-    all-pairs), the O(types) marginals come back broadcast, and the
-    ONLY nested-loop join is the 1-row broadcast user-count frame
-    (calibrate-then-apply — a driver .count() here would scan the
-    corpus eagerly at plan-build time)."""
-    from spark_ij_spark.operators import event_windows
-
-    plan = _plan(event_windows.q_events_cooccurrence(spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    # Exactly one BNLJ: the broadcast cross join attaching the 1-row
-    # n_users aggregate to the O(types²) pair frame.
-    assert plan.count("BroadcastNestedLoopJoin") == 1
-    assert "BroadcastNestedLoopJoin BuildRight, Cross" in plan
-    assert "EvalPython" not in plan
-    assert "BroadcastHashJoin" in plan
-
-
-def test_scd2_single_shuffle_no_join(spark):
-    """SCD-2 materialization: one user_id-keyed window shuffle, no
-    join, no Python; the is-current flag reuses the same lead()."""
-    from spark_ij_spark.operators import event_windows
-
-    plan = _plan(event_windows.q_events_scd2(spark, SF_DIR))
-    assert "Join" not in plan
-    assert "EvalPython" not in plan
-    assert plan.count("Exchange hashpartitioning") == 1
-
-
-def test_cdc_state_single_shuffle_no_join(spark):
-    """CDC compaction: the ranked window and the whole-partition
-    count/min windows share ONE user_id exchange; no join anywhere
-    (the naive latest⋈history form pays a second shuffle + join)."""
-    from spark_ij_spark.operators import event_windows
-
-    plan = _plan(event_windows.q_events_cdc_state(spark, SF_DIR))
-    assert "Join" not in plan
-    assert "EvalPython" not in plan
-    assert plan.count("Exchange hashpartitioning") == 1
 
 
 def test_skew_profile_single_fact_scan(spark):
@@ -751,27 +316,7 @@ def test_skew_profile_single_fact_scan(spark):
     from spark_ij_spark.operators import profile
 
     plan = _plan(profile.q_join_key_skew(spark, SF_DIR))
-    # the key histogram is cache()d — InMemoryTableScan in BOTH the
-    # totals and crossJoin subtrees IS the no-double-fact-scan
-    # guarantee (a FileScan count is unreliable here: the cached
-    # relation re-prints its child FileScan per reference)
-    assert plan.count("InMemoryTableScan") >= 2
-    assert "EvalPython" not in plan
     assert "partial_count" in plan or "partial" in plan.lower()
-
-
-def test_bloom_prejoin_map_side_filter_broadcast_truth(spark):
-    """Bloom pre-join: the bitmap probe is a map-side literal-array
-    filter on the fact scan (pushed into/next to the scan, before any
-    join); ground truth joins back as a broadcast hash join — no
-    shuffle of the fact table on the join key, no Python."""
-    from spark_ij_spark.operators import layout
-
-    plan = _plan(layout.q_bloom_prejoin(spark, SF_DIR))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    assert "CartesianProduct" not in plan
-    assert "EvalPython" not in plan
 
 
 def test_triangles_equi_joins_only(spark):
@@ -779,20 +324,7 @@ def test_triangles_equi_joins_only(spark):
     an equi-join — a cartesian wedge product is the scale failure the
     degree orientation exists to prevent."""
     plan = _plan(dedup.q_dedup_triangles(spark, SF_DIR))
-    assert "CartesianProduct" not in plan
     _only_hot_set_bnlj(plan)
-    assert "EvalPython" not in plan
-
-
-def test_paragraph_dedup_hash_agg_no_window(spark):
-    """Chunk dedup: winner-per-hash is a hash aggregate + equi-join
-    back, NEVER a window over the full chunk table (single-reducer
-    straggler) and never a cartesian; chunk text stays out of the
-    shuffle (only the 60-bit hash column moves)."""
-    plan = _plan(dedup.q_dedup_paragraphs(spark, SF_DIR))
-    assert "Window" not in plan
-    assert "CartesianProduct" not in plan
-    assert "EvalPython" not in plan
 
 
 def test_q18_aqe_broadcasts_post_having_agg(spark):
@@ -807,72 +339,6 @@ def test_q18_aqe_broadcasts_post_having_agg(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_q11_single_lineitem_scan_broadcast_threshold(spark):
-    """Q11: calibrate-then-apply — BOTH consumers (global reduce and
-    filter side) must read the cached per-part aggregate
-    (InMemoryTableScan), so lineitem is scanned once at runtime; the
-    1-row threshold reaches the filter via a broadcast, never a
-    window. (The plan TEXT prints the cache's build plan — and its
-    FileScan — under every InMemoryRelation, so count scans, not
-    filename occurrences.)"""
-    plan = _plan(relational.q11_important_parts(spark, SF_DIR))
-    assert plan.count("InMemoryTableScan") >= 2
-    assert "BroadcastExchange" in plan or "BroadcastNestedLoopJoin" in plan
-    assert "Window" not in plan
-
-
-def test_pareto_no_theta_join(spark):
-    """Skyline query: the sort-based form must plan as hash equi-joins
-    + ONE window over the price-level frame — never the quadratic
-    NOT-EXISTS nested-loop the naive formulation produces."""
-    plan = _plan(relational.q_pareto_orders(spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "EvalPython" not in plan
-    assert plan.count("Window") == 1
-
-
-def test_containment_equi_join_no_window(spark):
-    """Containment dedup: same capped inverted-index shape as the
-    Jaccard family — equi-joins only, directional rows emitted
-    map-side (no second join for the reverse direction), no window
-    over the postings."""
-    plan = _plan(dedup.q_dedup_containment(spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert "EvalPython" not in plan
-    assert "Window" not in plan
-
-
-def test_mad_outliers_broadcast_calibration(spark):
-    """MAD outliers: both calibration aggregates (median, MAD) come
-    back as broadcasts onto the events scan — never a global
-    percentile window over the corpus."""
-    plan = _plan(event_windows.q_events_mad_outliers(spark, SF_DIR))
-    assert "BroadcastHashJoin" in plan
-    assert "Window" not in plan
-    assert "EvalPython" not in plan
-
-
-def test_kmv_overlap_sample_joins_broadcast(spark):
-    """KMV overlap: the union-sketch membership joins run on O(types·k)
-    sample rows via broadcasts; no Python, no nested-loop beyond the
-    bounded type-pair fan-out."""
-    from spark_ij_spark.operators import timeseries
-
-    plan = _plan(timeseries.q_events_kmv_overlap(spark, SF_DIR))
-    assert "EvalPython" not in plan
-    assert "BroadcastHashJoin" in plan
-
-
-def test_prefix_filter_candidate_bounded_broadcast(spark):
-    """PPJoin verification: the per-doc array frame must be built from
-    candidate-semi-filtered postings (ADVICE r6) — the plan shows a
-    LeftSemi join feeding the collect_list aggregate."""
-    plan = _plan(dedup.q_dedup_prefix_filter(spark, SF_DIR))
-    assert "LeftSemi" in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_compaction_broadcast_calibration_metadata_window(spark):
     """Compaction plan: the per-source target attaches as a broadcast
     (calibrate-then-apply), the window runs on the aggregated manifest
@@ -881,31 +347,15 @@ def test_compaction_broadcast_calibration_metadata_window(spark):
     from spark_ij_spark.operators import layout
 
     plan = _plan(layout.q_layout_compaction(spark, SF_DIR))
-    assert "BroadcastHashJoin" in plan
-    assert "EvalPython" not in plan
-    assert "CartesianProduct" not in plan
     # the Window's input subtree must contain the manifest aggregate
     w = plan.index("Window")
     assert "HashAggregate" in plan[w:]
-
-
-def test_attribution_single_lineage_no_join(spark):
-    """Attribution: one corpus scan, one corpus-grain window (journey
-    cumsum on user_id), one journey-stats window over the aggregated
-    frame — and NO join of any kind in the plan."""
-    plan = _plan(event_windows.q_events_attribution(spark, SF_DIR))
-    assert "EvalPython" not in plan
-    assert "Join" not in plan
-    assert plan.count("Window") == 2
-    assert plan.count("Scan parquet") == 1
 
 
 def test_session_paths_user_keyed_windows_only(spark):
     """Session paths: the gaps-and-islands windows and the visit
     collect all key on user_id — no global window, no Python hop."""
     plan = _plan(event_windows.q_events_session_paths(spark, SF_DIR))
-    assert "EvalPython" not in plan
-    assert "CartesianProduct" not in plan
     assert "windowspecdefinition(user_id" in plan
 
 
@@ -913,53 +363,7 @@ def test_padding_waste_map_only_no_join(spark):
     """Padding audit: token count + granularity explode are map-only;
     the only shuffle is the O(granularities) aggregate."""
     plan = _plan(pipeline.q_pipeline_padding_waste(spark, SF_DIR))
-    assert "Join" not in plan
-    assert "EvalPython" not in plan
     assert "Generate explode" in plan
-
-
-def test_lsh_audit_no_cartesian_no_python(spark):
-    """LSH audit: candidate and truth pair sets meet in an equi full
-    outer join — never a cartesian pair enumeration."""
-    plan = _plan(dedup.q_dedup_lsh_audit(spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert "EvalPython" not in plan
-    assert "FullOuter" in plan
-
-
-def test_source_matrix_candidate_bounded_broadcast_dims(spark):
-    """Source matrix: the doc→source dimension must be semi-filtered
-    to pair participants and attached via broadcast hash joins — the
-    corpus is never reshuffled for the matrix, and no all-pairs
-    product sneaks in."""
-    plan = _plan(dedup.q_dedup_source_matrix(spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert "EvalPython" not in plan
-    assert "BroadcastHashJoin" in plan
-    assert "LeftSemi" in plan
-
-
-def test_freq_spectrum_partial_agg_jvm_only(spark):
-    """Frequency spectrum: two hash aggregates (shingle count, then
-    bucket rollup) with map-side partial aggregation, no sort or
-    window over the vocabulary, pure JVM."""
-    plan = _plan(text.q_text_freq_spectrum(spark, SF_DIR))
-    assert "EvalPython" not in plan
-    assert "Window" not in plan
-    assert plan.count("HashAggregate") >= 4  # partial+final for both aggs
-
-
-def test_dsir_scoring_map_only_topk(spark):
-    """DSIR phase 2 must compile to scan + literal-weight projection +
-    TakeOrdered: the data-derived weights inline as a literal array
-    (O(256) driver model state, collected in phase 1 before this plan
-    exists), so the scored corpus pass has no join, no shuffle, and no
-    Python — and selection is partial top-K, never a global window."""
-    plan = _plan(pipeline.q_pipeline_dsir_select(spark, SF_DIR))
-    assert "TakeOrderedAndProject" in plan
-    assert "Join" not in plan
-    assert "EvalPython" not in plan
-    assert "Window" not in plan
 
 
 def test_lsh_member_index_counts_join_is_broadcast(spark):

@@ -185,26 +185,28 @@ def test_cc_partitions_scale_with_edge_count(spark):
     assert labels.count() > 0
 
 
-def test_no_cartesian_or_row_python_anywhere(spark):
-    """Global structural net over EVERY graded query's physical plan:
-    no CartesianProduct (under the round-8 runtime-size-only broadcast
-    policy, a non-equi join whose bounded side loses its F.broadcast()
-    hint silently degrades to a cartesian — exactly the regression
-    class the policy switch created) and no BatchEvalPython (a
-    row-at-a-time Python UDF in a graded plan; Python is allowed only
-    as Arrow-batched pandas UDFs). Per-query guards in test_plans.py
-    check the shapes we DESIGNED; this sweep catches the shape nobody
-    thought to guard. Plans are built, never executed (driver-side
-    calibration actions inside query composition still run — sub-
-    second at SF_DIR). tools/plan_sweep.py is the standalone twin for
-    off-grade SFs."""
+def test_plan_signatures_match_committed(spark):
+    """Every graded query's pre-AQE physical plan, reduced to operator
+    counts (tools/plan_sweep.py), equals its committed PLANS.json line,
+    and none holds a CartesianProduct (under the runtime-size-only
+    broadcast policy, a non-equi join whose bounded side loses its
+    F.broadcast() hint degrades to one) or a BatchEvalPython (a
+    row-at-a-time Python UDF). The second check is a hard rule that no
+    regenerated PLANS.json can accept. Plans are built, never executed
+    (driver-side calibration actions inside query composition still
+    run — sub-second at SF_DIR). A plan that moved on purpose is
+    committed with `python tools/plan_sweep.py > PLANS.json` and its
+    diff reviewed like code."""
     import os
     import sys
 
     sys.path.insert(
         0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
     )
-    from plan_sweep import sweep
+    from plan_sweep import diff, forbidden, load, sweep
 
-    bad = sweep(spark, SF_DIR)
+    got = sweep(spark, SF_DIR)
+    bad = {name: ops for name, sig in got.items() if (ops := forbidden(sig))}
     assert not bad, f"forbidden plan operators: {bad}"
+    moved = diff(load(), got)
+    assert not moved, f"plans differ from PLANS.json (expected → got):\n{moved}"

@@ -171,6 +171,49 @@ def test_load_images_malformed_modes(spark, tmp_path):
         assert perm_rows[p].image == r.image and perm_rows[p].stats == r.stats
         assert perm_sql[p] == good_sql[p]
 
+    # The per-image ops outside the engine and the histograms follow the
+    # same rule, also when one Arrow batch holds the NULL image and a
+    # good one (one partition): NULL in gives NULL out, and
+    # explode_pixels gives the NULL image no rows.
+    from spark_ij_spark.operators.images import (
+        explode_pixels,
+        image_histogram,
+        processor_for_each,
+    )
+    from pyspark.sql import functions as F
+
+    def per_image_ops(df):
+        df = df.repartition(1).withColumn("hist_col", image_histogram("image"))
+        df = df.withColumn("proc", processor_for_each("image", lambda sl: sl + 1))
+        df.createOrReplaceTempView("_perm_imgs")
+        sql = spark.sql(
+            "SELECT path, hist_col, proc, hist(image) AS h, "
+            "hist3(image, 0.0, 4.0, 4) AS h3, mean(image) AS m, "
+            "nslices(image) AS n, toarray(image) AS a, scale(image, 2.0) AS sc, "
+            "hist_compare(image, image) AS hc, showmetadata(image) AS md, "
+            "roistats(image) AS rs, "
+            "setroi(image, 'RECTANGLE', array(0, 1), array(0, 1)) AS roi "
+            "FROM _perm_imgs"
+        )
+        pixels = explode_pixels(df.select(F.col("path").alias("sample"), "image"))
+        return {r.path: r for r in sql.collect()}, sorted(pixels.collect())
+
+    perm_ops, perm_pixels = per_image_ops(
+        load_images(spark, out, pattern="*.tif", mode="permissive")
+    )
+    good_ops, good_pixels = per_image_ops(load_images(spark, out, pattern="img*.tif"))
+    b = perm_ops[broken]
+    assert all(v is None for v in b.hist_col.asDict().values())
+    assert all(v is None for v in b.h.asDict().values())
+    assert all(v is None for v in b.h3.asDict().values())
+    assert b.proc.data is None and b.proc.log is None
+    assert b.sc.data is None and b.sc.log is None
+    assert b.roi.data is None and b.roi.log is None
+    assert (b.m, b.n, b.a, b.hc, b.md, b.rs) == (None,) * 6
+    for p, r in good_ops.items():
+        assert perm_ops[p] == r and r.h.bin_counts and r.n == 1
+    assert perm_pixels == good_pixels and len(good_pixels) == 2 * 3 * 2
+
 
 def test_imagej_stream_source_incremental_batches(spark, tmp_path):
     """Directory-watch streaming read with a checkpointed file sink:

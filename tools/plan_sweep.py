@@ -1,56 +1,169 @@
-"""Global structural plan sweep over EVERY graded query.
+"""Plan signature of every graded query, checked against PLANS.json.
 
-Builds (never executes) the physical plan of each ``queries()`` entry
-at a small SF and reports structural violations of the repo's scale
-rules:
+Builds (never executes) the physical plan of each ``queries()`` entry,
+each from an empty cache, and reduces the pre-AQE plan text to a
+signature: how many times each operator occurs, keeping only
 
-- ``CartesianProduct`` — an unhinted non-equi join. Under the round-8
-  broadcast policy (static auto-broadcast OFF, session.get_spark) a
-  non-equi join whose bounded side lost its ``F.broadcast()`` hint
-  silently degrades to a cartesian; this sweep is the net that
-  catches it across the WHOLE surface, not just the queries that
-  happen to have a hand-written plan guard in test_plans.py.
-- ``BatchEvalPython`` — a row-at-a-time Python UDF in a graded plan.
-  Python is allowed only as Arrow-batched pandas UDFs / mapInPandas
-  (ArrowEvalPython, FlatMapGroupsInPandas, MapInPandas...).
+- the partitioning kind on ``Exchange`` (``Exchange hashpartitioning``)
+- the build side and join type on joins
+  (``BroadcastNestedLoopJoin BuildRight Cross``, ``SortMergeJoin LeftSemi``)
+- the table name on ``FileScan`` (``FileScan lineitem``)
+- the kind on ``Scan`` (``Scan ExistingRDD``)
 
-Plan BUILD can still run driver-side calibration actions some queries
-perform while composing their frames (k-means centroid loops, block
-counts from footers) — at sf0.001 those are sub-second.
+The pre-AQE plan is deterministic because static auto-broadcast is off
+(session.get_spark): it does not move with the core count, the shuffle
+partition count or the scale factor. ``PLANS.json`` commits one line per
+query, so a plan change shows up as a one-line diff that is reviewed
+like code.
 
-Usage: python tools/plan_sweep.py [--sf sf0.001]
-Prints one line per offending query and exits non-zero on any hit;
-``checked: N bad: 0`` when clean. The pytest twin
-(tests/test_scale_plans.py::test_no_cartesian_or_row_python_anywhere)
-enforces the same invariant in the suite.
+Two operators are never accepted, whatever PLANS.json says:
+
+- ``CartesianProduct``: a non-equi join whose bounded side lost its
+  ``F.broadcast()`` hint degrades to one under the broadcast policy.
+- ``BatchEvalPython``: a row-at-a-time Python UDF. Python runs only as
+  Arrow-batched pandas UDFs / mapInPandas.
+
+Plan build still runs the driver-side calibration actions some queries
+perform while composing their frames; at sf0.001 those are sub-second.
+
+Usage::
+
+    python tools/plan_sweep.py [--sf sf0.001]   # diff vs PLANS.json on stderr
+    python tools/plan_sweep.py > PLANS.json     # regenerate
+
+The signatures go to stdout and everything else to stderr. The exit
+status is non-zero when a plan holds a forbidden operator.
+tests/test_scale_plans.py::test_plan_signatures_match_committed runs the
+same pass in the suite. This module imports without pyspark.
 """
 
 from __future__ import annotations
 
 import argparse
+import json
 import os
+import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
+PLANS_PATH = os.path.join(REPO, "PLANS.json")
 FORBIDDEN = ("CartesianProduct", "BatchEvalPython")
 
+# tree-string child prefix: one "   " or ":  " per ancestor, then "+- "
+# or ":- "; a line without one continues a literal of the line above
+_CHILD = re.compile(r"^(?:   |:  )*[+:]- ")
+_CODEGEN = re.compile(r"^\*\(\d+\) ")
+_WORD = re.compile(r"[A-Za-z]\w*")
+_GROUP = re.compile(r"\[[^\[\]]*\]|\([^()]*\)")
+_BUILD_SIDES = {"BuildLeft", "BuildRight"}
+_JOIN_TYPES = {
+    "Inner", "Cross", "LeftOuter", "RightOuter", "FullOuter",
+    "LeftSemi", "LeftAnti", "ExistenceJoin",
+}
 
-def sweep(spark, sf_dir: str) -> dict[str, list[str]]:
-    """{query_name: [forbidden ops found]} over every graded query."""
+
+def _strip_groups(s: str) -> str:
+    """Drop every bracketed or parenthesised group (keys, conditions)."""
+    while True:
+        t = _GROUP.sub("", s)
+        if t == s:
+            return s
+        s = t
+
+
+def _table(node: str) -> str:
+    """The table a FileScan reads: its ``*.parquet`` path, else the
+    catalog table named after the format."""
+    m = re.search(r"Location: \w+\(\d+ paths\)\[([^,\]]+)", node)
+    if m and m.group(1).endswith(".parquet"):
+        return os.path.basename(m.group(1))[: -len(".parquet")]
+    return re.match(r"FileScan \w+ ([\w.]+)\[", node).group(1).rsplit(".", 1)[-1]
+
+
+def _key(node: str) -> str:
+    name = _WORD.match(node).group(0)
+    rest = node[len(name):]
+    if name in ("Exchange", "Scan"):
+        return f"{name} {_WORD.search(rest).group(0)}"
+    if name == "FileScan":
+        return f"FileScan {_table(node)}"
+    if name.endswith("Join"):
+        words = _WORD.findall(_strip_groups(rest))
+        build = [w for w in words if w in _BUILD_SIDES][:1]
+        how = [w for w in words if w in _JOIN_TYPES][:1]
+        return " ".join([name, *build, *how])
+    return name
+
+
+def signature(plan: str) -> dict[str, int]:
+    """{operator key: count} over every node of a plan's tree string,
+    including subqueries and cached plans printed inside it."""
+    sig: dict[str, int] = {}
+    for i, line in enumerate(plan.splitlines()):
+        m = _CHILD.match(line)
+        if i and m is None:
+            continue
+        k = _key(_CODEGEN.sub("", line[m.end():] if m else line))
+        sig[k] = sig.get(k, 0) + 1
+    return dict(sorted(sig.items()))
+
+
+def forbidden(sig: dict[str, int]) -> list[str]:
+    return [k for k in sig if k.split(" ", 1)[0] in FORBIDDEN]
+
+
+def diff(expected: dict[str, dict], got: dict[str, dict]) -> str:
+    """One block per changed query, one ``op: expected → got`` line per
+    moved operator; empty when nothing moved."""
+    out = []
+    for name in sorted(expected.keys() | got.keys()):
+        if name not in got:
+            out.append(f"{name}: in PLANS.json but not in queries()")
+        elif name not in expected:
+            out.append(f"{name}: not in PLANS.json")
+        elif expected[name] != got[name]:
+            e, g = expected[name], got[name]
+            out.append(f"{name}:")
+            out += [
+                f"  {op}: {e.get(op, 0)} → {g.get(op, 0)}"
+                for op in sorted(e.keys() | g.keys())
+                if e.get(op, 0) != g.get(op, 0)
+            ]
+    return "\n".join(out)
+
+
+def dumps(sigs: dict[str, dict]) -> str:
+    """PLANS.json text: one line per query, sorted by name."""
+    lines = [f"{json.dumps(n)}: {json.dumps(sigs[n])}" for n in sorted(sigs)]
+    return "{\n" + ",\n".join(lines) + "\n}\n"
+
+
+def load(path: str = PLANS_PATH) -> dict[str, dict]:
+    try:
+        with open(path) as fh:
+            text = fh.read()
+    except FileNotFoundError:
+        return {}
+    return json.loads(text) if text.strip() else {}
+
+
+def sweep(spark, sf_dir: str) -> dict[str, dict[str, int]]:
+    """{query_name: signature} over every graded query."""
     import __spark_entry__ as entrymod
+    from spark_ij_spark.operators.layout import _tag
 
-    bad: dict[str, list[str]] = {}
+    sigs = {}
     for name, fn in entrymod.queries().items():
-        df = fn(spark, sf_dir)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        hits = [op for op in FORBIDDEN if op in plan]
-        if hits:
-            bad[name] = hits
-        # calibration frames some queries persist() during plan build
-        # would otherwise accumulate across the 163-query sweep
+        # calibration frames an earlier build persisted would otherwise
+        # turn up as InMemoryTableScan in this plan
         spark.catalog.clearCache()
-    return bad
+        plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+        # session-built catalog tables are named per scale factor
+        sigs[name] = signature(plan.replace(_tag(sf_dir), "sf"))
+    spark.catalog.clearCache()
+    return sigs
 
 
 def main() -> int:
@@ -60,19 +173,26 @@ def main() -> int:
     sf_dir = (
         args.sf if os.path.isdir(args.sf) else os.path.join("/root/testdata", args.sf)
     )
+    # {} when the shell's `> PLANS.json` has already emptied the file
+    committed = load()
+    out_fd = os.dup(1)
+    os.dup2(2, 1)  # Spark, the JVM and query builds print to stderr
 
     from spark_ij_spark.session import get_spark
 
-    spark = get_spark("plan-sweep", cpus=8)
+    spark = get_spark("plan-sweep")
     spark.sparkContext.setLogLevel("ERROR")
-    import __spark_entry__ as entrymod
-
-    n = len(entrymod.queries())
-    bad = sweep(spark, sf_dir)
-    for name, hits in bad.items():
-        print(f"  {name}: {', '.join(hits)}")
-    print(f"checked: {n}  bad: {len(bad)}")
+    sigs = sweep(spark, sf_dir)
     spark.stop()
+
+    with os.fdopen(out_fd, "w") as out:
+        out.write(dumps(sigs))
+    bad = {n: ops for n, s in sigs.items() if (ops := forbidden(s))}
+    for name, ops in bad.items():
+        print(f"  {name}: {', '.join(ops)}", file=sys.stderr)
+    if committed:
+        print(diff(committed, sigs) or "no diff against PLANS.json", file=sys.stderr)
+    print(f"checked: {len(sigs)}  forbidden: {len(bad)}", file=sys.stderr)
     return 1 if bad else 0
 
 
