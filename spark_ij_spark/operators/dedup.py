@@ -39,6 +39,7 @@ from spark_ij_spark.operators.text import (
     hash60_duck,
     hash60_spark,
 )
+from spark_ij_spark.session import checkpoint
 
 JACCARD_THRESHOLD = 0.2
 MINHASH_K = 8          # permutations
@@ -758,10 +759,7 @@ WHERE {_QCOS_DUCK} >= {EMBED_COS_THRESHOLD}
 # DERIVED from the measured edge count (one cheap count() on the cached
 # edge frame, amortized over up to CC_MAX_ROUNDS label-propagation
 # rounds): ceil(edges / CC_TARGET_EDGES_PER_PARTITION), floored at
-# CC_MIN_PARTITIONS so local runs keep a little parallelism. Set
-# CC_PARTITIONS (int) to override with a fixed count on deploys where
-# the graph size is known a priori.
-CC_PARTITIONS: int | None = None
+# CC_MIN_PARTITIONS so local runs keep a little parallelism.
 CC_MIN_PARTITIONS = 4
 CC_TARGET_EDGES_PER_PARTITION = 2_000_000
 CC_MAX_ROUNDS = 20
@@ -771,8 +769,6 @@ def cc_partitions(n_edges: int) -> int:
     """Loop-frame partition count for ``n_edges`` symmetric edges —
     targets ~1-10M edges/partition so a 100× bigger pair graph gets
     proportionally more tasks instead of serializing 4 fat ones."""
-    if CC_PARTITIONS is not None:
-        return CC_PARTITIONS
     import math
 
     return max(CC_MIN_PARTITIONS, math.ceil(n_edges / CC_TARGET_EDGES_PER_PARTITION))
@@ -824,45 +820,33 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("label", F.col("doc_id"))
         .repartition(n_parts, "doc_id")
     )
-    converged = False
     for _ in range(CC_MAX_ROUNDS):
         neighbor_min = (
             sym.join(labels, sym.src == labels.doc_id)
             .groupBy(F.col("dst").alias("doc_id"))
             .agg(F.min("label").alias("nlabel"))
         )
-        # Carry the pre-round label through the checkpointed frame so
-        # the fixpoint probe is a map-only filter over it — the
-        # previous probe re-JOINED new vs old labels on doc_id every
-        # round, an extra per-round join the loop doesn't need
-        # (guide §2.4; measured 8.8 → 5.7 s on the full clusters query
-        # at sf0.1, same-session pair).
-        new_frame = (
-            labels.join(neighbor_min, "doc_id", "left")
-            .select(
+        # The fixpoint probe counts the labels this round lowered, inside
+        # the checkpoint's own job.
+        rnd, probe = checkpoint(
+            labels.join(neighbor_min, "doc_id", "left").select(
                 "doc_id",
                 F.col("label").alias("old_label"),
                 F.least(
                     F.col("label"), F.coalesce("nlabel", "label")
                 ).alias("label"),
-            )
-            .localCheckpoint()  # truncate loop lineage
+            ),
+            changed=F.count(F.when(F.col("label") != F.col("old_label"), 1)),
         )
-        changed = (
-            new_frame.filter(F.col("label") != F.col("old_label"))
-            .limit(1)
-            .count()
-        )
-        labels = new_frame.select("doc_id", "label")
-        if changed == 0:
-            converged = True
+        labels = rnd.select("doc_id", "label")
+        if probe["changed"] == 0:
             break
-    if not converged:
+    else:
         # Returning intermediate labels would SILENTLY diverge from the
         # oracle's exact transitive closure (and feed wrong reps to the
         # keeper/leakage-split consumers) — fail loudly instead; a
-        # >20-hop component diameter means CC_MAX_ROUNDS needs raising
-        # (or pointer-jumping) for this graph.
+        # component diameter past CC_MAX_ROUNDS hops means it needs
+        # raising (or pointer-jumping) for this graph.
         raise RuntimeError(
             f"CC label propagation did not reach fixpoint within"
             f" {CC_MAX_ROUNDS} rounds; raise CC_MAX_ROUNDS"
@@ -1098,9 +1082,8 @@ def _pagerank_over_edges(edges: DataFrame, id_alias: str) -> DataFrame:
     round with no driver state beyond the node count. Same loop
     hygiene as the CC op: partition count derived from the measured
     edge count, degree attached to the edge frame ONCE (GraphX-style,
-    so the static side never re-joins per round), and per-round
-    localCheckpoint to keep loop plans shallow (measured 1.5x on the
-    loop at sf0.1).
+    so the static side never re-joins per round), and a per-round
+    checkpoint to keep loop plans shallow.
     Determinism: pure integer fixed-point (see constants above); no
     float accumulates anywhere, so summation order is irrelevant."""
     # cache BEFORE the self-union: the union references `edges` twice,
@@ -1115,39 +1098,29 @@ def _pagerank_over_edges(edges: DataFrame, id_alias: str) -> DataFrame:
     n_parts = cc_partitions(sym0.count())  # materializes the edge cache
     sym = sym0.repartition(n_parts, "src")
     # deg is consumed three times (symdeg build, pr init, final join);
-    # uncheckpointed, each consumer re-shuffled and re-aggregated the
-    # whole symmetrized edge frame off the cache. One |V|-row
-    # localCheckpoint makes deg a static side computed exactly once
-    # (r11, guide §5 cache-reuse / §2.4 shared exchange).
-    deg = (
-        sym.groupBy("src")
-        .agg(F.expr("CAST(COUNT(*) AS BIGINT)").alias("deg"))
-        .localCheckpoint()
+    # checkpointed, it is a static side computed exactly once. It has
+    # one row per node, so its checkpoint also counts the nodes.
+    deg, probe = checkpoint(
+        sym.groupBy("src").agg(F.expr("CAST(COUNT(*) AS BIGINT)").alias("deg")),
+        n_nodes=F.count(F.lit(1)),
     )
-    symdeg = sym.join(deg, "src").select("src", "dst", "deg").localCheckpoint()
-    # deg has exactly one row per node (groupBy src over the
-    # symmetrized frame), so the node count is a count of the
-    # checkpointed |V|-row frame — the old distinct() re-shuffled all
-    # E rows of symdeg for the same scalar (r11, guide §2.4).
-    n_nodes = deg.count()  # O(1) model scalar
+    symdeg, _ = checkpoint(sym.join(deg, "src").select("src", "dst", "deg"))
     # max(…, 1): a dup-free corpus yields an empty graph — every loop
     # frame is empty and the query returns 0 rows (matching the
     # oracle's empty set) instead of ZeroDivisionError on the driver.
-    base = PR_SCALE // max(n_nodes, 1)
+    base = PR_SCALE // max(probe["n_nodes"], 1)
     tele = (1000 - PR_DAMP_THOUSANDTHS) * base // 1000
-    pr = deg.select("src", F.lit(base).cast("long").alias("pr")).localCheckpoint()
+    pr, _ = checkpoint(deg.select("src", F.lit(base).cast("long").alias("pr")))
     for _ in range(PR_ITERS):
         contrib = symdeg.join(pr, "src").select(
             F.col("dst").alias("src"), F.expr("pr div deg").alias("c")
         )
-        pr = (
-            contrib.groupBy("src")
-            .agg(
+        pr, _ = checkpoint(
+            contrib.groupBy("src").agg(
                 F.expr(
                     f"CAST({tele} + ({PR_DAMP_THOUSANDTHS} * SUM(c)) div 1000 AS BIGINT)"
                 ).alias("pr")
             )
-            .localCheckpoint()
         )
     return (
         pr.join(deg, "src")
@@ -1413,8 +1386,8 @@ def q_dedup_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: each round is one degree aggregate + two semi-joins
     on the (already tiny relative to the corpus) edge list — all
-    equi-joins, no windows; the loop frame is ``localCheckpoint``ed
-    every round so the plan does not nest (CLAUDE.md loop hygiene).
+    equi-joins, no windows; the loop frame is checkpointed every round
+    so the plan does not nest (session.checkpoint).
     Peeling converges in O(peeling depth) rounds independent of graph
     size, and each round's cost shrinks monotonically.
     """
@@ -1426,44 +1399,39 @@ def q_dedup_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (CLAUDE.md iterative-loop rule, same as the CC/PageRank loops):
     # the edges.count() also materializes the shared edge cache. The
     # per-round aggregate/join shuffles are AQE-coalesced; this keeps
-    # the checkpoint storage and the count() probes right-sized.
+    # the checkpoint storage right-sized.
     n_parts = cc_partitions(2 * edges.count())
-    cur = (
-        edges.select(F.col("da").alias("src"), F.col("db").alias("dst"))
-        .union(edges.select(F.col("db").alias("src"), F.col("da").alias("dst")))
-        .repartition(n_parts, "src")
-        .localCheckpoint()
-    )
     # Early exit when a peel removes nothing: rounds past the fixpoint
     # are identity maps, so breaking early is result-identical to the
-    # oracle's fixed KCORE_ROUNDS at EVERY scale factor — the count()
-    # probe reads the just-checkpointed partitions (no recompute), the
-    # same convergence pattern as the CC loop in q_dedup_clusters.
-    prev = cur.count()
+    # oracle's fixed KCORE_ROUNDS at EVERY scale factor. The edge count
+    # is a probe of each checkpoint's own job.
+    n_edges = F.count(F.lit(1))
+    cur, probe = checkpoint(
+        edges.select(F.col("da").alias("src"), F.col("db").alias("dst"))
+        .union(edges.select(F.col("db").alias("src"), F.col("da").alias("dst")))
+        .repartition(n_parts, "src"),
+        n=n_edges,
+    )
     for _ in range(KCORE_ROUNDS):
+        prev = probe["n"]
         keep = (
             cur.groupBy("src")
             .agg(F.count("*").alias("deg"))
             .where(F.col("deg") >= KCORE_K)
             .select("src")
         )
-        # no per-round repartition (r12): when AQE broadcasts the keep
-        # side (toy SF) the semi-joins are narrow and the checkpoint
-        # keeps the initial n_parts layout for free; when they shuffle
-        # (at scale) the checkpoint inherits the AQE-coalesced
-        # post-join partitioning — either way the extra full edge
-        # shuffle per round bought nothing (measured 3.29 -> 2.81 s,
-        # identical result).
-        cur = (
+        # No per-round repartition: when AQE broadcasts the keep side
+        # the semi-joins are narrow and the checkpoint keeps the initial
+        # n_parts layout; when they shuffle the checkpoint inherits the
+        # AQE-coalesced post-join partitioning.
+        cur, probe = checkpoint(
             cur.join(keep, "src", "left_semi")
             .join(keep.select(F.col("src").alias("dst")), "dst", "left_semi")
-            .select("src", "dst")
-            .localCheckpoint()
+            .select("src", "dst"),
+            n=n_edges,
         )
-        n = cur.count()
-        if n == prev:
+        if probe["n"] == prev:
             break
-        prev = n
     return cur.groupBy(F.col("src").alias("doc_id")).agg(
         F.count("*").alias("core_degree")
     )

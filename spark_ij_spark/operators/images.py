@@ -45,6 +45,7 @@ from spark_ij_spark.datamodel import (
     TABLE_SCHEMA,
     image_frame,
     image_to_np,
+    is_null_image,
     log_of,
     map_images,
     meta_of,
@@ -401,7 +402,10 @@ def reduce_images(
     straggler problem (7 width classes here) without salting: partials
     parallelize with the input partitioning, and the final per-key
     merge touches only batch-count-sized data. Average carries (sum, n)
-    through the tree so the merge is associative."""
+    through the tree so the merge is associative.
+
+    NULL images are skipped the way SQL aggregates skip NULLs; a group
+    whose images are all NULL yields ``NULL_IMAGE``."""
     if how not in ("average", "sum", "min", "max"):
         raise ValueError(f"unknown reduction {how!r}")
     out_schema = StructType(
@@ -443,6 +447,10 @@ def reduce_images(
         for pdf in batches:
             rows = []
             for gk, sub in pdf.groupby("group_key", sort=False):
+                sub = sub[sub["data"].notna()]
+                if sub.empty:  # keeps the all-NULL group alive
+                    rows.append({"group_key": gk, "n": 0, "data": None, "shape": None})
+                    continue
                 arrs = np.stack(
                     [
                         np.frombuffer(d, dtype=dt).reshape(list(sh)).astype("float64")
@@ -462,6 +470,10 @@ def reduce_images(
                 yield pd.DataFrame(rows)
 
     def final(pdf: pd.DataFrame) -> pd.DataFrame:
+        gk = str(pdf["group_key"].iloc[0])
+        pdf = pdf[pdf["n"] > 0]
+        if pdf.empty:
+            return pd.DataFrame([{"group_key": gk, "image": NULL_IMAGE}])
         arrs = np.stack(
             [
                 np.frombuffer(d, dtype="float64").reshape(list(sh))
@@ -472,9 +484,7 @@ def reduce_images(
         out = _combine(arrs)
         if how == "average":
             out = out / n
-        return pd.DataFrame(
-            [{"group_key": str(pdf["group_key"].iloc[0]), "image": _pack(out, n)}]
-        )
+        return pd.DataFrame([{"group_key": gk, "image": _pack(out, n)}])
 
     flat = df.select(
         F.col(key_col).cast("string").alias("group_key"),
@@ -495,21 +505,23 @@ def assemble_stacks(
     df: DataFrame, key_col: str, image_col: str = "image", order_col: str = "sample"
 ) -> DataFrame:
     """groupBy(key).applyInPandas: concatenate each group's images into
-    one stack along the slice axis (deterministic order by order_col)."""
+    one stack along the slice axis (deterministic order by order_col).
+    NULL images are skipped like NULLs in a SQL aggregate; a group whose
+    images are all NULL yields ``NULL_IMAGE``."""
     out_schema = StructType(
         [StructField("sample", StringType()), StructField("image", IMAGE_SCHEMA)]
     )
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col)
-        arrs = [image_to_np(img) for img in pdf[image_col]]
-        stacked = np.concatenate(arrs, axis=2)
-        first = pdf[image_col].iloc[0]
+        key = str(pdf[key_col].iloc[0])
+        imgs = [i for i in pdf.sort_values(order_col)[image_col] if not is_null_image(i)]
+        if not imgs:
+            return pd.DataFrame([{"sample": key, "image": NULL_IMAGE}])
         img = np_to_image(
-            stacked,
-            meta=meta_of(first),
-            log=[lineage.log_entry(lineage.OP_MERGE, "assemble_stacks", [str(len(arrs))])],
+            np.concatenate([image_to_np(i) for i in imgs], axis=2),
+            meta=meta_of(imgs[0]),
+            log=[lineage.log_entry(lineage.OP_MERGE, "assemble_stacks", [str(len(imgs))])],
         )
-        return pd.DataFrame([{"sample": str(pdf[key_col].iloc[0]), "image": img}])
+        return pd.DataFrame([{"sample": key, "image": img}])
 
     return df.groupBy(key_col).applyInPandas(build, schema=out_schema)

@@ -41,6 +41,7 @@ from spark_ij_spark.operators.text import (
     hash60_duck,
     hash60_spark,
 )
+from spark_ij_spark.session import checkpoint
 
 # train/val/test = 80/10/10 by hash60(doc_id-as-string) mod 100.
 SPLIT_TRAIN_PCT = 80
@@ -1311,13 +1312,15 @@ def q_pipeline_calibrated_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-(tier, order-bucket) token totals: bounded at tiers·2^bits
     # rows by construction, and avail = their per-tier sum (exact
     # BIGINT adds in any grouping), so ONE corpus aggregation pass
-    # feeds both calibration and the walk offsets. localCheckpoint
+    # feeds both calibration and the walk offsets. The checkpoint
     # materializes that pass ONCE — offs and budgets are separate
     # broadcast subtrees, and without it each re-runs the corpus
-    # tokenize (measured 3 scans → 2, 3.7 s → 1.3 s at sf0.1).
-    bt = docs.groupBy("tier", "b").agg(
-        F.expr("CAST(SUM(n_tokens) AS BIGINT)").alias("b_tokens")
-    ).localCheckpoint()
+    # tokenize.
+    bt, _ = checkpoint(
+        docs.groupBy("tier", "b").agg(
+            F.expr("CAST(SUM(n_tokens) AS BIGINT)").alias("b_tokens")
+        )
+    )
     avail = bt.groupBy("tier").agg(
         F.expr("CAST(SUM(b_tokens) AS BIGINT)").alias("avail_tokens")
     )

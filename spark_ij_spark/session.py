@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 TABLE_NAMES = [
@@ -27,13 +27,19 @@ TABLE_NAMES = [
     "embeddings",
 ]
 
+
+def local_cpus() -> int:
+    """$SPARK_GRAFT_CPUS, or all local cores."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+
+
 def get_spark(app_name: str = "spark_ij_spark", cpus: int | None = None) -> SparkSession:
     """Create (or fetch) a SparkSession with engine defaults.
 
-    ``cpus`` defaults to $SPARK_GRAFT_CPUS or all local cores.
+    ``cpus`` defaults to ``local_cpus()``.
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+        cpus = local_cpus()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -90,6 +96,25 @@ def spread(df: DataFrame, *keys: str) -> DataFrame:
     except Exception:
         return df
     return df.repartition(*[F.col(k) for k in keys])
+
+
+def checkpoint(df: DataFrame, **probes: Column) -> tuple[DataFrame, dict]:
+    """Truncate ``df``'s lineage with an eager ``localCheckpoint()`` and
+    return it with the named aggregate ``probes`` measured in the same
+    job — the one lineage policy of every iterative loop.
+
+    The probes ride the checkpoint's own job through one
+    ``Observation``, so a convergence or size check costs no job of its
+    own. Retry condition: the observe is the outermost operator, so its
+    metric comes from the result stage, whose accumulator updates Spark
+    applies once per partition — a retried task cannot count twice.
+    Over an empty frame ``F.sum`` observes NULL while ``F.count``
+    observes 0, so a probe must be ``count``-based or coalesced."""
+    if not probes:
+        return df.localCheckpoint(), {}
+    obs = Observation()
+    out = df.observe(obs, *[c.alias(k) for k, c in probes.items()]).localCheckpoint()
+    return out, obs.get
 
 
 def load_tables(

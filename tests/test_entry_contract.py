@@ -548,6 +548,31 @@ def test_run_op_is_called_only_from_the_shared_engine():
     )
 
 
+def test_local_checkpoint_is_named_only_in_session():
+    """Every iterative loop truncates lineage through session.checkpoint,
+    so the lineage policy lives in one function: ``localCheckpoint`` may
+    be named only in session.py."""
+    import ast
+
+    pkg = os.path.join(REPO, "spark_ij_spark")
+    offenders = []
+    for root, _dirs, files in os.walk(pkg):
+        for f in files:
+            rel = os.path.relpath(os.path.join(root, f), REPO)
+            if not f.endswith(".py") or rel == os.path.join("spark_ij_spark", "session.py"):
+                continue
+            for node in ast.walk(ast.parse(open(os.path.join(REPO, rel)).read())):
+                if (
+                    (isinstance(node, ast.Attribute) and node.attr == "localCheckpoint")
+                    or (isinstance(node, ast.Name) and node.id == "localCheckpoint")
+                    or (isinstance(node, ast.Constant) and node.value == "localCheckpoint")
+                ):
+                    offenders.append(f"{rel}:{node.lineno}")
+    assert offenders == [], (
+        f"localCheckpoint outside session.py (call session.checkpoint): {offenders}"
+    )
+
+
 _CANNED_PLAN = """\
 AdaptiveSparkPlan isFinalPlan=false
 +- Sort [n#7L DESC NULLS LAST], true, 0

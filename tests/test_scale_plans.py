@@ -163,8 +163,7 @@ def test_semdedup_chunked_matmul_matches_full():
 
 def test_cc_partitions_scale_with_edge_count(spark):
     """Connected-components loop frames must be sized from the measured
-    edge count (1-10M edges/partition band), not a fixed constant —
-    and the derived count must actually reach the cached loop frame."""
+    edge count (1-10M edges/partition band), not a fixed constant."""
     from spark_ij_spark.operators import dedup
 
     # sizing function: floor at small inputs, proportional growth after
@@ -173,16 +172,72 @@ def test_cc_partitions_scale_with_edge_count(spark):
     big = dedup.cc_partitions(1_000_000_000)
     assert big == 500  # 1e9 / 2M target
     assert dedup.cc_partitions(100_000_000_000) == 100 * big
-    # override hook still wins
-    old = dedup.CC_PARTITIONS
-    try:
-        dedup.CC_PARTITIONS = 7
-        assert dedup.cc_partitions(1_000_000_000) == 7
-    finally:
-        dedup.CC_PARTITIONS = old
-    # end-to-end: the loop frame partition count matches the derivation
+    # end-to-end: the loop sized this way runs and labels documents
     labels = dedup.q_dedup_clusters(spark, SF_DIR)
     assert labels.count() > 0
+
+
+def test_checkpoint_probes_ride_the_checkpoint_job(spark):
+    """session.checkpoint measures its probes inside the checkpoint's own
+    job: the probe values equal separate count()s, and the job count
+    equals that of a bare localCheckpoint() of the same frame."""
+    from perfbench.probes import job_counts
+    from spark_ij_spark.session import checkpoint
+
+    sc = spark.sparkContext
+    grouped = (
+        spark.range(1000)
+        .groupBy((F.col("id") % 37).alias("k"))
+        .agg(F.count("*").alias("n"))
+    )
+
+    def jobs(group, build):
+        sc.setJobGroup(group, group)
+        try:
+            return build(), job_counts(sc, group)[0]
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    (cp, probe), with_probes = jobs(
+        "checkpoint-probes",
+        lambda: checkpoint(
+            grouped,
+            rows=F.count(F.lit(1)),
+            big=F.count(F.when(F.col("n") > 27, 1)),
+        ),
+    )
+    _, bare = jobs("checkpoint-bare", grouped.localCheckpoint)
+    assert probe == {
+        "rows": grouped.count(),
+        "big": grouped.filter(F.col("n") > 27).count(),
+    }
+    assert probe == {"rows": 37, "big": 1}
+    assert with_probes == bare > 0
+    assert sorted(cp.collect()) == sorted(grouped.collect())
+
+
+@pytest.mark.parametrize(
+    "query", ["q_dedup_clusters", "q_dedup_kcore", "q_dedup_pagerank"]
+)
+def test_graph_loops_on_an_empty_near_dup_graph(spark, monkeypatch, query):
+    """No pair reaches the threshold: every loop frame is empty, each
+    checkpoint probe reads 0 (a count, never a NULL sum), and the query
+    returns 0 rows instead of raising."""
+    from spark_ij_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "JACCARD_THRESHOLD", 1.01)
+    assert getattr(dedup, query)(spark, SF_DIR).count() == 0
+
+
+def test_cc_raises_when_fixpoint_not_reached(spark, monkeypatch):
+    """The CC loop needs 2 rounds at SF_DIR; capped at 1 it must raise,
+    not return the intermediate labels — a fixpoint probe that always
+    read 0 would pass silently here."""
+    from spark_ij_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="did not reach fixpoint"):
+        dedup.q_dedup_clusters(spark, SF_DIR)
 
 
 def test_plan_signatures_match_committed(spark):

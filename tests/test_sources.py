@@ -214,6 +214,29 @@ def test_load_images_malformed_modes(spark, tmp_path):
         assert perm_ops[p] == r and r.h.bin_counts and r.n == 1
     assert perm_pixels == good_pixels and len(good_pixels) == 2 * 3 * 2
 
+    # The group reductions skip a NULL image the way SQL aggregates skip
+    # NULLs: a group of NULL and good images equals the group of the good
+    # ones, and an all-NULL group yields one NULL image.
+    from spark_ij_spark.operators.images import assemble_stacks, reduce_images
+
+    def grouped(df):
+        df = df.withColumn("all", F.lit("all")).repartition(1)
+        out = {}
+        for key in ("all", "path"):
+            for r in reduce_images(df, key, how="sum").collect():
+                out["reduce", r.group_key] = r.image
+            for r in assemble_stacks(df, key, order_col="path").collect():
+                out["stack", r.sample] = r.image
+        return out
+
+    perm_grouped = grouped(load_images(spark, out, pattern="*.tif", mode="permissive"))
+    good_grouped = grouped(load_images(spark, out, pattern="img*.tif"))
+    for kind in ("reduce", "stack"):
+        null = perm_grouped.pop((kind, broken))
+        assert null.data is None and null.log is None
+    assert perm_grouped == good_grouped and len(good_grouped) == 6
+    assert good_grouped["stack", "all"].shape[2] == 2
+
 
 def test_imagej_stream_source_incremental_batches(spark, tmp_path):
     """Directory-watch streaming read with a checkpointed file sink:

@@ -46,7 +46,8 @@ def vhash(cols, rows) -> str:
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="sf0.01")
-    ap.add_argument("--cpus", type=int, default=8)
+    ap.add_argument("--cpus", type=int, default=None,
+                    help="local cores (default: $SPARK_GRAFT_CPUS or all)")
     ap.add_argument("--partitions", type=int, default=None)
     ap.add_argument("--bare", action="store_true",
                     help="bare default SparkSession (driver-like)")
@@ -63,14 +64,14 @@ def main() -> int:
     import duckdb
 
     import __spark_entry__ as mod
-    from spark_ij_spark.session import TABLE_NAMES, get_spark
+    from spark_ij_spark.session import TABLE_NAMES, get_spark, local_cpus
 
     if args.bare:
         from pyspark.sql import SparkSession
 
         spark = (
             SparkSession.builder.appName("oracle-sim-bare")
-            .master(f"local[{args.cpus}]")
+            .master(f"local[{args.cpus or local_cpus()}]")
             .getOrCreate()
         )
     else:
