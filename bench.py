@@ -1,74 +1,35 @@
-"""Benchmark harness: runs headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
+"""Benchmark harness: runs every query at $SPARK_GRAFT_SF_DIR (default:
+the sf0.1 testdata set) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
+line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
-Tiered timing protocol (round 11 — deterministic warm cadence;
-round 12 adds the pinned SENTINEL tier, the stale-carry drop and the
-bounded-reps headline fallback):
-
-- SENTINEL tier (r12): a pinned cross-family set (SENTINELS) runs
-  FIRST, always warm min-of-3, exempt from every budget degradation,
-  and is always printed in the compact line — a stable warm-vs-warm
-  comparison surface across rounds regardless of tier rotation
-  (VERDICT r11 #1: the r10/r11 driver-comparable surface shrank to 5
-  queries and both flagged "regressions" were box noise).
-- HEADLINE tier: the HEADLINE_N heaviest queries by the previous
-  committed BENCH_FULL.json run FIRST and are timed warm (untimed
-  warmup pass + min-of-3). These are the numbers cross-round
-  regressions are adjudicated on. A hard secondary ceiling (2x the
-  budget — ADVICE r10) degrades even headline queries to warmup + one
-  timed run if the box is pathologically loaded, recorded in
-  degraded_names so the artifact stays self-adjudicating.
-- FRESH tier: never-warm-benched queries (no entry in the artifact's
-  "warm_queries" carry-forward map — i.e. genuinely new, or degraded
-  by budget overrun before ever getting a warm number) run warm next,
-  so new work always gets a warm baseline. Scheduled colds keep their
-  last warm timing in "warm_queries", so they do NOT re-enter this
-  tier (r11 review: without the carry-forward, ~4/5 of the tail
-  bounced through FRESH every round and the cohort cadence was moot).
-- COHORT tier: the remaining tail is split into WARM_EVERY_K_ROUNDS
-  deterministic cohorts by a stable hash of the query NAME (crc32 %
-  K), and the cohort matching the round index (count of BENCH_r*.json
-  files) runs warm. A query's cohort slot never changes, so every
-  tail query gets a warm timing every K rounds BY CONSTRUCTION
-  (VERDICT r10 #3 — the rotation protocol left 109/174 cold in r10
-  and a tail regression could hide 4-5 rounds).
-- COLD remainder: everything else gets a single cold timed run for
-  coverage, listed in degraded_names (cold timings are never used for
-  ranking or cross-round comparison).
-
-Soft wall-clock budget: past it, remaining FRESH/COHORT queries
-degrade to single cold runs (recorded) so the harness always finishes
-inside the driver's capture window.
+Schedule: the SENTINELS run first, warm min-of-3, and every other query
+runs in name order with one untimed warm-up and one timed run. Once
+$SPARK_GRAFT_BENCH_BUDGET_SEC (default 480) has passed, a non-sentinel
+query skips its warm-up and is listed in ``degraded_names``, so the
+harness always finishes inside the driver's capture window. The
+schedule reads no committed artifact.
 
 Cache is cleared after each query: cached frames (dedup postings, CC
 loop frames, ...) accumulate across the run otherwise, and the
 resulting eviction/GC churn showed up as phantom 2-3x swings on
-unchanged map-only queries in rounds 2/5 (SCALING.md "Measurement
-noise").
+unchanged map-only queries (SCALING.md "Measurement noise").
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import sys
 import time
-import zlib
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-HEADLINE_N = 40
-WARM_EVERY_K_ROUNDS = 5
-
-# Pinned cross-round regression sentinels (VERDICT r11 #1): ALWAYS
-# warm-timed (min-of-3, exempt from every budget degradation) and
-# ALWAYS printed in the compact line, so consecutive rounds share a
-# stable warm-vs-warm comparison surface (n_common >= 12) no matter
-# how the tiers rotate. One per heavy family: dedup graph/pair, ANN,
-# PQ, pipeline, img-Arrow, events, embed-clustering, media, layout.
+# Pinned cross-round regression sentinels: always warm min-of-3, exempt
+# from the budget, always printed in the compact line, so consecutive
+# rounds share a stable warm-vs-warm comparison surface. One per heavy
+# family: dedup graph/pair, ANN, PQ, pipeline, img-Arrow, events,
+# embed-clustering, media, layout.
 SENTINELS = [
     "dedup_source_matrix",
     "dedup_containment",
@@ -84,38 +45,16 @@ SENTINELS = [
     "bucketed_join_revenue",
 ]
 
-# A carried warm timing contradicted by a >= K x slower COLD run this
-# round is stale (VERDICT r11 #4: bucketed_join_revenue carried 0.17 s
-# warm against a 4.4 s real cold cost and could never re-earn a warm
-# slot): drop the carry so the query re-enters the FRESH warm tier
-# next round. Cold runs legitimately exceed warm by the cache-build
-# cost, so K must clear that band; 3x is above every same-box
-# cold/warm ratio observed for healthy carries in r10-r11.
-STALE_CARRY_K = 3.0
-
-
-def _round_index(repo: str) -> int:
-    return len(glob.glob(os.path.join(repo, "BENCH_r*.json")))
-
-
-def _cohort_slot(name: str) -> int:
-    """Stable cohort assignment: depends only on the query NAME, so a
-    query keeps its warm-round slot even as the tail's membership
-    shifts around it (an index-based split would reshuffle slots
-    whenever a query enters/leaves the headline tier)."""
-    return zlib.crc32(name.encode("utf-8")) % WARM_EVERY_K_ROUNDS
-
 
 def session_warmup(spark, qs, sf_dir: str) -> None:
     """Absorb one-time JVM/codegen startup (q1, pure JVM),
     Python-worker pool startup (a pandas-UDF query), and the first
-    cold read of every base table (one full noop scan each — r12: a
-    dropped OS page cache charged multi-second cold file reads to
-    whichever queries ran first, which under the sentinel-first order
-    was the sentinel tier itself) so timed runs measure steady-state
-    throughput, not process spawning or disk. Shared by bench.py /
-    tools/headline_run.py / tools/fixed_delta.py so their artifacts
-    stay protocol-comparable (r11 review)."""
+    cold read of every base table (one full noop scan each — a dropped
+    OS page cache otherwise charges multi-second cold file reads to
+    whichever queries run first, i.e. the sentinels) so timed runs
+    measure steady-state throughput, not process spawning or disk.
+    Shared by bench.py and tools/scale10.py so their numbers stay
+    protocol-comparable."""
     qs["q1_pricing_summary"](spark, sf_dir).count()
     qs["img_order_stats"](spark, sf_dir).count()
     from spark_ij_spark.session import load_tables
@@ -144,71 +83,22 @@ def warm_time(spark, fn, sf_dir: str, reps: int = 3, warmup: bool = True) -> flo
     return best
 
 
-def _prior_warm(repo: str) -> dict[str, float]:
-    """Last-known WARM timing per query from the committed artifact.
-    Artifacts since r11 carry these forward explicitly in
-    "warm_queries" (a query cold-timed on its scheduled off-round
-    keeps its last warm number for ranking/cohort purposes — without
-    this, every scheduled cold re-entered the FRESH warm tier the
-    next round and the tier sizes oscillated, r11 review). Older
-    artifacts: reconstruct as this-run warm timings only."""
-    try:
-        with open(os.path.join(repo, "BENCH_FULL.json")) as fh:
-            full = json.load(fh)
-    except (OSError, ValueError):
-        return {}
-    if isinstance(full.get("warm_queries"), dict):
-        return dict(full["warm_queries"])
-    cold = set(full.get("degraded_names", []))
-    return {n: t for n, t in full.get("queries", {}).items() if n not in cold}
-
-
-def _carry_warm(
-    order: list[str],
-    timings: dict[str, float],
-    truly_warm: set[str],
-    prior_warm: dict[str, float],
-) -> dict[str, float]:
-    """Carry each query's last-known WARM timing forward: this run's
-    warm min-of-N where we have one, else the prior artifact's number
-    (scheduled colds and budget-degraded queries keep their
-    ranking/cohort standing instead of re-entering the fresh tier) —
-    UNLESS this round's cold run contradicts the carry by more than
-    STALE_CARRY_K x (VERDICT r11 #4): then drop the carry so the query
-    re-enters the FRESH warm tier next round."""
-    return {
-        n: (timings[n] if n in truly_warm else prior_warm[n])
-        for n in order
-        if n in truly_warm
-        or (n in prior_warm and timings[n] <= STALE_CARRY_K * prior_warm[n])
-    }
-
-
-def _plan_order(
-    names: list[str], repo: str, prior: dict[str, float] | None = None
-) -> tuple[list[str], set[str], set[str], set[str]]:
-    """Return (run order, headline set, warm set, sentinel set):
-    pinned sentinels first (always warm), then the heaviest-by-prior-run
-    headline tier, then never-warm-benched queries, then this round's
-    tail cohort (all warm), then the cold remainder. Ranking uses WARM
-    timings only (`prior`, defaulting to _prior_warm(repo) — pass it in
-    when the caller already parsed the artifact) — a cold-inflated 5x
-    number can't evict a genuine heavy query from the headline tier
-    (round-10 review)."""
-    if prior is None:
-        prior = _prior_warm(repo)
-    sent = [n for n in SENTINELS if n in names]
-    sent_set = set(sent)
-    known = [n for n in names if n in prior and n not in sent_set]
-    headline = sorted(known, key=lambda n: -prior[n])[:HEADLINE_N]
-    head_set = set(headline)
-    fresh = [n for n in names if n not in prior and n not in sent_set]
-    tail = sorted(n for n in known if n not in head_set)
-    slot = _round_index(repo) % WARM_EVERY_K_ROUNDS
-    cohort = [n for n in tail if _cohort_slot(n) == slot]
-    cold_rest = [n for n in tail if _cohort_slot(n) != slot]
-    warm_set = sent_set | head_set | set(fresh) | set(cohort)
-    return sent + headline + fresh + cohort + cold_rest, head_set, warm_set, sent_set
+def run_schedule(spark, qs, sf_dir: str, budget: float) -> tuple[dict[str, float], list[str]]:
+    """Time every query in ``qs`` under the module docstring's schedule.
+    Returns (timings in run order, degraded names)."""
+    sentinels = [n for n in SENTINELS if n in qs]
+    rest = sorted(set(qs) - set(sentinels))
+    t_start = time.monotonic()
+    timings: dict[str, float] = {}
+    degraded: list[str] = []
+    for name in sentinels:
+        timings[name] = round(warm_time(spark, qs[name], sf_dir), 4)
+    for name in rest:
+        warmup = time.monotonic() - t_start <= budget
+        if not warmup:
+            degraded.append(name)
+        timings[name] = round(warm_time(spark, qs[name], sf_dir, 1, warmup), 4)
+    return timings, degraded
 
 
 def main() -> None:
@@ -224,93 +114,40 @@ def main() -> None:
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
-    prior_warm = _prior_warm(repo)
-    order, head_set, warm_set, sent_set = _plan_order(list(qs), repo, prior_warm)
-
     session_warmup(spark, qs, sf_dir)
-
-    # Soft wall-clock budget: past it, remaining warm-tier TAIL queries
-    # (fresh/cohort) degrade to a single COLD timed run (no warmup pass
-    # — r9: warmup+1 still overran a 10-minute capture window on a
-    # loaded box). Hard ceiling at 2x budget: even HEADLINE queries
-    # fall back to warmup + ONE timed run past it (ADVICE r10 — prior
-    # timings understating current cost must not blow the driver's
-    # capture window), recorded in degraded_names either way.
     budget = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_SEC", "480"))
-    t_start = time.monotonic()
-    degraded_names: list[str] = []  # every name whose timing is not warm min-of-3
-    budget_degraded: list[str] = []  # the subset degraded by budget overrun
-
-    timings: dict[str, float] = {}
-    for name in order:
-        fn = qs[name]
-        elapsed = time.monotonic() - t_start
-        if name in sent_set:
-            # sentinels: always warm min-of-3, exempt from budget
-            # degradation — they run first, so their cost is bounded
-            # and the cross-round comparison surface always exists
-            warmup, reps = True, 3
-        elif name not in warm_set:
-            # cold-by-design remainder: single run, never used for
-            # ranking/comparison (flagged via degraded_names)
-            degraded_names.append(name)
-            warmup, reps = False, 1
-        elif name in head_set:
-            if elapsed > 2 * budget:
-                degraded_names.append(name)
-                budget_degraded.append(name)
-                warmup, reps = True, 1
-            elif elapsed > budget / 2:
-                # bounded-reps fallback (VERDICT r11 #2): on a slow box
-                # trim headline warm cost (min-of-2 is still warm) so
-                # the WARM tier absorbs the overrun, not the coverage
-                warmup, reps = True, 2
-            else:
-                warmup, reps = True, 3
-        elif elapsed > budget:
-            degraded_names.append(name)
-            budget_degraded.append(name)
-            warmup, reps = False, 1
-        else:
-            warmup, reps = True, 3
-        timings[name] = round(warm_time(spark, fn, sf_dir, reps, warmup), 4)
-
-    truly_warm = warm_set - set(budget_degraded)
-    warm_queries = _carry_warm(order, timings, truly_warm, prior_warm)
+    timings, degraded = run_schedule(spark, qs, sf_dir, budget)
 
     total = round(sum(timings.values()), 4)
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
+    sentinels = [n for n in SENTINELS if n in timings]
+    # Every query gets a warm-up each run unless the budget degrades it.
+    warm_every_k_rounds = 1
     # Full per-query map goes to a committed artifact; the driver only
     # captures the last ~2000 chars of stdout, and the single JSON
     # line for 148 queries (~5 KB) overflowed that in round 6
     # (BENCH_r06 parsed: null). The FINAL printed line is a compact
-    # summary (< 1.5 KB): totals + the 10 slowest queries.
+    # summary (< 1.5 KB).
     full = {
         "metric": "headline_queries_total",
         "value": total,
         "unit": "sec",
         "queries": timings,
-        "headline": sorted(head_set),
-        "sentinels": [n for n in SENTINELS if n in timings],
-        "warm": sorted(truly_warm),
-        "warm_queries": warm_queries,
-        "warm_every_k_rounds": WARM_EVERY_K_ROUNDS,
-        "round_index": _round_index(repo),
-        "degraded": len(degraded_names),
-        "degraded_names": degraded_names,
-        "budget_degraded": budget_degraded,
+        "sentinels": sentinels,
+        "warm": sorted(set(timings) - set(degraded)),
+        "warm_every_k_rounds": warm_every_k_rounds,
+        "degraded": len(degraded),
+        "degraded_names": degraded,
+        "budget_degraded": degraded,
         "sf": sf_val,
     }
     with open(os.path.join(repo, "BENCH_FULL.json"), "w") as fh:
         json.dump(full, fh, indent=1)
-    # Compact line: the 10 slowest PLUS every sentinel (always warm
-    # min-of-3, always present — the stable cross-round warm-vs-warm
-    # surface; VERDICT r11 #1). ~22 entries stays well under the
-    # driver's ~2000-char stdout capture.
+    # Compact line: the 10 slowest PLUS every sentinel. ~22 entries
+    # stays well under the driver's ~2000-char stdout capture.
     slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:10])
-    for n in SENTINELS:
-        if n in timings:
-            slowest[n] = timings[n]
+    for n in sentinels:
+        slowest[n] = timings[n]
     print(
         json.dumps(
             {
@@ -319,11 +156,11 @@ def main() -> None:
                 "unit": "sec",
                 "n_queries": len(timings),
                 "queries": slowest,
-                "sentinels": [n for n in SENTINELS if n in timings],
-                "n_warm": len(truly_warm),
-                "warm_every_k_rounds": WARM_EVERY_K_ROUNDS,
-                "degraded": len(degraded_names),
-                "budget_degraded": len(budget_degraded),
+                "sentinels": sentinels,
+                "n_warm": len(timings) - len(degraded),
+                "warm_every_k_rounds": warm_every_k_rounds,
+                "degraded": len(degraded),
+                "budget_degraded": len(degraded),
                 "sf": sf_val,
                 "full": "BENCH_FULL.json",
             }

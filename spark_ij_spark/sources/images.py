@@ -56,6 +56,8 @@ from spark_ij_spark.datamodel import (
     NULL_IMAGE,
     image_frame,
     image_to_np,
+    is_null_image,
+    map_images,
     np_to_image,
 )
 from spark_ij_spark.lineage import log_entry
@@ -200,7 +202,8 @@ def save_images_local(
 ) -> None:
     """Write one encoded file per image: basename(key) + suffix
     (saveImagesLocal, scOps.scala:262-271). Executor-side writes to a
-    shared filesystem; no data returns to the driver.
+    shared filesystem; no data returns to the driver. A NULL image
+    writes no file.
 
     Basename keying means 'a/x.png' and 'b/x.png' map to the SAME
     output file and executor partitions would race on it (last write
@@ -233,6 +236,8 @@ def save_images_local(
 
     def write_partition(rows) -> None:
         for row in rows:
+            if is_null_image(row.img):
+                continue
             arr = image_to_np(row.img)
             with open(
                 os.path.join(out_dir, _save_basename(row.p) + suffix), "wb"
@@ -268,13 +273,12 @@ def save_images_parquet(
 ) -> None:
     """Keyed byte sink: (path, bytes) parquet. Unlike the reference's
     `saveAsHadoopFile` (names lost in part-0000 files, its documented
-    caveat) the key column preserves identity."""
+    caveat) the key column preserves identity. A NULL image is written
+    as NULL ``content``."""
 
     @F.pandas_udf("binary")
     def encode(imgs: pd.DataFrame) -> pd.Series:
-        return pd.Series(
-            [encode_array(image_to_np(r), suffix) for r in imgs.itertuples(index=False)]
-        )
+        return pd.Series(map_images(lambda r: encode_array(image_to_np(r), suffix), imgs))
 
     (
         df.select(F.col(path_col).alias("path"), encode(image_col).alias("content"))
@@ -288,11 +292,14 @@ def read_images_parquet(
 ) -> DataFrame:
     """Inverse of save_images_parquet: decode the byte column back.
     ``suffix`` must match the one the save side encoded with (the
-    blobs carry no filename, so the codec is chosen by this hint)."""
+    blobs carry no filename, so the codec is chosen by this hint).
+    NULL ``content`` reads back as the NULL image."""
 
     @F.pandas_udf(IMAGE_SCHEMA)
     def decode(paths: pd.Series, blobs: pd.Series) -> pd.DataFrame:
-        return image_frame([_decoded(b, p, suffix) for p, b in zip(paths, blobs)])
+        return image_frame(
+            [NULL_IMAGE if b is None else _decoded(b, p, suffix) for p, b in zip(paths, blobs)]
+        )
 
     raw = spark.read.parquet(path)
     return raw.select("path", decode("path", "content").alias("image"))

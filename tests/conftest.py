@@ -5,7 +5,11 @@ import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.append(os.path.join(REPO, "tools"))
+
+from oracle_sim import driver_rows  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_DIR_MED = "/root/testdata/sf0.01"
@@ -48,7 +52,10 @@ def duck():
 
 def assert_oracle_match(spark, duck, query_fn, sql, sf_dir=SF_DIR):
     """Local replica of the driver's correctness gate: row count, column
-    names, and (order-insensitive) values must match DuckDB.
+    names, and (order-insensitive) values must match DuckDB, fetched and
+    rendered by ``oracle_sim.driver_rows`` — the driver's own fetch and
+    normaliser, so e.g. Spark ``1`` vs DuckDB ``1.0`` fails here as it
+    does in the driver's hasher.
 
     The DuckDB side is fetched via pandas ``.df()`` — the driver's
     fetch path — NOT ``fetchall()``: pandas coerces NULL doubles to
@@ -76,46 +83,15 @@ def assert_oracle_match(spark, duck, query_fn, sql, sf_dir=SF_DIR):
         duck = own_con
 
     try:
-        _assert_oracle_match_inner(spark, duck, query_fn, sql, sf_dir)
+        spark_cols, spark_rows, duck_cols, duck_rows = driver_rows(
+            query_fn(spark, sf_dir), duck, sql
+        )
     finally:
         if own_con is not None:
             own_con.close()
-
-
-def _assert_oracle_match_inner(spark, duck, query_fn, sql, sf_dir):
-    import math
-
-    sdf = query_fn(spark, sf_dir)
-    spark_cols = sorted(sdf.columns)
-    spark_rows = [tuple(row[c] for c in spark_cols) for row in sdf.collect()]
-
-    dpdf = duck.execute(sql).df()
-    duck_cols = sorted(dpdf.columns)
     assert spark_cols == duck_cols, f"columns differ: {spark_cols} vs {duck_cols}"
-    duck_rows = [
-        tuple(r) for r in dpdf[duck_cols].itertuples(index=False, name=None)
-    ]
-
     assert len(spark_rows) == len(duck_rows), (
         f"row counts differ: {len(spark_rows)} vs {len(duck_rows)}"
     )
-
-    def norm(v):
-        if v is None:
-            return None
-        if hasattr(v, "to_pydatetime"):
-            v = v.to_pydatetime()
-        if isinstance(v, float):
-            if math.isnan(v):
-                return "NaN"
-            return v
-        if hasattr(v, "item"):
-            return v.item()
-        return v
-
-    s_sorted = sorted([tuple(norm(v) for v in r) for r in spark_rows], key=repr)
-    d_sorted = sorted([tuple(norm(v) for v in r) for r in duck_rows], key=repr)
-    mism = [
-        (a, b) for a, b in zip(s_sorted, d_sorted) if a != b
-    ]
+    mism = [(a, b) for a, b in zip(spark_rows, duck_rows) if a != b]
     assert not mism, f"{len(mism)} mismatched rows; first: {mism[:3]}"

@@ -192,12 +192,15 @@ def test_bench_and_tools_compile():
     """bench.py crashing means BENCH_r{N}.json records rc!=0 and the
     round loses its perf evidence (it happened twice: r6 line overflow,
     r7 import crash). Full-run coverage needs Spark; what CAN be locked
-    in for free is that every driver-facing script byte-compiles and
-    bench.py's main() guards exist."""
+    in for free is that bench.py, the entry module and every tool
+    byte-compile and bench.py's main() guards exist."""
+    import glob
     import py_compile
 
-    for rel in ("bench.py", "__spark_entry__.py", "tools/check_queries.py"):
-        py_compile.compile(os.path.join(REPO, rel), doraise=True)
+    tools = sorted(glob.glob(os.path.join(REPO, "tools", "*.py")))
+    assert tools
+    for path in [os.path.join(REPO, "bench.py"), os.path.join(REPO, "__spark_entry__.py"), *tools]:
+        py_compile.compile(path, doraise=True)
     src = open(os.path.join(REPO, "bench.py")).read()
     assert "BENCH_FULL.json" in src, "full per-query map sidecar missing"
     assert "json.dumps" in src
@@ -310,48 +313,6 @@ def test_no_case_folding_in_graded_oracle_sql():
         )
 
 
-def test_bench_two_tier_plan_order():
-    """The headline tier (heaviest-by-carried-warm-timing) must run
-    FIRST and be exactly HEADLINE_N known queries; never-warm-benched
-    queries follow immediately so new work always gets a warm timing.
-    Ranking uses the warm_queries carry-forward map — this-run COLD
-    timings never rank (r10 review: a cold-inflated 5x number must not
-    evict a genuine heavy query), and scheduled colds do NOT re-enter
-    the fresh tier (r11 review: without the carry-forward, tier sizes
-    oscillated and the cohort cadence was moot)."""
-    import bench
-
-    full = json.load(open(os.path.join(REPO, "BENCH_FULL.json")))
-    prior = bench._prior_warm(REPO)
-    names = list(full["queries"]) + ["zz_new_query"]
-    order, head, warm_set, sent = bench._plan_order(names, REPO)
-    assert sorted(order) == sorted(names) and len(set(order)) == len(order)
-    # sentinels present in the query set run FIRST and are always warm
-    assert sent == set(bench.SENTINELS) & set(names)
-    n_sent = len(sent)
-    assert order[:n_sent] == [n for n in bench.SENTINELS if n in names]
-    assert sent <= warm_set
-    assert len(head) == bench.HEADLINE_N
-    assert set(order[n_sent : n_sent + bench.HEADLINE_N]) == head
-    assert "zz_new_query" not in head
-    # headline = the N heaviest by carried WARM timings (sentinels
-    # excluded — they already run warm unconditionally)
-    known = [n for n in names if n in prior and n not in sent]
-    heaviest = sorted(known, key=lambda n: -prior[n])[: bench.HEADLINE_N]
-    assert head == set(heaviest)
-    # fresh tier (no warm carry) comes right after headline, is warm,
-    # and contains ONLY genuinely never-warm-benched names
-    fresh = [n for n in names if n not in prior and n not in sent]
-    assert "zz_new_query" in fresh
-    base = n_sent + bench.HEADLINE_N
-    assert set(order[base : base + len(fresh)]) == set(fresh)
-    assert set(fresh) <= warm_set
-    # a scheduled cold from last run stays ranked (not fresh) as long
-    # as it has a carried warm timing
-    carried_colds = [n for n in full.get("degraded_names", []) if n in prior]
-    assert not (set(carried_colds) & set(fresh))
-
-
 def test_bench_sentinels_are_declared_queries():
     """Every pinned sentinel must be a real declared query — a renamed
     or dropped sentinel would silently shrink the cross-round warm
@@ -364,78 +325,65 @@ def test_bench_sentinels_are_declared_queries():
     assert len(set(bench.SENTINELS)) == len(bench.SENTINELS) >= 10
 
 
-def test_bench_warm_carry_forward(tmp_path):
-    """Scheduled colds keep their last WARM timing via the artifact's
-    "warm_queries" map (r11 review): without the carry-forward, every
-    cold-by-design tail query re-entered the FRESH warm tier the next
-    round, tier sizes oscillated, and the K-round cohort cadence was
-    moot. A query missing from warm_queries (genuinely new) is the
-    only thing that should land in the fresh tier."""
+def test_bench_schedule(monkeypatch):
+    """bench.run_schedule in one sentence: the sentinels run first, warm
+    min-of-3 (4 count() calls each); every other query runs in name
+    order with one warm-up and one timed run (2 calls); past the budget
+    a non-sentinel query skips its warm-up (1 call) and is listed as
+    degraded. A fake clock ticks one second per count() call."""
     import bench
 
-    art = {
-        "queries": {"a": 5.0, "b": 1.0, "c": 0.5},  # c cold this run
-        "degraded_names": ["c"],
-        "warm_queries": {"a": 5.0, "b": 1.0, "c": 2.0},  # c's last warm
-    }
-    (tmp_path / "BENCH_FULL.json").write_text(json.dumps(art))
-    prior = bench._prior_warm(str(tmp_path))
-    assert prior == {"a": 5.0, "b": 1.0, "c": 2.0}
-    order, head, warm, sent = bench._plan_order(
-        ["a", "b", "c", "new"], str(tmp_path)
-    )
-    # c ranks by its carried-forward warm timing, NOT as never-benched;
-    # only the genuinely new query is fresh (warm regardless of cohort)
-    assert "new" in warm
-    assert not sent  # synthetic names: no sentinels present
-    assert order[: len(prior)] == ["a", "c", "b"]  # headline by warm rank
-    # legacy artifact (no warm_queries): cold names re-enter as fresh
-    (tmp_path / "BENCH_FULL.json").write_text(
-        json.dumps({"queries": art["queries"], "degraded_names": ["c"]})
-    )
-    assert bench._prior_warm(str(tmp_path)) == {"a": 5.0, "b": 1.0}
+    clock = [0.0]
+    calls: list[str] = []
+
+    class Query:
+        def __init__(self, name):
+            self.name = name
+
+        def __call__(self, spark, sf_dir):
+            return self
+
+        def count(self):
+            calls.append(self.name)
+            clock[0] += 1.0
+            return 0
+
+    class Spark:
+        class catalog:
+            @staticmethod
+            def clearCache():
+                pass
+
+    monkeypatch.setattr(bench.time, "monotonic", lambda: clock[0])
+    others = ["c_q", "a_q", "d_q", "b_q"]
+    qs = {n: Query(n) for n in others + list(reversed(bench.SENTINELS))}
+    n_sent = 4 * len(bench.SENTINELS)
+
+    def run(budget):
+        calls.clear()
+        timings, degraded = bench.run_schedule(Spark(), qs, "sf", budget)
+        assert list(timings) == bench.SENTINELS + sorted(others)
+        assert calls[:n_sent] == [n for n in bench.SENTINELS for _ in range(4)]
+        return calls[n_sent:], degraded
+
+    assert run(float("inf")) == ([n for n in sorted(others) for _ in range(2)], [])
+    # the budget passes after a_q and b_q: c_q and d_q degrade
+    assert run(n_sent + 2.0) == (["a_q", "a_q", "b_q", "b_q", "c_q", "d_q"], ["c_q", "d_q"])
 
 
-def test_bench_stale_carry_dropped():
-    """A carried warm timing contradicted by a >= STALE_CARRY_K x
-    slower cold run this round is dropped (VERDICT r11 #4:
-    bucketed_join_revenue carried 0.17 s against a 4.4 s cold reality
-    and could never re-earn a warm slot); a cold run inside the band
-    keeps the carry, and warm-timed queries always record this run."""
-    import bench
+def test_oracle_comparator_renders_like_the_driver():
+    """oracle_sim.render is the driver's value normaliser, shared by
+    oracle_sim and tests/conftest.assert_oracle_match: an int and its
+    float differ, NULL and NaN have fixed spellings, and a numpy float
+    renders like the Python float (numpy>=2 reprs np.float64 as
+    'np.float64(0.5)')."""
+    import numpy as np
+    from oracle_sim import render  # tools/ is on sys.path via conftest
 
-    order = ["stale", "fine", "warm", "new_warm"]
-    timings = {"stale": 4.4, "fine": 2.0, "warm": 1.5, "new_warm": 0.7}
-    prior = {"stale": 0.17, "fine": 1.0, "warm": 9.9}
-    out = bench._carry_warm(order, timings, {"warm", "new_warm"}, prior)
-    assert "stale" not in out  # 4.4 > 3 * 0.17: carry dropped
-    assert out["fine"] == 1.0  # 2.0 <= 3 * 1.0: carry kept
-    assert out["warm"] == 1.5  # warm this run: always recorded
-    assert out["new_warm"] == 0.7
-
-
-def test_bench_cohort_cadence_is_deterministic():
-    """Round-11 protocol: every tail query gets a warm timing every
-    WARM_EVERY_K_ROUNDS rounds BY CONSTRUCTION (VERDICT r10 #3 — the
-    rotation protocol left 109/174 cold in r10, so a tail regression
-    could hide 4-5 rounds). The cohort slot is a stable hash of the
-    NAME, so membership churn around a query never shifts its slot;
-    over K consecutive round indices each tail query is warm exactly
-    once. Simulated with a synthetic prior artifact in tmp."""
-    import bench
-
-    full = json.load(open(os.path.join(REPO, "BENCH_FULL.json")))
-    names = list(full["queries"])
-    k = bench.WARM_EVERY_K_ROUNDS
-    slots = {n: bench._cohort_slot(n) for n in names}
-    assert set(slots.values()) <= set(range(k))
-    # slot depends only on the name — recomputing is identical
-    assert slots == {n: bench._cohort_slot(n) for n in names}
-    # cohorts partition the names: each name in exactly one slot, and
-    # no slot is pathologically empty/overfull for the real query set
-    sizes = [sum(1 for s in slots.values() if s == i) for i in range(k)]
-    assert sum(sizes) == len(names)
-    assert min(sizes) > 0
+    assert render(1) != render(1.0)
+    assert render(None) == "NULL"
+    assert render(float("nan")) == render(np.float64("nan")) == "NaN"
+    assert render(np.float64(0.5)) == render(0.5) == "0.5"
 
 
 def test_quadratic_baselines_are_real_hash_graded_queries():

@@ -237,6 +237,25 @@ def test_load_images_malformed_modes(spark, tmp_path):
     assert perm_grouped == good_grouped and len(good_grouped) == 6
     assert good_grouped["stack", "all"].shape[2] == 2
 
+    # The sinks carry the NULL image too: the local sink writes no file
+    # for it, the parquet sink writes NULL content, and the read-back
+    # gives the NULL image and the good images unchanged.
+    perm = load_images(spark, out, pattern="*.tif", mode="permissive")
+    local_out = str(tmp_path / "local_sink")
+    save_images_local(perm, local_out, suffix=".tif")
+    assert sorted(os.listdir(local_out)) == sorted(
+        f for f in os.listdir(out) if f != "broken.tif"
+    )
+    pq_out = str(tmp_path / "parquet_sink")
+    save_images_parquet(perm, pq_out, suffix=".tif")
+    back = {r.path: r.image for r in read_images_parquet(spark, pq_out, ".tif").collect()}
+    assert len(back) == 3
+    assert back.pop(broken) == null_rows[0].image
+    good = {r.path: r.image for r in kept}
+    assert back.keys() == good.keys()
+    for p, img in back.items():
+        np.testing.assert_array_equal(image_to_np(img), image_to_np(good[p]))
+
 
 def test_imagej_stream_source_incremental_batches(spark, tmp_path):
     """Directory-watch streaming read with a checkpointed file sink:

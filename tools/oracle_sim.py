@@ -1,7 +1,9 @@
 """Driver-style correctness simulation: run every `queries()` entry on
-Spark and hash-compare against its DuckDB oracle exactly the way the
+Spark and compare it with its DuckDB oracle exactly the way the
 grading driver does (pandas `.df()` fetch, columns sorted by name,
-value-normalized sha256).
+value-normalized row renders — equal exactly when the driver's sha256
+of them is). A MISMATCH prints the first differing row pair, or both
+column lists when the columns or row counts differ.
 
 Variants (all proven green in round 8 — re-run after relevant changes):
 
@@ -10,7 +12,7 @@ Variants (all proven green in round 8 — re-run after relevant changes):
   python tools/oracle_sim.py --sf sf0.1           # off-grade scale (caps/overflow)
   python tools/oracle_sim.py --partitions 7 --cpus 5   # partition independence
   python tools/oracle_sim.py --bare               # driver-like default session
-  python tools/oracle_sim.py --only name1 name2   # subset
+  python tools/oracle_sim.py --only name1 name2   # subset (the fast inner loop)
 
 Exit code = number of mismatches/errors (0 = green).
 """
@@ -18,7 +20,6 @@ Exit code = number of mismatches/errors (0 = green).
 from __future__ import annotations
 
 import argparse
-import hashlib
 import math
 import os
 import sys
@@ -26,21 +27,38 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def vhash(cols, rows) -> str:
-    def norm(v):
-        if v is None:
-            return "NULL"
-        if isinstance(v, float):
-            # repr(float(v)), not repr(v): pandas yields np.float64
-            # scalars, and numpy>=2 reprs those as 'np.float64(0.5)'
-            # — a silent mass-MISMATCH the day numpy is upgraded.
-            return "NaN" if math.isnan(v) else repr(float(v))
-        return str(v)
+def render(v) -> str:
+    """The driver's value normaliser."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, float):
+        # repr(float(v)), not repr(v): pandas yields np.float64
+        # scalars, and numpy>=2 reprs those as 'np.float64(0.5)'
+        # — a silent mass-MISMATCH the day numpy is upgraded.
+        return "NaN" if math.isnan(v) else repr(float(v))
+    return str(v)
 
-    body = "\n".join(
-        sorted("|".join(norm(v) for v in r) for r in rows)
-    )
-    return hashlib.sha256(body.encode()).hexdigest()[:12]
+
+def driver_rows(sdf, con, sql: str):
+    """Fetch a query's Spark frame and its DuckDB oracle the way the
+    grading driver does, and render both with its normaliser.
+
+    Spark: columns sorted by name, ``collect``. DuckDB: pandas ``.df()``
+    (NOT fetchall(): HUGEINT -> float64 etc. — the exact typing the
+    driver's hasher sees), columns sorted by name. Returns
+    ``(spark_cols, spark_rows, duck_cols, duck_rows)``; each row is one
+    '|'-joined render and each side is sorted, so the two sides match
+    exactly when the driver's hashes do."""
+    scols = sorted(sdf.columns)
+    srows = [tuple(r[c] for c in scols) for r in sdf.collect()]
+    dpdf = con.execute(sql).df()
+    dcols = sorted(dpdf.columns)
+    drows = list(dpdf[dcols].itertuples(index=False, name=None))
+
+    def rendered(rows):
+        return sorted("|".join(render(v) for v in r) for r in rows)
+
+    return scols, rendered(srows), dcols, rendered(drows)
 
 
 def main() -> int:
@@ -120,24 +138,21 @@ def main() -> int:
             print(f"  {name}: UNKNOWN"); bad += 1; continue
         try:
             sdf = qs[name](spark, sf_dir)
-            scols = sorted(sdf.columns)
-            srows = [tuple(r[c] for c in scols) for r in sdf.collect()]
             if name not in osql:
-                print(f"  {name}: rows-only {len(srows)}")
+                print(f"  {name}: rows-only {len(sdf.collect())}")
                 continue
-            # .df() (pandas typing), NOT fetchall(): HUGEINT -> float64
-            # etc. — the exact typing the driver's hasher sees.
-            dpdf = con.execute(osql[name]).df()
-            dcols = sorted(dpdf.columns)
-            drows = [
-                tuple(r)
-                for r in dpdf[dcols].itertuples(index=False, name=None)
-            ]
-            ok = vhash(scols, srows) == vhash(dcols, drows) and scols == dcols
-            if not ok:
-                bad += 1
+            scols, srows, dcols, drows = driver_rows(sdf, con, osql[name])
+            ok = scols == dcols and srows == drows
             print(f"  {name}: {'MATCH' if ok else 'MISMATCH'} "
                   f"rows={len(srows)}/{len(drows)}")
+            if ok:
+                continue
+            bad += 1
+            if scols == dcols and len(srows) == len(drows):
+                a, b = next((a, b) for a, b in zip(srows, drows) if a != b)
+                print(f"    spark  {a}\n    duckdb {b}")
+            else:
+                print(f"    spark cols  {scols}\n    duckdb cols {dcols}")
         except Exception as e:  # noqa: BLE001 — report and keep sweeping
             bad += 1
             print(f"  {name}: ERROR {str(e)[:160]}")

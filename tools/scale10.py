@@ -21,9 +21,10 @@ with key offsets chosen so the replicas SHARD rather than collide:
   vectors decorrelate so ANN buckets grow ~K-fold in count, not K-fold
   in collision depth.
 
-Timing protocol matches bench.py: one warmup query, then per-query
-plan-build + count() min-of-REPS with the cache cleared between
-queries. Output: one JSON line per SF plus a ratio table.
+Timing protocol is bench.py's own (`bench.session_warmup` once per
+dataset, then `bench.warm_time` per query: one untimed warm pass,
+plan-build + count() min-of-REPS, cache cleared after each query).
+Output: one JSON line with both SFs' timings and their ratios.
 
 Usage:
     python tools/scale10.py            # build (if absent) + run
@@ -37,7 +38,6 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -157,18 +157,12 @@ def build_dataset(spark, out_dir: str, k: int) -> None:
 
 
 def time_queries(spark, qs, names, sf_dir: str, reps: int) -> dict[str, float]:
+    from bench import session_warmup, warm_time
+
+    session_warmup(spark, qs, sf_dir)
     out: dict[str, float] = {}
-    # warmup: absorb codegen/Python-worker startup like bench.py
-    qs["q1_pricing_summary"](spark, sf_dir).count()
     for name in names:
-        best = None
-        for _ in range(reps):
-            t0 = time.time()
-            qs[name](spark, sf_dir).count()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-        spark.catalog.clearCache()
-        out[name] = round(best, 4)
+        out[name] = round(warm_time(spark, qs[name], sf_dir, reps), 4)
         print(f"  {sf_dir.split('/')[-1]} {name}: {out[name]}s", flush=True)
     return out
 
@@ -186,7 +180,7 @@ def main() -> int:
 
     from spark_ij_spark.session import get_spark
 
-    spark = get_spark("scale10", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", 32)))
+    spark = get_spark("scale10")
     spark.sparkContext.setLogLevel("ERROR")
 
     if args.rebuild or not os.path.exists(
