@@ -46,6 +46,16 @@ ORDER_IMAGE_SCHEMA = StructType(
 )
 
 
+def _segments(data: pd.Series, dtype: pd.Series):
+    """A batch's flat pixel payload as one array: returns the
+    concatenated pixels, each image's pixel count and each image's start
+    offset (the ``reduceat`` bounds)."""
+    pix = [np.frombuffer(d, dtype=t) for d, t in zip(data, dtype)]
+    lens = np.fromiter((len(p) for p in pix), dtype=np.int64, count=len(pix))
+    bounds = np.concatenate([[0], np.cumsum(lens)[:-1]])
+    return np.concatenate(pix), lens, bounds
+
+
 def order_quantity_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One [1][n][1] float32 image per order: pixel j = quantity of the
     j-th lineitem (ordered by l_linenumber)."""
@@ -148,10 +158,8 @@ def q_img_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     def stats_struct(data: pd.Series, dtype: pd.Series) -> pd.DataFrame:
         if not len(data):
             return pd.DataFrame(columns=[f.name for f in out_schema.fields])
-        pix = [np.frombuffer(d, dtype=t) for d, t in zip(data, dtype)]
-        lens = np.fromiter((len(p) for p in pix), dtype=np.int64, count=len(pix))
-        bounds = np.concatenate([[0], np.cumsum(lens)[:-1]])
-        allpix = np.concatenate(pix).astype("float64")
+        allpix, lens, bounds = _segments(data, dtype)
+        allpix = allpix.astype("float64")
         return pd.DataFrame(
             {
                 "min_qty": np.minimum.reduceat(allpix, bounds),
@@ -197,10 +205,8 @@ def q_img_scale_subtract(spark: SparkSession, sf_dir: str) -> DataFrame:
     def pipeline_mean(data: pd.Series, dtype: pd.Series) -> pd.Series:
         if not len(data):
             return pd.Series([], dtype="float64")
-        pix = [np.frombuffer(d, dtype=t) for d, t in zip(data, dtype)]
-        lens = np.fromiter((len(p) for p in pix), dtype=np.int64, count=len(pix))
-        bounds = np.concatenate([[0], np.cumsum(lens)[:-1]])
-        a = np.concatenate(pix).astype("float64")
+        a, lens, bounds = _segments(data, dtype)
+        a = a.astype("float64")
         residual = a * 3.0 - a - a
         return pd.Series(np.add.reduceat(residual, bounds) / lens)
 
@@ -299,11 +305,7 @@ def q_img_threshold_particles(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            dt = pdf["dtype"].iloc[0]
-            pix = [np.frombuffer(d, dtype=dt) for d in pdf["data"]]
-            lens = np.fromiter((len(p) for p in pix), dtype=np.int64, count=len(pix))
-            bounds = np.concatenate([[0], np.cumsum(lens)[:-1]])
-            allpix = np.concatenate(pix)
+            allpix, _, bounds = _segments(pdf["data"], pdf["dtype"])
             mask = allpix >= 25.0
             prev = np.concatenate([[False], mask[:-1]])
             prev[bounds] = False  # runs never span image boundaries
@@ -385,22 +387,16 @@ def q_img_sweep_multiply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         if not len(data):
             return pd.Series([], dtype="float64")
-        pix = [np.frombuffer(d, dtype=t) for d, t in zip(data, dtype)]
-        lens = np.fromiter((len(p) for p in pix), dtype=np.int64, count=len(pix))
-        out = np.empty(len(pix), dtype="float64")
+        allpix, lens, bounds = _segments(data, dtype)
         arg_arr = args.to_numpy()
+        out = np.empty(len(allpix), dtype="float64")
         for a in pd.unique(args):
-            sel = np.flatnonzero(arg_arr == a)
-            allpix = np.concatenate([pix[i] for i in sel])
+            sel = np.repeat(arg_arr == a, lens)
             arr, _ = run_op(
-                allpix.reshape(1, -1, 1), "Multiply...", str(a or ""), {}
+                allpix[sel].reshape(1, -1, 1), "Multiply...", str(a or ""), {}
             )
-            seg = lens[sel]
-            bounds = np.concatenate([[0], np.cumsum(seg)[:-1]])
-            out[sel] = (
-                np.add.reduceat(arr.astype("float64").ravel(), bounds) / seg
-            )
-        return pd.Series(out)
+            out[sel] = arr.ravel()
+        return pd.Series(np.add.reduceat(out, bounds) / lens)
 
     return fanned.select(
         F.col("sample").alias("sweep_key"),
@@ -524,11 +520,8 @@ def q_img_lineage_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     def img_mean(data: pd.Series, dtype: pd.Series) -> pd.Series:
         if not len(data):
             return pd.Series([], dtype="float64")
-        pix = [np.frombuffer(d, dtype=t) for d, t in zip(data, dtype)]
-        lens = np.fromiter((len(p) for p in pix), dtype=np.int64, count=len(pix))
-        bounds = np.concatenate([[0], np.cumsum(lens)[:-1]])
-        allpix = np.concatenate(pix).astype("float64")
-        return pd.Series(np.add.reduceat(allpix, bounds) / lens)
+        allpix, lens, bounds = _segments(data, dtype)
+        return pd.Series(np.add.reduceat(allpix.astype("float64"), bounds) / lens)
 
     return chained.select(
         "l_orderkey",

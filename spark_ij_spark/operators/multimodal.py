@@ -38,6 +38,7 @@ from pyspark.sql.types import (
 from spark_ij_spark.datamodel import image_to_np
 from spark_ij_spark.operators.image_queries import order_quantity_images
 from spark_ij_spark.operators.relational import dsum_sql
+from spark_ij_spark.sources.codecs import encode_array
 
 MEDIA_META_SCHEMA = StructType(
     [
@@ -124,12 +125,6 @@ def decode_media_bytes(data: bytes, mime: str) -> np.ndarray:
     raise ValueError(f"unknown mime {mime!r}")
 
 
-def _encode_npy(arr: np.ndarray) -> bytes:
-    buf = io.BytesIO()
-    np.save(buf, arr, allow_pickle=False)
-    return buf.getvalue()
-
-
 def media_from_image(image_col: str | Column, frame_axis: bool = True) -> Column:
     """Pack an image struct into a media value (npy container). With
     ``frame_axis`` the width axis becomes the frame axis ([1][n][1] →
@@ -145,7 +140,7 @@ def media_from_image(image_col: str | Column, frame_axis: bool = True) -> Column
             h, w, nf = arr.shape
             rows.append(
                 {
-                    "data": _encode_npy(arr),
+                    "data": encode_array(arr, ".npy"),
                     "mime": NPY_MIME,
                     "meta": {
                         "width": int(w),
@@ -178,7 +173,7 @@ def frame_sample(media_col: str | Column, stride: int) -> Column:
             meta = dict(r.meta)
             meta["n_frames"] = int(arr.shape[2])
             # payload is re-encoded as npy, whatever it decoded from
-            rows.append({"data": _encode_npy(arr), "mime": NPY_MIME, "meta": meta})
+            rows.append({"data": encode_array(arr, ".npy"), "mime": NPY_MIME, "meta": meta})
         return pd.DataFrame(rows, columns=["data", "mime", "meta"])
 
     col = F.col(media_col) if isinstance(media_col, str) else media_col
@@ -200,7 +195,7 @@ def resize_media(media_col: str | Column, width: int, height: int) -> Column:
             out = arr[yi][:, xi]
             meta = dict(r.meta)
             meta["width"], meta["height"] = int(width), int(height)
-            rows.append({"data": _encode_npy(out), "mime": NPY_MIME, "meta": meta})
+            rows.append({"data": encode_array(out, ".npy"), "mime": NPY_MIME, "meta": meta})
         return pd.DataFrame(rows, columns=["data", "mime", "meta"])
 
     col = F.col(media_col) if isinstance(media_col, str) else media_col

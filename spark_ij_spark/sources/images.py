@@ -9,7 +9,8 @@ Rebuild of the reference's IO surface (SURVEY.md §2.1/§2.2):
 - ``load_images_locally`` ≡ `loadImagesLocally` (scOps.scala:107-122):
   parallelize a path list, workers open from shared FS.
 - ``save_images_local`` ≡ `saveImagesLocal` (scOps.scala:262-271):
-  foreachPartition, encode+write one file per image key.
+  one encoded file per image key, through ``ImageJWriter``'s
+  two-phase commit.
 - ``save_images_parquet`` ≡ Hadoop byte save (scOps.scala:281-300 +
   ByteOutputFormat.java) — but keyed: (path, bytes) parquet keeps
   names, fixing the reference's documented name-loss caveat.
@@ -93,6 +94,44 @@ def _decoded(blob: bytes, path: str, suffix: str = "") -> dict:
     return np_to_image(decode_bytes(bytes(blob), path + suffix), log=[_load_entry(path)])
 
 
+def _read_file(path: str) -> dict:
+    """Open and decode one image file (codec chosen by its suffix)."""
+    with open(path, "rb") as fh:
+        return _decoded(fh.read(), path)
+
+
+def _list_images(directory: str) -> list[str]:
+    """Sorted names of the image files in ``directory``. Hidden names,
+    Hadoop-marker names ('_SUCCESS', the writer's '_temporary') and
+    subdirectories are skipped: an unfiltered entry would reach
+    ``_read_file`` and fail the scan, or wedge a stream on every replay."""
+    return sorted(
+        f
+        for f in os.listdir(directory)
+        if not f.startswith((".", "_")) and os.path.isfile(os.path.join(directory, f))
+    )
+
+
+def _decode_udf(mode: str = "failfast", suffix: str = ""):
+    """The (path, bytes) -> image pandas UDF of both byte readers. NULL
+    bytes give the NULL image; an undecodable file raises under
+    ``failfast`` and gives the NULL image under the other modes."""
+
+    @F.pandas_udf(IMAGE_SCHEMA)
+    def decode(paths: pd.Series, blobs: pd.Series) -> pd.DataFrame:
+        rows = []
+        for p, b in zip(paths, blobs):
+            try:
+                rows.append(NULL_IMAGE if b is None else _decoded(b, p, suffix))
+            except Exception:
+                if mode == "failfast":
+                    raise
+                rows.append(NULL_IMAGE)
+        return image_frame(rows)
+
+    return decode
+
+
 def load_images(
     spark: SparkSession,
     path: str,
@@ -113,20 +152,7 @@ def load_images(
     if pattern:
         reader = reader.option("pathGlobFilter", pattern)
     raw = reader.load(path).select("path", "content")
-
-    @F.pandas_udf(IMAGE_SCHEMA)
-    def decode(paths: pd.Series, blobs: pd.Series) -> pd.DataFrame:
-        rows = []
-        for p, b in zip(paths, blobs):
-            try:
-                rows.append(_decoded(b, p))
-            except Exception:
-                if mode == "failfast":
-                    raise
-                rows.append(NULL_IMAGE)
-        return image_frame(rows)
-
-    out = raw.select("path", decode("path", "content").alias("image"))
+    out = raw.select("path", _decode_udf(mode)("path", "content").alias("image"))
     if mode == "dropmalformed":
         out = out.filter(F.col("image.dtype").isNotNull())
     return out
@@ -143,11 +169,7 @@ def load_images_locally(
 
     @F.pandas_udf(IMAGE_SCHEMA)
     def open_file(ps: pd.Series) -> pd.DataFrame:
-        rows = []
-        for p in ps:
-            with open(p, "rb") as fh:
-                rows.append(_decoded(fh.read(), p))
-        return image_frame(rows)
+        return image_frame([_read_file(p) for p in ps])
 
     return pdf.select("path", open_file("path").alias("image"))
 
@@ -170,8 +192,7 @@ def load_images_driver(
     ``load_images_locally`` (workers open from shared storage)."""
 
     def _one(p: str) -> tuple[str, dict]:
-        with open(p, "rb") as fh:
-            return p, _decoded(fh.read(), p)
+        return p, _read_file(p)
 
     if parallel and len(paths) > 1:
         from concurrent.futures import ThreadPoolExecutor
@@ -201,50 +222,24 @@ def save_images_local(
     image_col: str = "image",
 ) -> None:
     """Write one encoded file per image: basename(key) + suffix
-    (saveImagesLocal, scOps.scala:262-271). Executor-side writes to a
-    shared filesystem; no data returns to the driver. A NULL image
-    writes no file.
+    (saveImagesLocal, scOps.scala:262-271). A NULL image writes no file.
 
-    Basename keying means 'a/x.png' and 'b/x.png' map to the SAME
-    output file and executor partitions would race on it (last write
-    wins, one image silently lost) — so collisions fail loudly first:
-    a key-only count-distinct pass (column-pruned, far cheaper than
-    the encode pass) rejects the frame before any file is written."""
-    cols = df.select(F.col(path_col).alias("p"), F.col(image_col).alias("img"))
-    # Mirror os.path.splitext exactly (the writer's key): strip the last
-    # '.ext' only when a non-dot character precedes it in the basename,
-    # so dotfiles ('.foo', '..foo') keep their name — a plain
-    # '\.[^.]*$' strip mapped every dotfile to '' and spuriously
-    # rejected distinct dotfiles as colliding (round-9 sources ADVICE).
-    # (?s): '.' must match newlines too — a '\n' inside a basename
-    # otherwise escapes the strip and the precheck misses a collision
-    # the writer's splitext still produces (round-9 review).
-    n_paths, n_bases = cols.select(
-        F.countDistinct("p"), F.countDistinct(F.expr(
-            "regexp_replace(reverse(split(p, '/'))[0],"
-            " '(?s)^(\\\\.*[^.].*)\\\\.[^.]*$', '$1')"
-        ))
-    ).first()
-    if n_bases != n_paths:
-        raise ValueError(
-            "save_images_local: distinct input paths share an output "
-            f"basename ({n_paths} paths -> {n_bases} basenames); writes "
-            "would silently overwrite each other — disambiguate the "
-            f"'{path_col}' column first"
-        )
-    os.makedirs(out_dir, exist_ok=True)
-
-    def write_partition(rows) -> None:
-        for row in rows:
-            if is_null_image(row.img):
-                continue
-            arr = image_to_np(row.img)
-            with open(
-                os.path.join(out_dir, _save_basename(row.p) + suffix), "wb"
-            ) as fh:
-                fh.write(encode_array(arr, suffix))
-
-    cols.foreachPartition(write_partition)
+    One Spark job runs ``ImageJWriter.write`` on every partition and
+    collects the commit messages; this driver process then commits, or
+    aborts if anything failed. That is the two-phase commit of
+    ``df.write.format("imagej").mode("overwrite")``: the target gets
+    every image or none. Basename keying maps 'a/x.png' and 'b/x.png'
+    to one file, and the commit rejects that before any file moves.
+    Committing here rather than in a DSv2 commit keeps the errors plain
+    Python exceptions (a DSv2 commit runs in a Python worker, whose
+    errors come back wrapped)."""
+    rows = df.select(F.col(path_col).alias("path"), F.col(image_col).alias("image"))
+    writer = ImageJWriter({"path": out_dir, "suffix": suffix}, overwrite=True)
+    try:
+        writer.commit(rows.rdd.mapPartitions(lambda it: [writer.write(it)]).collect())
+    except BaseException:
+        writer.abort([])
+        raise
 
 
 def save_images(
@@ -294,15 +289,8 @@ def read_images_parquet(
     ``suffix`` must match the one the save side encoded with (the
     blobs carry no filename, so the codec is chosen by this hint).
     NULL ``content`` reads back as the NULL image."""
-
-    @F.pandas_udf(IMAGE_SCHEMA)
-    def decode(paths: pd.Series, blobs: pd.Series) -> pd.DataFrame:
-        return image_frame(
-            [NULL_IMAGE if b is None else _decoded(b, p, suffix) for p, b in zip(paths, blobs)]
-        )
-
     raw = spark.read.parquet(path)
-    return raw.select("path", decode("path", "content").alias("image"))
+    return raw.select("path", _decode_udf(suffix=suffix)("path", "content").alias("image"))
 
 
 # ---------------------------------------------------------------------------
@@ -346,20 +334,8 @@ class ImageJReader(DataSourceReader):
             # round-trips of debug tables
             items = [("debug_%d" % i, i) for i in range(self.count)]
         else:
-            # skip hidden AND Hadoop-marker files ('_SUCCESS') and
-            # subdirectories — same rule as the stream reader's
-            # _listing; an unfiltered directory entry would reach
-            # open()/decode_bytes and kill the scan
-            names = sorted(
-                p
-                for p in (
-                    os.path.join(self.path, f)
-                    for f in os.listdir(self.path)
-                    if not f.startswith(".") and not f.startswith("_")
-                )
-                if os.path.isfile(p)
-            )
-            items = [(p, i) for i, p in enumerate(names)]
+            names = _list_images(self.path)
+            items = [(os.path.join(self.path, f), i) for i, f in enumerate(names)]
         n = max(1, min(self.partitions_n, len(items)))
         chunks = [items[i::n] for i in range(n)]
         return [_ImagePartition(i, c) for i, c in enumerate(chunks) if c]
@@ -371,8 +347,7 @@ class ImageJReader(DataSourceReader):
                 arr = _synthetic_array(i, self.width, self.height)
                 img = np_to_image(arr, log=[_load_entry(path)])
             else:
-                with open(path, "rb") as fh:
-                    img = _decoded(fh.read(), path)
+                img = _read_file(path)
             image_row = _serialize_image_struct(img)
             if simple:
                 yield (path, image_row)
@@ -398,7 +373,7 @@ def _serialize_image_struct(img: dict) -> tuple:
     (LOG_ENTRY_SCHEMA field order). One shared serializer for the
     batch and stream readers: a hand-rolled copy in the stream path
     once hard-coded an empty log and silently dropped provenance for
-    every stream-loaded image (round-8 sources review)."""
+    every stream-loaded image."""
     return (
         img["data"],
         img["dtype"],
@@ -432,16 +407,17 @@ class ImageJWriter(DataSourceWriter):
     rows to one file per image under OPTIONS path. A real write path —
     the reference's `CreatableRelationProvider` just re-read from path
     (AbstractImageSource.scala:47-54, effectively read-only).
+    ``save_images_local`` drives the same writer from the driver.
 
     Two-phase commit (the Hadoop FileOutputCommitter shape): each task
     ATTEMPT writes into its own uuid staging dir under the JOB's
     staging root ``<path>/_temporary/<job uuid>`` (hidden to the
     reader's listing rule; job-scoped so commit/abort cleanup can
-    never delete a CONCURRENT job's staged files — round-9 review) and
-    reports the staged basenames in its commit message; the driver
-    ``commit`` validates and renames into place. This makes task
+    never delete a CONCURRENT job's staged files) and reports the
+    staged basenames in its commit message; the driver ``commit``
+    validates and renames into place. This makes task
     retries/speculation idempotent — a failed attempt's orphan dir is
-    never committed (the round-8 per-file exists() precheck raised
+    never committed (a per-file exists() precheck would raise
     FileExistsError on the SAME task's retry, permanently failing the
     job) — and makes collision handling WITHIN one job a guarantee:
 
@@ -449,8 +425,7 @@ class ImageJWriter(DataSourceWriter):
       nothing moved into the target dir;
     - mode('overwrite') clobbers per-file; any other mode refuses to
       replace existing target files — checked once, driver-side, before
-      any rename (silent last-write-wins was the round-8 sources-review
-      failure mode). ACROSS concurrently-committing jobs this remains
+      any rename (never silent last-write-wins). ACROSS concurrently-committing jobs this remains
       a best-effort check-then-rename (same semantics as Hadoop's
       FileOutputCommitter without a coordination service); concurrent
       non-overwrite writers to one directory need external locking."""
@@ -465,6 +440,11 @@ class ImageJWriter(DataSourceWriter):
         self.job_id = uuid.uuid4().hex
         if not self.path:
             raise ValueError("imagej write requires OPTIONS path")
+        # Only the driver creates the staging root; a task attempt makes
+        # just its own dir under it. After abort removes the root, a
+        # cancelled task still running cannot recreate it and leave
+        # staging litter behind.
+        os.makedirs(self._staging_root(), exist_ok=True)
 
     def _staging_root(self) -> str:
         return os.path.join(self.path, "_temporary", self.job_id)
@@ -473,16 +453,14 @@ class ImageJWriter(DataSourceWriter):
         import uuid
 
         stage_dir = os.path.join(self._staging_root(), uuid.uuid4().hex)
-        os.makedirs(stage_dir, exist_ok=True)
+        os.mkdir(stage_dir)
         names: list[str] = []
         for row in iterator:
-            # shared struct→ndarray path (same as save_images_local /
-            # save_images_parquet) — a hand-rolled frombuffer here
-            # would drift if the struct layout ever changes
-            arr = image_to_np(row.image)
+            if is_null_image(row.image):
+                continue  # a NULL image writes no file
             name = _save_basename(row.path) + self.suffix
             with open(os.path.join(stage_dir, name), "wb") as fh:
-                fh.write(encode_array(arr, self.suffix))
+                fh.write(encode_array(image_to_np(row.image), self.suffix))
             names.append(name)
         return _ImageJCommit(stage_dir, names)
 
@@ -511,8 +489,8 @@ class ImageJWriter(DataSourceWriter):
         # os.replace fails mid-loop, roll the already-renamed files BACK
         # into their staging dirs so the target directory never holds a
         # partial commit, then re-raise with staging intact for retry or
-        # manual recovery (round-9 review: a mid-loop failure followed
-        # by abort's staging cleanup left an unreconstructable partial
+        # manual recovery (a mid-loop failure followed by abort's
+        # staging cleanup would leave an unreconstructable partial
         # directory). Rollback itself is best-effort: a file whose
         # roll-back rename also fails stays in the target and is named
         # in the raised error.
@@ -550,7 +528,7 @@ class ImageJWriter(DataSourceWriter):
     def abort(self, messages):
         # after a commit-phase rename failure the staged files are the
         # only surviving copy of the job's output — keep them for
-        # manual recovery instead of cleaning (round-9 review)
+        # manual recovery instead of cleaning
         if getattr(self, "_commit_failed", False):
             return
         self._cleanup_staging()
@@ -588,25 +566,12 @@ class ImageJStreamReader(SimpleDataSourceStreamReader):
             raise ValueError("imagej stream read requires OPTIONS path")
         self.max_files = int(options.get("maxfilesperbatch", "0")) or None
 
-    def _listing(self) -> list[str]:
-        # same rule as the batch reader's partitions(): hidden and
-        # Hadoop-marker names skipped AND directories skipped — a
-        # subdirectory reaching _rows' open() would fail the
-        # micro-batch on every replay and wedge the stream for good.
-        return sorted(
-            f
-            for f in os.listdir(self.path)
-            if not f.startswith(".")
-            and not f.startswith("_")
-            and os.path.isfile(os.path.join(self.path, f))
-        )
-
     def initialOffset(self) -> dict:
         return {"seen": []}
 
     def read(self, start: dict):
         seen = set(start.get("seen", []))
-        fresh = [f for f in self._listing() if f not in seen]
+        fresh = [f for f in _list_images(self.path) if f not in seen]
         if self.max_files:
             fresh = fresh[: self.max_files]
         end = {"seen": sorted(seen | set(fresh))}
@@ -618,12 +583,8 @@ class ImageJStreamReader(SimpleDataSourceStreamReader):
         return iter(self._rows(fresh))
 
     def _rows(self, names: list[str]):
-        out = []
-        for name in names:
-            p = os.path.join(self.path, name)
-            with open(p, "rb") as fh:
-                out.append((p, _serialize_image_struct(_decoded(fh.read(), p))))
-        return out
+        paths = [os.path.join(self.path, n) for n in names]
+        return [(p, _serialize_image_struct(_read_file(p))) for p in paths]
 
 
 class ImageJDataSource(DataSource):

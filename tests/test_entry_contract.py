@@ -521,6 +521,50 @@ def test_local_checkpoint_is_named_only_in_session():
     )
 
 
+def test_image_file_io_lists_once_reads_once_and_has_one_local_sink():
+    """sources/images.py makes each image-file IO decision once: the
+    listing rule (``os.listdir``) lives in one function, open-and-decode
+    (a builtin ``open`` in "rb" mode) in one function, and the local
+    sink is the writer's two-phase commit — no ``foreachPartition``
+    write path and no ``regexp_replace`` copy of the output-name rule."""
+    import ast
+
+    tree = ast.parse(
+        open(os.path.join(REPO, "spark_ij_spark", "sources", "images.py")).read()
+    )
+    listing, reading, banned = set(), set(), []
+
+    def walk(node, owner):
+        for child in ast.iter_child_nodes(node):
+            inner = owner
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                inner = f"{owner}.{child.name}" if owner else child.name
+            if isinstance(child, ast.Call):
+                f = child.func
+                if isinstance(f, ast.Attribute) and f.attr == "listdir":
+                    listing.add(owner)
+                modes = child.args[1:2] + [k.value for k in child.keywords if k.arg == "mode"]
+                if (
+                    isinstance(f, ast.Name)
+                    and f.id == "open"
+                    and any(isinstance(m, ast.Constant) and m.value == "rb" for m in modes)
+                ):
+                    reading.add(owner)
+            words = [getattr(child, "attr", None), getattr(child, "id", None)]
+            if isinstance(child, ast.Constant) and isinstance(child.value, str):
+                words.append(child.value)
+            if any(
+                w and ("foreachPartition" in w or "regexp_replace" in w) for w in words
+            ):
+                banned.append(child.lineno)
+            walk(child, inner)
+
+    walk(tree, "")
+    assert len(listing) == 1, f"os.listdir in {sorted(listing)}: list through one helper"
+    assert len(reading) == 1, f"open(..., 'rb') in {sorted(reading)}: read through one helper"
+    assert banned == [], f"foreachPartition/regexp_replace at lines {banned}"
+
+
 _CANNED_PLAN = """\
 AdaptiveSparkPlan isFinalPlan=false
 +- Sort [n#7L DESC NULLS LAST], true, 0

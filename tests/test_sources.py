@@ -237,15 +237,22 @@ def test_load_images_malformed_modes(spark, tmp_path):
     assert perm_grouped == good_grouped and len(good_grouped) == 6
     assert good_grouped["stack", "all"].shape[2] == 2
 
-    # The sinks carry the NULL image too: the local sink writes no file
-    # for it, the parquet sink writes NULL content, and the read-back
-    # gives the NULL image and the good images unchanged.
+    # The sinks carry the NULL image too: the local sink and the DDL
+    # writer write no file for it, the parquet sink writes NULL content,
+    # and the read-back gives the NULL image and the good images
+    # unchanged.
     perm = load_images(spark, out, pattern="*.tif", mode="permissive")
     local_out = str(tmp_path / "local_sink")
     save_images_local(perm, local_out, suffix=".tif")
     assert sorted(os.listdir(local_out)) == sorted(
         f for f in os.listdir(out) if f != "broken.tif"
     )
+    register_image_source(spark)
+    ddl_out = str(tmp_path / "ddl_sink")
+    perm.write.format("imagej").option("path", ddl_out).option(
+        "suffix", ".tif"
+    ).mode("append").save()
+    assert sorted(os.listdir(ddl_out)) == sorted(os.listdir(local_out))
     pq_out = str(tmp_path / "parquet_sink")
     save_images_parquet(perm, pq_out, suffix=".tif")
     back = {r.path: r.image for r in read_images_parquet(spark, pq_out, ".tif").collect()}
@@ -473,6 +480,25 @@ def test_save_images_local_rejects_basename_collisions(spark, tmp_path):
         save_images_local(clash, str(tmp_path / "out"), path_col="sample")
 
 
+def test_save_images_local_is_all_or_nothing(spark, tmp_path):
+    """One partition failing to encode (PNG rejects float32) leaves the
+    target empty: the other partition's staged files never land, and
+    the job's staging directory is removed."""
+    from spark_ij_spark.datamodel import np_to_image
+    from spark_ij_spark.sources.images import NAMED_IMAGE_SCHEMA
+
+    good = [(f"good{i}.png", np_to_image(np.full((2, 3), i, np.uint8))) for i in range(3)]
+    bad = [("bad.png", np_to_image(np.zeros((2, 3), np.float32)))]
+    parts = spark.sparkContext.parallelize([good, bad], 2).flatMap(lambda rows: rows)
+    df = spark.createDataFrame(parts, NAMED_IMAGE_SCHEMA)
+    assert df.rdd.getNumPartitions() == 2
+    out = tmp_path / "all_or_nothing"
+    with pytest.raises(Exception):
+        save_images_local(df, str(out), suffix=".png")
+    assert not (out / "_temporary").exists()
+    assert os.listdir(out) == []
+
+
 def test_imagej_writer_overwrite_semantics(imagej_source, tmp_path):
     """mode('overwrite') clobbers per-file; any other mode refuses to
     replace an existing target instead of silently last-write-wins."""
@@ -552,9 +578,8 @@ def test_imagej_writer_commit_rejects_cross_partition_collisions(
 
 
 def test_collision_precheck_catches_newline_basenames(spark, tmp_path):
-    """'.' in the splitext-mirror regex must match newlines ((?s)) or a
-    \\n inside a basename escapes the extension strip and the precheck
-    misses a collision the writer still produces (round-9 review)."""
+    """A \\n inside a basename must not hide a collision: 'x\\ny.png'
+    and 'x\\ny.jpg' both name the output file 'x\\ny' + suffix."""
     from pyspark.sql import functions as F
 
     imgs = create_empty_images(spark, "img", 2, width=2, height=2)
