@@ -38,7 +38,6 @@ from pyspark.sql.types import (
 
 from spark_ij_spark.datamodel import IMAGE_SCHEMA, image_to_np, meta_of
 from spark_ij_spark.kernels.histogram import histogram
-from spark_ij_spark.kernels.particles import analyze_particles
 from spark_ij_spark.session import load_tables
 
 ORDER_IMAGE_SCHEMA = StructType(
@@ -354,8 +353,9 @@ GROUP BY l_orderkey
 
 def q_img_sweep_multiply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """runRange parameter sweep (scOps.scala:207-224) over order images:
-    Multiply value=1..3 in 3 steps fans each image to 3 variants via a
-    broadcast cross join; per-variant mean has an exact SQL oracle."""
+    Multiply value=1..3 in 3 steps fans each image to 3 variants in-stage
+    (one constant-folded ``Generate inline``); per-variant mean has an
+    exact SQL oracle."""
     from spark_ij_spark.operators.sweep import run_range
 
     imgs = order_quantity_images(spark, sf_dir).withColumnRenamed(

@@ -1,5 +1,5 @@
 """Parameter sweep (grid search) — the rebuild of the reference's
-``ParameterSweep`` + ``runRange`` surface as a Spark cross join.
+``ParameterSweep`` + ``runRange`` surface as an in-stage Spark generate.
 
 Reference semantics (cited for parity, implementation is new):
 
@@ -19,11 +19,12 @@ Reference semantics (cited for parity, implementation is new):
 - lineage-log → sweep-input helper (scOps.scala:165-175
   ``getLastCommandAsSweepInput``)
 
-Spark-first shape: the sweep is a *small parameter table* cross-joined
-(broadcast — it is tiny by construction) against the image DataFrame.
-The fan-out therefore happens executor-side with zero shuffle: at 100 TB
-each task reads its input split once and emits ``steps`` variants, and
-Catalyst keeps the whole map in one stage.
+Spark-first shape: the sweep is a *small parameter list*, folded into
+the plan as one constant array and exploded against every image row
+(``Generate inline``). The fan-out therefore happens executor-side with
+no exchange and no extra job: at 100 TB each task reads its input split
+once and emits ``steps`` variants, and Catalyst keeps the whole map in
+one stage.
 
 Guard: cartesian expansion is capped (``max_variants``) so a runaway
 sweep cannot OOM the driver building the parameter list (SURVEY.md
@@ -32,6 +33,7 @@ sweep cannot OOM the driver building the parameter list (SURVEY.md
 
 from __future__ import annotations
 
+import json
 import math
 import re
 from collections.abc import Sequence
@@ -78,7 +80,7 @@ def parse_args_with_delim(arg_list: str, delim: str = "-") -> dict[str, str]:
         # (string start or after whitespace): a bare split corrupted
         # values containing the delimiter — '-size=0-Infinity' (the
         # exact form Analyze Particles consumes) became
-        # {'size': '0', 'Infinity': 'true'} (round-8 review)
+        # {'size': '0', 'Infinity': 'true'}
         toks = re.split(rf"(?:^|(?<=\s)){re.escape(delim)}", cleaned)
     for tok in toks:
         tok = tok.strip()
@@ -167,7 +169,7 @@ def sweep_args(
         # (ParameterSweep.scala:266-290 block-padding). Runs at EVERY
         # steps value: gating it on steps != 2 let a constant key
         # (length-1 list) truncate the zip to one combo and silently
-        # drop the other endpoint (round-8 review)
+        # drop the other endpoint
         padded: dict[str, list[str]] = {}
         for key, vals in arr_args.items():
             if len(vals) == steps:
@@ -292,7 +294,7 @@ def history_to_sweep(log: list) -> str:
     for e in runs:
         # the command lives in opval (lineage.log_entry stores the
         # TOOL enum in optool — reading optool here returned
-        # 'NUMPY:...' for every engine-produced log, round-8 review)
+        # 'NUMPY:...' for every engine-produced log)
         cmd = e.get("opval", "")
         args = " ".join(a for a in (e.get("opargs") or []) if a)
         toks = args.split() if args else []
@@ -301,8 +303,11 @@ def history_to_sweep(log: list) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Spark surface: runRange as a broadcast cross join
+# Spark surface: runRange as an in-stage generate
 # ---------------------------------------------------------------------------
+
+
+_PARAMS_SCHEMA = "array<struct<_sweep_args:string,_sweep_path:string>>"
 
 
 def run_op_with_args_col(image_col: str | Column, cmd: str, args_col: str | Column) -> Column:
@@ -328,18 +333,18 @@ def run_range(
 ) -> DataFrame:
     """Fan each image out to ``steps`` op variants (scOps.scala:207-224).
 
-    Implemented as ``df CROSS JOIN broadcast(params)``: the parameter
-    table is tiny by construction, so Spark plans a BroadcastNestedLoopJoin
-    — no shuffle of the (large) image side, and the fan-out multiplies
-    rows executor-side inside the same stage.
+    Implemented as ``inline(from_json(<one JSON literal>))`` next to
+    every row: the parameter list is constant-folded into the plan, so
+    each image row multiplies into its variants inside the same stage —
+    no exchange, no job to collect the list, and the same few py4j
+    calls however many variants there are.
     """
     variants = macro_steps_to_sweep([start_args, end_args], steps=steps, delim=" ")
     paths = sweep_to_path(variants, new_directories=False, delim=" ")
-    spark = df.sparkSession
-    params = spark.createDataFrame(
-        list(zip(variants, paths)), "_sweep_args string, _sweep_path string"
+    params = json.dumps(
+        [{"_sweep_args": a, "_sweep_path": p} for a, p in zip(variants, paths)]
     )
-    fanned = df.crossJoin(F.broadcast(params))
+    fanned = df.select("*", F.inline(F.from_json(F.lit(params), _PARAMS_SCHEMA)))
     out = fanned.withColumn(
         key_col, F.concat_ws("__", F.col(key_col), F.col("_sweep_path"))
     ).drop("_sweep_path")

@@ -210,6 +210,57 @@ def test_analyze_particles_measurements():
     assert all(mn <= mx for mn, mx in zip(table["Min"], table["Max"]))
 
 
+def _feret_all_pairs(sl, pixel_width, pixel_height):
+    """Brute-force Feret per component: the max over EVERY pair of the
+    point set the kernel uses (the component's pixels in raster order,
+    or its evenly spaced 1,500-pixel sample when larger)."""
+    labels, n = label_components(sl != 0)
+    out = []
+    for lab in range(1, n + 1):
+        ys, xs = np.nonzero(labels == lab)
+        if len(ys) > 1500:
+            sel = np.linspace(0, len(ys) - 1, 1500).astype(int)
+            ys, xs = ys[sel], xs[sel]
+        if len(ys) == 1:
+            out.append(float(max(pixel_width, pixel_height)))
+            continue
+        pts = np.stack([xs * pixel_width, ys * pixel_height], axis=1)
+        d2 = ((pts[:, None, :] - pts[None, :, :]) ** 2).sum(axis=2)
+        out.append(float(np.sqrt(d2.max())))
+    return out
+
+
+def test_feret_equals_all_pairs_max():
+    """Feret reduced to row ends equals the all-pairs max exactly, on
+    concave, holed, thin, single-pixel and over-cap components, under
+    a non-square calibration, and per slice of a stack."""
+    img = np.zeros((140, 140), dtype=np.uint8)
+    yy, xx = np.mgrid[:140, :140]
+    r2 = (yy - 25) ** 2 + (xx - 25) ** 2
+    img[(r2 <= 20**2) & (r2 >= 12**2)] = 1  # ring: concave, with a hole
+    img[5:40, 55:60] = 2  # L: vertical stroke
+    img[35:40, 55:80] = 2  # L: foot
+    img[3, 100] = 3  # single pixel
+    img[10, 90:130] = 4  # 1-row bar
+    img[50:75, 120] = 5  # 1-column bar
+    for i in range(30):  # diagonal line (8-connected, one pixel a row)
+        img[50 + i, 80 + i] = 6
+    blob = ((yy - 105) ** 2 + (xx - 45) ** 2 <= 28**2) & ~(
+        (yy > 100) & (xx > 50) & (xx < 60)
+    )
+    img[blob] = 7  # over the 1,500-pixel cap, with a notch
+    assert (label_components(img == 7)[0] > 0).sum() > 1500
+    for pw, ph in ((1.0, 1.0), (0.37, 1.9)):
+        table = analyze_particles(img, pixel_width=pw, pixel_height=ph)
+        assert len(table["Feret"]) == 7
+        assert table["Feret"] == _feret_all_pairs(img, pw, ph)
+    stack = np.stack([img, img.T, np.flipud(img)], axis=2)
+    table = analyze_particles(stack, pixel_width=0.37, pixel_height=1.9)
+    want = [f for k in range(3) for f in _feret_all_pairs(stack[:, :, k], 0.37, 1.9)]
+    assert table["Feret"] == want
+    assert table["Slice"] == [1.0] * 7 + [2.0] * 7 + [3.0] * 7
+
+
 def test_run_with_table(spark, images5):
     noisy = run_all(images5, "Add Noise")
     masked = run_all(noisy, "Auto Threshold", "method=IsoData white")

@@ -94,7 +94,7 @@ def test_fused_op_chain_single_arrow_hop(spark):
 
 def test_img_sweep_multiply_single_arrow_hop(spark):
     """Sweep fan-out + op + mean must fuse into one Python hop: the
-    broadcast fan-out stays JVM-side and op+mean share one UDF."""
+    fan-out is one in-stage JVM generate and op+mean share one UDF."""
     from spark_ij_spark.operators import image_queries
 
     plan = _plan(image_queries.q_img_sweep_multiply(spark, SF_DIR))
@@ -103,7 +103,14 @@ def test_img_sweep_multiply_single_arrow_hop(spark):
     # (run_op_with_args_col's `_udf`) or a standalone mean UDF.
     assert plan.count("op_mean") == 1
     assert "_udf" not in plan and "img_mean" not in plan
-    assert "BroadcastNestedLoopJoin" in plan  # tiny param fan-out side
+    # the constant parameter list fans out in-stage: no broadcast of a
+    # parallelized list, and no exchange between the cached images and
+    # the output (the image producer's own group-by sits below the cache)
+    assert "Generate inline" in plan
+    for node in ("BroadcastExchange", "BroadcastNestedLoopJoin", "Scan ExistingRDD"):
+        assert node not in plan, node
+    fan_out = plan.split("InMemoryRelation", 1)[0]
+    assert "Generate inline" in fan_out and "Exchange" not in fan_out
 
 
 def test_q7_q9_q10_broadcast_dims_no_python(spark):

@@ -132,7 +132,7 @@ class TestHistoryToSweep:
         # stores the command in opval and the tool enum in optool) —
         # the old hand-crafted dicts put the command in optool, a
         # shape no engine code path ever creates, and masked
-        # history_to_sweep reading the wrong field (round-8 review)
+        # history_to_sweep reading the wrong field
         from spark_ij_spark import lineage
 
         log = [
@@ -164,11 +164,39 @@ class TestRunRange:
         assert by_sample["img2__value_3"] == pytest.approx(30.0)
 
     def test_broadcast_no_shuffle(self, spark):
+        """The fan-out is one in-stage generate over a constant-folded
+        parameter list: no broadcast, no exchange, no parallelized-list
+        scan."""
         imgs = create_empty_images(spark, "img", 2, width=2, height=2)
         swept = run_range(imgs, "Multiply...", "value=1", "value=2", steps=2)
         plan = swept._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastNestedLoopJoin" in plan
-        assert "Exchange hashpartitioning" not in plan
+        assert "Generate inline" in plan
+        for node in (
+            "BroadcastExchange",
+            "BroadcastNestedLoopJoin",
+            "Exchange",
+            "Scan ExistingRDD",
+        ):
+            assert node not in plan, node
+
+    def test_fanout_runs_one_job(self, spark):
+        """A sweep over a cached, materialized frame is one Spark job
+        under a noop write: no job collects the parameter list and no
+        adaptive query stage re-reads the cache."""
+        from perfbench.probes import job_counts
+
+        sc = spark.sparkContext
+        imgs = create_empty_images(spark, "img", 4, width=8, height=8).cache()
+        imgs.count()
+        swept = run_range(imgs, "Gaussian Blur...", "sigma=1", "sigma=3", steps=3)
+        sc.setJobGroup("run-range-jobs", "run-range-jobs")
+        try:
+            swept.write.format("noop").mode("overwrite").save()
+            jobs, _ = job_counts(sc, "run-range-jobs")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            imgs.unpersist()
+        assert jobs == 1
 
 
 class TestRound8ReviewRegressions:
