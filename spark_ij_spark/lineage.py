@@ -22,9 +22,7 @@ OP_CREATE = "CREATE"
 OP_LOAD = "LOAD"
 OP_RUN = "RUN"
 OP_MERGE = "MERGE"
-OP_OTHER = "OTHER"
 
-TOOL_SPARK = "SPARK"
 TOOL_NUMPY = "NUMPY"
 
 
@@ -93,13 +91,3 @@ def _norm(e: Any) -> dict[str, Any]:
         "opargs": [] if args is None else list(args),
         "children_json": e.children_json,
     }
-
-
-def log_to_json(log: list[dict[str, Any]] | None) -> str:
-    """Whole-log JSON dump (the reference round-trips logs through JSON,
-    ImagePlusIOTests.scala:30-76)."""
-    return json.dumps([_norm(e) for e in _aslist(log)], default=_jsonable)
-
-
-def log_from_json(s: str) -> list[dict[str, Any]]:
-    return [_norm(e) for e in json.loads(s)]

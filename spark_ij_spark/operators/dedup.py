@@ -670,9 +670,9 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    # O(1) driver scalar from parquet footers (same role as the edge
-    # count in cc_partitions); the RAW count deliberately skips the
-    # _emb integrity filter so Spark answers it from row-group
+    # O(1) driver scalar from parquet footers: the tile size bounds a
+    # dense score matrix, which AQE cannot size. The RAW count skips
+    # the _emb integrity filter so Spark answers it from row-group
     # metadata instead of paying a full corpus pass (the filtered
     # count would need the exists() lambda per row). It upper-bounds
     # the clean count, and tiling is output-invariant, so the oracle
@@ -755,35 +755,29 @@ WHERE {_QCOS_DUCK} >= {EMBED_COS_THRESHOLD}
 """
 
 
-# Connected-components loop sizing. The loop-frame partition count is
-# DERIVED from the measured edge count (one cheap count() on the cached
-# edge frame, amortized over up to CC_MAX_ROUNDS label-propagation
-# rounds): ceil(edges / CC_TARGET_EDGES_PER_PARTITION), floored at
-# CC_MIN_PARTITIONS so local runs keep a little parallelism.
-CC_MIN_PARTITIONS = 4
-CC_TARGET_EDGES_PER_PARTITION = 2_000_000
 CC_MAX_ROUNDS = 20
-
-
-def cc_partitions(n_edges: int) -> int:
-    """Loop-frame partition count for ``n_edges`` symmetric edges —
-    targets ~1-10M edges/partition so a 100× bigger pair graph gets
-    proportionally more tasks instead of serializing 4 fat ones."""
-    import math
-
-    return max(CC_MIN_PARTITIONS, math.ceil(n_edges / CC_TARGET_EDGES_PER_PARTITION))
 
 
 def jaccard_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Thresholded near-dup edge list (da < db, jaccard >= t), cached —
-    the ONE pair generator the graph family (clusters, triangles,
-    k-core, source matrix) builds on, so a threshold or cap retune
-    reaches every consumer (previously four verbatim copies)."""
+    ``q_dedup_ngram_jaccard``'s pairs without the score, the ONE pair
+    generator the graph family (clusters, triangles, k-core, source
+    matrix) builds on, so a threshold or cap retune reaches every
+    consumer."""
+    return q_dedup_ngram_jaccard(spark, sf_dir).select("da", "db").cache()
+
+
+def _symmetric_edges(edges: DataFrame, a: str, b: str) -> DataFrame:
+    """Both directions of each undirected pair ``(a, b)`` as ``(src,
+    dst)``, hash-partitioned by ``src`` — the loop frame the CC,
+    PageRank and k-core loops join on. The union reads ``edges`` twice,
+    so callers pass a cached frame. The partition count is the
+    session's (shuffle partitions, AQE-coalesced), like every other
+    shuffle."""
     return (
-        _jaccard_pairs(shingle_postings(spark, sf_dir))
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .select("da", "db")
-        .cache()
+        edges.select(F.col(a).alias("src"), F.col(b).alias("dst"))
+        .union(edges.select(F.col(b).alias("src"), F.col(a).alias("dst")))
+        .repartition("src")
     )
 
 
@@ -798,27 +792,14 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: rounds = O(component diameter) ≈ small for dup clusters;
     each round shuffles O(edges). This is the large-graph-safe
     alternative to collecting edges driver-side."""
-    edges = jaccard_edges(spark, sf_dir)
-    # The pair graph is tiny relative to the corpus (that's the point of
-    # dedup), but "tiny" spans orders of magnitude between sf0.01 and
-    # 100 TB — size the loop frames from the MEASURED edge count (this
-    # count() also materializes the edge cache, so the expensive
-    # jaccard pipeline runs exactly once) instead of a fixed constant.
     # CC_MAX_ROUNDS bounds worst-case diameter (each round is one
     # label-propagation hop; the fixpoint probe exits early).
-    n_parts = cc_partitions(2 * edges.count())
-    sym = edges.union(edges.select(F.col("db").alias("da"), F.col("da").alias("db")))
-    sym = (
-        sym.withColumnRenamed("da", "src")
-        .withColumnRenamed("db", "dst")
-        .repartition(n_parts, "src")
-        .cache()
-    )
+    sym = _symmetric_edges(jaccard_edges(spark, sf_dir), "da", "db").cache()
     labels = (
         sym.select(F.col("src").alias("doc_id"))
         .distinct()
         .withColumn("label", F.col("doc_id"))
-        .repartition(n_parts, "doc_id")
+        .repartition("doc_id")
     )
     for _ in range(CC_MAX_ROUNDS):
         neighbor_min = (
@@ -1080,10 +1061,10 @@ def _pagerank_over_edges(edges: DataFrame, id_alias: str) -> DataFrame:
     Each iteration is one src-keyed equi-join + one dst-keyed partial
     aggregate — the canonical distributed PageRank step, O(E) per
     round with no driver state beyond the node count. Same loop
-    hygiene as the CC op: partition count derived from the measured
-    edge count, degree attached to the edge frame ONCE (GraphX-style,
-    so the static side never re-joins per round), and a per-round
-    checkpoint to keep loop plans shallow.
+    hygiene as the CC op: the shared symmetric loop frame, degree
+    attached to the edge frame ONCE (GraphX-style, so the static side
+    never re-joins per round), and a per-round checkpoint to keep loop
+    plans shallow.
     Determinism: pure integer fixed-point (see constants above); no
     float accumulates anywhere, so summation order is irrelevant."""
     # cache BEFORE the self-union: the union references `edges` twice,
@@ -1091,12 +1072,7 @@ def _pagerank_over_edges(edges: DataFrame, id_alias: str) -> DataFrame:
     # generator (ReuseExchange cannot dedupe post-exchange
     # applyInPandas / multi-join work) — same hazard the kcore loop
     # documents for its edge frame.
-    edges = edges.cache()
-    sym0 = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).cache()
-    n_parts = cc_partitions(sym0.count())  # materializes the edge cache
-    sym = sym0.repartition(n_parts, "src")
+    sym = _symmetric_edges(edges.cache(), "src", "dst").cache()
     # deg is consumed three times (symdeg build, pr init, final join);
     # checkpointed, it is a static side computed exactly once. It has
     # one row per node, so its checkpoint also counts the nodes.
@@ -1395,23 +1371,12 @@ def q_dedup_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # — uncached, each union branch re-runs the inverted-index
     # self-join + pair aggregate.
     edges = jaccard_edges(spark, sf_dir)
-    # Size the checkpointed loop frame from the measured edge count
-    # (CLAUDE.md iterative-loop rule, same as the CC/PageRank loops):
-    # the edges.count() also materializes the shared edge cache. The
-    # per-round aggregate/join shuffles are AQE-coalesced; this keeps
-    # the checkpoint storage right-sized.
-    n_parts = cc_partitions(2 * edges.count())
     # Early exit when a peel removes nothing: rounds past the fixpoint
     # are identity maps, so breaking early is result-identical to the
     # oracle's fixed KCORE_ROUNDS at EVERY scale factor. The edge count
     # is a probe of each checkpoint's own job.
     n_edges = F.count(F.lit(1))
-    cur, probe = checkpoint(
-        edges.select(F.col("da").alias("src"), F.col("db").alias("dst"))
-        .union(edges.select(F.col("db").alias("src"), F.col("da").alias("dst")))
-        .repartition(n_parts, "src"),
-        n=n_edges,
-    )
+    cur, probe = checkpoint(_symmetric_edges(edges, "da", "db"), n=n_edges)
     for _ in range(KCORE_ROUNDS):
         prev = probe["n"]
         keep = (
@@ -1422,7 +1387,7 @@ def q_dedup_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # No per-round repartition: when AQE broadcasts the keep side
         # the semi-joins are narrow and the checkpoint keeps the initial
-        # n_parts layout; when they shuffle the checkpoint inherits the
+        # src layout; when they shuffle the checkpoint inherits the
         # AQE-coalesced post-join partitioning.
         cur, probe = checkpoint(
             cur.join(keep, "src", "left_semi")
@@ -1647,7 +1612,6 @@ WHERE {CONTAIN_T_DEN} * i >= {CONTAIN_T_NUM} * nb
 # member — and the one whose algorithm depends on t being substantial
 # (prefix length shrinks as t grows).
 PREFIX_T_NUM, PREFIX_T_DEN = 1, 2
-PREFIX_JACCARD_T = PREFIX_T_NUM / PREFIX_T_DEN
 
 
 def q_dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:

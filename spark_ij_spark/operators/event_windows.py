@@ -1,10 +1,12 @@
-"""Batch twins of the streaming window operators (events table).
+"""Batch queries over the events table, with their DuckDB oracles.
 
-Same transformations as ``spark_ij_spark.streaming.events`` applied to
-the batch loader — these carry the DuckDB oracles for the correctness
-gate (sliding window = 30-min bucket union of 2 offsets; session
-window = gaps-and-islands with lag + running sum), while the streaming
-module is checked by stream==batch equivalence tests.
+The sliding and session window queries call the stream operators of
+``spark_ij_spark.streaming.events`` on the batch loader's frame (on
+batch input Spark drops their watermark), so the DuckDB oracles
+(sliding window = 30-min bucket union of 2 offsets; session window =
+gaps-and-islands with lag + running sum) check the stream operators'
+own code. The other stream operators are checked by stream==batch
+equivalence tests against their batch twins here.
 
 Double sums use the decimal-sum pattern (relational.dsum) so the
 aggregate is order-independent and hash-stable across engines.
@@ -23,6 +25,7 @@ from spark_ij_spark.operators.relational import (
     finite_or_null,
 )
 from spark_ij_spark.session import load_tables
+from spark_ij_spark.streaming.events import session_stats, sliding_counts
 
 SESSION_GAP_MIN = 30
 
@@ -32,20 +35,10 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_events_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding 1h windows every 30min per event_type. One shuffle on
+    """Sliding 1h windows every 30min per event_type
+    (``streaming.events.sliding_counts``). One shuffle on
     (window, type); window() expands each event to 2 rows map-side."""
-    return (
-        _events(spark, sf_dir)
-        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"), dsum("value", 2, "sum_value"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
+    return sliding_counts(_events(spark, sf_dir))
 
 
 Q_EVENTS_SLIDING_SQL = f"""
@@ -64,27 +57,14 @@ GROUP BY ws, event_type
 
 
 def q_events_session(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user session windows (30-min gap), batch session_window.
+    """Per-user session windows (30-min gap), batch session_window
+    (``streaming.events.session_stats``).
     Semantics: window end = last event + gap; an event at EXACTLY
     last+gap still MERGES into the session (Spark session_window
     treats the boundary inclusively — empirically probed: events at
     00:00 and 00:30 form ONE session with a 30-min gap). The oracle's
     gaps-and-islands split therefore uses strict '>', not '>='."""
-    return (
-        _events(spark, sf_dir)
-        .groupBy(
-            F.session_window("ts", f"{SESSION_GAP_MIN} minutes").alias("w"),
-            "user_id",
-        )
-        .agg(F.count("*").alias("n_events"), dsum("value", 2, "sum_value"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-            "sum_value",
-        )
-    )
+    return session_stats(_events(spark, sf_dir), gap=f"{SESSION_GAP_MIN} minutes")
 
 
 Q_EVENTS_SESSION_SQL = f"""

@@ -36,13 +36,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from spark_ij_spark.datamodel import IMAGE_SCHEMA, image_to_np, meta_of
 from spark_ij_spark.kernels.histogram import histogram
 from spark_ij_spark.session import load_tables
-
-ORDER_IMAGE_SCHEMA = StructType(
-    [StructField("l_orderkey", LongType()), StructField("image", IMAGE_SCHEMA)]
-)
 
 
 def _segments(data: pd.Series, dtype: pd.Series):

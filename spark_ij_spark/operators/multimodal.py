@@ -60,19 +60,6 @@ MEDIA_SCHEMA = StructType(
 
 NPY_MIME = "application/x-npy"
 WAV_MIME = "audio/wav"
-#: mimes with a real in-container decoder (pure-stdlib codecs)
-NATIVE_MIMES = (
-    NPY_MIME,
-    "image/png",
-    "image/tiff",
-    "image/gif",
-    "image/bmp",
-    "image/jpeg",
-    "application/dicom",
-    WAV_MIME,
-    "video/x-msvideo",
-    "video/mp4",
-)
 #: kept for backward compatibility — EMPTY since round 10: MP4 gained
 #: a native MJPEG-in-BMFF container parse (purepy_codecs.decode_mp4)
 #: reusing the round-9 JPEG codec, so every documented mime now has a
@@ -970,6 +957,31 @@ def jpeg_roundtrip_features(
     return feats(col)
 
 
+def _jpeg_sums(spark: SparkSession, sf_dir: str, progressive: bool) -> DataFrame:
+    """Per-doc half sums of the JPEG codec proof
+    (``jpeg_roundtrip_features``), baseline or progressive bytes; the
+    scan filter is explained on ``q_media_jpeg_roundtrip``."""
+    docs = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .select("doc_id")
+        .filter(
+            F.expr("doc_id IS NOT NULL AND doc_id >= 0 AND doc_id < 281474976710656")
+        )
+    )
+    return (
+        docs.select(
+            "doc_id",
+            jpeg_roundtrip_features("doc_id", progressive=progressive).alias("f"),
+        )
+        .select(
+            "doc_id",
+            F.col("f.sum_left").alias("sum_left"),
+            F.col("f.sum_right").alias("sum_right"),
+        )
+        .orderBy("doc_id")
+    )
+
+
 def q_media_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JPEG pipeline over REAL baseline-JFIF bytes (the format that
     left STUBBED_MIMES in round 9): per document, encode → decode →
@@ -982,23 +994,8 @@ def q_media_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-negative while DuckDB's follows the dividend's sign, and a
     doc_id past ~2^58 would overflow DuckDB's checked BIGINT multiply
     where Python is arbitrary-precision, so the closed form is only
-    engine-identical on that domain (round-9 review)."""
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id")
-        .filter(
-            F.expr("doc_id IS NOT NULL AND doc_id >= 0 AND doc_id < 281474976710656")
-        )
-    )
-    return (
-        docs.select("doc_id", jpeg_roundtrip_features("doc_id").alias("f"))
-        .select(
-            "doc_id",
-            F.col("f.sum_left").alias("sum_left"),
-            F.col("f.sum_right").alias("sum_right"),
-        )
-        .orderBy("doc_id")
-    )
+    engine-identical on that domain."""
+    return _jpeg_sums(spark, sf_dir, progressive=False)
 
 
 def q_media_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1010,25 +1007,7 @@ def q_media_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
     natively in round 10. Identical oracle: at quality=100 a flat
     block is a single DC coefficient, which the progressive DC
     first+refine scans deliver exactly."""
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id")
-        .filter(
-            F.expr("doc_id IS NOT NULL AND doc_id >= 0 AND doc_id < 281474976710656")
-        )
-    )
-    return (
-        docs.select(
-            "doc_id",
-            jpeg_roundtrip_features("doc_id", progressive=True).alias("f"),
-        )
-        .select(
-            "doc_id",
-            F.col("f.sum_left").alias("sum_left"),
-            F.col("f.sum_right").alias("sum_right"),
-        )
-        .orderBy("doc_id")
-    )
+    return _jpeg_sums(spark, sf_dir, progressive=True)
 
 
 Q_MEDIA_JPEG_ROUNDTRIP_SQL = """

@@ -166,11 +166,3 @@ def load_tables(
                     df = df.withColumn("ts", F.col("ts").cast("timestamp"))
             out[name] = df
     return out
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load tables and register each as a temp view for SQL access."""
-    tables = load_tables(spark, sf_dir)
-    for name, df in tables.items():
-        df.createOrReplaceTempView(name)
-    return tables

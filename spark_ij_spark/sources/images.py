@@ -61,7 +61,7 @@ from spark_ij_spark.datamodel import (
     map_images,
     np_to_image,
 )
-from spark_ij_spark.lineage import log_entry
+from spark_ij_spark.lineage import OP_LOAD, log_entry
 from spark_ij_spark.sources.codecs import decode_bytes, encode_array
 
 NAMED_IMAGE_SCHEMA = StructType(
@@ -85,7 +85,7 @@ FULL_IMAGE_SCHEMA = StructType(
 
 
 def _load_entry(path: str) -> dict:
-    return log_entry("LOAD", path, optool="spark_ij_spark.sources")
+    return log_entry(OP_LOAD, path, optool="spark_ij_spark.sources")
 
 
 def _decoded(blob: bytes, path: str, suffix: str = "") -> dict:

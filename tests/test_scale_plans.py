@@ -161,20 +161,27 @@ def test_semdedup_chunked_matmul_matches_full():
     assert (got == ref).all()
 
 
-def test_cc_partitions_scale_with_edge_count(spark):
-    """Connected-components loop frames must be sized from the measured
-    edge count (1-10M edges/partition band), not a fixed constant."""
+@pytest.mark.parametrize(
+    "query", ["q_dedup_clusters", "q_dedup_kcore", "q_dedup_pagerank"]
+)
+def test_graph_loops_ignore_the_partition_count(spark, query):
+    """The loop frames take their partition count from the session
+    (spark.sql.shuffle.partitions, AQE-coalesced): the same rows come
+    back at 3 and at 11 shuffle partitions. The cache is cleared before
+    each run so neither run reads the other's cached edge frames."""
     from spark_ij_spark.operators import dedup
 
-    # sizing function: floor at small inputs, proportional growth after
-    assert dedup.cc_partitions(0) == dedup.CC_MIN_PARTITIONS
-    assert dedup.cc_partitions(10_000) == dedup.CC_MIN_PARTITIONS
-    big = dedup.cc_partitions(1_000_000_000)
-    assert big == 500  # 1e9 / 2M target
-    assert dedup.cc_partitions(100_000_000_000) == 100 * big
-    # end-to-end: the loop sized this way runs and labels documents
-    labels = dedup.q_dedup_clusters(spark, SF_DIR)
-    assert labels.count() > 0
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    rows = {}
+    try:
+        for n in ("3", "11"):
+            spark.catalog.clearCache()
+            spark.conf.set("spark.sql.shuffle.partitions", n)
+            rows[n] = sorted(getattr(dedup, query)(spark, SF_DIR).collect())
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert rows["3"] == rows["11"]
+    assert rows["3"]
 
 
 def test_checkpoint_probes_ride_the_checkpoint_job(spark):
