@@ -285,13 +285,20 @@ _LOG_FIELDS = ("optype", "optool", "opval", "opargs", "children_json")
 
 
 def log_of(img: Any) -> list[dict[str, Any]]:
+    """The image's lineage log as a new list of plain LOG_ENTRY_SCHEMA
+    dicts with ``opargs`` a list — the one log normaliser. Entries arrive
+    as dicts, Rows or positional tuples, and Arrow hands ``opargs`` over
+    as a numpy array; a NULL log is the empty log."""
     lg = img["log"] if isinstance(img, dict) else img.log
     if lg is None:
         return []
-    return [
-        e if isinstance(e, dict) else _coerce_meta_dict(e, _LOG_FIELDS)
-        for e in lg
-    ]
+    out = []
+    for e in lg:
+        d = _coerce_meta_dict(e, _LOG_FIELDS)
+        entry = {f: d.get(f) for f in _LOG_FIELDS}
+        entry["opargs"] = [] if entry["opargs"] is None else list(entry["opargs"])
+        out.append(entry)
+    return out
 
 
 # ---------------------------------------------------------------------------

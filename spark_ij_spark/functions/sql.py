@@ -58,10 +58,6 @@ from spark_ij_spark.operators.images import (
 from spark_ij_spark.registry import list_commands
 
 
-def _iter_imgs(img: pd.DataFrame):
-    return img.itertuples(index=False)
-
-
 def _chains(cmds, argss):
     """Row i's one-op chain ``[(cmds[i], argss[i])]`` for the engine."""
     return ([(c, a)] for c, a in zip(cmds, argss))
@@ -142,9 +138,7 @@ def register_imagej(spark: SparkSession) -> None:
     def scale(img: pd.DataFrame, k: pd.Series) -> pd.DataFrame:  # :125
         def scaled(r, ki):
             arr = image_to_np(r).astype("float64") * float(ki)
-            log = lineage.append_entry(
-                log_of(r), lineage.log_entry(lineage.OP_RUN, "scale", [str(ki)])
-            )
+            log = [*log_of(r), lineage.log_entry(lineage.OP_RUN, "scale", [str(ki)])]
             return np_to_image(arr, meta=meta_of(r), log=log)
 
         return image_frame(map_images(scaled, img, args=(k,), null=NULL_IMAGE))
@@ -207,7 +201,7 @@ def register_imagej(spark: SparkSession) -> None:
 
     @F.pandas_udf(StringType())
     def showcalibration(img: pd.DataFrame) -> pd.Series:  # :241-244
-        return pd.Series([format_calibration(meta_of(r)) for r in _iter_imgs(img)])
+        return pd.Series(map_images(lambda r: format_calibration(meta_of(r)), img))
 
     @F.pandas_udf(StringType())
     def showmetadata(img: pd.DataFrame) -> pd.Series:  # :246-249
@@ -223,7 +217,7 @@ def register_imagej(spark: SparkSession) -> None:
         def with_roi(r, rt, x, y):
             meta = meta_of(r)
             meta["info"] = roik.set_roi(meta.get("info", ""), list(x), list(y), str(rt))
-            log = lineage.append_entry(log_of(r), lineage.log_entry("ROI", str(rt)))
+            log = [*log_of(r), lineage.log_entry("ROI", str(rt))]
             return np_to_image(image_to_np(r), meta=meta, log=log)
 
         return image_frame(
@@ -232,16 +226,12 @@ def register_imagej(spark: SparkSession) -> None:
 
     @F.pandas_udf(StringType())
     def getroi(img: pd.DataFrame, cal: pd.Series) -> pd.Series:
-        import json
-
-        out = []
-        for i, r in enumerate(_iter_imgs(img)):
+        def roi_json(r, calibrated):
             meta = meta_of(r)
-            roi = roik.get_roi(
-                meta.get("info", ""), meta, calibrated=bool(cal.iloc[i])
-            )
-            out.append(json.dumps(roi) if roi else None)
-        return pd.Series(out)
+            roi = roik.get_roi(meta.get("info", ""), meta, calibrated=bool(calibrated))
+            return json.dumps(roi) if roi else None
+
+        return pd.Series(map_images(roi_json, img, args=(cal,)))
 
     @F.pandas_udf(MapType(StringType(), DoubleType()))
     def roistats(img: pd.DataFrame) -> pd.Series:
@@ -259,14 +249,18 @@ def register_imagej(spark: SparkSession) -> None:
     def makeimage(arr: pd.Series) -> pd.DataFrame:
         """array<array<array<double>>> → image (inverse of toarray;
         the reference's createImage ingest, Spiji.java:955-1205, with
-        the same double→float32 downcast rule)."""
-        rows = []
-        for a in arr:
-            nested = np.asarray(
-                [[list(col) for col in row] for row in a], dtype="float64"
-            )
-            rows.append(np_to_image(nested))
-        return image_frame(rows)
+        the same double→float32 downcast rule). A NULL array gives the
+        NULL image."""
+        return image_frame(
+            [
+                NULL_IMAGE
+                if a is None
+                else np_to_image(
+                    np.asarray([[list(col) for col in row] for row in a], dtype="float64")
+                )
+                for a in arr
+            ]
+        )
 
     spark.udf.register("makeimage", makeimage)
     spark.udf.register("setroi", setroi)

@@ -39,55 +39,17 @@ def log_entry(
         "optool": optool,
         "opval": opval,
         "opargs": [str(a) for a in (opargs or [])],
-        "children_json": json.dumps(children, default=_jsonable) if children else None,
+        "children_json": json.dumps(children) if children else None,
     }
 
 
-def _jsonable(o: Any):
-    if hasattr(o, "tolist"):
-        return o.tolist()
-    return str(o)
-
-
-def _aslist(log: Any) -> list:
-    # accepts None, list, or numpy array (no bare truthiness on arrays)
-    return [] if log is None else list(log)
-
-
-def append_entry(
-    log: list[dict[str, Any]] | None, entry: dict[str, Any]
-) -> list[dict[str, Any]]:
-    return [*(_norm(e) for e in _aslist(log)), entry]
-
-
 def merge_logs(
-    log_a: list[dict[str, Any]] | None,
-    log_b: list[dict[str, Any]] | None,
+    log_a: list[dict[str, Any]],
+    log_b: list[dict[str, Any]],
     opval: str,
     opargs: list[str] | None = None,
 ) -> list[dict[str, Any]]:
     """Binary-op merge: a single MERGE entry whose children nest both
-    parents' logs (reference shape tested by ImagePlusIOTests.scala:64-76)."""
-    children = [[_norm(e) for e in _aslist(log_a)], [_norm(e) for e in _aslist(log_b)]]
-    return [log_entry(OP_MERGE, opval, opargs, children=children)]
-
-
-def _norm(e: Any) -> dict[str, Any]:
-    if isinstance(e, dict):
-        args = e.get("opargs")
-        return {
-            "optype": e.get("optype"),
-            "optool": e.get("optool"),
-            "opval": e.get("opval"),
-            "opargs": [] if args is None else list(args),
-            "children_json": e.get("children_json"),
-        }
-    # Row / namedtuple (opargs may be a numpy array — no truthiness)
-    args = e.opargs
-    return {
-        "optype": e.optype,
-        "optool": e.optool,
-        "opval": e.opval,
-        "opargs": [] if args is None else list(args),
-        "children_json": e.children_json,
-    }
+    parents' logs (reference shape tested by ImagePlusIOTests.scala:64-76).
+    The logs are ``datamodel.log_of`` output and nest as given."""
+    return [log_entry(OP_MERGE, opval, opargs, children=[log_a, log_b])]

@@ -97,13 +97,6 @@ def order_quantity_images(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     empty_log = F.expr("array()").cast(ArrayType(LOG_ENTRY_SCHEMA))
-
-    # Cache the built image table: every img_* query derives from this
-    # identical plan, so Spark's CacheManager (canonical-plan matching)
-    # materializes it once per session+sf_dir and the other six queries
-    # read columnar cache instead of re-running the groupBy + build UDF.
-    # This is the "materialized feature table" pattern a real pipeline
-    # uses at scale; MEMORY_AND_DISK spills instead of OOMing.
     return (
         flat.select(
             "l_orderkey",
@@ -120,7 +113,6 @@ def order_quantity_images(spark: SparkSession, sf_dir: str) -> DataFrame:
                 empty_log.alias("log"),
             ).alias("image"),
         )
-        .cache()
     )
 
 

@@ -53,7 +53,7 @@ from spark_ij_spark.datamodel import (
     stats_of_values,
 )
 from spark_ij_spark.kernels.histogram import histogram
-from spark_ij_spark.registry import run_op
+from spark_ij_spark.registry import compile_op
 
 # ---------------------------------------------------------------------------
 # sources (reference: scOps.scala:63-73 createEmptyImages)
@@ -117,20 +117,28 @@ def run_op_rows(
     stashes (setThreshold, LUTs) reaches the next op and the output.
     Each op appends one RUN entry.
 
+    Each distinct chain is compiled (``registry.compile_op``, plus its
+    RUN entries) the first time a non-NULL row needs it, and reused for
+    the rest of the batch; per row only the kernels run.
+
     Returns the output image dicts and, per row, the last op's results
     table as ``{column: [float]}`` (``{}`` if it gave none). A NULL
     image passes through as the NULL image with a NULL table."""
+    compiled: dict[tuple, tuple[list[Callable], list[dict]]] = {}
 
     def run_chain(r, chain):
-        arr, meta, log, table = image_to_np(r), meta_of(r), log_of(r), None
-        for cmd, args in chain:
-            cmd, args = str(cmd), str(args or "")
-            arr, table = run_op(arr, cmd, args, meta)
-            log = lineage.append_entry(
-                log, lineage.log_entry(lineage.OP_RUN, cmd, [args])
+        key = tuple((str(cmd), str(args or "")) for cmd, args in chain)
+        if key not in compiled:
+            compiled[key] = (
+                [compile_op(cmd, args) for cmd, args in key],
+                [lineage.log_entry(lineage.OP_RUN, cmd, [args]) for cmd, args in key],
             )
+        ops, entries = compiled[key]
+        arr, meta, table = image_to_np(r), meta_of(r), None
+        for op in ops:
+            arr, table = op(arr, meta)
         table = {k: [float(x) for x in v] for k, v in (table or {}).items()}
-        return np_to_image(arr, meta=meta, log=log), table
+        return np_to_image(arr, meta=meta, log=[*log_of(r), *entries]), table
 
     pairs = map_images(run_chain, img_frame, args=(chains,), null=(NULL_IMAGE, None))
     return [p[0] for p in pairs], [p[1] for p in pairs]
@@ -327,7 +335,7 @@ def processor_for_each(
 
     def proc(r):
         out = _per_slice(image_to_np(r), slice_fn)
-        log = lineage.append_entry(log_of(r), lineage.log_entry("PROC", op_label))
+        log = [*log_of(r), lineage.log_entry("PROC", op_label)]
         return np_to_image(out, meta=meta_of(r), log=log)
 
     @F.pandas_udf(IMAGE_SCHEMA)

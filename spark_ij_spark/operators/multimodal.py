@@ -20,6 +20,8 @@ at 100 TB you lower it for large media so a batch of blobs fits.
 from __future__ import annotations
 
 import io
+from collections.abc import Callable
+from typing import Any
 
 import numpy as np
 import pandas as pd
@@ -35,7 +37,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from spark_ij_spark.datamodel import image_to_np
+from spark_ij_spark.datamodel import image_to_np, map_images
 from spark_ij_spark.operators.image_queries import order_quantity_images
 from spark_ij_spark.operators.relational import dsum_sql
 from spark_ij_spark.sources.codecs import encode_array
@@ -60,14 +62,6 @@ MEDIA_SCHEMA = StructType(
 
 NPY_MIME = "application/x-npy"
 WAV_MIME = "audio/wav"
-#: kept for backward compatibility — EMPTY since round 10: MP4 gained
-#: a native MJPEG-in-BMFF container parse (purepy_codecs.decode_mp4)
-#: reusing the round-9 JPEG codec, so every documented mime now has a
-#: real pure-stdlib decoder. (H.264 *bitstream* decode remains out of
-#: scope — a non-MJPEG mp4 raises a clear ValueError from the
-#: container parse, not NotImplementedError.)
-STUBBED_MIMES: tuple[str, ...] = ()
-
 _MIME_SUFFIX = {
     "image/png": ".png",
     "image/tiff": ".tif",
@@ -78,6 +72,17 @@ _MIME_SUFFIX = {
     "video/x-msvideo": ".avi",
     "video/mp4": ".mp4",
 }
+
+
+def _media_frame(
+    fn: Callable[[Any], dict[str, Any]], media: pd.DataFrame, schema: StructType
+) -> pd.DataFrame:
+    """``schema``-shaped result frame of ``fn(row)`` per media (or image)
+    row, through ``datamodel.map_images``: a NULL input gives a NULL
+    struct. Object columns keep int64 features exact next to a NULL."""
+    cols = schema.fieldNames()
+    rows = map_images(fn, media, null=dict.fromkeys(cols))
+    return pd.DataFrame(rows, columns=cols, dtype=object)
 
 
 def decode_media_bytes(data: bytes, mime: str) -> np.ndarray:
@@ -103,12 +108,6 @@ def decode_media_bytes(data: bytes, mime: str) -> np.ndarray:
         from spark_ij_spark.sources.codecs import decode_bytes
 
         return decode_bytes(bytes(data), f"payload{_MIME_SUFFIX[mime]}")
-    if mime in STUBBED_MIMES:  # empty since round 10 — kept for plugins
-        raise NotImplementedError(
-            f"decoder for {mime!r} requires a codec library not present in "
-            "this container; the Spark-side plumbing is real — swap this "
-            "body when the library is available"
-        )
     raise ValueError(f"unknown mime {mime!r}")
 
 
@@ -117,28 +116,26 @@ def media_from_image(image_col: str | Column, frame_axis: bool = True) -> Column
     ``frame_axis`` the width axis becomes the frame axis ([1][n][1] →
     [1][1][n]) so 1-D pixel rows act as frame sequences for video ops."""
 
+    def to_media(r):
+        arr = image_to_np(r)
+        if frame_axis and arr.shape[0] == 1 and arr.shape[2] == 1:
+            arr = arr.reshape(1, 1, -1)
+        h, w, nf = arr.shape
+        return {
+            "data": encode_array(arr, ".npy"),
+            "mime": NPY_MIME,
+            "meta": {
+                "width": int(w),
+                "height": int(h),
+                "n_frames": int(nf),
+                "sample_rate": 0,
+                "duration_ms": float(nf) * (1000.0 / 30.0),
+            },
+        }
+
     @F.pandas_udf(MEDIA_SCHEMA)
     def pack(imgs: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for r in imgs.itertuples(index=False):
-            arr = image_to_np(r)
-            if frame_axis and arr.shape[0] == 1 and arr.shape[2] == 1:
-                arr = arr.reshape(1, 1, -1)
-            h, w, nf = arr.shape
-            rows.append(
-                {
-                    "data": encode_array(arr, ".npy"),
-                    "mime": NPY_MIME,
-                    "meta": {
-                        "width": int(w),
-                        "height": int(h),
-                        "n_frames": int(nf),
-                        "sample_rate": 0,
-                        "duration_ms": float(nf) * (1000.0 / 30.0),
-                    },
-                }
-            )
-        return pd.DataFrame(rows, columns=["data", "mime", "meta"])
+        return _media_frame(to_media, imgs, MEDIA_SCHEMA)
 
     col = F.col(image_col) if isinstance(image_col, str) else image_col
     return pack(col)
@@ -152,16 +149,16 @@ def frame_sample(media_col: str | Column, stride: int) -> Column:
     sample-rate-derived duration of audio media (whose "frames" are
     samples) while leaving a now-contradictory sample_rate in meta."""
 
+    def sampled(r):
+        arr = decode_media_bytes(r.data, r.mime)[:, :, ::stride]
+        meta = dict(r.meta)
+        meta["n_frames"] = int(arr.shape[2])
+        # payload is re-encoded as npy, whatever it decoded from
+        return {"data": encode_array(arr, ".npy"), "mime": NPY_MIME, "meta": meta}
+
     @F.pandas_udf(MEDIA_SCHEMA)
     def sample(media: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for r in media.itertuples(index=False):
-            arr = decode_media_bytes(r.data, r.mime)[:, :, ::stride]
-            meta = dict(r.meta)
-            meta["n_frames"] = int(arr.shape[2])
-            # payload is re-encoded as npy, whatever it decoded from
-            rows.append({"data": encode_array(arr, ".npy"), "mime": NPY_MIME, "meta": meta})
-        return pd.DataFrame(rows, columns=["data", "mime", "meta"])
+        return _media_frame(sampled, media, MEDIA_SCHEMA)
 
     col = F.col(media_col) if isinstance(media_col, str) else media_col
     return sample(col)
@@ -171,19 +168,19 @@ def resize_media(media_col: str | Column, width: int, height: int) -> Column:
     """Nearest-neighbor spatial resize (deterministic index sampling —
     no interpolation library needed)."""
 
+    def resized(r):
+        arr = decode_media_bytes(r.data, r.mime)
+        h, w, nf = arr.shape
+        yi = (np.arange(height) * h) // height
+        xi = (np.arange(width) * w) // width
+        out = arr[yi][:, xi]
+        meta = dict(r.meta)
+        meta["width"], meta["height"] = int(width), int(height)
+        return {"data": encode_array(out, ".npy"), "mime": NPY_MIME, "meta": meta}
+
     @F.pandas_udf(MEDIA_SCHEMA)
     def resize(media: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for r in media.itertuples(index=False):
-            arr = decode_media_bytes(r.data, r.mime)
-            h, w, nf = arr.shape
-            yi = (np.arange(height) * h) // height
-            xi = (np.arange(width) * w) // width
-            out = arr[yi][:, xi]
-            meta = dict(r.meta)
-            meta["width"], meta["height"] = int(width), int(height)
-            rows.append({"data": encode_array(out, ".npy"), "mime": NPY_MIME, "meta": meta})
-        return pd.DataFrame(rows, columns=["data", "mime", "meta"])
+        return _media_frame(resized, media, MEDIA_SCHEMA)
 
     col = F.col(media_col) if isinstance(media_col, str) else media_col
     return resize(col)
@@ -203,35 +200,25 @@ FEATURE_SCHEMA = StructType(
 def media_features(media_col: str | Column) -> Column:
     """Per-media scalar feature extraction (decode → numpy reduce)."""
 
+    def features(r):
+        arr = decode_media_bytes(r.data, r.mime).astype("float64")
+        if arr.size == 0:
+            # a valid 0-sample payload (empty WAV/AVI) decodes to a
+            # zero-size array; min/max have no identity and would
+            # kill the whole Arrow batch — emit NaN features instead
+            nan = float("nan")
+            return {"mean": nan, "std": nan, "p_min": nan, "p_max": nan, "n_px": 0}
+        return {
+            "mean": float(arr.mean()),
+            "std": float(arr.std()),
+            "p_min": float(arr.min()),
+            "p_max": float(arr.max()),
+            "n_px": int(arr.size),
+        }
+
     @F.pandas_udf(FEATURE_SCHEMA)
     def feats(media: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for r in media.itertuples(index=False):
-            arr = decode_media_bytes(r.data, r.mime).astype("float64")
-            if arr.size == 0:
-                # a valid 0-sample payload (empty WAV/AVI) decodes to a
-                # zero-size array; min/max have no identity and would
-                # kill the whole Arrow batch — emit NaN features instead
-                rows.append(
-                    {
-                        "mean": float("nan"),
-                        "std": float("nan"),
-                        "p_min": float("nan"),
-                        "p_max": float("nan"),
-                        "n_px": 0,
-                    }
-                )
-                continue
-            rows.append(
-                {
-                    "mean": float(arr.mean()),
-                    "std": float(arr.std()),
-                    "p_min": float(arr.min()),
-                    "p_max": float(arr.max()),
-                    "n_px": int(arr.size),
-                }
-            )
-        return pd.DataFrame(rows, columns=["mean", "std", "p_min", "p_max", "n_px"])
+        return _media_frame(features, media, FEATURE_SCHEMA)
 
     col = F.col(media_col) if isinstance(media_col, str) else media_col
     return feats(col)
@@ -345,24 +332,20 @@ def scene_cut_features(media_col: str | Column) -> Column:
     SAD. Vectorized per clip, integer arithmetic end-to-end."""
     from spark_ij_spark.sources.purepy_codecs import decode_avi
 
+    def features(r):
+        arr = decode_avi(bytes(r.data)).astype(np.int64)
+        f = arr.reshape(SCENE_H * SCENE_W, arr.shape[2])
+        d = np.abs(f[:, 1:] - f[:, :-1]).sum(axis=0)
+        return {
+            "n_frames": int(arr.shape[2]),
+            "n_cuts": int((d > SCENE_CUT_SAD).sum()),
+            "max_jump": int(d.max()) if d.size else 0,
+            "sad_total": int(d.sum()),
+        }
+
     @F.pandas_udf(SCENE_FEATURE_SCHEMA)
     def feats(media: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for r in media.itertuples(index=False):
-            arr = decode_avi(bytes(r.data)).astype(np.int64)
-            f = arr.reshape(SCENE_H * SCENE_W, arr.shape[2])
-            d = np.abs(f[:, 1:] - f[:, :-1]).sum(axis=0)
-            rows.append(
-                {
-                    "n_frames": int(arr.shape[2]),
-                    "n_cuts": int((d > SCENE_CUT_SAD).sum()),
-                    "max_jump": int(d.max()) if d.size else 0,
-                    "sad_total": int(d.sum()),
-                }
-            )
-        return pd.DataFrame(
-            rows, columns=["n_frames", "n_cuts", "max_jump", "sad_total"]
-        )
+        return _media_frame(features, media, SCENE_FEATURE_SCHEMA)
 
     col = F.col(media_col) if isinstance(media_col, str) else media_col
     return feats(col)
@@ -376,34 +359,31 @@ def audio_features(media_col: str | Column) -> Column:
     batch-independent."""
     from spark_ij_spark.sources.purepy_codecs import decode_wav
 
+    # int64 np.dot wraps SILENTLY past 2^63 (clip energy grows with
+    # clip length: x² ≤ ~1.07e9, so ~8.6e9 samples overflow) while
+    # the DuckDB oracle's HUGEINT sum stays exact — chunk the dot
+    # so each partial stays < 2^53 and accumulate in a Python int
+    # (arbitrary precision). A clip whose TOTAL exceeds int64 then
+    # fails loudly at the Arrow LongType cast, like the oracle's
+    # out-of-range CAST, instead of silently wrapping.
+    chunk = 1 << 23
+
+    def features(r):
+        x = decode_wav(bytes(r.data))[0][:, 0].astype(np.int64)
+        energy = 0
+        for i in range(0, x.size, chunk):
+            c = x[i : i + chunk]
+            energy += int(np.dot(c, c))
+        return {
+            "n_samples": int(x.size),
+            "energy": energy,
+            "zero_crossings": int(np.count_nonzero(x[:-1] * x[1:] < 0)),
+            "peak": int(np.abs(x).max()) if x.size else 0,
+        }
+
     @F.pandas_udf(AUDIO_FEATURE_SCHEMA)
     def feats(media: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        # int64 np.dot wraps SILENTLY past 2^63 (clip energy grows with
-        # clip length: x² ≤ ~1.07e9, so ~8.6e9 samples overflow) while
-        # the DuckDB oracle's HUGEINT sum stays exact — chunk the dot
-        # so each partial stays < 2^53 and accumulate in a Python int
-        # (arbitrary precision). A clip whose TOTAL exceeds int64 then
-        # fails loudly at the Arrow LongType cast, like the oracle's
-        # out-of-range CAST, instead of silently wrapping.
-        chunk = 1 << 23
-        for r in media.itertuples(index=False):
-            x = decode_wav(bytes(r.data))[0][:, 0].astype(np.int64)
-            energy = 0
-            for i in range(0, x.size, chunk):
-                c = x[i : i + chunk]
-                energy += int(np.dot(c, c))
-            rows.append(
-                {
-                    "n_samples": int(x.size),
-                    "energy": energy,
-                    "zero_crossings": int(np.count_nonzero(x[:-1] * x[1:] < 0)),
-                    "peak": int(np.abs(x).max()) if x.size else 0,
-                }
-            )
-        return pd.DataFrame(
-            rows, columns=["n_samples", "energy", "zero_crossings", "peak"]
-        )
+        return _media_frame(features, media, AUDIO_FEATURE_SCHEMA)
 
     col = F.col(media_col) if isinstance(media_col, str) else media_col
     return feats(col)
@@ -984,7 +964,7 @@ def _jpeg_sums(spark: SparkSession, sf_dir: str, progressive: bool) -> DataFrame
 
 def q_media_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JPEG pipeline over REAL baseline-JFIF bytes (the format that
-    left STUBBED_MIMES in round 9): per document, encode → decode →
+    went native in round 9): per document, encode → decode →
     per-half pixel sums, hash-matched against the closed form. The
     JPEG sibling of ``q_media_scene_cuts``' AVI proof and
     ``q_media_audio_energy``'s WAV proof. Map-only Arrow hop, no
@@ -1029,7 +1009,7 @@ MP4_FRAMES_SCHEMA = StructType(
 
 
 def q_media_mp4_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MJPEG-in-MP4 codec proof (the container that left STUBBED_MIMES
+    """MJPEG-in-MP4 codec proof (the container that went native
     in round 10): per document, a 2-frame 8x16 flat-gray video
     (frame 0 value v1 = (id·41+17) mod 256, frame 1 v2 = (id·59+31)
     mod 256) is encoded to a REAL ISO BMFF stream (sample tables +

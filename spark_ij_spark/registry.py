@@ -10,6 +10,13 @@ executed inside Arrow pandas UDFs, so per-partition engine warm-up
 (scOps.scala:41, ImageJSettings.scala:51-62) becomes ordinary Python
 module-import caching on each executor.
 
+``compile_op(cmd, args)`` does the per-op work once — it resolves the
+kernel and parses the arg string — and returns ``op(arr, meta)``, which
+only runs the kernel; the per-row engine
+(``operators.images.run_op_rows``) compiles each distinct chain once
+per batch. ``run_op`` is its one-shot form. The kernel menu is imported
+once per process, on first lookup.
+
 Unknown command names raise with near-match suggestions.
 
 Kernel contract::
@@ -24,6 +31,7 @@ Arg strings use the ImageJ macro grammar (``radius=3 white clear``):
 from __future__ import annotations
 
 import difflib
+import functools
 import re
 import shlex
 from collections.abc import Callable
@@ -61,9 +69,13 @@ def list_commands() -> list[str]:
     return sorted(OPS)
 
 
+@functools.cache
 def _ensure_loaded() -> None:
     # Kernels self-register on import; keep the import here so any entry
     # point (SQL UDF, DataFrame helper, bare get_op) sees the full menu.
+    # Cached, so it runs once per process. A module-level import instead
+    # breaks when a kernel module is the first one a process imports: it
+    # would re-enter that kernel module while it is partially initialised.
     from spark_ij_spark.kernels import core  # noqa: F401
     from spark_ij_spark.kernels import filters  # noqa: F401
     from spark_ij_spark.kernels import geometry  # noqa: F401
@@ -113,23 +125,32 @@ def get_int(args: dict[str, Any], key: str, default: int) -> int:
     return int(round(get_float(args, key, float(default))))
 
 
+def compile_op(
+    cmd: str, args: str | None = None
+) -> Callable[[np.ndarray, dict], tuple[np.ndarray, dict[str, list[float]] | None]]:
+    """Resolve ``cmd`` and parse ``args`` once; returns
+    ``op(arr, meta) -> (result, results_table)``, which only runs the
+    kernel. Every call shares the one parsed-args dict, so kernels
+    read their args and never mutate them."""
+    kernel = get_op(cmd)
+    parsed = parse_args(args)
+
+    def op(arr: np.ndarray, meta: dict) -> tuple[np.ndarray, dict[str, list[float]] | None]:
+        # meta is mutated IN PLACE: stateful ops (setThreshold, LUT
+        # selection) stash into it and the caller writes it to the output
+        # image, so a copy here would silently drop the stash between
+        # chained ops.
+        out = kernel(np.asarray(arr), parsed, meta)
+        if isinstance(out, tuple):
+            return out[0], out[1]
+        return out, None
+
+    return op
+
+
 def run_op(
     arr: np.ndarray, cmd: str, args: str | None = None, meta: dict | None = None
 ) -> tuple[np.ndarray, dict[str, list[float]] | None]:
     """Dispatch one named op on an array; returns (result, results_table).
-
-    The threshold special-case mirrors PortableImagePlus.scala:366-377:
-    ``setThreshold``/``applyThreshold`` parse lower/upper with
-    min/max-infinity defaults before dispatch.
-    """
-    _ensure_loaded()
-    kernel = get_op(cmd)
-    parsed = parse_args(args)
-    # meta is mutated IN PLACE: stateful ops (setThreshold, LUT
-    # selection) stash into it and the caller writes it to the output
-    # image, so a copy here would silently drop the stash between
-    # chained ops.
-    out = kernel(np.asarray(arr), parsed, meta if meta is not None else {})
-    if isinstance(out, tuple):
-        return out[0], out[1]
-    return out, None
+    The one-shot form of ``compile_op``."""
+    return compile_op(cmd, args)(arr, meta if meta is not None else {})

@@ -462,15 +462,16 @@ def test_zip_index_is_reread_only_when_the_archive_changes(tmp_path, monkeypatch
 def test_run_op_is_called_only_from_the_shared_engine():
     """Every per-row op surface (run_all, run_with_table, the sweep, the
     SQL UDFs) runs its rows through operators/images.py's engine, so
-    registry.run_op may be named only there and inside the measured
-    batch special case image_queries.q_img_sweep_multiply. Any other
-    reference — a call, an import, an alias — would fork the op loop."""
+    registry.run_op and registry.compile_op may be named only there;
+    run_op also inside the measured batch special case
+    image_queries.q_img_sweep_multiply. Any other reference — a call,
+    an import, an alias — would fork the op loop."""
     import ast
 
     pkg = os.path.join(REPO, "spark_ij_spark")
     engine = os.path.join("spark_ij_spark", "operators", "images.py")
     allowed = {(os.path.join("spark_ij_spark", "operators", "image_queries.py"),
-                "q_img_sweep_multiply")}
+                "q_img_sweep_multiply", "run_op")}
     offenders = []
     for root, _dirs, files in os.walk(pkg):
         for f in files:
@@ -484,14 +485,16 @@ def test_run_op_is_called_only_from_the_shared_engine():
                 owner = getattr(top, "name", None)
                 for node in ast.walk(top):
                     named = (
-                        (isinstance(node, ast.Name) and node.id == "run_op")
-                        or (isinstance(node, ast.Attribute) and node.attr == "run_op")
-                        or (isinstance(node, ast.alias) and node.name == "run_op")
+                        (isinstance(node, ast.Name) and node.id)
+                        or (isinstance(node, ast.Attribute) and node.attr)
+                        or (isinstance(node, ast.alias) and node.name)
                     )
-                    if named and (rel, owner) not in allowed:
+                    if named in ("run_op", "compile_op") and (
+                        rel, owner, named
+                    ) not in allowed:
                         offenders.append(f"{rel}:{getattr(node, 'lineno', top.lineno)}")
     assert offenders == [], (
-        "registry.run_op used outside the shared engine "
+        "registry.run_op/compile_op used outside the shared engine "
         f"(call operators.images.run_op_rows instead): {offenders}"
     )
 

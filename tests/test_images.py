@@ -390,6 +390,119 @@ def test_unknown_op_suggests():
         run_op(np.zeros((2, 2)), "Add Nois")
 
 
+def test_run_op_rows_compiles_each_distinct_op_once_per_batch(monkeypatch):
+    """The engine resolves and parses each op of a distinct chain once
+    per batch, not once per row, and its images and lineage equal
+    running the ops one at a time."""
+    from spark_ij_spark import lineage, registry
+    from spark_ij_spark.datamodel import (
+        image_frame,
+        image_to_np,
+        log_of,
+        meta_of,
+        np_to_image,
+    )
+    from spark_ij_spark.operators.images import run_op_rows
+
+    chain_a = [("Multiply...", "value=2"), ("Add...", "value=1"), ("Square", "")]
+    chain_b = [("Gaussian Blur...", "sigma=1")]
+    imgs = [np_to_image(np.full((3, 4, 1), i, "float32")) for i in range(200)]
+    chains = [chain_a if i % 2 else chain_b for i in range(200)]
+    calls = {"get_op": [], "parse_args": []}
+    for name in calls:
+        real = getattr(registry, name)
+        monkeypatch.setattr(
+            registry, name, lambda x, real=real, name=name: calls[name].append(x) or real(x)
+        )
+    out, _ = run_op_rows(image_frame(imgs), chains)
+    assert sorted(calls["get_op"]) == sorted(c for c, _ in chain_a + chain_b)
+    assert sorted(calls["parse_args"]) == sorted(a for _, a in chain_a + chain_b)
+
+    for img, chain, got in zip(imgs, chains, out):
+        arr, meta, log = image_to_np(img), meta_of(img), log_of(img)
+        for cmd, args in chain:
+            arr, _ = run_op(arr, cmd, args, meta)
+            log.append(lineage.log_entry(lineage.OP_RUN, cmd, [args]))
+        assert got == np_to_image(arr, meta=meta, log=log)
+
+
+def test_unknown_op_on_null_rows_raises_nothing():
+    """Ops compile on the first non-NULL row: a batch of NULL images
+    with an unknown command passes through, and one good row raises."""
+    from spark_ij_spark.datamodel import NULL_IMAGE, image_frame, np_to_image
+    from spark_ij_spark.operators.images import run_op_rows
+
+    out, tables = run_op_rows(image_frame([NULL_IMAGE] * 3), [[("Add Nois", "")]] * 3)
+    assert out == [NULL_IMAGE] * 3 and tables == [None] * 3
+    good = image_frame([NULL_IMAGE, np_to_image(np.zeros((2, 2, 1)))])
+    with pytest.raises(KeyError, match="did you mean"):
+        run_op_rows(good, [[("Add Nois", "")]] * 2)
+
+
+def test_kernels_leave_the_shared_parsed_args_unchanged(monkeypatch):
+    """A compiled op hands every call the one parsed-args dict, so no
+    kernel may write to it: run every command with a broad arg string
+    on a gray and an RGB stack and compare the dict after each."""
+    from spark_ij_spark import registry
+
+    argstr = (
+        "value=2 radius=1 sigma=1 x=1 y=1 z=1 width=2 height=2 first=1 last=2 "
+        "number=1 angle=10 prominence=1 saturated=0 mask=0.5 threshold=1 "
+        "filter_large=4 filter_small=1 lower=1 upper=9 white clear"
+    )
+    parsed = []
+    real = registry.parse_args
+    monkeypatch.setattr(registry, "parse_args", lambda a: parsed.append(real(a)) or parsed[-1])
+    inputs = (
+        np.arange(48, dtype=np.float32).reshape(4, 4, 3),
+        np.arange(48, dtype=np.uint8).reshape(4, 4, 1, 3),
+    )
+    ran = 0
+    for cmd in list_commands():
+        op = registry.compile_op(cmd, argstr)
+        for arr in inputs:
+            try:
+                op(arr, {})
+                ran += 1
+            except (ValueError, TypeError, IndexError, KeyError):
+                pass  # an op may reject a shape; only its args matter here
+        assert parsed[-1] == real(argstr), cmd
+    assert ran >= len(list_commands())
+
+
+@pytest.mark.parametrize(
+    "first",
+    [
+        "registry",
+        "kernels.core",
+        "kernels.filters",
+        "kernels.geometry",
+        "kernels.menu",
+        "kernels.particles",
+        "operators.images",
+        "functions.sql",
+    ],
+)
+def test_menu_loads_whatever_module_a_process_imports_first(first):
+    """The kernel menu loads once per process on first lookup; a fresh
+    process that imports any engine module first sees every command."""
+    import subprocess
+    import sys
+
+    from .conftest import REPO
+
+    code = (
+        f"import spark_ij_spark.{first}\n"
+        "from spark_ij_spark.registry import list_commands\n"
+        "print('\\n'.join(list_commands()))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=REPO, capture_output=True, text=True, timeout=120
+    )
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.split("\n")[:-1] == list_commands()
+
+
 def test_python_workers_skip_zip_index_rereads(spark):
     """Every pandas-UDF task starts with importlib.invalidate_caches();
     on CPython < 3.12 that re-parsed pyspark.zip and the Spark jar in

@@ -64,11 +64,52 @@ def test_frame_sample_stride(spark):
     assert r.m.meta.n_frames == 4  # frames 0,3,6,9 of 10
 
 
+def test_null_image_and_media_give_null_structs_in_one_batch(spark):
+    """One partition, so one Arrow batch, holds a NULL row and a good
+    row: every media UDF gives the NULL row a NULL struct and the good
+    row what it gives without the NULL row."""
+    from spark_ij_spark.datamodel import IMAGE_SCHEMA
+
+    imgs = create_empty_images(
+        spark, "v", 2, width=6, height=1, value_fn=lambda i: i + 1.0, partitions=1
+    )
+    is_null = F.col("sample") == "v0"
+
+    def run(null_row: bool):
+        def nulled(col, schema):
+            return F.when(is_null, F.lit(None).cast(schema)).otherwise(col) if null_row else col
+
+        df = imgs.withColumn("image", nulled(F.col("image"), IMAGE_SCHEMA)).select(
+            "sample",
+            mm.media_from_image("image").alias("m"),
+            nulled(mm.media_from_samples(F.array(*map(F.lit, (3, -5, 7)))), mm.MEDIA_SCHEMA)
+            .alias("wav"),
+            nulled(mm.video_from_frames(F.array(*map(F.lit, range(8)))), mm.MEDIA_SCHEMA)
+            .alias("avi"),
+        )
+        out = df.select(
+            "sample",
+            "m",
+            mm.frame_sample("m", 2).alias("fs"),
+            mm.resize_media("m", 2, 1).alias("rs"),
+            mm.media_features("m").alias("f"),
+            mm.audio_features("wav").alias("au"),
+            mm.scene_cut_features("avi").alias("sc"),
+        )
+        assert out.rdd.getNumPartitions() == 1
+        return {r.sample: r for r in out.collect()}
+
+    with_null, good = run(True), run(False)
+    for col in ("m", "fs", "rs", "f", "au", "sc"):
+        assert all(v is None for v in with_null["v0"][col].asDict().values()), col
+        assert good["v0"][col].asDict() != with_null["v0"][col].asDict(), col
+    assert with_null["v1"] == good["v1"]
+    assert good["v1"].f.n_px == 6 and good["v1"].au.n_samples == 3
+
+
 def test_no_stubbed_mimes_remain_and_unknown_mime_raises():
-    """STUBBED_MIMES emptied in round 10 (MP4 went native): every
-    documented mime has a real decoder, a malformed payload fails with
-    a clear ValueError from its parser, and unknown mimes still raise."""
-    assert mm.STUBBED_MIMES == ()
+    """A malformed payload of a documented mime fails with a clear
+    ValueError from its parser, and unknown mimes still raise."""
     with pytest.raises(ValueError, match="MP4"):
         mm.decode_media_bytes(b"xx", "video/mp4")
     with pytest.raises(ValueError):
@@ -76,7 +117,7 @@ def test_no_stubbed_mimes_remain_and_unknown_mime_raises():
 
 
 def test_mp4_mime_decodes_natively():
-    """video/mp4 left STUBBED_MIMES in round 10: an MJPEG-in-MP4
+    """video/mp4 went native in round 10: an MJPEG-in-MP4
     payload decodes through the pure-stdlib BMFF container parse and
     frames land on the frame axis like AVI."""
     import numpy as np
@@ -92,7 +133,7 @@ def test_mp4_mime_decodes_natively():
 
 
 def test_jpeg_mime_decodes_natively():
-    """image/jpeg left STUBBED_MIMES in round 9: a baseline-JFIF
+    """image/jpeg went native in round 9: a baseline-JFIF
     payload decodes through the pure-stdlib codec like any other
     native mime."""
     import numpy as np

@@ -99,17 +99,17 @@ def test_img_sweep_multiply_single_arrow_hop(spark):
 
     plan = _plan(image_queries.q_img_sweep_multiply(spark, SF_DIR))
     # ONE fused op+mean UDF; the only other Python hop is the image
-    # PRODUCER (mk_image). Never a separate node for the swept op
+    # PRODUCER (pack_pixels). Never a separate node for the swept op
     # (run_op_with_args_col's `_udf`) or a standalone mean UDF.
     assert plan.count("op_mean") == 1
     assert "_udf" not in plan and "img_mean" not in plan
     # the constant parameter list fans out in-stage: no broadcast of a
-    # parallelized list, and no exchange between the cached images and
-    # the output (the image producer's own group-by sits below the cache)
+    # parallelized list, and no exchange between the image producer and
+    # the output (the producer's own group-by sits below it)
     assert "Generate inline" in plan
     for node in ("BroadcastExchange", "BroadcastNestedLoopJoin", "Scan ExistingRDD"):
         assert node not in plan, node
-    fan_out = plan.split("InMemoryRelation", 1)[0]
+    fan_out = plan.split("pack_pixels", 1)[0]
     assert "Generate inline" in fan_out and "Exchange" not in fan_out
 
 

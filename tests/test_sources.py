@@ -192,7 +192,9 @@ def test_load_images_malformed_modes(spark, tmp_path):
             "nslices(image) AS n, toarray(image) AS a, scale(image, 2.0) AS sc, "
             "hist_compare(image, image) AS hc, showmetadata(image) AS md, "
             "roistats(image) AS rs, "
-            "setroi(image, 'RECTANGLE', array(0, 1), array(0, 1)) AS roi "
+            "setroi(image, 'RECTANGLE', array(0, 1), array(0, 1)) AS roi, "
+            "showcalibration(image) AS cal, makeimage(toarray(image)) AS mk, "
+            "getroi(setroi(image, 'RECTANGLE', array(0, 1), array(0, 1)), false) AS gr "
             "FROM _perm_imgs"
         )
         pixels = explode_pixels(df.select(F.col("path").alias("sample"), "image"))
@@ -209,9 +211,10 @@ def test_load_images_malformed_modes(spark, tmp_path):
     assert b.proc.data is None and b.proc.log is None
     assert b.sc.data is None and b.sc.log is None
     assert b.roi.data is None and b.roi.log is None
-    assert (b.m, b.n, b.a, b.hc, b.md, b.rs) == (None,) * 6
+    assert b.mk.data is None and b.mk.log is None
+    assert (b.m, b.n, b.a, b.hc, b.md, b.rs, b.cal, b.gr) == (None,) * 8
     for p, r in good_ops.items():
-        assert perm_ops[p] == r and r.h.bin_counts and r.n == 1
+        assert perm_ops[p] == r and r.h.bin_counts and r.n == 1 and r.cal and r.gr
     assert perm_pixels == good_pixels and len(good_pixels) == 2 * 3 * 2
 
     # The group reductions skip a NULL image the way SQL aggregates skip
