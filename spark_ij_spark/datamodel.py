@@ -380,8 +380,11 @@ def rgb_to_gray(arr: np.ndarray, method: str = "MEAN") -> np.ndarray:
 
 def stats_of_values(a: np.ndarray) -> dict[str, float]:
     """min/mean/stdDev/max/pts of a float64 value array — ImageJ's
-    ImageStatistics convention (SAMPLE stddev, n−1 denominator), shared
-    by ``operators.images.stats_rows`` and ``roi_measure``."""
+    ImageStatistics convention (SAMPLE stddev, n−1 denominator) for one
+    image or ROI (``roi_measure``, SQL ``roistats`` without a ROI).
+    ``operators.images.stats_rows``, the batch form every other stats
+    surface calls, takes its 0- and 1-pixel rules from here and equals
+    it bit for bit on every image."""
     if a.size == 0:
         return {"min": 0.0, "mean": 0.0, "stdDev": 0.0, "max": 0.0, "pts": 0.0}
     return {

@@ -104,18 +104,21 @@ def register_imagej(spark: SparkSession) -> None:
 
     @F.pandas_udf(MapType(StringType(), DoubleType()))
     def stats(img: pd.DataFrame) -> pd.Series:  # :86-87
-        return pd.Series(stats_rows(img))
+        return pd.Series(stats_rows(img["data"], img["dtype"]))
 
     @F.pandas_udf(StringType())
     def strstats(img: pd.DataFrame) -> pd.Series:  # :204
         return pd.Series(
-            [None if s is None else json.dumps(s, sort_keys=True) for s in stats_rows(img)]
+            [
+                None if s is None else json.dumps(s, sort_keys=True)
+                for s in stats_rows(img["data"], img["dtype"])
+            ]
         )
 
     @F.pandas_udf(DoubleType())
     def mean(img: pd.DataFrame) -> pd.Series:  # :96
         return pd.Series(
-            map_images(lambda r: float(image_to_np(r).astype("float64").mean()), img),
+            [None if s is None else s["mean"] for s in stats_rows(img["data"], img["dtype"])],
             dtype="float64",
         )
 
@@ -155,13 +158,13 @@ def register_imagej(spark: SparkSession) -> None:
 
     @F.pandas_udf(HIST_SCHEMA)
     def hist(img: pd.DataFrame) -> pd.DataFrame:  # :133 (auto-ranged)
-        return hist_rows(img, repeat(None), repeat(256))
+        return hist_rows(img["data"], img["dtype"], repeat(None), repeat(256))
 
     @F.pandas_udf(HIST_SCHEMA)
     def hist3(
         img: pd.DataFrame, mn: pd.Series, mx: pd.Series, bins: pd.Series
     ) -> pd.DataFrame:  # :152-157
-        return hist_rows(img, zip(mn, mx), bins)
+        return hist_rows(img["data"], img["dtype"], zip(mn, mx), bins)
 
     @F.pandas_udf(DoubleType())
     def hist_compare(a: pd.DataFrame, b: pd.DataFrame) -> pd.Series:  # :166-167

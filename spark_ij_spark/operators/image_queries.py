@@ -16,9 +16,9 @@ linenumber) and express the kernel's semantics in ANSI SQL:
 This gives every image kernel a hash-checked oracle instead of the
 weaker rows-only check.
 
-Scale: one shuffle per query (groupBy l_orderkey → applyInPandas); each
-group is tiny (≤7 lineitems), so skew is impossible and the pattern
-holds at any SF.
+Scale: one shuffle per query (groupBy l_orderkey → collect_list, then
+pandas UDFs over Arrow batches of whole images); each group is tiny
+(≤7 lineitems), so skew is impossible and the pattern holds at any SF.
 """
 
 from __future__ import annotations
@@ -117,53 +117,18 @@ def order_quantity_images(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_img_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image-statistics kernel vs SQL aggregates per order."""
+    """Image-statistics kernel (``images.image_stats``) vs SQL
+    aggregates per order. The quantities are integral, so the image
+    mean's sum is exact in any summation order."""
+    from spark_ij_spark.operators.images import image_stats
+
     imgs = order_quantity_images(spark, sf_dir)
-
-    # the key column rides OUTSIDE the UDF (top-level select below) —
-    # an l_orderkey field here would ship a placeholder 0 in every
-    # Arrow batch and trap a future caller reading s.l_orderkey
-    out_schema = StructType(
-        [
-            StructField("min_qty", DoubleType()),
-            StructField("mean_qty", DoubleType()),
-            StructField("max_qty", DoubleType()),
-            StructField("n_pixels", LongType()),
-        ]
-    )
-
-    # Vectorized per Arrow batch over the FLAT pixel payload (the
-    # nested-struct hop plus a per-image Python loop dominated this
-    # query): one concatenate + segmented reduceat per batch. Exact
-    # equivalence with the per-image kernel form: min/max are
-    # identical reductions, and the segment sums are sums of integral
-    # float32 quantities (< 2^53), so the summation-order difference
-    # (reduceat is strictly sequential, ndarray.sum pairwise) cannot
-    # change a bit; mean divides the same operands.
-    @F.pandas_udf(out_schema)
-    def stats_struct(data: pd.Series, dtype: pd.Series) -> pd.DataFrame:
-        if not len(data):
-            return pd.DataFrame(columns=[f.name for f in out_schema.fields])
-        allpix, lens, bounds = _segments(data, dtype)
-        allpix = allpix.astype("float64")
-        return pd.DataFrame(
-            {
-                "min_qty": np.minimum.reduceat(allpix, bounds),
-                "mean_qty": np.add.reduceat(allpix, bounds) / lens,
-                "max_qty": np.maximum.reduceat(allpix, bounds),
-                "n_pixels": lens,
-            }
-        )
-
-    return imgs.select(
+    return imgs.select("l_orderkey", image_stats("image").alias("s")).select(
         "l_orderkey",
-        stats_struct(F.col("image.data"), F.col("image.dtype")).alias("s"),
-    ).select(
-        "l_orderkey",
-        F.col("s.min_qty").alias("min_qty"),
-        F.col("s.mean_qty").alias("mean_qty"),
-        F.col("s.max_qty").alias("max_qty"),
-        F.col("s.n_pixels").alias("n_pixels"),
+        F.col("s.min").alias("min_qty"),
+        F.col("s.mean").alias("mean_qty"),
+        F.col("s.max").alias("max_qty"),
+        F.col("s.pts").cast("bigint").alias("n_pixels"),
     )
 
 
@@ -487,29 +452,17 @@ def q_img_lineage_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     The audit itself is pure Catalyst: the log is a real
     ``array<struct>`` column, so entry count, op names, and op args
     are JVM-side expressions over ``image.log`` — lineage at 100 TB is
-    queryable without decoding a single pixel. ``chain_mean`` (one
-    small pandas UDF) proves the ops actually ran: mean((2q+5)²) per
-    order, integer-exact in float32 (values ≤ 11025 < 2²⁴) so the SQL
-    oracle matches bit-for-bit."""
-    from spark_ij_spark.operators.images import run_all
+    queryable without decoding a single pixel. ``chain_mean`` (the
+    engine's ``image_stats``) proves the ops actually ran: mean((2q+5)²)
+    per order, integer-exact in float32 (values ≤ 11025 < 2²⁴) so the
+    SQL oracle matches bit-for-bit."""
+    from spark_ij_spark.operators.images import image_stats, run_all
 
     imgs = order_quantity_images(spark, sf_dir)
     chained = run_all(
         imgs,
         [("Multiply...", "value=2"), ("Add...", "value=5"), ("Square", "")],
     )
-
-    # Flat-payload vectorized mean (same exactness argument as
-    # q_img_order_stats: (2q+5)^2 <= 11025 is integral in float32, so
-    # the segmented sum is order-exact); the log audit columns stay
-    # pure Catalyst and only the pixel bytes cross to Python.
-    @F.pandas_udf(DoubleType())
-    def img_mean(data: pd.Series, dtype: pd.Series) -> pd.Series:
-        if not len(data):
-            return pd.Series([], dtype="float64")
-        allpix, lens, bounds = _segments(data, dtype)
-        return pd.Series(np.add.reduceat(allpix.astype("float64"), bounds) / lens)
-
     return chained.select(
         "l_orderkey",
         F.expr("CAST(size(image.log) AS INT)").alias("n_ops"),
@@ -519,7 +472,7 @@ def q_img_lineage_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             "concat_ws(';', transform(image.log, e -> e.optype))"
         ).alias("op_types"),
-        img_mean(F.col("image.data"), F.col("image.dtype")).alias("chain_mean"),
+        image_stats("image")["mean"].alias("chain_mean"),
     )
 
 

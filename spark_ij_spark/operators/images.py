@@ -144,31 +144,56 @@ def run_op_rows(
     return [p[0] for p in pairs], [p[1] for p in pairs]
 
 
-def stats_rows(img_frame: pd.DataFrame) -> list[dict[str, float] | None]:
-    """min/mean/stdDev/max/pts per image (reference: getImageStatistics,
-    PortableImagePlus.scala:143-146, which delegates to ImageJ's
-    ImageStatistics — SAMPLE stddev, n−1 denominator); None for a NULL
-    image."""
-    return map_images(
-        lambda r: stats_of_values(image_to_np(r).astype("float64")), img_frame
-    )
+def stats_rows(data: Iterable, dtype: Iterable) -> list[dict[str, float] | None]:
+    """min/mean/stdDev/max/pts per image from its pixel bytes and dtype
+    (reference: getImageStatistics, PortableImagePlus.scala:143-146,
+    which delegates to ImageJ's ImageStatistics — SAMPLE stddev, n−1
+    denominator); None for a NULL image.
+
+    Rows are grouped by (dtype, byte length) and each group is reduced
+    as one 2-D float64 array along axis 1: each row stays one contiguous
+    reduction, bit-identical to ``stats_of_values`` on the image alone
+    (``np.add.reduceat``'s sequential sums are not)."""
+    data, dtype = list(data), [str(t) for t in dtype]
+    groups: dict[tuple[str, int], list[int]] = {}
+    for i, (d, t) in enumerate(zip(data, dtype)):
+        if d is not None:
+            groups.setdefault((t, len(d)), []).append(i)
+    out: list[dict[str, float] | None] = [None] * len(data)
+    for (t, nbytes), rows in groups.items():
+        n = nbytes // np.dtype(t).itemsize
+        a = np.frombuffer(b"".join([data[i] for i in rows]), dtype=t)
+        a = a.reshape(len(rows), n).astype("float64")
+        if n == 0:  # stats_of_values' 0-pixel rule
+            for i in rows:
+                out[i] = stats_of_values(a[0])
+            continue
+        # and its 1-pixel rule: stdDev 0
+        std = a.std(axis=1, ddof=1) if n > 1 else np.zeros(len(rows))
+        cols = (a.min(axis=1), a.mean(axis=1), std, a.max(axis=1))
+        for i, mn, mean, sd, mx in zip(rows, *(c.tolist() for c in cols)):
+            out[i] = {"min": mn, "mean": mean, "stdDev": sd, "max": mx, "pts": float(n)}
+    return out
 
 
 def hist_rows(
-    img_frame: pd.DataFrame,
+    data: Iterable,
+    dtype: Iterable,
     ranges: Iterable[tuple[float, float] | None],
     bins: Iterable[int],
 ) -> pd.DataFrame:
-    """HIST_SCHEMA frame: row i's histogram over ``ranges[i]`` (None:
-    auto-ranged) with ``bins[i]`` bins; NULL for a NULL image."""
-
-    def hist(r, value_range, n):
-        centers, counts = histogram(image_to_np(r), value_range, int(n))
-        return {"bin_centers": centers.tolist(), "bin_counts": [int(c) for c in counts]}
-
+    """HIST_SCHEMA frame: row i's histogram of its pixel bytes over
+    ``ranges[i]`` (None: auto-ranged) with ``bins[i]`` bins; NULL for a
+    NULL image. ``histogram`` ravels, so the shape is never needed."""
     fields = HIST_SCHEMA.fieldNames()
-    rows = map_images(hist, img_frame, args=(ranges, bins), null=dict.fromkeys(fields))
-    return pd.DataFrame(rows, columns=fields)
+
+    def hist(d, t, value_range, n):
+        if d is None:
+            return dict.fromkeys(fields)
+        centers, counts = histogram(np.frombuffer(d, dtype=str(t)), value_range, int(n))
+        return {"bin_centers": centers.tolist(), "bin_counts": counts.tolist()}
+
+    return pd.DataFrame(map(hist, data, dtype, ranges, bins), columns=fields)
 
 
 # binary (two-image) ops (reference: PortableImagePlus.scala:217-270).
@@ -259,16 +284,25 @@ def run_with_table(
 # ---------------------------------------------------------------------------
 
 
+def _pixel_fields(image_col: str | Column) -> tuple[Column, Column]:
+    """The image's ``data`` and ``dtype`` fields, all a reduction reads,
+    as two UDF arguments (never re-wrapped in a struct): a field read
+    off an op UDF's output keeps Spark from chaining the op into the
+    reduction's Python node, where it would run once per consumer."""
+    col = F.col(image_col) if isinstance(image_col, str) else image_col
+    return col["data"], col["dtype"]
+
+
 def image_stats(image_col: str | Column) -> Column:
     """min/mean/stdDev/max/pts struct column (see stats_rows)."""
 
     @F.pandas_udf(STATS_SCHEMA)
-    def _udf(img: pd.DataFrame) -> pd.DataFrame:
+    def _udf(data: pd.Series, dtype: pd.Series) -> pd.DataFrame:
         return pd.DataFrame(
-            [s or {} for s in stats_rows(img)], columns=STATS_SCHEMA.fieldNames()
+            [s or {} for s in stats_rows(data, dtype)], columns=STATS_SCHEMA.fieldNames()
         )
 
-    return _udf(image_col)
+    return _udf(*_pixel_fields(image_col))
 
 
 def get_statistics(df: DataFrame, image_col: str = "image") -> DataFrame:
@@ -280,13 +314,13 @@ def image_histogram(
     value_range: tuple[float, float] | None = None,
     bins: int = 256,
 ) -> Column:
-    """Histogram struct column (hist/hist3 SQL surface)."""
+    """Histogram struct column (hist/hist3 SQL surface; see hist_rows)."""
 
     @F.pandas_udf(HIST_SCHEMA)
-    def _udf(img: pd.DataFrame) -> pd.DataFrame:
-        return hist_rows(img, repeat(value_range), repeat(bins))
+    def _udf(data: pd.Series, dtype: pd.Series) -> pd.DataFrame:
+        return hist_rows(data, dtype, repeat(value_range), repeat(bins))
 
-    return _udf(image_col)
+    return _udf(*_pixel_fields(image_col))
 
 
 def combine_images(a_col: str | Column, b_col: str | Column, how: str) -> Column:

@@ -404,14 +404,13 @@ def q_media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampled = media.select(
         "l_orderkey", frame_sample("media", 2).alias("media")
     )
-    return sampled.select(
+    # n_sampled is the features' pixel count (one pixel per frame of
+    # these [1][1][n] media): reading media.meta.n_frames as well would
+    # give the Python node two outputs that each evaluate pack → sample
+    return sampled.select("l_orderkey", media_features("media").alias("f")).select(
         "l_orderkey",
-        F.col("media.meta.n_frames").alias("n_sampled"),
-        media_features("media").alias("f"),
-    ).select(
-        "l_orderkey",
-        "n_sampled",
-        F.expr("round(f.mean * n_sampled, 2)").alias("sum_sampled"),
+        F.col("f.n_px").alias("n_sampled"),
+        F.expr("round(f.mean * f.n_px, 2)").alias("sum_sampled"),
     )
 
 

@@ -37,11 +37,12 @@ def test_vectorized_particles_equal_kernel(spark, sf_dir):
 
 
 def test_vectorized_batch_means_equal_per_image_kernel(spark, sf_dir):
-    """The r12 batch-vectorized flat-payload UDFs (order stats,
-    scale/subtract residual, sweep op+mean) must agree image-for-image
-    with the per-image kernel path they replaced: concatenate +
-    segmented reduceat is only a physical rewrite (sums of integral
-    float32 quantities are order-exact), never a semantic one."""
+    """The batch-wise stats (the engine's grouped ``image_stats`` in
+    order stats; concatenate + segmented reduceat in the scale/subtract
+    residual and the sweep op+mean) must agree image-for-image with
+    the per-image kernel path: batching is only a physical rewrite
+    (sums of integral float32 quantities are order-exact), never a
+    semantic one."""
     from spark_ij_spark.datamodel import image_to_np
     from spark_ij_spark.registry import run_op
 

@@ -119,6 +119,28 @@ def test_stats_match_exploded_pixels(spark, images5):
         assert u["pts"] == rdata["pts"]
 
 
+def test_stats_rows_equal_stats_of_values_per_image():
+    """The batch reduction groups rows by (dtype, byte length) and
+    reduces each group as one 2-D array; every row must equal the
+    one-image reduction bit for bit, with the 0-pixel rule kept and a
+    NULL image giving None."""
+    from spark_ij_spark.datamodel import NULL_IMAGE, image_to_np, np_to_image, stats_of_values
+    from spark_ij_spark.operators.images import stats_rows
+
+    rng = np.random.default_rng(3)
+    imgs = []
+    for dtype in ("float32", "uint16"):
+        for shape, rgb in (((1, 1), False), ((1, 7), False), ((64, 64), False), ((33, 21, 3), True)):
+            for _ in range(2):  # two rows per group
+                values = rng.standard_normal(shape) * 1e3 if dtype == "float32" else rng.random(shape) * 6e4
+                imgs.append(np_to_image(values.astype(dtype), rgb=rgb))
+    imgs += [np_to_image(np.zeros((0, 4), "float32")), NULL_IMAGE]
+    got = stats_rows([i["data"] for i in imgs], [i["dtype"] for i in imgs])
+    assert got[-1] is None and got[-2]["pts"] == 0.0
+    for img, s in zip(imgs[:-1], got):
+        assert s == stats_of_values(image_to_np(img).astype("float64")), img["shape"]
+
+
 def test_histogram_constant_image_analytic(spark):
     """Constant-5 image, bins=3 on [0,10]: middle bin holds all pixels
     (SpijiTests.scala:176-186)."""

@@ -92,6 +92,33 @@ def test_fused_op_chain_single_arrow_hop(spark):
     assert _plan(unfused).count("_udf") == 3  # the shape fusion removes
 
 
+def test_ops_stage_runs_the_op_chain_once(spark):
+    """``image_files``' ops stage (a fused chain read by image_stats and
+    image_histogram) lists the chain's UDF call once: the reductions
+    take ``image.data``/``image.dtype``, so Spark does not chain the op
+    UDF into each of them, where the worker would run it once per
+    output. tools/plan_sweep's repeated-call guard passes it."""
+    from plan_sweep import forbidden, signature
+
+    from spark_ij_spark.operators.images import (
+        create_empty_images,
+        image_histogram,
+        image_stats,
+        run_all,
+    )
+
+    df = create_empty_images(spark, "p", imgs=4, width=8, height=8)
+    chain = [("Add Noise", ""), ("Multiply...", "value=2")]
+    stage = (
+        run_all(df, chain)
+        .withColumn("stats", image_stats("image"))
+        .withColumn("hist", image_histogram("image"))
+    )
+    plan = _plan(stage)
+    assert not forbidden(signature(plan))
+    assert plan.count("_udf(image#") == 1
+
+
 def test_img_sweep_multiply_single_arrow_hop(spark):
     """Sweep fan-out + op + mean must fuse into one Python hop: the
     fan-out is one in-stage JVM generate and op+mean share one UDF."""

@@ -252,13 +252,15 @@ def test_plan_signatures_match_committed(spark):
     counts (tools/plan_sweep.py), equals its committed PLANS.json line,
     and none holds a CartesianProduct (under the runtime-size-only
     broadcast policy, a non-equi join whose bounded side loses its
-    F.broadcast() hint degrades to one) or a BatchEvalPython (a
-    row-at-a-time Python UDF). The second check is a hard rule that no
-    regenerated PLANS.json can accept. Plans are built, never executed
-    (driver-side calibration actions inside query composition still
-    run — sub-second at SF_DIR). A plan that moved on purpose is
-    committed with `python tools/plan_sweep.py > PLANS.json` and its
-    diff reviewed like code."""
+    F.broadcast() hint degrades to one), a BatchEvalPython (a
+    row-at-a-time Python UDF) or a RepeatedPythonCall (a Python node
+    that evaluates one UDF call for two of its outputs). The second
+    check is a hard rule that no regenerated PLANS.json can accept.
+    Plans are built, never executed (driver-side calibration actions
+    inside query composition still run — sub-second at SF_DIR). A plan
+    that moved on purpose is committed with
+    `python tools/plan_sweep.py > PLANS.json` and its diff reviewed
+    like code."""
     import os
     import sys
 

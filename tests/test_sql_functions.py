@@ -41,6 +41,28 @@ def test_mean_and_scale(spark, images_view):
         assert r["m2"] == pytest.approx(2.0 * r["m"])
 
 
+def test_mean_is_the_stats_mean(spark, images_view):
+    """SQL ``mean`` returns the engine's stats mean: equal to
+    ``stats(image)['mean']`` on random float images, NULL for a NULL
+    image."""
+    import numpy as np
+
+    from spark_ij_spark.datamodel import NULL_IMAGE, np_to_image
+    from spark_ij_spark.sources.images import NAMED_IMAGE_SCHEMA
+
+    rng = np.random.default_rng(5)
+    imgs = [np_to_image((rng.standard_normal((9, 13)) * 1e3).astype("float32")) for _ in range(4)]
+    spark.createDataFrame(
+        [(f"m{i}", img) for i, img in enumerate([*imgs, NULL_IMAGE])], NAMED_IMAGE_SCHEMA
+    ).createOrReplaceTempView("_mean_imgs")
+    rows = spark.sql(
+        "SELECT path, mean(image) AS m, stats(image)['mean'] AS s FROM _mean_imgs"
+    ).collect()
+    got = {r["path"]: (r["m"], r["s"]) for r in rows}
+    assert got.pop("m4") == (None, None)
+    assert len(got) == 4 and all(m == s and m is not None for m, s in got.values())
+
+
 def test_subtract_self_zero(spark, images_view):
     rows = spark.sql("SELECT mean(subtract(image, image)) AS z FROM Images").collect()
     assert all(r["z"] == 0.0 for r in rows)

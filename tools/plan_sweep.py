@@ -16,12 +16,19 @@ partition count or the scale factor. ``PLANS.json`` commits one line per
 query, so a plan change shows up as a one-line diff that is reviewed
 like code.
 
-Two operators are never accepted, whatever PLANS.json says:
+Three things are never accepted, whatever PLANS.json says:
 
 - ``CartesianProduct``: a non-equi join whose bounded side lost its
   ``F.broadcast()`` hint degrades to one under the broadcast policy.
 - ``BatchEvalPython``: a row-at-a-time Python UDF. Python runs only as
   Arrow-batched pandas UDFs / mapInPandas.
+- ``RepeatedPythonCall``: a Python node (``…EvalPython [exprs]``)
+  where one UDF call, with its ``#id``, occurs in two of the listed
+  expressions (``f(x)#1`` listed on its own and inside ``g(f(x)#1)#2``).
+  Spark chains a UDF into every consumer that reads it directly, and
+  the worker evaluates each listed chain on its own, so that call runs
+  once per expression that holds it. The signature counts such nodes
+  under this key.
 
 Plan build still runs the driver-side calibration actions some queries
 perform while composing their frames; at sf0.001 those are sub-second.
@@ -49,7 +56,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 PLANS_PATH = os.path.join(REPO, "PLANS.json")
-FORBIDDEN = ("CartesianProduct", "BatchEvalPython")
+REPEATED_CALL = "RepeatedPythonCall"
+FORBIDDEN = ("CartesianProduct", "BatchEvalPython", REPEATED_CALL)
 
 # tree-string child prefix: one "   " or ":  " per ancestor, then "+- "
 # or ":- "; a line without one continues a literal of the line above
@@ -57,6 +65,8 @@ _CHILD = re.compile(r"^(?:   |:  )*[+:]- ")
 _CODEGEN = re.compile(r"^\*\(\d+\) ")
 _WORD = re.compile(r"[A-Za-z]\w*")
 _GROUP = re.compile(r"\[[^\[\]]*\]|\([^()]*\)")
+_EVAL_PYTHON = re.compile(r"\w*EvalPython \[")
+_CALL_ID = re.compile(r"\)#(\d+)")
 _BUILD_SIDES = {"BuildLeft", "BuildRight"}
 _JOIN_TYPES = {
     "Inner", "Cross", "LeftOuter", "RightOuter", "FullOuter",
@@ -97,16 +107,54 @@ def _key(node: str) -> str:
     return name
 
 
+def _python_exprs(node: str) -> list[str]:
+    """The expressions of a Python node's first bracketed list, split
+    at its top-level commas."""
+    start = node.index("[") + 1
+    out, depth = [], 0
+    for i in range(start, len(node)):
+        c = node[i]
+        if c in "([":
+            depth += 1
+        elif c in ")]" and depth:
+            depth -= 1
+        elif c in ",]" and not depth:
+            out.append(node[start:i])
+            start = i + 1
+            if c == "]":
+                break
+    return out
+
+
+def repeats_call(node: str) -> bool:
+    """True for a ``…EvalPython [exprs]`` node where one call result
+    (``name(...)#id``) occurs in two of the listed expressions — e.g.
+    ``f(x)#1`` listed on its own and inside ``g(f(x)#1)#2``."""
+    if not _EVAL_PYTHON.match(node):
+        return False
+    seen: set[str] = set()
+    for expr in _python_exprs(node):
+        ids = set(_CALL_ID.findall(expr))
+        if ids & seen:
+            return True
+        seen |= ids
+    return False
+
+
 def signature(plan: str) -> dict[str, int]:
     """{operator key: count} over every node of a plan's tree string,
-    including subqueries and cached plans printed inside it."""
+    including subqueries and cached plans printed inside it, plus
+    ``REPEATED_CALL``: the Python nodes that evaluate a call twice."""
     sig: dict[str, int] = {}
     for i, line in enumerate(plan.splitlines()):
         m = _CHILD.match(line)
         if i and m is None:
             continue
-        k = _key(_CODEGEN.sub("", line[m.end():] if m else line))
+        node = _CODEGEN.sub("", line[m.end():] if m else line)
+        k = _key(node)
         sig[k] = sig.get(k, 0) + 1
+        if repeats_call(node):
+            sig[REPEATED_CALL] = sig.get(REPEATED_CALL, 0) + 1
     return dict(sorted(sig.items()))
 
 
