@@ -378,22 +378,30 @@ def rgb_to_gray(arr: np.ndarray, method: str = "MEAN") -> np.ndarray:
     return red(arr.astype("float64"))
 
 
+def stats_of_rows(a: np.ndarray) -> list[dict[str, float]]:
+    """min/mean/stdDev/max/pts of each row of a 2-D float64 value array
+    — ImageJ's ImageStatistics convention (SAMPLE stddev, n−1
+    denominator), the one stats body: ``operators.images.stats_rows``
+    (the ``image_stats`` column, SQL ``stats``/``strstats``/``mean``)
+    passes same-size images as rows, ``stats_of_values`` one array as
+    one row. Each row is one contiguous reduction, so its stats do not
+    depend on the other rows (``np.add.reduceat``'s sequential sums
+    would). 0 values give all zeros, 1 value a stdDev of 0."""
+    rows, n = a.shape
+    if n == 0:
+        return [dict.fromkeys(STATS_SCHEMA.fieldNames(), 0.0) for _ in range(rows)]
+    std = a.std(axis=1, ddof=1) if n > 1 else np.zeros(rows)
+    cols = (a.min(axis=1), a.mean(axis=1), std, a.max(axis=1))
+    return [
+        {"min": mn, "mean": mean, "stdDev": sd, "max": mx, "pts": float(n)}
+        for mn, mean, sd, mx in zip(*(c.tolist() for c in cols))
+    ]
+
+
 def stats_of_values(a: np.ndarray) -> dict[str, float]:
-    """min/mean/stdDev/max/pts of a float64 value array — ImageJ's
-    ImageStatistics convention (SAMPLE stddev, n−1 denominator) for one
-    image or ROI (``roi_measure``, SQL ``roistats`` without a ROI).
-    ``operators.images.stats_rows``, the batch form every other stats
-    surface calls, takes its 0- and 1-pixel rules from here and equals
-    it bit for bit on every image."""
-    if a.size == 0:
-        return {"min": 0.0, "mean": 0.0, "stdDev": 0.0, "max": 0.0, "pts": 0.0}
-    return {
-        "min": float(a.min()),
-        "mean": float(a.mean()),
-        "stdDev": float(a.std(ddof=1)) if a.size > 1 else 0.0,
-        "max": float(a.max()),
-        "pts": float(a.size),
-    }
+    """``stats_of_rows`` of one float64 value array of any shape: one
+    ROI (``roi_measure``) or image (SQL ``roistats`` without a ROI)."""
+    return stats_of_rows(a.reshape(1, -1))[0]
 
 
 def gray_to_rgb(arr: np.ndarray) -> np.ndarray:

@@ -50,7 +50,7 @@ from spark_ij_spark.datamodel import (
     map_images,
     meta_of,
     np_to_image,
-    stats_of_values,
+    stats_of_rows,
 )
 from spark_ij_spark.kernels.histogram import histogram
 from spark_ij_spark.registry import compile_op
@@ -144,16 +144,20 @@ def run_op_rows(
     return [p[0] for p in pairs], [p[1] for p in pairs]
 
 
+STATS_STACK_BYTES = 4 << 20
+
+
 def stats_rows(data: Iterable, dtype: Iterable) -> list[dict[str, float] | None]:
     """min/mean/stdDev/max/pts per image from its pixel bytes and dtype
     (reference: getImageStatistics, PortableImagePlus.scala:143-146,
     which delegates to ImageJ's ImageStatistics — SAMPLE stddev, n−1
     denominator); None for a NULL image.
 
-    Rows are grouped by (dtype, byte length) and each group is reduced
-    as one 2-D float64 array along axis 1: each row stays one contiguous
-    reduction, bit-identical to ``stats_of_values`` on the image alone
-    (``np.add.reduceat``'s sequential sums are not)."""
+    Rows of one (dtype, byte length) are stacked into 2-D float64
+    arrays of at most ``STATS_STACK_BYTES`` (or one image, if larger)
+    and reduced by ``stats_of_rows``: a batch of 10,000 images of 1-7
+    pixels is one numpy call, not 10,000, and a worker holds one stack,
+    not the batch, whatever ``maxRecordsPerBatch`` is."""
     data, dtype = list(data), [str(t) for t in dtype]
     groups: dict[tuple[str, int], list[int]] = {}
     for i, (d, t) in enumerate(zip(data, dtype)):
@@ -162,17 +166,12 @@ def stats_rows(data: Iterable, dtype: Iterable) -> list[dict[str, float] | None]
     out: list[dict[str, float] | None] = [None] * len(data)
     for (t, nbytes), rows in groups.items():
         n = nbytes // np.dtype(t).itemsize
-        a = np.frombuffer(b"".join([data[i] for i in rows]), dtype=t)
-        a = a.reshape(len(rows), n).astype("float64")
-        if n == 0:  # stats_of_values' 0-pixel rule
-            for i in rows:
-                out[i] = stats_of_values(a[0])
-            continue
-        # and its 1-pixel rule: stdDev 0
-        std = a.std(axis=1, ddof=1) if n > 1 else np.zeros(len(rows))
-        cols = (a.min(axis=1), a.mean(axis=1), std, a.max(axis=1))
-        for i, mn, mean, sd, mx in zip(rows, *(c.tolist() for c in cols)):
-            out[i] = {"min": mn, "mean": mean, "stdDev": sd, "max": mx, "pts": float(n)}
+        step = max(1, STATS_STACK_BYTES // (8 * max(n, 1)))
+        for k in range(0, len(rows), step):
+            part = rows[k : k + step]
+            a = np.frombuffer(b"".join([data[i] for i in part]), t).reshape(len(part), n)
+            for i, s in zip(part, stats_of_rows(a.astype("float64"))):
+                out[i] = s
     return out
 
 

@@ -37,8 +37,8 @@ def test_vectorized_particles_equal_kernel(spark, sf_dir):
 
 
 def test_vectorized_batch_means_equal_per_image_kernel(spark, sf_dir):
-    """The batch-wise stats (the engine's grouped ``image_stats`` in
-    order stats; concatenate + segmented reduceat in the scale/subtract
+    """The batch-wise stats (the engine's ``image_stats`` in order
+    stats; concatenate + segmented reduceat in the scale/subtract
     residual and the sweep op+mean) must agree image-for-image with
     the per-image kernel path: batching is only a physical rewrite
     (sums of integral float32 quantities are order-exact), never a

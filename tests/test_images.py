@@ -119,26 +119,59 @@ def test_stats_match_exploded_pixels(spark, images5):
         assert u["pts"] == rdata["pts"]
 
 
-def test_stats_rows_equal_stats_of_values_per_image():
-    """The batch reduction groups rows by (dtype, byte length) and
-    reduces each group as one 2-D array; every row must equal the
-    one-image reduction bit for bit, with the 0-pixel rule kept and a
-    NULL image giving None."""
-    from spark_ij_spark.datamodel import NULL_IMAGE, image_to_np, np_to_image, stats_of_values
-    from spark_ij_spark.operators.images import stats_rows
+@pytest.mark.parametrize("stack_bytes", [None, 64])
+def test_stats_rows_equal_one_image_reductions(monkeypatch, stack_bytes):
+    """The batch reduction stacks same-size rows and reduces the stack
+    along its rows; every row must equal min/mean/std/max of that image
+    alone, bit for bit, whether its group is one stack or cut into
+    many (a 64-byte cap gives one row per stack), with the 0- and
+    1-pixel rules kept and a NULL image giving None."""
+    from spark_ij_spark.datamodel import NULL_IMAGE, image_to_np, np_to_image
+    from spark_ij_spark.operators import images
 
+    if stack_bytes:
+        monkeypatch.setattr(images, "STATS_STACK_BYTES", stack_bytes)
     rng = np.random.default_rng(3)
     imgs = []
     for dtype in ("float32", "uint16"):
         for shape, rgb in (((1, 1), False), ((1, 7), False), ((64, 64), False), ((33, 21, 3), True)):
-            for _ in range(2):  # two rows per group
+            for _ in range(3):  # three rows per (dtype, size) group
                 values = rng.standard_normal(shape) * 1e3 if dtype == "float32" else rng.random(shape) * 6e4
                 imgs.append(np_to_image(values.astype(dtype), rgb=rgb))
     imgs += [np_to_image(np.zeros((0, 4), "float32")), NULL_IMAGE]
-    got = stats_rows([i["data"] for i in imgs], [i["dtype"] for i in imgs])
-    assert got[-1] is None and got[-2]["pts"] == 0.0
-    for img, s in zip(imgs[:-1], got):
-        assert s == stats_of_values(image_to_np(img).astype("float64")), img["shape"]
+    got = images.stats_rows([i["data"] for i in imgs], [i["dtype"] for i in imgs])
+    assert got[-1] is None
+    assert got[-2] == {"min": 0.0, "mean": 0.0, "stdDev": 0.0, "max": 0.0, "pts": 0.0}
+    for img, s in zip(imgs[:-2], got):
+        a = image_to_np(img).astype("float64")
+        want = {
+            "min": float(a.min()),
+            "mean": float(a.mean()),
+            "stdDev": float(a.std(ddof=1)) if a.size > 1 else 0.0,
+            "max": float(a.max()),
+            "pts": float(a.size),
+        }
+        assert s == want, img["shape"]
+
+
+def test_stats_rows_memory_is_one_stack_not_the_batch():
+    """A batch of same-size images is reduced a few rows at a time: the
+    Python-side peak stays near STATS_STACK_BYTES, where one stack of
+    the whole batch (here 12x the cap in float64) would need twice
+    that again for std's temporaries."""
+    import tracemalloc
+
+    from spark_ij_spark.operators.images import STATS_STACK_BYTES, stats_rows
+
+    n = STATS_STACK_BYTES // 8 // 2  # two images per stack
+    data = [np.full(n, i, "uint8").tobytes() for i in range(24)]
+    tracemalloc.start()
+    try:
+        stats_rows(data, ["uint8"] * len(data))
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 3 * STATS_STACK_BYTES
 
 
 def test_histogram_constant_image_analytic(spark):

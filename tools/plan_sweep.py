@@ -107,38 +107,14 @@ def _key(node: str) -> str:
     return name
 
 
-def _python_exprs(node: str) -> list[str]:
-    """The expressions of a Python node's first bracketed list, split
-    at its top-level commas."""
-    start = node.index("[") + 1
-    out, depth = [], 0
-    for i in range(start, len(node)):
-        c = node[i]
-        if c in "([":
-            depth += 1
-        elif c in ")]" and depth:
-            depth -= 1
-        elif c in ",]" and not depth:
-            out.append(node[start:i])
-            start = i + 1
-            if c == "]":
-                break
-    return out
-
-
 def repeats_call(node: str) -> bool:
     """True for a ``…EvalPython [exprs]`` node where one call result
-    (``name(...)#id``) occurs in two of the listed expressions — e.g.
-    ``f(x)#1`` listed on its own and inside ``g(f(x)#1)#2``."""
-    if not _EVAL_PYTHON.match(node):
-        return False
-    seen: set[str] = set()
-    for expr in _python_exprs(node):
-        ids = set(_CALL_ID.findall(expr))
-        if ids & seen:
-            return True
-        seen |= ids
-    return False
+    (``name(...)#id``) occurs twice — e.g. ``f(x)#1`` listed on its own
+    and inside ``g(f(x)#1)#2``. Spark chains a UDF only through a single
+    direct UDF child, so no one expression holds a call twice, and the
+    output list (``pythonUDF0#n``) holds no call."""
+    ids = _CALL_ID.findall(node)
+    return bool(_EVAL_PYTHON.match(node)) and len(ids) != len(set(ids))
 
 
 def signature(plan: str) -> dict[str, int]:
