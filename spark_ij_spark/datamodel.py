@@ -200,10 +200,10 @@ def np_to_image(
 
     ``rgb`` defaults to False: internal callers (op outputs, stack
     assembly, createEmptyImages) preserve stack semantics — a 3-slice
-    uint8 stack must NOT be reinterpreted as an RGB image (round-7
-    review). Color arrays from the decoders arrive here already lifted
-    to 4D by ``codecs.decode_bytes``, which passes the per-format rgb
-    flag to ``ensure_3d`` itself."""
+    uint8 stack must NOT be reinterpreted as an RGB image. Color
+    arrays from the decoders arrive here already lifted to 4D by
+    ``codecs.decode_bytes``, which passes the per-format rgb flag to
+    ``ensure_3d`` itself."""
     arr = ensure_3d(coerce_ingest(np.asarray(arr)), rgb=rgb)
     arr = np.ascontiguousarray(arr)
     m = dict(DEFAULT_META)
@@ -261,7 +261,7 @@ def _coerce_meta_dict(m: Any, keys: Any) -> dict[str, Any]:
     dict(Row) and dict(namedtuple) both raise TypeError, and the DSv2
     serializer stores metadata as a bare positional tuple — so every
     shape the documented Row-compatibility contract admits is handled
-    here (round-8 kernels review)."""
+    here."""
     if isinstance(m, dict):
         return dict(m)
     if hasattr(m, "asDict"):
@@ -408,8 +408,7 @@ def gray_to_rgb(arr: np.ndarray) -> np.ndarray:
     """Duplicate a gray channel into 3 (TImgTools.java:253-261).
     Non-uint8 input takes the standard 8-bit display scale (min-max →
     0..255, like ImageJ's RGB conversion) — a raw astype(uint8)
-    silently wrapped 16-bit/float values modulo 256 (round-8 kernels
-    review)."""
+    would silently wrap 16-bit/float values modulo 256."""
     if arr.ndim == 4:
         return arr
     if arr.dtype == np.uint8:

@@ -181,7 +181,7 @@ def register_imagej(spark: SparkSession) -> None:
         # the literal text 'None'/'nan'/'NaT' as a NON-null string,
         # making `tostring(col) IS NULL` always false downstream.
         # pd.isna covers None, float NaN, AND pd.NaT (null timestamps
-        # arrive as NaT through Arrow — round-9 ADVICE); the isinstance
+        # arrive as NaT through Arrow); the isinstance
         # guard keeps array-valued cells (where isna is elementwise)
         # on the str() path.
         def conv(x):

@@ -18,8 +18,8 @@ import numpy as np
 from spark_ij_spark.registry import get_float, get_int, register_op
 
 # The 4D-aware helper (RGB images are [h][w][s][3] inside kernels): a
-# private 2D/3D-only copy here made every geometry/morphology op crash
-# on RGB input (round-8 kernels review).
+# private 2D/3D-only copy here would make every geometry/morphology op
+# crash on RGB input.
 from spark_ij_spark.kernels.filters import _per_slice
 
 
@@ -327,7 +327,7 @@ def _ultimate_from_dist(d2: np.ndarray) -> np.ndarray:
     """Local maxima of an ALREADY-computed distance map (bool mask).
     Shared by ultimate_points and watershed so watershed reuses its
     own DT instead of paying the O(h)-Python-loop chamfer pass twice
-    per slice (round-8 kernels review)."""
+    per slice."""
     p = np.pad(d2, 1, mode="constant")
     h, w = d2.shape
     neigh_max = np.max(

@@ -679,7 +679,7 @@ def op_rgb_color(arr, args, meta):
 
     Inside kernels a 3D array is ALWAYS a slice stack — true RGB
     arrives 4D ([h][w][s][3], color declared by the decoder; CLAUDE.md
-    round-7 rule) — so only ndim==4 passes through: a shape/dtype
+    kernel-side RGB rule) — so only ndim==4 passes through: a shape/dtype
     heuristic here silently no-opped on uint8 3-slice stacks."""
     if arr.ndim == 4:
         return arr

@@ -60,8 +60,8 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries failed-embedder rows (null/empty arrays) and they crash every
     downstream path differently (zero-norm cosine → division by zero,
     ragged np.stack in the block matmul, DuckDB list_dot_product
-    dimension errors — all observed in the round-8 null-injection
-    sweep, tools/make_nulls.py), so integrity filtering happens once,
+    dimension errors — all observed in the null-injection sweep,
+    tools/make_nulls.py), so integrity filtering happens once,
     here, for EVERY embedding analytics op on both engines
     (EMB_CLEAN_DUCK is the oracle mirror). Audit queries
     (integrity_docs_embeddings) deliberately read the raw table."""
@@ -82,7 +82,7 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: slices over a buffer that still holds a dropped NULL row's entries,
 #: a downstream cross/equi join errors with "argument can not contain
 #: NULL values" even though every SELECTED row is clean (reproduced
-#: round 8 on the make_nulls.py dataset; the rebuilt buffer is flat
+#: on the make_nulls.py dataset; the rebuilt buffer is flat
 #: and the error disappears). Identity on values — null-free grades
 #: are bit-identical with or without it.
 EMB_CLEAN_DUCK = (
@@ -124,7 +124,7 @@ def shingle_postings(
     from the per-doc array before the explode. Carrying n on every
     posting row is what lets the whole Jaccard family skip the
     per-doc ``sizes`` aggregate AND the two pair-frame re-joins that
-    attached na/nb after the pair aggregation (r12, guide §2.4: three
+    attached na/nb after the pair aggregation (guide §2.4: three
     corpus-scale exchanges removed for ~8 bytes per posting row on the
     one exchange that remains; consumers that don't read n never
     compute it — Catalyst prunes the size()).
@@ -132,13 +132,13 @@ def shingle_postings(
     Shingles with document frequency > ``max_doc_frac`` of the corpus
     are dropped (``None`` disables). The hot-shingle set is still a
     tiny aggregate (bounded above by avg_shingles_per_doc/max_doc_frac
-    values by construction), but it now comes back as ONE collect_set
+    values by construction), and it comes back as ONE collect_set
     row cross-joined onto the per-doc arrays, so the cap subtracts
     from the ARRAY (keeping size(arr) == the capped posting count)
     instead of anti-joining the exploded postings — same result set,
-    and n stays exactly the count the sizes aggregate used to produce.
+    and n is exactly the doc's capped posting count.
 
-    Shape notes (measured r5→6, re-measured r11/r12):
+    Shape notes (measured):
     - a window count over the shingle key computes df in ONE scan but
       shuffles the ENTIRE postings frame before the self-join — +31%
       wall at sf0.1 where the cap never binds; the aggregate +
@@ -159,7 +159,7 @@ def shingle_postings(
     # shingle pass — and every postings frame CACHED off it by the
     # dedup family — would otherwise plan as ONE task and keep the
     # 1-partition layout through the cache, serializing all downstream
-    # consumers (measured r11: dedup_ngram_jaccard steady-state 2.54 →
+    # consumers (measured: dedup_ngram_jaccard steady-state 2.54 →
     # 1.49 s at sf0.1 from the cached postings regaining parallel
     # layout alone).
     from spark_ij_spark.session import spread
@@ -179,7 +179,7 @@ def shingle_postings(
         # driver collect serialized a full corpus job ahead of the main
         # job on every call), and the cap subtracts from the per-doc
         # ARRAY via array_except, so size(arr) below is exactly the
-        # capped posting count the old sizes aggregate produced.
+        # capped posting count.
         hot = (
             base.select(
                 F.explode(
@@ -249,8 +249,8 @@ def _jaccard_pairs(sh: DataFrame) -> DataFrame:
     The set sizes ride the postings rows (shingle_postings carries the
     map-side n), so the pair frame never re-joins a per-doc sizes
     aggregate: any_value over the group is exact because n is a pure
-    function of the doc id. r12 (guide §2.4): removes the sizes
-    groupBy exchange plus BOTH pair-frame size joins — the pair frame
+    function of the doc id (guide §2.4): no sizes
+    groupBy exchange and no pair-frame size joins — the pair frame
     is shuffled exactly once, on its own (da, db) key.
 
     The postings frame feeds both self-join sides; persist it so
@@ -416,7 +416,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # candidate set is tiny (LSH's point), so both joins stay small.
     # Same cached postings frame as the signatures — one scan total.
     # Set sizes ride the posting rows (shingle_postings n), so no
-    # per-doc sizes aggregate and no post-agg size joins (r12 §2.4).
+    # per-doc sizes aggregate and no post-agg size joins (guide §2.4).
     pa = post.select(F.col("doc_id").alias("da"), "s", F.col("n").alias("na"))
     pb = post.select(F.col("doc_id").alias("db"), "s", F.col("n").alias("nb"))
     return (
@@ -491,10 +491,10 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregating groupBy: per doc, SIMHASH_BITS ones-count
     sums (one per bit) plus the shingle count, then fingerprint =
     Σ (2·ones_b > n) << b — algebraically identical to the ±1 vote sum
-    (vote_b = 2·ones_b − n > 0 ⇔ 2·ones_b > n). The previous form
-    exploded postings × SIMHASH_BITS (a 48x row multiplier through a
-    corpus-wide shuffle) into a (doc, bit) groupBy plus a second
-    groupBy; this shape shuffles only |docs| rows of 49 BIGINTs
+    (vote_b = 2·ones_b − n > 0 ⇔ 2·ones_b > n). Exploding postings ×
+    SIMHASH_BITS (a 48x row multiplier through a corpus-wide shuffle)
+    into a (doc, bit) groupBy plus a second groupBy would cost far
+    more; this shape shuffles only |docs| rows of 49 BIGINTs
     (guide §2.3 "aggregate before you shuffle"; identical output,
     measured at sf0.1 and oracle unchanged)."""
     toks = shingle_postings(spark, sf_dir).withColumn(
@@ -626,8 +626,8 @@ EMBED_BLOCKS = 8
 # Block-matmul tile bound: each cogroup tile holds ~(2·TARGET)² score
 # cells in one numpy matmul, so the block count must GROW with the
 # vector count — a static 8 blocks put 25k vectors/block at the sf~10
-# replica sweep and the ~5 GB dense tile killed the JVM (measured,
-# round 8). embed_blocks() keeps tiles bounded; at the oracle SFs it
+# replica sweep and the ~5 GB dense tile killed the JVM (measured).
+# embed_blocks() keeps tiles bounded; at the oracle SFs it
 # returns EMBED_BLOCKS unchanged (plans and outputs identical — the
 # tiling is a Spark-side cover, never visible in the pair set).
 EMBED_BLOCK_TARGET_ROWS = 4000
@@ -885,8 +885,11 @@ def q_dedup_aligned_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     cap (occurrence frequency > MAX_SHINGLE_DOC_FRAC × corpus) is a
     no-op at the oracle SFs (hottest gram: 0.5%) and is MIRRORED in
     the DuckDB oracle, so both engines stay equivalent at any SF.
-    Same aggregate + broadcast-anti-join shape as shingle_postings
-    (see its docstring for the measured window-vs-agg tradeoff)."""
+    Each posting row carries its position, so the hot grams leave by
+    a broadcast anti-join of the aggregate over the persisted postings
+    rather than shingle_postings' per-doc array_except; like it, df is
+    an aggregate, not a window (see its docstring for the measured
+    window-vs-agg tradeoff)."""
     g = (
         _docs(spark, sf_dir)
         .withColumn("toks", F.expr(TOKENS_SPARK))
@@ -1000,7 +1003,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     # set sizes ride the posting rows (shingle_postings n): no per-doc
-    # sizes aggregate, no post-agg size joins (r12 §2.4)
+    # sizes aggregate, no post-agg size joins (guide §2.4)
     pa = post.select(F.col("doc_id").alias("dd"), "s", F.col("n").alias("na"))
     pb = post.select(F.col("doc_id").alias("dc"), "s", F.col("n").alias("nb"))
     return (
@@ -1121,7 +1124,7 @@ def q_dedup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup pairs — ``lsh_candidate_pairs`` band buckets, true
     Jaccard verified on candidates only, thresholded — so edge
     generation is a band equi-join (38-46x for 100x data in the
-    round-8 K=100 sweep, vs 232x for the exact block-matmul
+    K=100 sweep, vs 232x for the exact block-matmul
     generator). Generator is shared verbatim with
     ``dedup_minhash_lsh`` / ``dedup_lsh_audit`` (single-code-path
     rule); the quadratic exact-pair variant survives as the labeled
@@ -1168,7 +1171,7 @@ p{k} AS (
     # inlines plain CTEs, and sym/deg are referenced by EVERY loop
     # step (12 references) — inlined, the whole LSH-edge pipeline
     # re-evaluates per step (observed at the 10x replica: >30 min and
-    # 56 GB of spill vs 42 s materialized, identical rows — r11)
+    # 56 GB of spill vs 42 s materialized, identical rows)
     return f"""
 WITH {edges_prefix},
 sym AS MATERIALIZED (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
@@ -1558,10 +1561,10 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-sourced so a cap/join-shape fix there applies here too
     # (the unused jaccard column is pruned by Catalyst). Each unordered
     # pair conditionally emits its 0-2 directed rows MAP-SIDE in one
-    # pass (explode of a CASE-built array) — the r11 form cached the
-    # full pre-threshold pair frame and scanned it twice (fwd UNION
-    # rev); dropping that cache + double scan measured 3.37 -> 2.23 s
-    # cold at sf0.1 (OPTIMIZATION_r12.md C1, identical results asserted).
+    # pass (explode of a CASE-built array) — caching the full
+    # pre-threshold pair frame and scanning it twice (fwd UNION rev)
+    # measured 3.37 s vs 2.23 s for this form, cold at sf0.1, identical
+    # results.
     pairs = _jaccard_pairs(shingle_postings(spark, sf_dir))
     fwd_ok = (
         f"{CONTAIN_T_DEN} * i >= {CONTAIN_T_NUM} * na"
@@ -1645,8 +1648,8 @@ def q_dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     NO broadcast hint — |vocab| grows with the corpus (measured x100
     at the sf~10 replica sweep; billions of shingles at 100 TB), so
     the join strategy is AQE's call from true runtime sizes: broadcast
-    at test SF, co-partitioned shuffle join at scale (round-8
-    broadcast policy, session.get_spark);
+    at test SF, co-partitioned shuffle join at scale (broadcast
+    policy, session.get_spark);
     ranks and set sizes are one doc-keyed window pass; candidates =
     prefix ⋈ prefix equi-join on the shingle with the two integer
     prunes as join residuals; verification SEMI-FILTERS the postings
@@ -1666,8 +1669,8 @@ def q_dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         # broadcasts it at toy SF and shuffle-joins it at scale
         sh.join(dfreq, "s")
         .withColumn("rn", F.row_number().over(wdoc.orderBy("df", "s")))
-        # set size rides the posting rows (shingle_postings n) — the
-        # former count-over-doc window is gone (r12 §2.4)
+        # set size rides the posting rows (shingle_postings n) — no
+        # count-over-doc window (guide §2.4)
         .withColumn("sz", F.col("n"))
     )
     # prefix length for Jaccard t: sz - ceil(t*sz) + 1; ceil(sz/2) is
@@ -1720,8 +1723,8 @@ def q_dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Candidate-only verification arrays: semi-filter the postings to
     # candidate docs BEFORE collecting arrays, so the broadcast below
-    # is bounded by the candidate set (ADVICE r6: broadcasting the
-    # whole corpus's arrays contradicted the exactness-at-scale story).
+    # is bounded by the candidate set (broadcasting the whole
+    # corpus's arrays would not hold at scale).
     arrs = (
         sh.join(F.broadcast(cand_docs), "doc_id", "left_semi")
         .groupBy("doc_id")
@@ -1967,7 +1970,7 @@ def q_dedup_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     id-set and the matrix join). The doc→source dimension is
     candidate-bounded BEFORE it is broadcast: a semi-join against the
     distinct pair doc-ids cuts it from corpus-sized to O(dup docs),
-    the round-7 pair-verification rule. The matrix itself is two
+    the pair-verification rule. The matrix itself is two
     broadcast hash joins plus one ~|sources|² aggregate — the corpus
     is never reshuffled.
 

@@ -112,7 +112,7 @@ def q_events_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact per-type value percentiles. Spark `percentile` and DuckDB
     `quantile_cont` share the linear-interpolation definition but NOT
     the interpolation formula's floating-point evaluation order: at
-    the 10x replica the r11 at-volume sweep caught a 1-ulp p99 drift
+    the 10x replica the at-volume sweep caught a 1-ulp p99 drift
     (227.41 vs 227.40999999999997 — the v[lo]+d*(v[hi]-v[lo]) vs
     (1-d)*v[lo]+d*v[hi] class). Both sides therefore round(…, 6),
     which is deterministically safe here: values carry 2 decimals and
@@ -126,7 +126,7 @@ def q_events_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         _events(spark, sf_dir)
         # order statistics are over VALID readings only: engines
         # disagree on where NULL/NaN sort in percentile interpolation
-        # (round-8 NaN sweep), and a NaN quantile is meaningless
+        # (NaN sweep), and a NaN quantile is meaningless
         .filter("value IS NOT NULL AND NOT isnan(value)")
         .groupBy("event_type")
         .agg(
@@ -275,7 +275,7 @@ def q_events_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     survives 100 TB. Ties break on event_id, so the order (and the
     result) is engine-independent.
 
-    Null metric samples (round-8 null sweep): the click-value branch
+    Null metric samples (null sweep): the click-value branch
     coalesces to the -1.0 sentinel BEFORE the window, so it is non-NULL
     for every click row and the ts/value last() pairs pick the SAME
     click — with a bare `value` there, a null-valued latest click made
@@ -413,10 +413,10 @@ GROUP BY a.event_id
 def q_events_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly cohort retention: users grouped by first-active week;
     for each (cohort, weeks-since-cohort) the count of cohort members
-    still active. Three keyed shuffles, no join (r12, guide §2.4):
+    still active. Three keyed shuffles, no join (guide §2.4):
     the distinct on (user, week), a min-over-user window for the
-    first-active week (replacing the former aggregate + self-join —
-    same shuffle key, one pass), and the final (cohort, week_index)
+    first-active week (not an aggregate + self-join — same shuffle
+    key, one pass), and the final (cohort, week_index)
     count. The final count is a plain COUNT(*): the frame is distinct
     per (user, week) and week_index is injective in week for a fixed
     user, so each (cohort, week_index, user) appears exactly once and

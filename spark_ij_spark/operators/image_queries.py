@@ -81,7 +81,7 @@ def order_quantity_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     # order, no per-row dicts, no nested struct through Arrow on the
     # return side); dtype/shape/meta/log are constant JVM-side struct
     # fields (guide §4.2 — shrink what crosses the boundary). Measured
-    # (OPTIMIZATION_r12.md Wave B, identical results asserted): cold build
+    # (OPTIMIZATION_r12.md, identical results asserted): cold build
     # 1.26 -> 0.98 s at sf0.1; a zero-copy mapInArrow offsets-reslice
     # variant measured 1.10 s and was rejected.
     @F.pandas_udf(BinaryType())

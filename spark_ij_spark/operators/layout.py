@@ -46,7 +46,7 @@ def q_bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 2-thread pool so the second back-fills executors freed by
         # the first's tail (guide §2.6) instead of running strictly
         # after it — the write pair dominates the amortized-once
-        # session setup (measured r12: 3.4 s serial -> see
+        # session setup (measured: 3.4 s serial -> see
         # OPTIMIZATION_r12.md).
         from concurrent.futures import ThreadPoolExecutor
 

@@ -7,9 +7,8 @@ Decode / feature-extract / resize / frame-sample run as Arrow-batched
 pandas UDFs (mapInPandas-style plumbing). Every modality has a REAL
 in-container codec path: npy/png/tiff/gif/bmp/jpeg/dicom images, PCM
 WAV audio, uncompressed-DIB AVI and MJPEG-in-MP4 video (all
-pure-stdlib, ``sources/purepy_codecs``; baseline JFIF went native in
-round 9, progressive JFIF and the MP4 container in round 10 — no
-stubs remain).
+pure-stdlib, ``sources/purepy_codecs``, including baseline and
+progressive JFIF and the MP4 container — no stubs remain).
 
 Scale: all ops are map-only over binary payloads; the only shuffles
 are the analyst's own groupBys. Arrow batch size bounds executor
@@ -90,7 +89,7 @@ def decode_media_bytes(data: bytes, mime: str) -> np.ndarray:
     (png/tiff/gif/bmp/jpeg/dicom) and video (AVI, MJPEG-in-MP4)
     decode via the pure-stdlib codecs (multi-page TIFF pages and
     video frames land on the frame axis); WAV audio decodes to
-    [channels][1][samples]. No stubs remain since round 10."""
+    [channels][1][samples]. No format is stubbed."""
     if mime == NPY_MIME:
         try:
             return np.load(io.BytesIO(bytes(data)), allow_pickle=False)
@@ -493,7 +492,7 @@ RETRIEVAL_PROBE_MOD = 997  # ~1/997 of orders pre-select as probe candidates
 # the pre-selected candidates, k tie-break): a fixed FRACTION of the
 # corpus is not "tiny by construction" — at 10x data the uncapped
 # batch made the scoring pass |probes| x |corpus| ~ N^2/997, measured
-# 97.7x per 10x data (round 11), and put a corpus-scaling side behind
+# 97.7x per 10x data, and put a corpus-scaling side behind
 # an explicit broadcast. With the cap, the batch is a constant-size
 # deterministic sample (the LSH candidate-budget discipline), the
 # broadcast is provably bounded, and scoring is linear in the corpus.
@@ -564,11 +563,13 @@ def q_media_feature_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hash60, k) among the %-selected candidates — the same 60-bit
     hash on both engines, so the set is identical.
 
-    Scale shape (REVISED round 11): the probe batch is capped at a
+    Scale shape: the probe batch is capped at a
     CONSTANT size, so the broadcast is provably bounded (the policy's
     requirement for an explicit hint) and the scoring pass is map-only
     and LINEAR in the corpus. The uncapped version sampled a fixed
-    1/997 FRACTION — measured 97.7x per 10x data (SCALING.md r11) with
+    1/997 FRACTION — measured 97.7x per 10x data (SCALING.md
+    "media_feature_retrieval: fixed-fraction probe batch was
+    quadratic") with
     a corpus-scaling broadcast. Per-probe top-k is a salted two-stage
     window (see RETRIEVAL_SALTS) so no reducer ever sees one probe's
     full corpus candidate list. The image decode happens once per
@@ -657,7 +658,7 @@ def _retrieval_sql() -> str:
     # identity test and the graded oracle exercise ONE rule
     # h (3 refs) and norms (3 refs) are MATERIALIZED: DuckDB inlines
     # plain CTEs and re-runs the lineitem group-by per reference (the
-    # pagerank sym/deg rule, r11 review)
+    # pagerank sym/deg rule)
     return f"""
 WITH h AS MATERIALIZED (
   SELECT l_orderkey AS k,
@@ -962,8 +963,8 @@ def _jpeg_sums(spark: SparkSession, sf_dir: str, progressive: bool) -> DataFrame
 
 
 def q_media_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JPEG pipeline over REAL baseline-JFIF bytes (the format that
-    went native in round 9): per document, encode → decode →
+    """JPEG pipeline over REAL baseline-JFIF bytes (the native
+    codec): per document, encode → decode →
     per-half pixel sums, hash-matched against the closed form. The
     JPEG sibling of ``q_media_scene_cuts``' AVI proof and
     ``q_media_audio_energy``'s WAV proof. Map-only Arrow hop, no
@@ -982,8 +983,8 @@ def q_media_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form flat-block proof, but the bytes are a real SOF2
     multi-scan stream (spectral selection + successive approximation,
     restart cadence alternating by doc_id) — the format gap the
-    reference covers via ImageIO (Spiji.java:1571-1614) and we close
-    natively in round 10. Identical oracle: at quality=100 a flat
+    reference covers via ImageIO (Spiji.java:1571-1614) and this
+    package decodes natively. Identical oracle: at quality=100 a flat
     block is a single DC coefficient, which the progressive DC
     first+refine scans deliver exactly."""
     return _jpeg_sums(spark, sf_dir, progressive=True)
@@ -1008,8 +1009,8 @@ MP4_FRAMES_SCHEMA = StructType(
 
 
 def q_media_mp4_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MJPEG-in-MP4 codec proof (the container that went native
-    in round 10): per document, a 2-frame 8x16 flat-gray video
+    """MJPEG-in-MP4 codec proof (the native container parse): per
+    document, a 2-frame 8x16 flat-gray video
     (frame 0 value v1 = (id·41+17) mod 256, frame 1 v2 = (id·59+31)
     mod 256) is encoded to a REAL ISO BMFF stream (sample tables +
     per-frame JFIF samples at quality=100) and decoded back through

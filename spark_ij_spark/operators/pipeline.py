@@ -581,7 +581,7 @@ FROM r GROUP BY source
 
 SAMPLE_PER_STRATUM = 20
 # Stage-1 salt fan-out for the per-stratum top-k / budget-walk windows
-# (r11, the RETRIEVAL_SALTS pattern / guide §2.5): lang strata are FEW
+# (the RETRIEVAL_SALTS pattern / guide §2.5): lang strata are FEW
 # and corpus-sized, so a bare per-lang window lands each stratum on
 # ONE reducer at 100 TB. Stage 1 ranks within (lang, doc_id % SALTS),
 # stage 2 merges the bounded survivors. Top-k exactness: the order
@@ -613,7 +613,7 @@ def q_pipeline_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = f"{hash60_spark('CAST(doc_id AS STRING)')}"
     # salted two-stage top-k (see PIPE_SALTS): exact, and the stage-2
     # window ranks <= SALTS*K survivors per stratum instead of the
-    # whole corpus slice (r11)
+    # whole corpus slice
     w1 = Window.partitionBy(
         "lang", F.pmod(F.col("doc_id"), F.lit(PIPE_SALTS))
     ).orderBy("h", "doc_id")
@@ -660,7 +660,7 @@ def q_pipeline_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     # proof): stage 1 prunes on the per-(lang, salt) prefix — a lower
     # bound of the true prefix — so the stage-2 cumsum runs over a
     # budget-bounded survivor set per stratum, not the corpus slice,
-    # and emits the identical rows and cum_tokens values (r11)
+    # and emits the identical rows and cum_tokens values
     w1 = (
         Window.partitionBy("lang", F.pmod(F.col("doc_id"), F.lit(PIPE_SALTS)))
         .orderBy("h", "doc_id")
@@ -861,7 +861,7 @@ def q_pipeline_leakage_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     (countDistinct of a pure function of the group key) and could
     never catch a split assignment edited to depend on doc-level data
     — the audit must measure the code path production runs (CLAUDE.md
-    round-7 shared-generator rule).
+    shared-generator rule).
     """
     from spark_ij_spark.operators.dedup import q_dedup_clusters
 
@@ -882,13 +882,13 @@ def q_pipeline_leakage_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("split", F.expr(split_of("rep")))
     )
     # ONE corpus pass into the (split, cluster_rep) pre-aggregate; the
-    # witness and the accounting both derive from it (r12, guide
-    # §2.3/§5: the r11 form cached the corpus-sized joined frame and
-    # aggregated it twice — at 100 TB that cache write is the cost).
+    # witness and the accounting both derive from it (guide §2.3/§5:
+    # caching the corpus-sized joined frame and aggregating it twice
+    # would make that cache write the cost at 100 TB).
     # The witness still aggregates the PRODUCTION split column (g is
     # an aggregate OF s.split; per-cluster countDistinct(split) ==
-    # row count in g because g is distinct on the pair) — the round-7
-    # shared-generator rule is preserved. Cache the AGGREGATE
+    # row count in g because g is distinct on the pair) — the
+    # shared-generator rule holds. Cache the AGGREGATE
     # (O(|clusters|) rows), never the corpus.
     g = (
         s.groupBy("split", "cluster_rep")
@@ -1201,7 +1201,7 @@ def q_pipeline_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         f" / CAST(size({TOKENS_SPARK}) AS DOUBLE)"
     )
     # salted two-stage top-k (see PIPE_SALTS): exact under the total
-    # (draw_key, doc_id) order (r11)
+    # (draw_key, doc_id) order
     w1 = Window.partitionBy(
         "lang", F.pmod(F.col("doc_id"), F.lit(PIPE_SALTS))
     ).orderBy("draw_key", "doc_id")
@@ -1257,7 +1257,7 @@ Q_PIPELINE_WEIGHTED_SAMPLE_SQL = _weighted_sample_sql()
 # pairs so the budget arithmetic stays pure-integer in both engines.
 MIX_TIER_SHARES = {0: (1, 2), 1: (1, 4), 2: (1, 8), 3: (1, 8)}
 # Order-aligned bucket fan-out for the calibrated-mix INCLUSIVE budget
-# walk (r11): buckets are h-RANGES (b = h div 2^(60-bits)), aligned
+# walk: buckets are h-RANGES (b = h div 2^(60-bits)), aligned
 # with the walk's (h, doc_id) sort order, so per-bucket local prefix
 # sums compose exactly with broadcast bucket offsets — unlike the
 # doc_id % SALTS decomposition (see PIPE_SALTS), which interleaves the
@@ -1279,7 +1279,7 @@ def q_pipeline_calibrated_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     the data, the calibrate-then-apply pattern real mixture tuning
     uses, instead of fixed constants).
 
-    Scale shape (r11): the INCLUSIVE ``cum <= budget`` walk does not
+    Scale shape: the INCLUSIVE ``cum <= budget`` walk does not
     salt-decompose (a doc_id-salted bucket prefix only lower-bounds
     the true prefix, and a stage-1-dropped giant still owes its tokens
     to later docs' true prefixes) — but it DOES decompose over buckets

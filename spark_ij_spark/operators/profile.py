@@ -438,7 +438,7 @@ def q_docs_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             F.expr(
                 # -1 sentinel bucket for unknown length (NULL
-                # n_chars = null-text docs, round-8 null sweep): a
+                # n_chars = null-text docs, null sweep): a
                 # NULL group key hashes None-vs-NaN across the
                 # driver fetch; an explicit CASE (not coalesce to a
                 # negative then divide) because Spark div truncates

@@ -39,7 +39,7 @@ def finite_or_null(expr: str) -> str:
     ANSI BIGINT cast of NaN crashes, and Spark's decimal cast silently
     NULLs — so without this one engine crashes where the other
     answers. A NaN/Inf reading is *missing*, not a poison pill
-    (round-8 NaN sweep)."""
+    (NaN sweep)."""
     d = f"CAST(({expr}) AS DOUBLE)"
     return (
         f"(CASE WHEN isnan({d})"
@@ -59,7 +59,7 @@ def dsum(expr: str, scale: int = 6, alias: str | None = None):
     order-independent.
 
     An all-NULL group (every input value missing — real corpora carry
-    null metric samples; round-8 null-injection sweep) sums to 0.0, not
+    null metric samples; null-injection sweep) sums to 0.0, not
     NULL: SQL's NULL sum renders None from Spark collect but NaN through
     the driver's DuckDB pandas fetch — and a single NULL promotes the
     whole pandas int column to float64 — so a NULL total must never be
@@ -71,7 +71,7 @@ def dsum(expr: str, scale: int = 6, alias: str | None = None):
     Spark but CRASH DuckDB ("nan out of range for INT128") — one bad
     reading would kill every money sum on exactly one engine. TRY_CAST
     maps NaN/Inf/overflow to NULL on both, i.e. NaN ≡ missing at the
-    measurement boundary (round-8 NaN sweep).
+    measurement boundary (NaN sweep).
     """
     c = F.expr(
         f"COALESCE(CAST(SUM(TRY_CAST({finite_or_null(expr)} "
@@ -85,7 +85,7 @@ def dsum_sql(expr: str, scale: int = 6) -> str:
 
     Carries a STRING hop around the final double cast: DuckDB's
     direct DECIMAL(28,s)→DOUBLE cast is not correctly rounded for
-    int128-backed decimals (measured r11 at the 10x replica:
+    int128-backed decimals (measured at the 10x replica:
     35591213907.498270 → ...498276, 1.5 ulp off, while Spark's
     BigDecimal cast and Python's Decimal both give ...49827), so the
     exact decimal sum silently lost its cross-engine guarantee the
@@ -94,7 +94,7 @@ def dsum_sql(expr: str, scale: int = 6) -> str:
     engines, so the text stays shared (STRING, not VARCHAR: Spark
     rejects bare VARCHAR, and some graded queries execute this very
     text via spark.sql). On the Spark side the hop is value-identical
-    to the old direct cast (both correctly rounded). Apply the same
+    to a direct cast (both correctly rounded). Apply the same
     hop to EVERY oracle-side wide-DECIMAL→DOUBLE cast."""
     return (
         f"COALESCE(CAST(CAST(SUM(TRY_CAST({finite_or_null(expr)} "
@@ -106,10 +106,10 @@ def dec_double_sql(expr: str) -> str:
     """Wide-DECIMAL → DOUBLE with the STRING hop, as a shared fragment
     for oracle SQL whose decimal flows through an ALIAS (re-summed
     CTE columns like the rollup's pv) rather than sitting adjacent to
-    its DECIMAL cast: the r11 sweep that added the hop was grep-driven
-    and missed exactly those alias-flow sites, so any new one must
-    splice this helper instead of hand-writing the cast (r11 third
-    review). Rationale for the hop itself: dsum_sql docstring."""
+    its DECIMAL cast: a grep for the cast misses exactly those
+    alias-flow sites, so any new one must splice this helper instead
+    of hand-writing the cast. Rationale for the hop itself: dsum_sql
+    docstring."""
     return f"CAST(CAST({expr} AS STRING) AS DOUBLE)"
 
 
@@ -1326,10 +1326,10 @@ _HIER_NS: "weakref.WeakKeyDictionary" = None  # populated lazily
 def _hier_session(spark: SparkSession) -> SparkSession:
     """One MEMOIZED child session per parent for the recursive-CTE
     query (a fresh JVM SessionState per invocation would accumulate
-    across bench's warm reps and the 174-query sims — r11 third
-    review). The child is created once; per-call state (the temp view,
-    and the runtime confs below) is refreshed by the caller/here every
-    time because it can change between calls:
+    across bench's warm reps and the 174-query sims). The child is
+    created once; per-call state (the temp view, and the runtime confs
+    below) is refreshed by the caller/here every time because it can
+    change between calls:
 
     - shuffle partitions are COPIED from the parent at every call —
       newSession merges only builder-time conf, so a runtime
@@ -1371,13 +1371,13 @@ def q_recursive_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the corpus (depth is log10-bounded), but Spark's default
     # cteRecursionRowLimit of 1e6 is an absolute-row safety valve
     # that a 10x replica already exceeds (150k customers x 9 levels,
-    # RECURSION_ROW_LIMIT_EXCEEDED at the r11 at-volume sweep). The
+    # RECURSION_ROW_LIMIT_EXCEEDED in the at-volume sweep). The
     # query self-provisions the conf's maximum (an Int conf, 2^31-1)
     # on an ISOLATED child session (newSession: own SQL conf + temp
     # views, shared context/cache), so the valve stays at its default
     # for every other query in the caller's session — the conf is
     # read at EXECUTION time, so a set/restore around the lazy
-    # spark.sql() build would not cover the actual run (r11 review).
+    # spark.sql() build would not cover the actual run.
     # The level limit (the real runaway guard for this acyclic,
     # strictly-shrinking recursion) stays at its default. Pinned by
     # test_recursive_hierarchy_conf_is_session_scoped.

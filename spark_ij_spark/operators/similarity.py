@@ -44,7 +44,7 @@ LSH_TOPK = 5
 N_QUERIES = 20      # query set = vec_id < N_QUERIES
 LSH_NBITS = 8
 # Independent hyperplane tables (table id t is folded into the sign
-# hash seed). Operating point CALIBRATED round 9 on the synthetic
+# hash seed). Operating point CALIBRATED on the synthetic
 # corpus via the recall-audit harness: single-table exact-bucket LSH
 # measured recall@5 ≈ 0.02-0.12 (near-isotropic vectors give
 # hyperplanes no locality), L=8 tables + Hamming-1 multiprobe lifts it
@@ -53,15 +53,15 @@ LSH_NBITS = 8
 # (never all-pairs). Floor guarded by
 # tests/test_north_star.py::test_ann_recall_floors.
 LSH_NTABLES = 8
-# Candidate budgets for the multiprobe retriever (round 10 — the r9
-# K=100 sweep measured 19.6x rescore growth per 100x data because
-# probed-bucket size grows linearly with the corpus; VERDICT r9 #4).
+# Candidate budgets for the multiprobe retriever (uncapped, the K=100
+# sweep measured 19.6x rescore growth per 100x data because
+# probed-bucket size grows linearly with the corpus).
 # Per (query, table) the own bucket contributes at most ~LSH_OWN_CAP
 # candidates and each Hamming-1 probe at most ~LSH_PROBE_CAP, sampled
 # deterministically per bucket (hash-stride, the dedup posting-cap
 # pattern) so both engines pick the identical subset. Strict no-ops at
 # every graded SF (max bucket occupancy: 10 at sf0.01, 26 at sf0.1 —
-# numpy sim, round 10), binding only in the decade replicas and
+# numpy sim), binding only in the decade replicas and
 # beyond, where a bucket holding an O(corpus/2^NBITS) slice is no
 # longer a discriminative hash and a fixed-size sample preserves the
 # top-k-after-exact-rescore contract in expectation.
@@ -154,7 +154,7 @@ def _lsh_sign(t: int, p: int, d: int) -> int:
     engines hash (hash60_spark/hash60_duck), so the three derivations
     are the same function — the DuckDB oracle keeps computing signs
     in-SQL and hash-matching the literal-inlined Spark plan proves
-    the equivalence every grading round."""
+    the equivalence on every oracle run."""
     import hashlib
 
     h60 = int(hashlib.md5(f"{t}:{p},{d}".encode()).hexdigest()[:15], 16)
@@ -163,8 +163,8 @@ def _lsh_sign(t: int, p: int, d: int) -> int:
 
 def lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-hyperplane LSH bucket id per (vector, table): LSH_NTABLES
-    independent tables of LSH_NBITS hyperplanes each (multi-table since
-    round 9 — see the LSH_NTABLES calibration note).
+    independent tables of LSH_NBITS hyperplanes each (see the
+    LSH_NTABLES calibration note).
 
     Hyperplane (t, p) has ±1 components: sign(t, p, d) from the low
     bit of hash60('t:p,d') — the table id seeds the hash, so tables
@@ -183,7 +183,7 @@ def lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     The quantized frame is spread (session.spread, no-op at scale):
     the 64 hyperplane dots per vector are the family's heaviest map
     pass and the testdata's single-row-group layout would run them —
-    and every cached frame built on them — as ONE task (r11)."""
+    and every cached frame built on them — as ONE task."""
     from spark_ij_spark.session import spread
 
     qv = spread(_emb(spark, sf_dir), "vec_id").select(
@@ -238,9 +238,10 @@ buckets AS (
 # Member index (bucket membership + occupancy + selection hash), the
 # DuckDB mirror of _lsh_member_index — defined here, above every
 # oracle f-string that splices it (module-level f-strings evaluate in
-# file order; the r7 NameError class). Parameterized on the source
-# CTE: the retrievers index `buckets`, the incremental ingest indexes
-# the corpus-only subset (its stride must not depend on the delta).
+# file order; naming a later one is an import-time NameError).
+# Parameterized on the source CTE: the retrievers index `buckets`, the
+# incremental ingest indexes the corpus-only subset (its stride must
+# not depend on the delta).
 def _lsh_mem_duck(src: str = "buckets") -> str:
     return f"""counts AS (
   SELECT t, bucket, COUNT(*) AS cnt FROM {src} GROUP BY t, bucket),
@@ -257,8 +258,8 @@ def _lsh_member_index(buckets: DataFrame) -> DataFrame:
     """(vec_id, t, bucket, cnt, mh): bucket membership enriched with
     its bucket's occupancy and the member's selection hash — the ONE
     frame both cap branches filter, so the per-member md5 is computed
-    once per corpus row, not once per branch (round-10 review; the
-    DuckDB mirror is the `mem` CTE). The counts frame is provably
+    once per corpus row, not once per branch (the DuckDB mirror is
+    the `mem` CTE). The counts frame is provably
     bounded (≤ 2^LSH_NBITS × LSH_NTABLES rows), so the explicit
     broadcast is within the runtime-size-only policy."""
     counts = buckets.groupBy("t", "bucket").agg(F.count("*").alias("cnt"))
@@ -299,9 +300,9 @@ def _lsh_own_cand(mem: DataFrame) -> DataFrame:
     """Own-bucket candidates (ia, ib): query rows (vec_id < N_QUERIES)
     equi-joined to the ≈LSH_OWN_CAP capped member sample of their own
     (t, bucket), self-pairs excluded — ONE implementation shared by
-    q_ann_lsh and q_ann_lsh_multiprobe's own-bucket branch (round-10
-    review: the two copies could desync on a cap retune; same
-    single-source rule as _rescore_topk). DuckDB twin:
+    q_ann_lsh and q_ann_lsh_multiprobe's own-bucket branch (two
+    copies could desync on a cap retune; same single-source rule as
+    _rescore_topk). DuckDB twin:
     _LSH_OWN_CAND_DUCK."""
     qa = mem.filter(F.col("vec_id") < N_QUERIES).alias("qa")
     qb = _lsh_capped_members(mem, LSH_OWN_CAP).alias("qb")
@@ -324,14 +325,14 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs that collide in several tables before the (costlier) exact
     rescore. The member-index frame feeds BOTH self-join sides and
     aliased self-joins never share work (the PPJoin ReusedExchange
-    lesson, r8) — cache it so the map-only bucket computation runs
+    lesson) — cache it so the map-only bucket computation runs
     once (measured 2.04→1.65 s at sf0.1; the build-the-index-once
-    step). Since round 10 the corpus side is candidate-budgeted at
+    step). The corpus side is candidate-budgeted at
     ≈LSH_OWN_CAP per bucket (_lsh_capped_members — dormant at every
-    graded SF, see the cap note): the r10 decade sweep measured the
+    graded SF, see the cap note): the decade sweep measured the
     uncapped own-bucket join at 3.95x/100x, the family's steepest
     curve once multiprobe was budgeted. The BUCKETS frame is cached
-    too (r11): _lsh_member_index reads it twice (counts agg + join
+    too: _lsh_member_index reads it twice (counts agg + join
     side) and each uncached pass re-runs the 64 hyperplane dots per
     vector — caching n×NTABLES small rows beats recomputing the dots
     at every scale (measured 2.21→1.43 s for the member index at
@@ -360,7 +361,7 @@ SELECT ia, ib, rank, round(cos, 6) AS cos_sim FROM ranked WHERE rank <= {LSH_TOP
 
 # Own-bucket candidate CTE body — the DuckDB twin of _lsh_own_cand,
 # spliced (as `own_cand`) into BOTH the exact-bucket and multiprobe
-# oracles so a cap retune can't desync them (round-10 review).
+# oracles so a cap retune can't desync them.
 _LSH_OWN_CAND_DUCK = f"""own_cand AS (
   SELECT DISTINCT qa.vec_id AS ia, m.vec_id AS ib
   FROM buckets qa JOIN mem m
@@ -383,8 +384,8 @@ def q_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     fell into when one hyperplane sign flipped — in EACH of the
     LSH_NTABLES tables. Probe generation is a map-only explode of
     (NBITS+1) bucket ids per (query, table); candidate generation
-    stays an equi-join on (table, bucket) (never all-pairs). Since
-    round 10 the probed membership is candidate-BUDGETED: the own
+    stays an equi-join on (table, bucket) (never all-pairs). The
+    probed membership is candidate-BUDGETED: the own
     bucket joins a ≈LSH_OWN_CAP deterministic per-bucket sample and
     each Hamming-1 probe a ≈LSH_PROBE_CAP one (_lsh_capped_members —
     hash-stride, no-op at every graded SF, see the cap note), so per
@@ -397,15 +398,15 @@ def q_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH_TOPK per query, same as q_ann_lsh.
 
     Operating point (see LSH_NTABLES note): measured recall@5 ≈ 0.66
-    at sf0.01 / 0.64 at sf0.1 — vs ≈ 0.12 single-table r8 — floor
+    at sf0.01 / 0.64 at sf0.1 — vs ≈ 0.12 single-table — floor
     asserted by test_ann_recall_floors. BOTH the member index (buckets
     + cnt + mh — probes and both cap branches read it, so the
     per-member selection hash is computed once) and the raw buckets
-    frame are cached (r11): _lsh_member_index reads buckets twice
+    frame are cached: _lsh_member_index reads buckets twice
     (counts agg + join side) and an uncached pass re-runs the 64
     hyperplane dots per vector — caching n×NTABLES small rows beats
     recomputing the dots at every scale (measured 2.21→1.43 s at
-    sf0.1, reversing the r10 one-extra-map-pass call)."""
+    sf0.1)."""
     mem = _lsh_member_index(lsh_buckets(spark, sf_dir).cache()).cache()
     h1_probes = (
         mem.filter(F.col("vec_id") < N_QUERIES)
@@ -725,10 +726,10 @@ def q_ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     What it measures on the synthetic testdata is itself the point:
     recall@5 ≈ 0.12-0.20 for exact-bucket multi-table LSH (single
-    table measured ≈ 0.02 in r8), because near-isotropic high-dim
+    table measured ≈ 0.02), because near-isotropic high-dim
     vectors give hyperplane buckets little locality to exploit —
     q_ann_lsh_multiprobe_recall measures the Hamming-distance-1
-    probes lifting that to ≈ 0.59-0.66 (r9 calibration), and
+    probes lifting that to ≈ 0.59-0.66 (calibrated), and
     q_ann_recall shows the IVF path doing better still on the
     same data. That comparison (not a guess) is what
     tells an operator which index family to deploy; LSH here earns its
@@ -771,8 +772,8 @@ def _pq_model(
     list[tuple[int, list[list[float]]]],
 ]:
     """PQ model state off ONE bounded driver collect
-    (vec_id < max(PQ_K, N_QUERIES) quantized rows — r11: the separate
-    codebook and query collects were two Spark jobs per query build):
+    (vec_id < max(PQ_K, N_QUERIES) quantized rows — separate
+    codebook and query collects would be two Spark jobs per query build):
 
     - ``books``: per-subspace codebooks seeded from the first PQ_K
       vectors' quantized subvectors (O(M·K·dsub) driver state, like
@@ -842,18 +843,18 @@ def q_ann_pq_pairs(
     are ADC-scored — the encoded frame is candidate-reduced by the
     join BEFORE any scoring, so pruning actually prunes compute.
 
-    Shapes, 100 TB lens (r11 rewrite — guide §2.4 "remove shuffles
+    Shapes, 100 TB lens (guide §2.4 "remove shuffles
     outright"): encode is map-only (codebooks compile into literal
     argmin expressions, the k-means assignment pattern), and the ADC
     lookup table — NQ·M·K = 1280 exact-integer values, bounded model
     state — is computed on the driver (_pq_query_lut) and
     broadcast-joined as ONE wide row per query (ia, l0..l{M-1}
     arrays). Scoring is then 4 array lookups per (vector, query) row
-    in whole-stage codegen. The r9-r10 form exploded the codes frame
-    (M rows/vector), joined the per-(ia, m, k) LUT rows, and
-    partial-aggregated through a corpus-wide (ia, ib) groupBy; that
-    aggregation Exchange — n·NQ rows — is gone outright, leaving the
-    per-query top-k/shortlist rank as the PQ family's only shuffle.
+    in whole-stage codegen. No exploded codes frame (M rows/vector)
+    joins per-(ia, m, k) LUT rows and partial-aggregates through a
+    corpus-wide (ia, ib) groupBy, so that aggregation Exchange — n·NQ
+    rows — does not exist, leaving the per-query top-k/shortlist rank
+    as the PQ family's only shuffle.
     Linear per-query scan by construction — production prunes it with
     the IVF stage (q_ann_ivfpq).
 
@@ -882,7 +883,7 @@ def q_ann_pq_pairs(
     )
 
     # The LUT ships as a 20-row broadcast frame, NOT as literal
-    # expression trees: a literal form (tried first, r11) added ~1300
+    # expression trees: a literal form (measured) added ~1300
     # literal nodes per query plan and cost ~0.4-0.5 s of driver-side
     # analysis per build — more than the Exchange it saved at sf0.1 —
     # and F.lit(nested list) pays ~1.8 s of per-element Py4J
@@ -927,7 +928,7 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ADC shortlist width for the refine stage. Calibrated round 9 on the
+# ADC shortlist width for the refine stage. Calibrated on the
 # recall-audit harness: pure ADC at M=4/K=16 seeded codebooks measures
 # recall@5 ≈ 0.24/0.11 (sf0.01/sf0.1) — quantization noise swamps the
 # small cosine spread of near-isotropic vectors — while an ADC
@@ -1152,14 +1153,14 @@ def q_ann_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate join is delta-buckets ⋈ corpus-buckets on (table,
     bucket) — never delta × corpus — so ingest cost scales with the
     delta and its bucket occupancy, not the corpus (the ANN mirror of
-    ``q_dedup_incremental``); since round 10 the probed corpus side is
+    ``q_dedup_incremental``); the probed corpus side is
     additionally candidate-budgeted at ≈LSH_OWN_CAP per bucket
     (_lsh_capped_members, dormant at graded SFs — see the cap note),
     bounding per-delta-vector rescore fan-in by a constant. The
     member index is built over CORPUS-ONLY membership — a stride
     computed from counts that include the incoming delta would shrink
     (and re-shuffle) the standing-index sample as a function of the
-    batch being ingested (round-10 review). Exact-cosine rescore +
+    batch being ingested. Exact-cosine rescore +
     top LSH_TOPK per delta vector, same rank/tie semantics as the
     other retrievers. The buckets frame is cached: the delta filter,
     the corpus counts agg and the corpus join side all read it."""

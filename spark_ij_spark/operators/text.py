@@ -41,7 +41,7 @@ def hash60_duck(expr: str) -> str:
 
 
 # NULL text tokenizes exactly like '' (one canonical rule, both
-# engines): real corpora carry null-text rows (round-8 null sweep,
+# engines): real corpora carry null-text rows (null sweep,
 # tools/make_nulls.py), and a bare split(NULL) nulls every downstream
 # token metric while ''-docs flow through defined — coalescing at the
 # single tokenizer boundary makes the two degenerate cases identical
@@ -126,7 +126,7 @@ def _round6_duck(e: str) -> str:
 
     DuckDB's native double round multiplies by 1e6 first; when that
     product IEEE-rounds INTO an exact .5 the result goes the wrong way
-    (k10 sweep, r11 optimization half: quality 0.72406249999999994
+    (k10 sweep: quality 0.72406249999999994
     — strictly below the tie — multiplied to exactly 724062.5 and
     rounded UP where Spark's BigDecimal.valueOf(double).setScale(6,
     HALF_UP) correctly rounds down). The VARCHAR hop reproduces
@@ -135,7 +135,7 @@ def _round6_duck(e: str) -> str:
     VARCHAR cast), the DECIMAL parse is exact, and round(DECIMAL, 6)
     is half-away-from-zero on exact digits — the same function Spark
     computes. The inverse-direction rule (DECIMAL→DOUBLE via STRING,
-    dsum_sql) is CLAUDE.md round-11; this is its round() twin. Only
+    dsum_sql) is a CLAUDE.md rule; this is its round() twin. Only
     for provably finite values: 'nan'/'inf' strings crash the DECIMAL
     parse."""
     return f"CAST(round(CAST(CAST(({e}) AS VARCHAR) AS DECIMAL(28,17)), 6) AS DOUBLE)"
@@ -281,7 +281,7 @@ def q_text_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast hint — the LM tables are vocabulary-sized (unbounded at
     web scale), so AQE broadcasts them while they measure small (31
     words → ≤961 bigrams here) and shuffle-joins on the bigram key at
-    scale (round-8 broadcast policy, session.get_spark).
+    scale (broadcast policy, session.get_spark).
 
     Determinism: per-bigram surprisal is rounded to 6 digits, so the
     per-doc mean is an exact decimal sum / count — order-independent
@@ -684,7 +684,7 @@ FROM p GROUP BY pair ORDER BY cnt DESC, pair ASC LIMIT 50
 HV_DIM = 64
 HV_PROBES = 20
 HV_TOPK = 5
-HV_SALTS = 32  # stage-1 salt fan-out of the per-probe top-k (r11)
+HV_SALTS = 32  # stage-1 salt fan-out of the per-probe top-k
 
 
 def q_text_hash_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -745,7 +745,7 @@ def q_text_hash_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cos"),
         )
     )
-    # Salted two-stage top-k (r11, the RETRIEVAL_SALTS pattern / guide
+    # Salted two-stage top-k (the RETRIEVAL_SALTS pattern / guide
     # §2.5): with HV_PROBES constant, a bare per-pid window lands each
     # probe's corpus-sized candidate list on ONE reducer at scale.
     # Stage 1 ranks within (pid, doc_id % HV_SALTS); stage 2 merges
@@ -880,7 +880,7 @@ def _pii_enriched(engine: str) -> str:
     with a NULL would null the whole enriched string — silently
     DROPPING the planted PII of a null-text doc from the counts and
     the redaction fingerprint on one engine's NULL-skipping aggregate
-    (round-8 null sweep)."""
+    (null sweep)."""
     s = "STRING" if engine == "spark" else "VARCHAR"
     return (
         "concat(coalesce(text, ''),"

@@ -47,7 +47,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # TRY_CAST: ROUND(NaN)=NaN and a plain cast of NaN to BIGINT crashes
 # BOTH engines (Spark ANSI CAST_OVERFLOW, DuckDB conversion error) —
-# a NaN reading is "missing", not a crash (round-8 NaN sweep). Same
+# a NaN reading is "missing", not a crash (NaN sweep). Same
 # text works identically in Spark SQL and DuckDB.
 _VALUE_C = "TRY_CAST(ROUND(value * 100) AS BIGINT)"
 
@@ -163,7 +163,7 @@ def q_events_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     letting it through
     makes min_by pick a NULL open while a bucket of only-null readings
     emits an all-NULL bar that can never round-trip the driver's
-    pandas fetch (round-8 null sweep). A bucket with zero valid ticks
+    pandas fetch (null sweep). A bucket with zero valid ticks
     has no bar — on both engines."""
     tie_key = (
         "concat(lpad(CAST(unix_micros(ts) AS STRING), 20, '0'),"
@@ -316,7 +316,7 @@ def q_events_hll_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth the HLL estimate is tolerance-tested against
     (tests/test_timeseries.py), now hash-graded in its own right so
     the sketch/exact pair both carry driver evidence (the
-    ``events_kmv_users`` pattern, VERDICT r6 ask 5).
+    ``events_kmv_users`` pattern).
 
     Scale shape: COUNT(DISTINCT) is the full distinct shuffle the HLL
     rollup exists to avoid — this query is the exactness baseline, not
@@ -350,8 +350,8 @@ FROM events GROUP BY event_type
 # whole estimate is exactly oracle-checkable across engines.
 KMV_K = 64
 _TWO60 = "1152921504606846976.0"  # 2^60 as an exact double literal
-# The per-type k-min sample runs as a salted two-stage window (r11,
-# the RETRIEVAL_SALTS pattern / guide §2.5): stage 1 ranks within
+# The per-type k-min sample runs as a salted two-stage window (the
+# RETRIEVAL_SALTS pattern / guide §2.5): stage 1 ranks within
 # (event_type, h % SALTS) so a type's corpus-sized distinct-user list
 # spreads over SALTS reducers instead of ONE (the global-per-type
 # window straggler at 100 TB); stage 2 merges the <= SALTS*KMV_K
@@ -408,8 +408,8 @@ def q_events_kmv_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("h"),
         )
         .distinct()
-        # cached (r11): the exact count and the sketch sample both
-        # consume the distinct collapse — uncached, each re-ran the
+        # cached: the exact count and the sketch sample both
+        # consume the distinct collapse — uncached, each re-runs the
         # events scan + corpus-sized distinct shuffle (the overlap
         # query already cached its copy).
         .cache()
@@ -504,8 +504,8 @@ def q_events_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .cache()
     )
-    # cached (r11): sa/sb reference the sample four times below and
-    # each uncached reference re-ran the corpus-wide sample windows;
+    # cached: sa/sb reference the sample four times below and
+    # each uncached reference re-runs the corpus-wide sample windows;
     # the frame is provably bounded (<= types * KMV_K rows).
     samp = _kmv_sample(d).cache()
     sa = samp.select(F.col("event_type").alias("ta"), "h")
@@ -671,7 +671,7 @@ def q_events_moving_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").over(w).alias("n_trailing"),
             F.coalesce(
                 # a trailing hour of only-null readings sums to 0
-                # (additive identity; round-8 null sweep)
+                # (additive identity; null sweep)
                 F.sum("value_c").over(w), F.lit(0).cast("bigint")
             ).alias("sum_trailing_c"),
         )
@@ -850,7 +850,7 @@ def q_events_crosscorr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             # an hour whose every sample is a null reading has 0
             # volume: the additive identity keeps downstream window
-            # arithmetic defined and NULL-free (round-8 null sweep)
+            # arithmetic defined and NULL-free (null sweep)
             F.expr(
                 f"COALESCE(SUM({_VALUE_C}), CAST(0 AS BIGINT))"
             ).alias("s_c")
@@ -886,7 +886,7 @@ def q_events_crosscorr(spark: SparkSession, sf_dir: str) -> DataFrame:
             # product and its sum accumulate in DECIMAL(38,0) — exact
             # order-independent integer adds, NULL (not silently
             # wrapped) on the BIGINT output cast — matching the
-            # HUGEINT arithmetic the oracle uses (CLAUDE.md round-7
+            # HUGEINT arithmetic the oracle uses (CLAUDE.md
             # widen-internally rule; embed_covariance pattern).
             F.expr(
                 "CAST(SUM(CAST(a.s_c AS DECIMAL(19,0))"
@@ -988,7 +988,7 @@ def q_events_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             # an hour whose every sample is a null reading has 0
             # volume: the additive identity keeps downstream window
-            # arithmetic defined and NULL-free (round-8 null sweep)
+            # arithmetic defined and NULL-free (null sweep)
             F.expr(
                 f"COALESCE(SUM({_VALUE_C}), CAST(0 AS BIGINT))"
             ).alias("s_c")
@@ -1000,7 +1000,7 @@ def q_events_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # DECIMAL(38,0) internal arithmetic: d ~ n_hours·s_c and its prefix
     # sum GROW with span × corpus volume, so raw BIGINT would silently
-    # wrap past 2^63 (CLAUDE.md round-7 widen-internally rule); the
+    # wrap past 2^63 (CLAUDE.md widen-internally rule); the
     # oracle accumulates in HUGEINT the same way. Output stays BIGINT
     # and goes NULL, not wrong, if a real corpus ever exceeds it.
     return (

@@ -45,7 +45,7 @@ def write_bucketed(
     # task then holds exactly one bucket and writes exactly one file —
     # `buckets` parallel sort+encode tasks and `buckets` output files,
     # instead of a single task serially writing every bucket when the
-    # input is one scan partition (toy-SF parquet; measured r12: the
+    # input is one scan partition (toy-SF parquet; measured: the
     # two demo writes 1.41+2.09 s -> see layout.py). At scale the same
     # repartition is the write-side shuffle bucketing always needs.
     w = df.repartition(buckets, key).write.mode("overwrite").bucketBy(buckets, key)

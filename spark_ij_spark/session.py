@@ -51,15 +51,13 @@ def get_spark(app_name: str = "spark_ij_spark", cpus: int | None = None) -> Spar
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # testdata events.parquet stores TIMESTAMP(NANOS); Spark's reader
-        # rejects it unless read as long (converted back in load_tables)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Broadcast policy (the 100 TB rule): static auto-broadcast is
         # OFF because Catalyst's plan-time size estimates of derived
         # frames (aggregated signatures, cached postings) are fiction —
         # at sf~10 they underestimated corpus-sized band/postings
         # frames >10x and the "broadcast" OOMed the driver (measured,
-        # SCALING.md round 8). Broadcasts now happen only when (a) the
+        # SCALING.md "sf0.1 → sf~10 SECOND-decade sweep"). Broadcasts
+        # happen only when (a) the
         # code marks a PROVABLY bounded side with an explicit
         # F.broadcast() hint, or (b) AQE measures the side's TRUE
         # runtime size under the adaptive threshold — so toy-SF plans
@@ -135,34 +133,12 @@ def load_tables(
     for name in names or TABLE_NAMES:
         path = os.path.join(sf_dir, f"{name}.parquet")
         if os.path.exists(path):
-            if name == "events":
-                # The caller may hand us any SparkSession (the driver
-                # harness builds its own, without get_spark()'s builder
-                # confs). nanosAsLong is runtime-settable, so apply it
-                # here too; Spark 4.1+ reads TIMESTAMP(NANOS) natively
-                # (as timestamp_ntz, truncated to micros) and ignores it.
-                try:
-                    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-                except Exception:
-                    pass
             df = spark.read.parquet(path)
             if name == "events":
-                ts_type = dict(df.dtypes)["ts"]
-                if ts_type == "bigint":
-                    # ts surfaced as nanos-long via nanosAsLong (Spark
-                    # <4.1); truncate to micros exactly like DuckDB does.
-                    # integer DIV, not FLOOR(ts/1000): bigint/1000 is
-                    # double division in Spark SQL and its rounding can
-                    # bump the microsecond by 1 vs DuckDB's ns→µs cast.
-                    df = df.withColumn(
-                        "ts", F.expr("timestamp_micros(ts DIV 1000)")
-                    )
-                else:
-                    # Spark 4.1+ surfaces TIMESTAMP(NANOS) as
-                    # timestamp_ntz already truncated to micros (matches
-                    # DuckDB's truncating cast). Cast to session-tz
-                    # timestamp (UTC, pinned above) so the output schema
-                    # is identical across Spark versions.
-                    df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+                # events.parquet stores TIMESTAMP(NANOS), which Spark reads
+                # as timestamp_ntz already truncated to micros (matches
+                # DuckDB's truncating cast). Cast to session-tz timestamp
+                # (UTC, pinned above) so ts is a plain timestamp.
+                df = df.withColumn("ts", F.col("ts").cast("timestamp"))
             out[name] = df
     return out

@@ -19,11 +19,10 @@ formats have REAL pure-stdlib codec bodies (``purepy_codecs``):
   RIFF container; frames ↔ the image model's slice axis.
 - ``.dcm`` / ``.dicom``— uncompressed little-endian DICOM (the format
   the reference's RDD tests exercise, IjRDDTests.scala:83-99).
-- ``.jpg`` / ``.jpeg``— native baseline JFIF (round 9): decode
-  sequential-DCT Huffman (SOF0/SOF1, 4:4:4/4:2:2/4:2:0, restart
+- ``.jpg`` / ``.jpeg``— native JFIF: decode sequential-DCT and
+  progressive Huffman (SOF0/SOF1/SOF2, 4:4:4/4:2:2/4:2:0, restart
   markers); encode baseline 4:4:4 with quality-scaled Annex K tables.
-  Progressive (SOF2) raises clearly, with PIL named as the opt-in
-  path for it — but baseline JPEG no longer needs any library.
+  No library is needed.
 """
 
 from __future__ import annotations
@@ -61,8 +60,8 @@ def decode_bytes(data: bytes, path: str) -> np.ndarray:
             arr = np.load(io.BytesIO(data), allow_pickle=False)
         except (EOFError, OSError) as e:
             # np.load's corrupt/truncated-stream vocabulary → the same
-            # ValueError contract every other format honors (round-10
-            # review: an empty payload escaped as EOFError)
+            # ValueError contract every other format honors (an empty
+            # payload would escape as EOFError)
             raise ValueError(f"npy: malformed stream ({e})") from e
         return ensure_3d(coerce_ingest(arr))
     if sfx == ".png":

@@ -33,11 +33,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-# Raw parquet schema: ts is TIMESTAMP(NANOS). On Spark <4.1 it
-# surfaces as long (nanos) via spark.sql.legacy.parquet.nanosAsLong;
-# Spark 4.1+ reads it natively as timestamp_ntz (micros-truncated) and
-# ignores the legacy conf — read_events_stream probes which world
-# we're in (the batch-schema probe at its top).
+# Raw parquet schema with ts as read_events_stream's probe found it:
+# timestamp_ntz (micros-truncated) for a TIMESTAMP(NANOS) column, long
+# for a nanos-long column.
 def _events_raw_schema(ts_type) -> StructType:
     return StructType(
         [
@@ -59,18 +57,15 @@ def read_events_stream(
     glob: str = "events.parquet",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """File-source stream over events parquet (same nanos→micros
-    conversion as the batch loader, so both sides see identical ts).
+    """File-source stream over events parquet (ts comes out as the
+    same micros-truncated timestamp as the batch loader's, so both
+    sides see identical ts).
     ``max_files_per_trigger=1`` replays multi-file directories one
     micro-batch per file — arrival order for watermark tests."""
-    # Runtime-set for driver-owned sessions that lack the builder conf
-    # (same guard as session.load_tables); no-op on Spark 4.1+.
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
-    # Probe how THIS Spark surfaces the nanos column (batch schema read
-    # is footer-only, no data scan) and mirror it in the stream schema.
+    # Probe how these files store ts (batch schema read is footer-only,
+    # no data scan) and mirror it in the stream schema: events.parquet's
+    # TIMESTAMP(NANOS) reads as timestamp_ntz, other event files carry
+    # ts as a nanos long.
     probe = (
         spark.read.option("pathGlobFilter", glob).parquet(sf_dir).schema["ts"].dataType
     )
@@ -81,9 +76,10 @@ def read_events_stream(
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     raw = reader.parquet(sf_dir)
     if isinstance(probe, LongType):
-        # nanos-long world: truncate to micros exactly like DuckDB.
+        # nanos long: truncate to micros exactly like DuckDB (integer
+        # DIV, not ts/1000, which is double division in Spark SQL).
         return raw.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-    # timestamp_ntz world: already micros-truncated; pin to session-tz
+    # timestamp_ntz: already micros-truncated; pin to session-tz
     # timestamp (UTC) so batch and stream schemas agree.
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
@@ -365,7 +361,7 @@ def _hwm_scan(key, pdf, mx, out):
     """Shared record-scan body of BOTH high-watermark operators: one
     code path so a semantics fix cannot leave the twin stale. Returns
     the updated max. A NULL/NaN/±Inf reading is missing data, not a
-    record (CLAUDE.md round-8 NaN rule) — and must never enter state:
+    record (CLAUDE.md NaN-is-missing rule) — and must never enter state:
     a stored NaN max would turn every subsequent `v > mx` comparison
     False and permanently suppress the user's genuine new records."""
     import math

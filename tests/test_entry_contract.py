@@ -649,3 +649,39 @@ def test_plan_signature_parses_a_canned_plan_and_diffs_readably():
     assert diff({"q_canned": sig}, {"q_canned": sig}) == ""
     msg = diff({"q_canned": sig}, {"q_canned": signature(injected)})
     assert msg == "q_canned:\n  Exchange hashpartitioning: 1 → 2", msg
+
+
+def test_claude_md_references_resolve():
+    """CLAUDE.md's rules name the test, file or function that enforces
+    them, so a rename or deletion must not leave a rule pointing at
+    nothing. Each ``test_*`` name is a test function under tests/ or
+    perfbench/, each ``tests/<file>.py::name`` names a function in that
+    file, and each spark_ij_spark/, tools/ or perfbench/ path exists."""
+    import ast
+    import glob
+    import re
+
+    def functions(path):
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        return {
+            n.name
+            for n in ast.walk(tree)
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        }
+
+    with open(os.path.join(REPO, "CLAUDE.md")) as fh:
+        text = fh.read()
+    files = glob.glob(os.path.join(REPO, "tests", "*.py")) + glob.glob(
+        os.path.join(REPO, "perfbench", "*.py")
+    )
+    tests = {f for path in files for f in functions(path) if f.startswith("test_")}
+    broken = [n for n in re.findall(r"(?<![\w/.])test_\w+", text) if n not in tests]
+    for path, name in re.findall(r"\b(tests/\w+\.py)::(\w+)", text):
+        full = os.path.join(REPO, path)
+        if not os.path.exists(full) or name not in functions(full):
+            broken.append(f"{path}::{name}")
+    for path in re.findall(r"(?<![\w/.])((?:spark_ij_spark|tools|perfbench)/[\w./-]*)", text):
+        if not os.path.exists(os.path.join(REPO, path.rstrip("."))):
+            broken.append(path)
+    assert not broken, f"CLAUDE.md references that do not resolve: {broken}"

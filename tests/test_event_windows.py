@@ -60,17 +60,13 @@ def test_events_quantiles_approx_within_rank_error(spark):
 
 def test_events_load_without_builder_conf(spark, sf_dir):
     """The driver hands queries() its own SparkSession, built without
-    get_spark()'s nanosAsLong conf — load_tables must still read the
-    TIMESTAMP(NANOS) events.parquet by setting the conf at runtime."""
+    get_spark()'s builder confs — load_tables must still read the
+    TIMESTAMP(NANOS) events.parquet as a session-tz timestamp."""
     from spark_ij_spark.session import load_tables
 
-    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-    try:
-        ev = load_tables(spark, sf_dir, ["events"])["events"]
-        assert ev.schema["ts"].dataType.typeName() == "timestamp"
-        assert ev.limit(1).count() == 1
-    finally:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    ev = load_tables(spark, sf_dir, ["events"])["events"]
+    assert ev.schema["ts"].dataType.typeName() == "timestamp"
+    assert ev.limit(1).count() == 1
 
 
 def test_transitions_matrix_properties(spark, sf_dir, duck):
