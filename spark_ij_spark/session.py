@@ -69,6 +69,9 @@ def get_spark(app_name: str = "spark_ij_spark", cpus: int | None = None) -> Spar
         )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # Python workers fork from a daemon that has already imported
+        # the engine (found on the workers' path like every engine UDF).
+        .config("spark.python.daemon.module", "spark_ij_spark.worker_daemon")
     )
     return builder.getOrCreate()
 

@@ -459,6 +459,33 @@ def test_zip_index_is_reread_only_when_the_archive_changes(tmp_path, monkeypatch
         zipimport._zip_directory_cache.pop(archive, None)
 
 
+def test_worker_daemon_import_is_fork_safe():
+    """Spark forks every Python worker of a get_spark session from
+    spark_ij_spark.worker_daemon. A fork copies only the calling thread,
+    so importing the daemon (and everything it imports) must start no
+    Python thread and no JVM or SparkContext, must not enter the daemon
+    loop (only ``python -m`` runs that), and must print nothing: Spark
+    reads the daemon's port from its stdout."""
+    import subprocess
+    import sys
+
+    code = (
+        "import threading\n"
+        "import pyspark.daemon\n"
+        "entered = []\n"
+        "pyspark.daemon.manager = lambda: entered.append(1)\n"
+        "import spark_ij_spark.worker_daemon\n"
+        "from pyspark import SparkContext\n"
+        "print(SparkContext._active_spark_context is None, SparkContext._gateway is None,\n"
+        "      not entered, threading.active_count())\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=REPO, capture_output=True, text=True, timeout=120
+    )
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.split() == ["True", "True", "True", "1"], out.stdout
+
+
 def test_run_op_is_called_only_from_the_shared_engine():
     """Every per-row op surface (run_all, run_with_table, the sweep, the
     SQL UDFs) runs its rows through operators/images.py's engine, so

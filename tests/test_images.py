@@ -589,3 +589,33 @@ def test_python_workers_skip_zip_index_rereads(spark):
     ms = sorted(r["ms"] for r in rows)
     assert len(ms) == 8
     assert ms[len(ms) // 2] < 20.0, f"invalidate_caches() ms per task: {ms}"
+
+
+def test_workers_fork_from_the_engine_daemon(spark):
+    """get_spark sessions fork every Python worker from
+    spark_ij_spark.worker_daemon, which has imported the engine, stamped
+    the zip import indexes and frozen its GC heap. The UDF here names no
+    engine module, so it is pickled by value and imports nothing of the
+    engine itself: whatever the worker holds came from the daemon."""
+    from pyspark.sql import functions as F
+
+    @F.pandas_udf("engine boolean, frozen boolean, stamped boolean")
+    def probe(ids: pd.Series) -> pd.DataFrame:
+        import gc
+        import sys
+        import zipimport
+
+        return pd.DataFrame(
+            {
+                "engine": "spark_ij_spark.operators.images" in sys.modules,
+                "frozen": gc.get_freeze_count() > 0,
+                # CPython >= 3.12 reads zip indexes lazily; nothing to stamp
+                "stamped": getattr(zipimport, "_spark_ij_stamped", False)
+                or sys.version_info >= (3, 12),
+            },
+            index=ids.index,
+        )
+
+    rows = spark.range(0, 32, 1, numPartitions=4).select(probe("id").alias("p")).collect()
+    assert len(rows) == 32
+    assert all(r["p"] == (True, True, True) for r in rows), {tuple(r["p"]) for r in rows}
