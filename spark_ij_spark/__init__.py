@@ -18,6 +18,10 @@ from spark_ij_spark import zipstamp
 # First, so a Python worker unpickling an engine UDF patches zipimport
 # before its next task's importlib.invalidate_caches().
 zipstamp.install()
+# Before pyspark is imported: the engine daemon (``python -m
+# spark_ij_spark.worker_daemon`` runs this first) and the workers it
+# forks then import the installed, bytecode-cached pyspark.
+zipstamp.prefer_installed()
 
 from spark_ij_spark.session import get_spark, load_tables  # noqa: E402
 

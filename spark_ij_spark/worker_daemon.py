@@ -7,7 +7,11 @@ imports pandas, pyarrow and the engine into its own private pages and
 re-reads the zip import indexes once. This daemon does that work once,
 before any fork, then freezes its GC heap: a worker inherits the engine
 as shared copy-on-write pages, and its per-task ``gc.collect()`` neither
-walks nor writes to the frozen objects.
+walks nor writes to the frozen objects. The package ``__init__``, which
+``python -m`` runs first, has already swapped Spark's source zips on
+``sys.path`` for the installed pyspark and py4j of the same release
+(``zipstamp.prefer_installed``), so the daemon loads bytecode instead
+of compiling pyspark.
 
 Importing this module starts no thread, JVM or session; only running
 it as ``__main__`` enters the daemon loop.
@@ -24,7 +28,7 @@ import spark_ij_spark.operators.images  # noqa: F401  (installs zipstamp too)
 from spark_ij_spark.registry import list_commands
 
 list_commands()  # loads the kernel menu
-importlib.invalidate_caches()  # stamps pyspark.zip, py4j and the jar
+importlib.invalidate_caches()  # stamps the zip indexes still on the path
 gc.collect()
 gc.freeze()
 

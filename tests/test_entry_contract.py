@@ -10,6 +10,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 import __spark_entry__ as entry
 
 REPO = os.path.dirname(os.path.abspath(entry.__file__))
@@ -459,6 +461,90 @@ def test_zip_index_is_reread_only_when_the_archive_changes(tmp_path, monkeypatch
         zipimport._zip_directory_cache.pop(archive, None)
 
 
+def _packages(pyspark_version, py4j_version):
+    """{relative path: text} of a pyspark and a py4j package whose
+    version.py holds the given text; a None version leaves it out."""
+    return {
+        f"{pkg}/{f}": (version if f == "version.py" else "")
+        for pkg, version in (("pyspark", pyspark_version), ("py4j", py4j_version))
+        if version is not None
+        for f in ("__init__.py", "version.py")
+    }
+
+
+def _spark_lib(tmp_path, pyspark_version, py4j_version):
+    """The pyspark.zip and py4j source zip of a tmp $SPARK_HOME/python/lib."""
+    import zipfile
+
+    (tmp_path / "lib").mkdir()
+    zips = {"pyspark": str(tmp_path / "lib" / "pyspark.zip"),
+            "py4j": str(tmp_path / "lib" / "py4j-0.10.9.9-src.zip")}
+    for pkg, archive in zips.items():
+        with zipfile.ZipFile(archive, "w") as zf:
+            for rel, text in _packages(pyspark_version, py4j_version).items():
+                if rel.startswith(pkg + "/"):
+                    zf.writestr(rel, text)
+    return list(zips.values())
+
+
+def _site_packages(tmp_path, name, pyspark_version, py4j_version):
+    """A tmp site-packages dir, as a one-entry path list."""
+    root = tmp_path / name
+    for rel, text in _packages(pyspark_version, py4j_version).items():
+        (root / rel).parent.mkdir(parents=True, exist_ok=True)
+        (root / rel).write_text(text)
+    return [str(root)]
+
+
+def test_source_zips_give_way_to_an_identical_installed_copy(tmp_path):
+    """Spark puts pyspark.zip and the py4j source zip first on a
+    worker's path; they hold no bytecode, so the engine daemon would
+    compile all of pyspark at every session start. The rule drops a zip
+    only when the rest of the path imports that package from an
+    installed copy with a byte-identical version.py, package by
+    package."""
+    from spark_ij_spark.zipstamp import installed_over_zips
+
+    same = "__version__ = '4.1.2'\n"
+    lib = _spark_lib(tmp_path, same, "__version__ = '0.10.9.9'\n")
+    tail = [str(tmp_path / "elsewhere")]
+
+    installed = _site_packages(tmp_path, "same", same, "__version__ = '0.10.9.9'\n")
+    assert installed_over_zips(lib + tail + installed) == tail + installed
+
+    other = _site_packages(tmp_path, "other", "__version__ = '4.1.1'\n",
+                           "__version__ = '0.10.9.7'\n")
+    assert installed_over_zips(lib + other) == lib + other
+
+    assert installed_over_zips(lib + tail) == lib + tail
+
+    # each package on its own: py4j identical, pyspark differs or is absent
+    mixed = _site_packages(tmp_path, "mixed", "__version__ = '4.1.1'\n",
+                           "__version__ = '0.10.9.9'\n")
+    assert installed_over_zips(lib + mixed) == [lib[0]] + mixed
+    py4j_only = _site_packages(tmp_path, "py4j-only", None, "__version__ = '0.10.9.9'\n")
+    assert installed_over_zips(lib + py4j_only) == [lib[0]] + py4j_only
+    # the copy that would import decides: a differing one first shadows an identical one
+    assert installed_over_zips(lib + other + installed) == lib + other + installed
+
+
+def test_installed_pyspark_is_not_preferred_once_pyspark_is_imported(tmp_path, monkeypatch):
+    """A bare session's stock-daemon worker imported pyspark from the zip
+    before it unpickles an engine UDF (which imports this package); its
+    path must stay as it is, so no process mixes two pyspark copies."""
+    import sys
+
+    import pyspark  # noqa: F401
+    from spark_ij_spark import zipstamp
+
+    same = "__version__ = '4.1.2'\n"
+    path = _spark_lib(tmp_path, same, same) + _site_packages(tmp_path, "same", same, same)
+    monkeypatch.setattr(sys, "path", list(path))
+    assert "pyspark" in sys.modules
+    zipstamp.prefer_installed()
+    assert sys.path == path
+
+
 def test_worker_daemon_import_is_fork_safe():
     """Spark forks every Python worker of a get_spark session from
     spark_ij_spark.worker_daemon. A fork copies only the calling thread,
@@ -484,6 +570,49 @@ def test_worker_daemon_import_is_fork_safe():
     )
     assert out.returncode == 0, out.stderr
     assert out.stdout.split() == ["True", "True", "True", "1"], out.stdout
+
+
+def test_worker_daemon_imports_the_installed_pyspark():
+    """Spark starts the engine daemon with $SPARK_HOME/python/lib's
+    pyspark.zip and py4j zip first on PYTHONPATH. Importing the daemon
+    drops them in favour of the installed, bytecode-cached copies of the
+    same release, and still starts no thread or JVM and prints
+    nothing."""
+    import glob
+    import subprocess
+    import sys
+    import zipfile
+
+    import pyspark
+
+    lib = os.path.join(os.environ.get("SPARK_HOME", ""), "python", "lib")
+    zips = [os.path.join(lib, "pyspark.zip")] + sorted(glob.glob(os.path.join(lib, "py4j-*-src.zip")))
+    if not os.path.isfile(zips[0]) or len(zips) < 2:
+        pytest.skip("$SPARK_HOME has no pyspark.zip and py4j zip")
+    with zipfile.ZipFile(zips[0]) as zf, open(
+        os.path.join(os.path.dirname(pyspark.__file__), "version.py"), "rb"
+    ) as fh:
+        if zf.read("pyspark/version.py") != fh.read():
+            pytest.skip("the installed pyspark is not $SPARK_HOME's release")
+
+    code = (
+        "import threading\n"
+        "import spark_ij_spark.worker_daemon\n"
+        "import py4j, pyspark\n"
+        "from pyspark import SparkContext\n"
+        "print(pyspark.__file__, py4j.__file__, SparkContext._gateway is None,\n"
+        "      SparkContext._active_spark_context is None, threading.active_count())\n"
+    )
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(zips + [REPO]))
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=REPO, env=env, capture_output=True, text=True,
+        timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+    assert len(out.stdout.splitlines()) == 1, out.stdout  # the import printed nothing
+    pyspark_file, py4j_file, *state = out.stdout.split()
+    assert ".zip" not in pyspark_file and ".zip" not in py4j_file, out.stdout
+    assert state == ["True", "True", "1"], out.stdout
 
 
 def test_run_op_is_called_only_from_the_shared_engine():

@@ -594,16 +594,23 @@ def test_python_workers_skip_zip_index_rereads(spark):
 def test_workers_fork_from_the_engine_daemon(spark):
     """get_spark sessions fork every Python worker from
     spark_ij_spark.worker_daemon, which has imported the engine, stamped
-    the zip import indexes and frozen its GC heap. The UDF here names no
-    engine module, so it is pickled by value and imports nothing of the
-    engine itself: whatever the worker holds came from the daemon."""
+    the zip import indexes and frozen its GC heap, and runs the driver's
+    own installed pyspark rather than $SPARK_HOME's pyspark.zip. The UDF
+    here names no engine module, so it is pickled by value and imports
+    nothing of the engine itself: whatever the worker holds came from
+    the daemon."""
+    import pyspark
     from pyspark.sql import functions as F
 
-    @F.pandas_udf("engine boolean, frozen boolean, stamped boolean")
+    @F.pandas_udf(
+        "engine boolean, frozen boolean, stamped boolean, pyspark string, version string"
+    )
     def probe(ids: pd.Series) -> pd.DataFrame:
         import gc
         import sys
         import zipimport
+
+        import pyspark
 
         return pd.DataFrame(
             {
@@ -612,10 +619,13 @@ def test_workers_fork_from_the_engine_daemon(spark):
                 # CPython >= 3.12 reads zip indexes lazily; nothing to stamp
                 "stamped": getattr(zipimport, "_spark_ij_stamped", False)
                 or sys.version_info >= (3, 12),
+                "pyspark": pyspark.__file__,
+                "version": pyspark.__version__,
             },
             index=ids.index,
         )
 
     rows = spark.range(0, 32, 1, numPartitions=4).select(probe("id").alias("p")).collect()
     assert len(rows) == 32
-    assert all(r["p"] == (True, True, True) for r in rows), {tuple(r["p"]) for r in rows}
+    want = (True, True, True, pyspark.__file__, spark.version)
+    assert all(tuple(r["p"]) == want for r in rows), {tuple(r["p"]) for r in rows}
