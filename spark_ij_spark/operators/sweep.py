@@ -3,8 +3,11 @@
 
 Reference semantics (cited for parity, implementation is new):
 
-- macro arg grammar ``-key=value -flag`` parsed per-delimiter
-  (ParameterSweep.scala:86-92 ``parseArgsWithDelim``)
+- two macro arg grammars: the engine's own ``key=value flag
+  key=[a b]`` (``delim=" "``), read and written by the registry's
+  ``tokenize_args`` / ``render_arg`` so a variant is exactly what the
+  kernel parses; and the reference's ``-key=value -flag``
+  (``delim="-"``, ParameterSweep.scala:86-92 ``parseArgsWithDelim``)
 - start/end arg pairs expand to ``steps`` interpolated variants;
   **int-preserving**: a value that parses as a long interpolates on the
   integer lattice and deduplicates (ParameterSweep.scala:246-263)
@@ -42,7 +45,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from spark_ij_spark import lineage
+from spark_ij_spark import lineage, registry
 from spark_ij_spark.datamodel import IMAGE_SCHEMA, image_frame
 from spark_ij_spark.operators.images import run_op_rows
 
@@ -66,22 +69,25 @@ def _is_double(s: str) -> bool:
 
 
 def parse_args_with_delim(arg_list: str, delim: str = "-") -> dict[str, str]:
-    """``"-radius=3 -white"`` → ``{"radius": "3", "white": "true"}``.
+    """``"-radius=3 -white"`` → ``{"radius": "3", "white": "true"}``;
+    a flag maps to ``"true"``.
 
-    Tokens split on ``delim``; a token without ``=`` maps to ``"true"``
-    (flag). Mirrors the grammar of ParameterSweep.scala:86-92.
+    A whitespace ``delim`` is the engine's grammar, tokenized by
+    ``registry.tokenize_args``. Any other ``delim`` is the reference's
+    (ParameterSweep.scala:86-92): tokens split on ``delim`` and values
+    may hold unquoted spaces.
     """
+    if delim.isspace():
+        return {
+            k: "true" if v is True else v for k, v in registry.tokenize_args(arg_list)
+        }
     out: dict[str, str] = {}
     cleaned = re.sub(r"\s+", " ", arg_list).strip()
-    if delim.isspace():
-        toks = cleaned.split(delim)
-    else:
-        # the delimiter separates tokens only at a token BOUNDARY
-        # (string start or after whitespace): a bare split corrupted
-        # values containing the delimiter — '-size=0-Infinity' (the
-        # exact form Analyze Particles consumes) became
-        # {'size': '0', 'Infinity': 'true'}
-        toks = re.split(rf"(?:^|(?<=\s)){re.escape(delim)}", cleaned)
+    # the delimiter separates tokens only at a token BOUNDARY (string
+    # start or after whitespace): a bare split corrupted values
+    # containing the delimiter — '-size=0-Infinity' (the exact form
+    # Analyze Particles consumes) became {'size': '0', 'Infinity': 'true'}
+    toks = re.split(rf"(?:^|(?<=\s)){re.escape(delim)}", cleaned)
     for tok in toks:
         tok = tok.strip()
         if not tok:
@@ -103,11 +109,11 @@ def macro_parse_args(in_args: Sequence[str], delim: str = "-") -> dict[str, list
 
 
 def _create_arg_str(key: str, arg: str, prefix: str) -> str:
-    if arg == "true":
-        return prefix + key
     if arg == "false":
         return ""
-    return f"{prefix}{key}={arg}"
+    if not prefix:
+        return registry.render_arg(key, True if arg == "true" else arg)
+    return prefix + key if arg == "true" else f"{prefix}{key}={arg}"
 
 
 def _fmt_float(v: float) -> str:
@@ -194,24 +200,24 @@ def sweep_args(
     }
 
     if cartesian:
-        combos: list[str] = []
+        combos: list[tuple[str, ...]] = []
         for variants in arg_str.values():
             if not variants:
                 continue
             if not combos:
-                combos = list(variants)
+                combos = [(v,) for v in variants]
             else:
                 if len(combos) * len(variants) > max_variants:
                     raise ValueError(
                         f"cartesian sweep exceeds max_variants={max_variants}; "
                         "use cartesian=False or raise the cap explicitly"
                     )
-                combos = [f"{a} {b}" for a in combos for b in variants]
+                combos = [a + (b,) for a in combos for b in variants]
     else:
-        lists = list(arg_str.values())
-        combos = [" ".join(parts) for parts in zip(*lists)]
+        combos = list(zip(*arg_str.values()))
 
-    return [re.sub(r"\s+", " ", c).strip() for c in combos]
+    # a "false" arg renders empty: the variant leaves it out
+    return [" ".join(t for t in c if t) for c in combos]
 
 
 def macro_steps_to_sweep(
@@ -296,9 +302,10 @@ def history_to_sweep(log: list) -> str:
         # TOOL enum in optool — reading optool here returned
         # 'NUMPY:...' for every engine-produced log)
         cmd = e.get("opval", "")
-        args = " ".join(a for a in (e.get("opargs") or []) if a)
-        toks = args.split() if args else []
-        parts.append(" ".join(f"{cmd}:{t}" for t in toks) if toks else cmd)
+        toks = registry.tokenize_args(" ".join(a for a in (e.get("opargs") or []) if a))
+        parts.append(
+            " ".join(f"{cmd}:{registry.render_arg(k, v)}" for k, v in toks) if toks else cmd
+        )
     return "_".join(parts)
 
 

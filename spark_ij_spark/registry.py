@@ -25,7 +25,11 @@ Kernel contract::
         -> np.ndarray | (np.ndarray, results_table dict[str, list[float]])
 
 Arg strings use the ImageJ macro grammar (``radius=3 white clear``):
-``k=v`` pairs plus bare flags (parsed like ParameterSweep.scala:86-92).
+``k=v`` pairs, bare flags and bracketed multi-word values
+(``projection=[Max Intensity]``). ``tokenize_args`` and ``render_arg``
+are the one reader and writer of that grammar: the kernels' parsed
+args, the parameter sweep's variants and its lineage helper all go
+through them, so every consumer sees the same keys and values.
 """
 
 from __future__ import annotations
@@ -83,35 +87,46 @@ def _ensure_loaded() -> None:
     from spark_ij_spark.kernels import particles  # noqa: F401
 
 
-def parse_args(args: str | None) -> dict[str, Any]:
-    """ImageJ macro-style arg string → dict.
+def tokenize_args(args: str | None) -> list[tuple[str, str | bool]]:
+    """ImageJ macro-style arg string → ``(key, value)`` tokens in order;
+    a bare flag's value is ``True``.
 
-    ``"radius=3 white clear method=IsoData"`` →
-    ``{"radius": "3", "white": True, "clear": True, "method": "IsoData"}``
+    ``"radius=3 white method=IsoData"`` →
+    ``[("radius", "3"), ("white", True), ("method", "IsoData")]``
 
     Bracketed multi-word values — the form the ImageJ macro recorder
     actually emits, ``projection=[Max Intensity]`` — are normalized to
     quoted form before tokenizing, so recorded macros replay verbatim.
     """
-    out: dict[str, Any] = {}
     if not args:
-        return out
+        return []
     args = re.sub(
         r'=\[([^\]]*)\]',
         lambda m: '="' + m.group(1).replace('"', '\\"') + '"',
         args,
     )
     try:
-        tokens = shlex.split(args)
+        words = shlex.split(args)
     except ValueError:
-        tokens = args.split()
-    for tok in tokens:
-        if "=" in tok:
-            k, _, v = tok.partition("=")
-            out[k] = v
-        else:
-            out[tok] = True
-    return out
+        words = args.split()
+    return [(k, v if eq else True) for k, eq, v in (w.partition("=") for w in words)]
+
+
+def render_arg(key: str, value: str | bool) -> str:
+    """One token back to macro text, the inverse of ``tokenize_args``:
+    ``key`` for a flag, ``key=[v w]`` for a value holding whitespace,
+    else ``key=value``."""
+    if value is True:
+        return key
+    if any(c.isspace() for c in value):
+        return f"{key}=[{value}]"
+    return f"{key}={value}"
+
+
+def parse_args(args: str | None) -> dict[str, Any]:
+    """``tokenize_args`` as a dict (a repeated key keeps its last
+    value): ``{"radius": "3", "white": True, "method": "IsoData"}``."""
+    return dict(tokenize_args(args))
 
 
 def get_float(args: dict[str, Any], key: str, default: float) -> float:

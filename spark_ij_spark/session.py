@@ -138,10 +138,10 @@ def load_tables(
         if os.path.exists(path):
             df = spark.read.parquet(path)
             if name == "events":
-                # events.parquet stores TIMESTAMP(NANOS), which Spark reads
-                # as timestamp_ntz already truncated to micros (matches
-                # DuckDB's truncating cast). Cast to session-tz timestamp
-                # (UTC, pinned above) so ts is a plain timestamp.
+                # events.parquet stores ts as INT64 TIMESTAMP(MICROS,
+                # isAdjustedToUTC=false), which Spark reads as
+                # timestamp_ntz with nothing truncated. Cast to session-tz
+                # timestamp (UTC, pinned above) so ts is a plain timestamp.
                 df = df.withColumn("ts", F.col("ts").cast("timestamp"))
             out[name] = df
     return out

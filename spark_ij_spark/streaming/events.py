@@ -34,8 +34,8 @@ from pyspark.sql.types import (
 )
 
 # Raw parquet schema with ts as read_events_stream's probe found it:
-# timestamp_ntz (micros-truncated) for a TIMESTAMP(NANOS) column, long
-# for a nanos-long column.
+# timestamp_ntz for a TIMESTAMP(MICROS, isAdjustedToUTC=false) column,
+# long for a nanos-long column.
 def _events_raw_schema(ts_type) -> StructType:
     return StructType(
         [
@@ -58,14 +58,14 @@ def read_events_stream(
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """File-source stream over events parquet (ts comes out as the
-    same micros-truncated timestamp as the batch loader's, so both
-    sides see identical ts).
+    same micros timestamp as the batch loader's, so both sides see
+    identical ts).
     ``max_files_per_trigger=1`` replays multi-file directories one
     micro-batch per file — arrival order for watermark tests."""
     # Probe how these files store ts (batch schema read is footer-only,
     # no data scan) and mirror it in the stream schema: events.parquet's
-    # TIMESTAMP(NANOS) reads as timestamp_ntz, other event files carry
-    # ts as a nanos long.
+    # TIMESTAMP(MICROS, isAdjustedToUTC=false) reads as timestamp_ntz,
+    # other event files carry ts as a nanos long.
     probe = (
         spark.read.option("pathGlobFilter", glob).parquet(sf_dir).schema["ts"].dataType
     )
@@ -79,8 +79,8 @@ def read_events_stream(
         # nanos long: truncate to micros exactly like DuckDB (integer
         # DIV, not ts/1000, which is double division in Spark SQL).
         return raw.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-    # timestamp_ntz: already micros-truncated; pin to session-tz
-    # timestamp (UTC) so batch and stream schemas agree.
+    # timestamp_ntz (stored as micros): pin to session-tz timestamp
+    # (UTC) so batch and stream schemas agree.
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
@@ -358,10 +358,10 @@ HWM_OUTPUT_SCHEMA = "user_id long, event_id long, value double, prev_max double"
 
 
 def _hwm_scan(key, pdf, mx, out):
-    """Shared record-scan body of BOTH high-watermark operators: one
-    code path so a semantics fix cannot leave the twin stale. Returns
-    the updated max. A NULL/NaN/±Inf reading is missing data, not a
-    record (CLAUDE.md NaN-is-missing rule) — and must never enter state:
+    """Record scan of one user's batch for :func:`user_high_watermarks`:
+    appends each new record to ``out`` and returns the updated max. A
+    NULL/NaN/±Inf reading is missing data, not a record (CLAUDE.md
+    NaN-is-missing rule) — and must never enter state:
     a stored NaN max would turn every subsequent `v > mx` comparison
     False and permanently suppress the user's genuine new records."""
     import math
@@ -384,50 +384,8 @@ def _hwm_scan(key, pdf, mx, out):
     return mx
 
 
-def _hwm_processor_cls():
-    """Define the transformWithState processor LAZILY: the
-    StatefulProcessor base class exists only on Spark 4.0+, and a
-    module-level import would make every streaming op (including the
-    version-adaptive reader and the applyInPandasWithState twin that
-    exist precisely for older environments) unimportable there. Every
-    other environment-sensitive import in this module is
-    function-local for the same reason."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class _HighWaterProcessor(StatefulProcessor):
-        """transformWithState processor: per-user running-max state;
-        emits a row whenever an event strictly exceeds the user's
-        previous max. Rows sort by (ts, event_id) inside each batch so
-        replays are deterministic."""
-
-        def init(self, handle) -> None:
-            from pyspark.sql.types import DoubleType, StructField, StructType
-
-            self._state = handle.getValueState(
-                "hwm", StructType([StructField("mx", DoubleType())])
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            mx = self._state.get()[0] if self._state.exists() else None
-            out = []
-            for pdf in rows:
-                mx = _hwm_scan(key, pdf, mx, out)
-            if mx is not None:  # all-invalid batch: no state to create
-                self._state.update((mx,))
-            if out:
-                yield pd.DataFrame(out)
-
-        def close(self) -> None:
-            pass
-
-    return _HighWaterProcessor
-
-
 def _hwm_fn(key, pdf_iter, state):
-    """applyInPandasWithState body — same `_hwm_scan` record semantics
-    as the transformWithState processor."""
+    """applyInPandasWithState body of :func:`user_high_watermarks`."""
     import pandas as pd
 
     (mx,) = state.get if state.exists else (None,)
@@ -441,13 +399,14 @@ def _hwm_fn(key, pdf_iter, state):
     )
 
 
-def user_high_watermarks_v1(events: DataFrame) -> DataFrame:
+def user_high_watermarks(events: DataFrame) -> DataFrame:
     """New-record detector via ``applyInPandasWithState`` (works with
-    the default state store): same semantics as
-    :func:`user_high_watermarks`, kept as the runnable twin in
-    containers lacking protobuf (which transformWithState's state
-    server protocol needs). Projected to the four columns _hwm_scan
-    reads (see user_running_totals for the shuffle/Arrow rationale)."""
+    the default state store): emits (user, event, value, prev_max)
+    whenever a user's event value sets a new personal record. Not
+    expressible as a windowed aggregate — the emitted rows depend on
+    running state. State is one double per user: flat at any event
+    volume. Projected to the four columns _hwm_scan reads (see
+    user_running_totals for the shuffle/Arrow rationale)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     return events.select(
@@ -458,25 +417,6 @@ def user_high_watermarks_v1(events: DataFrame) -> DataFrame:
         "mx double",
         "append",
         GroupStateTimeout.NoTimeout,
-    )
-
-
-def user_high_watermarks(events: DataFrame) -> DataFrame:
-    """New-record detector via ``transformWithStateInPandas`` (the
-    Spark 4 arbitrary-state API; requires the RocksDB state store and
-    a protobuf install for the state-server protocol): emits (user,
-    event, value, prev_max) whenever a user's event value sets a new
-    personal record. Not expressible as a windowed aggregate — the
-    emitted rows depend on running state. State is one double per
-    user: flat at any event volume. Projected to the four columns
-    _hwm_scan reads (see user_running_totals for the rationale)."""
-    return events.select(
-        "user_id", "ts", "event_id", "value"
-    ).groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_hwm_processor_cls()(),
-        outputStructType=HWM_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="None",
     )
 
 

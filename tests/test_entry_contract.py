@@ -655,6 +655,87 @@ def test_run_op_is_called_only_from_the_shared_engine():
     )
 
 
+@pytest.mark.parametrize(
+    "args, tokens, rendered",
+    [
+        ("radius=3 sigma=1.5", [("radius", "3"), ("sigma", "1.5")], None),
+        ("white radius=3 clear", [("white", True), ("radius", "3"), ("clear", True)], None),
+        ("projection=[Max Intensity] stack",
+         [("projection", "Max Intensity"), ("stack", True)], None),
+        ('title="a b" stack', [("title", "a b"), ("stack", True)], "title=[a b] stack"),
+        ("size=0-Infinity x=-3 expr=a=b",
+         [("size", "0-Infinity"), ("x", "-3"), ("expr", "a=b")], None),
+        ("", [], None),
+    ],
+)
+def test_macro_args_round_trip_through_the_registry(args, tokens, rendered):
+    """The registry's tokenizer and renderer are inverses: tokenize →
+    render → tokenize gives the same tokens, and a string already in
+    the renderer's form (``k=v``, bare flag, ``k=[v w]``) renders back
+    byte for byte."""
+    from spark_ij_spark.registry import parse_args, render_arg, tokenize_args
+
+    assert tokenize_args(args) == tokens
+    text = " ".join(render_arg(k, v) for k, v in tokens)
+    assert text == (args if rendered is None else rendered)
+    assert tokenize_args(text) == tokens
+    assert parse_args(args) == dict(tokens)
+
+
+def test_bracketed_sweep_runs_the_variants_it_names():
+    """A two-point sweep over bracketed values, the form the ImageJ
+    recorder emits, gives exactly its two endpoints, each of which the
+    kernel parses to the value the sweep names, and two paths."""
+    from spark_ij_spark.operators.sweep import macro_steps_to_sweep, sweep_to_path
+    from spark_ij_spark.registry import parse_args
+
+    ends = ["projection=[Max Intensity]", "projection=[Sum Slices]"]
+    variants = macro_steps_to_sweep(ends, steps=2, delim=" ")
+    assert variants == ends
+    assert [parse_args(v) for v in variants] == [
+        {"projection": "Max Intensity"},
+        {"projection": "Sum Slices"},
+    ]
+    assert sweep_to_path(variants, new_directories=False, delim=" ") == [
+        "projection_Max Intensity",
+        "projection_Sum Slices",
+    ]
+
+
+def test_history_to_sweep_keeps_bracketed_values_whole():
+    from spark_ij_spark import lineage
+    from spark_ij_spark.operators.sweep import history_to_sweep
+
+    log = [lineage.log_entry(lineage.OP_RUN, "Z Project...", ["projection=[Max Intensity]"])]
+    assert history_to_sweep(log) == "Z Project...:projection=[Max Intensity]"
+
+
+def test_shlex_is_imported_only_by_the_registry():
+    """registry.tokenize_args is the one tokenizer of op-argument
+    strings; a second ``shlex`` user would be a second grammar."""
+    import ast
+
+    importers = set()
+    for top in ("spark_ij_spark", "tools", "perfbench", "tests"):
+        for root, _dirs, files in os.walk(os.path.join(REPO, top)):
+            for f in files:
+                if not f.endswith(".py"):
+                    continue
+                path = os.path.join(root, f)
+                with open(path) as fh:
+                    tree = ast.parse(fh.read())
+                for node in ast.walk(tree):
+                    if isinstance(node, ast.Import):
+                        names = [a.name for a in node.names]
+                    elif isinstance(node, ast.ImportFrom):
+                        names = [node.module]
+                    else:
+                        continue
+                    if "shlex" in names:
+                        importers.add(os.path.relpath(path, REPO))
+    assert importers == {os.path.join("spark_ij_spark", "registry.py")}, importers
+
+
 def test_local_checkpoint_is_named_only_in_session():
     """Every iterative loop truncates lineage through session.checkpoint,
     so the lineage policy lives in one function: ``localCheckpoint`` may

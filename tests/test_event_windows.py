@@ -61,7 +61,7 @@ def test_events_quantiles_approx_within_rank_error(spark):
 def test_events_load_without_builder_conf(spark, sf_dir):
     """The driver hands queries() its own SparkSession, built without
     get_spark()'s builder confs — load_tables must still read the
-    TIMESTAMP(NANOS) events.parquet as a session-tz timestamp."""
+    TIMESTAMP(MICROS) events.parquet as a session-tz timestamp."""
     from spark_ij_spark.session import load_tables
 
     ev = load_tables(spark, sf_dir, ["events"])["events"]

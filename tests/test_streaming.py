@@ -111,15 +111,15 @@ def test_streaming_dedup_drops_redeliveries(spark):
     assert got.select("event_id").distinct().count() == want
 
 
-def test_high_watermarks_v1_equal_batch(spark):
+def test_high_watermarks_equal_batch(spark):
     """applyInPandasWithState running-max detector == the batch window
     formulation (prev-max over (ts, event_id) order)."""
     from pyspark.sql.window import Window
 
     got = _drain(
         spark,
-        se.user_high_watermarks_v1(se.read_events_stream(spark, SF_DIR)),
-        "mem_hwm_v1",
+        se.user_high_watermarks(se.read_events_stream(spark, SF_DIR)),
+        "mem_hwm",
         mode="append",
     )
     w = (
@@ -135,59 +135,6 @@ def test_high_watermarks_v1_equal_batch(spark):
     )
     cols = ["user_id", "event_id", "value", "prev_max"]
     assert _rows(got, cols) == _rows(want, cols)
-
-
-def _has_protobuf() -> bool:
-    import importlib.util
-
-    try:
-        return importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:  # no 'google' namespace package at all
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithState's state server needs protobuf, absent in container",
-)
-def test_transform_with_state_high_watermarks_equal_batch(spark):
-    """transformWithStateInPandas running-max detector == the batch
-    window formulation (prev-max over (ts, event_id) order). The
-    operator body is real; this is environment-gated exactly like the
-    PIL codecs (the Spark-side API requires protobuf for its state
-    server protocol)."""
-    from pyspark.sql.window import Window
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        got = _drain(
-            spark,
-            se.user_high_watermarks(se.read_events_stream(spark, SF_DIR)),
-            "mem_hwm",
-            mode="append",
-        )
-        w = (
-            Window.partitionBy("user_id")
-            .orderBy("ts", "event_id")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        want = (
-            _batch_events(spark)
-            .withColumn("prev_max", F.max("value").over(w))
-            .filter(F.col("prev_max").isNull() | (F.col("value") > F.col("prev_max")))
-            .select("user_id", "event_id", "value", "prev_max")
-        )
-        cols = ["user_id", "event_id", "value", "prev_max"]
-        assert _rows(got, cols) == _rows(want, cols)
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
 
 def test_interval_join_stream_equals_batch(spark):

@@ -163,6 +163,35 @@ class TestRunRange:
         assert by_sample["img0__value_2"] == pytest.approx(20.0)
         assert by_sample["img2__value_3"] == pytest.approx(30.0)
 
+    def test_bracketed_projection_sweep(self, spark):
+        """A sweep over the recorder's bracketed values runs exactly the
+        two projections it names: per image one row each, equal to
+        registry.run_op with that projection and logging the rendered
+        variant as its args."""
+        from spark_ij_spark import registry
+        from spark_ij_spark.datamodel import image_to_np, log_of, np_to_image
+        from spark_ij_spark.sources.images import NAMED_IMAGE_SCHEMA
+
+        stacks = np.random.default_rng(3).random((2, 5, 4, 3)).astype("float32")
+        df = spark.createDataFrame(
+            [(f"s{i}", np_to_image(a)) for i, a in enumerate(stacks)], NAMED_IMAGE_SCHEMA
+        ).withColumnRenamed("path", "sample")
+        swept = run_range(
+            df, "Z Project...", "projection=[Max Intensity]", "projection=[Sum Slices]", steps=2
+        )
+        rows = swept.select("sample", "image").collect()
+        projections = ("Max Intensity", "Sum Slices")
+        assert sorted(r.sample for r in rows) == sorted(
+            f"s{i}__projection_{p}" for i in range(len(stacks)) for p in projections
+        )
+        got = {r.sample: r.image for r in rows}
+        for i, a in enumerate(stacks):
+            for p in projections:
+                img = got[f"s{i}__projection_{p}"]
+                want, _ = registry.run_op(a, "Z Project...", f"projection=[{p}]")
+                np.testing.assert_array_equal(image_to_np(img), image_to_np(np_to_image(want)))
+                assert log_of(img)[-1]["opargs"] == [f"projection=[{p}]"]
+
     def test_broadcast_no_shuffle(self, spark):
         """The fan-out is one in-stage generate over a constant-folded
         parameter list: no broadcast, no exchange, no parallelized-list
